@@ -446,19 +446,10 @@ object Bench {
       System.gc() // stable baseline between queries (one shared session)
       name -> dt
     }.toMap
-    def jstr(s: String) =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val errs = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val dmp = dumped.toArray.map(d => jstr(d.toString)).sorted
-      .mkString("[", ",", "]")
+    val qs = wallMap(results)
+    val errs = strMap(errors.toMap)
+    val total = jnum(results.values.sum)
+    val dmp = strList(dumped.toArray.map(_.toString).toSeq)
     // Environment evidence for the suite: host steal/iowait (all-CPU
     // jiffies → seconds at HZ=100), JVM process CPU, GC and JIT time.
     // Reading: wall total ≫ proc_cpu-justified with steal_s high ⇒
@@ -482,7 +473,7 @@ object Bench {
       s"""{$fence$host$cpu"gc_s":${(jvm1._2 - jvm0._2) / 1000.0},"jit_s":${(jvm1._3 - jvm0._3) / 1000.0}}"""
     }
     val cpuQs = cpuSec.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }.mkString("{", ",", "}")
+      .map { case (k, v) => jstr(k) + ":" + jnum(v, "%.3f") }.mkString("{", ",", "}")
     // per-stage (round-level) attribution: {"q":[["tag",wall,cpu],...]}
     val stageQs = stages.toSeq.sortBy(_._1)
       .map { case (q, ss) =>
@@ -506,7 +497,7 @@ object Bench {
           .mkString("{", ",", "}")
       }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuQs,"stages":$stageQs,"sched":$schedJs,"threads":$threadJs,"env":$env,"errors":$errs,"dumped":$dmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuQs,"stages":$stageQs,"sched":$schedJs,"threads":$threadJs,"env":$env,"errors":$errs,"dumped":$dmp,"sf":${jstr(sfDir)}}"""
     // Parse-proof shutdown (BENCH_r07 was `parsed: null`: a StateStore
     // maintenance WARN printed AFTER the summary line, so the driver
     // could not parse its tail). Order matters: silence log4j, stop
@@ -534,9 +525,45 @@ object Bench {
     // map its round-over-round per-query comparison was empty in BOTH
     // r15 and r16 (PERF n_common: 0 — VERDICT r16 #2). Additions-only:
     // every pre-existing field is unchanged.
-    val slow = results.toSeq.sortBy(-_._2).take(8)
-      .map { case (k, v) => jstr(k) + ":" + f"$v%.2f" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$qs,"errors":$errs,"dumped":$dmp,"slowest":$slow,"env":$env,"sf":"$sfDir"}""")
+    println(compactLine(results, errors.toMap,
+      dumped.toArray.map(_.toString).toSeq, env, sfDir))
     System.out.flush()
+  }
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => " "
+      case c => c.toString
+    } + "\""
+
+  /** A JSON number, or `null` for NaN/±Infinity, which JSON cannot
+    * carry (`fmt`, when given, formats the finite value).
+    */
+  private def jnum(v: Double, fmt: String = ""): String =
+    if (v.isNaN || v.isInfinite) "null"
+    else if (fmt.isEmpty) v.toString
+    else fmt.format(v)
+
+  private def wallMap(results: Map[String, Double]): String =
+    results.toSeq.sortBy(_._1)
+      .map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
+
+  private def strMap(m: Map[String, String]): String =
+    m.toSeq.sortBy(_._1)
+      .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+
+  private def strList(xs: Seq[String]): String =
+    xs.map(jstr).sorted.mkString("[", ",", "]")
+
+  /** The compact summary line (`env` is an already-rendered JSON
+    * object). Valid JSON for any wall, NaN and infinities included.
+    */
+  private[graft] def compactLine(results: Map[String, Double],
+      errors: Map[String, String], dumped: Seq[String], env: String,
+      sfDir: String): String = {
+    val slow = results.toSeq.sortBy(-_._2).take(8)
+      .map { case (k, v) => jstr(k) + ":" + jnum(v, "%.2f") }.mkString("{", ",", "}")
+    s"""{"metric":"total_compact","value":${jnum(results.values.sum)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":${wallMap(results)},"errors":${strMap(errors)},"dumped":${strList(dumped)},"slowest":$slow,"env":$env,"sf":${jstr(sfDir)}}"""
   }
 }

@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * All loads are plain `spark.read.parquet` so Catalyst keeps full
+  * All loads are plain parquet scans so Catalyst keeps full
   * pushdown/pruning freedom; callers `.select(...)` only what they need
   * and the parquet scan prunes columns + pushes filters.
   */
@@ -15,8 +21,42 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case _        => spark.read.parquet(s"$dir/$name.parquet")
+      case _        => read(spark, s"$dir/$name.parquet")
     }
+
+  /** Parquet scan of `path`. A single file's schema is resolved from
+    * its footer on the driver and declared to the reader, so the load
+    * starts no Spark job (bare `spark.read.parquet` infers it with a
+    * one-task job, ~65 ms per load at bench scale). The conversion is
+    * the one that job runs per footer, under the session's SQL conf
+    * (`nanosAsLong`, `inferTimestampNTZ`, Spark's row-metadata key all
+    * apply), so the schema is exactly the inferred one. Directories —
+    * Spark-written part-file dirs — keep Spark's own listing and
+    * inference, which also discovers partition columns.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    // a missing path or a glob falls through to Spark's own error/match
+    val isFile = scala.util.Try(p.getFileSystem(conf).getFileStatus(p))
+      .toOption.exists(_.isFile)
+    if (isFile) {
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(p, footer(p, conf)),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path)
+    } else spark.read.parquet(path)
+  }
+
+  /** The footer of one parquet file, read on the driver by Spark's own
+    * footer reader under `conf` — the only place graft opens a parquet
+    * footer. (`ParquetFileReader.open` without options would build a
+    * fresh Hadoop `Configuration` per call, ~6 ms; this is ~0.2 ms.)
+    */
+  private[graft] def footer(path: Path,
+      conf: org.apache.hadoop.conf.Configuration): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, conf),
+      ParquetMetadataConverter.NO_FILTER)
 
   /** `events.ts` normalization — the stored layout has CHANGED across
     * driver rounds, so the loader probes and adapts instead of
@@ -33,7 +73,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         // An int64 ts could be epoch-NANOS (TIMESTAMP(NANOS) read via
@@ -92,7 +132,7 @@ object Tables {
     */
   def embeddings(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-    val raw = spark.read.parquet(s"$dir/embeddings.parquet")
+    val raw = read(spark, s"$dir/embeddings.parquet")
     raw.schema("embedding").dataType match {
       case ArrayType(DoubleType, _) =>
         raw.withColumn("embedding",

@@ -30,7 +30,7 @@ object StreamingQueries {
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchRaw = s.read.parquet(s"$dir/events.parquet")
+    val batchRaw = Tables.read(s, s"$dir/events.parquet")
     val stored = batchRaw.schema("ts").dataType
     // Watermarks demand TIMESTAMP (local-tz): declare it for either
     // stored timestamp flavor — the file's µs payload is read as the
@@ -59,7 +59,7 @@ object StreamingQueries {
         // magnitude probe the batch loader uses (Tables.events), so
         // stream and batch read the identical instants.
         raw.withColumn("ts", timestamp_micros(expr(s"ts DIV ${
-          graft.Tables.int64TsDivisor(batchRaw, s"$dir/events.parquet")}")))
+          Tables.int64TsDivisor(batchRaw, s"$dir/events.parquet")}")))
       case _ => raw
     }
   }
@@ -216,7 +216,7 @@ object StreamingQueries {
     * executor heartbeat expired (exit 56) with ZERO OOM thrown.
     *
     * Implementation (ADVICE r14): the count comes from the parquet
-    * FOOTERS directly (`ParquetFileReader.getRecordCount` per file,
+    * FOOTERS directly (row-group counts per file via [[Tables.footer]],
     * driver-side, no Spark job — the old `read.parquet(..).count()`
     * scheduled a real scan job at every q57/q98/q125/q129 start) and
     * is cached per dir (the harnesses re-query the same dir many
@@ -256,12 +256,11 @@ object StreamingQueries {
           }
           else if (root.isFile) Seq(root)
           else throw new java.io.FileNotFoundException(root.getPath)
+        import scala.jdk.CollectionConverters._
         val conf = s.sparkContext.hadoopConfiguration
         val n = files.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
+          Tables.footer(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+            .getBlocks.asScala.map(_.getRowCount).sum
         }.sum
         tableRowCountCache.put(key, n)
         n
@@ -328,6 +327,30 @@ object StreamingQueries {
       math.min(prev.toLong, ingestRows / rowsPerPart).toInt)
   }
 
+  /** Checkpoint file manager for a bounded drain whose checkpoint
+    * lives at `ckpt`: Spark's FileSystem-based manager when the path
+    * resolves to the local filesystem, else None (keep Spark's
+    * default). Spark's default renames through `FileContext`, which on
+    * the local filesystem calls `getFileLinkStatus` on every rename —
+    * without Hadoop's native library that forks a `readlink` process
+    * per offset, commit and state-store file. The FileSystem-based
+    * manager renames with `File.renameTo`, atomic on POSIX; Spark
+    * still wraps it in its checksum manager, and the local filesystem
+    * still writes `.crc` files. Resolves the filesystem CLASS from the
+    * scheme (or the default filesystem's), never connecting to it.
+    */
+  private[graft] def checkpointFileManager(ckpt: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[String] = {
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    val scheme = Option(new Path(ckpt).toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    val local = scala.util.Try(FileSystem.getFileSystemClass(scheme, conf))
+      .toOption.exists(classOf[LocalFileSystem].isAssignableFrom)
+    if (local) Some(classOf[org.apache.spark.sql.execution.streaming.
+      checkpointing.FileSystemBasedCheckpointFileManager].getName)
+    else None
+  }
+
   private def runToSnapshot(s: SparkSession, df: DataFrame, prefix: String,
       mode: OutputMode, corpusLinearState: Boolean = false,
       ingestRows: Long = 0L): DataFrame = {
@@ -343,17 +366,22 @@ object StreamingQueries {
     // query's checkpoint at start; restored for batch queries after).
     // The cap was re-measured at ×8 (800k events, r6): an adaptive
     // 26-partition variant LOST to the fixed cap — 59.8-60.0 s vs
-    // 52.2-57.1 s over the 8 stream demos, two runs each — the drains
-    // are commit-bound, not stateful-CPU-bound, so 4 stands. A real
-    // deployment sizes partitions to expected STATE volume; override
-    // via SPARK_GRAFT_STREAM_PARTITIONS for deployment-shaped runs.
+    // 52.2-57.1 s over the 8 stream demos, two runs each: the drains
+    // were commit-bound, not stateful-CPU-bound, and every state store
+    // adds its own commit. With local checkpoints on the FileSystem
+    // manager (checkpointFileManager) a commit no longer forks, and
+    // state-store commits cost ~9x less (perfbench relational
+    // `streaming.state_commit_ms` 352 -> 40 ms, 4 cores); fewer stores
+    // still mean fewer commits, so 4 stands. A real deployment sizes
+    // partitions to expected STATE volume; override via
+    // SPARK_GRAFT_STREAM_PARTITIONS for deployment-shaped runs.
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     // Stage attribution (cf. the dedup/loop families): the stream
     // demos are the bench's last opaque walls. `<q>_start` is plan +
     // source listing + state-store setup, `<q>_drain_bN` the actual
-    // micro-batch drain (N = batches run — a commit-bound query shows
-    // its batch count next to its wall), `<q>_snap` the sink snapshot
-    // + state-store unload.
+    // micro-batch drain (N = batches run — a per-batch fixed cost
+    // shows as the batch count next to the wall), `<q>_snap` the sink
+    // snapshot + state-store unload.
     // State-store provider: disk-backed RocksDB iff the query's state
     // is CORPUS-LINEAR and the run is in the file-sink (scale) regime
     // (r13, found by the ×512 distinct streams probe): the default
@@ -396,6 +424,20 @@ object StreamingQueries {
         "state.RocksDBStateStoreProvider")
       s.conf.set(clogKey, "true")
     }
+    // Checkpoint file manager: see checkpointFileManager. Memory-sink
+    // drains checkpoint where Spark puts an unnamed query's checkpoint
+    // (the session's checkpoint root, else a temp dir). A manager the
+    // session already names is kept. Like the partition cap, the
+    // class is fixed into the query when it starts (the stream clones
+    // the session), so the session conf is restored right after.
+    val ckptKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val ckptManager =
+      if (s.conf.getOption(ckptKey).isDefined) None
+      else checkpointFileManager(
+        if (useFile) s"$fileBase/ckpt"
+        else s.conf.getOption("spark.sql.streaming.checkpointLocation")
+          .getOrElse(System.getProperty("java.io.tmpdir")),
+        s.sessionState.newHadoopConf())
     val q = graft.RoundStats.timed(s"${prefix}_start") {
       try {
         // env hardening (cf. ScopedConf.TinyLoopRows): a malformed or
@@ -412,6 +454,7 @@ object StreamingQueries {
           .getOrElse(streamPartitionCap(prev.toInt, ingestRows,
             rowsPerStreamPartition(s)))
         s.conf.set("spark.sql.shuffle.partitions", cap.toString)
+        ckptManager.foreach(s.conf.set(ckptKey, _))
         if (!useFile)
           df.writeStream.outputMode(mode).format("memory")
             .queryName(name).start()
@@ -439,6 +482,7 @@ object StreamingQueries {
               "(Update emits deltas; a full-state snapshot would be wrong)")
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prev)
+        if (ckptManager.isDefined) s.conf.unset(ckptKey)
         if (useFile && needRocks) {
           prevProv match {
             case Some(p) => s.conf.set(provKey, p)
