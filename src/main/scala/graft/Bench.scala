@@ -2,54 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Where watchdog thread dumps are persisted. stderr alone proved
-    * useless post-hoc: the driver records only a tail of stdout, so the
-    * r5 q102 spike (47 s driver-side vs ~6 s in reruns) left no stack
-    * evidence. A file next to the bench output survives the run.
-    */
-  private val dumpPath =
-    sys.env.getOrElse("SPARK_GRAFT_DUMP_FILE", "bench_dumps.txt")
-
-  /** The watchdog was built to attribute the r2–r6 bench bimodality
-    * (uniform ~2× runs with clean per-query CPU). Two consecutive
-    * clean driver runs (r7 steal 2.3 s, r8 steal 0.6 s, both
-    * `dumped: []`) closed that investigation, and per-stage
-    * attribution lives in RoundStats now — so the dump machinery is
-    * OFF unless explicitly re-armed (SPARK_GRAFT_WATCHDOG=1). The
-    * `dumped` field stays in the JSON (empty when off) so the
-    * artifact shape is unchanged.
-    */
-  private val watchdogEnabled =
-    sys.env.get("SPARK_GRAFT_WATCHDOG").exists(v =>
-      v == "1" || v.equalsIgnoreCase("true"))
-
-  /** Queries that tripped the watchdog this run (reported in the JSON
-    * so a slow total is attributable without even opening the dump
-    * file).
-    */
-  private val dumped =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Dump all JVM thread stacks — fired by the watchdog when a query
-    * exceeds the soft deadline, to diagnose where a slow run actually
-    * spends its time (the r1/r2 bench bimodality was only attributable
-    * after the fact; this makes the next spike self-describing).
-    * Written to [[dumpPath]] (appended, timestamped) and summarized on
-    * stderr.
-    */
-  private def dumpStacks(tag: String): Unit = synchronized {
-    System.err.println(s"[bench-watchdog] $tag exceeded soft deadline; dump -> $dumpPath")
-    import scala.jdk.CollectionConverters._
-    val sb = new StringBuilder
-    sb ++= s"==== [bench-watchdog] $tag at ${java.time.Instant.now()} ====\n"
-    Thread.getAllStackTraces.asScala.foreach { case (t, frames) =>
-      sb ++= s"  --- ${t.getName} (${t.getState})\n"
-      frames.take(24).foreach(f => sb ++= s"      at $f\n")
-    }
-    val w = new java.io.FileWriter(dumpPath, true)
-    try w.write(sb.result()) finally w.close()
-  }
-
   /** Host CPU accounting from /proc/stat (jiffies, summed over all
     * CPUs): (busy = user+nice+system+irq+softirq, idle, iowait,
     * steal). STEAL is the smoking gun for the r2–r6 driver-bench
@@ -219,12 +171,11 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    new java.io.File(dumpPath).delete() // fresh dump file per run
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Conf.sfDir
+    val cpus = Conf.cpus(4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       // bound per-query metadata retention: 50+ queries in one session
       // otherwise accumulate listener/state backlog that taxes later,
@@ -238,19 +189,14 @@ object Bench {
       .config("spark.rdd.compress", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Bisect hook (r14): inject session confs for A/B bench runs,
-    // e.g. SPARK_GRAFT_CONF="spark.graft.dedup.releaseBuckets=false"
-    // (';'-separated pairs). The dedup child sessions propagate the
-    // spark.graft.* keys, so this reaches the production pipelines.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    // Session confs for A/B bench runs (see Conf.applyConfEnv). The
+    // dedup child sessions copy the graft keys, so this reaches the
+    // production pipelines.
+    Conf.applyConfEnv(spark)
     val sched = new SchedCounters
     spark.sparkContext.addSparkListener(sched)
     // optional local-iteration subset (driver runs the full set)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = Conf.only
     // Untimed warmup: first query otherwise pays one-off JVM/JIT,
     // codegen-compiler and parquet-reader init (~3 s measured on
     // q01) — session setup cost, not query cost. The tokens-regex
@@ -382,28 +328,6 @@ object Bench {
       sched.resetWindowFailure()
       val th0 = threadCpuByClass()
       val t0 = System.nanoTime()
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val watchdog = if (!watchdogEnabled) None else Some {
-        val t = new Thread(() => {
-          try {
-            // repeat dumps while the query is stuck: successive stacks
-            // distinguish a livelock (same frames each time) from slow
-            // progress (frames advance), which one snapshot can't
-            var k = 0
-            while (k < 4) {
-              Thread.sleep(30000)
-              if (!done.get()) {
-                dumped.add(name)
-                dumpStacks(s"$name +${30 * (k + 1)}s")
-              }
-              k += 1
-            }
-          } catch { case _: InterruptedException => () }
-        }, s"bench-watchdog-$name")
-        t.setDaemon(true)
-        t.start()
-        t
-      }
       try fn(spark, sfDir).count()
       catch {
         // A crashed query must be visible as a crash, not a timing:
@@ -412,9 +336,6 @@ object Bench {
           errors(name) = s"${e.getClass.getSimpleName}: " +
             Option(e.getMessage).getOrElse("").linesIterator.take(1)
               .mkString.take(160)
-      } finally {
-        done.set(true)
-        watchdog.foreach(_.interrupt())
       }
       val dt = (System.nanoTime() - t0) / 1e9
       val c1 = jvmStat()._1
@@ -449,7 +370,6 @@ object Bench {
     val qs = wallMap(results)
     val errs = strMap(errors.toMap)
     val total = jnum(results.values.sum)
-    val dmp = strList(dumped.toArray.map(_.toString).toSeq)
     // Environment evidence for the suite: host steal/iowait (all-CPU
     // jiffies → seconds at HZ=100), JVM process CPU, GC and JIT time.
     // Reading: wall total ≫ proc_cpu-justified with steal_s high ⇒
@@ -497,7 +417,7 @@ object Bench {
           .mkString("{", ",", "}")
       }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuQs,"stages":$stageQs,"sched":$schedJs,"threads":$threadJs,"env":$env,"errors":$errs,"dumped":$dmp,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu_sec":$cpuQs,"stages":$stageQs,"sched":$schedJs,"threads":$threadJs,"env":$env,"errors":$errs,"dumped":[],"sf":${jstr(sfDir)}}"""
     // Parse-proof shutdown (BENCH_r07 was `parsed: null`: a StateStore
     // maintenance WARN printed AFTER the summary line, so the driver
     // could not parse its tail). Order matters: silence log4j, stop
@@ -515,8 +435,7 @@ object Bench {
     // front-truncation; r05's per-query map was truncated too) — so the
     // COMPLETE JSON also goes to a file the driver / next round can read.
     locally {
-      val w = new java.io.FileWriter(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
+      val w = new java.io.FileWriter(Conf.benchOut)
       try { w.write(full); w.write("\n") } finally w.close()
     }
     // Compact summary LAST: everything a tail-window reader needs.
@@ -525,8 +444,7 @@ object Bench {
     // map its round-over-round per-query comparison was empty in BOTH
     // r15 and r16 (PERF n_common: 0 — VERDICT r16 #2). Additions-only:
     // every pre-existing field is unchanged.
-    println(compactLine(results, errors.toMap,
-      dumped.toArray.map(_.toString).toSeq, env, sfDir))
+    println(compactLine(results, errors.toMap, env, sfDir))
     System.out.flush()
   }
 
@@ -553,17 +471,15 @@ object Bench {
     m.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
 
-  private def strList(xs: Seq[String]): String =
-    xs.map(jstr).sorted.mkString("[", ",", "]")
-
   /** The compact summary line (`env` is an already-rendered JSON
     * object). Valid JSON for any wall, NaN and infinities included.
+    * `dumped` is always empty: the field outlived the stack-dump
+    * watchdog so the line's shape is unchanged.
     */
   private[graft] def compactLine(results: Map[String, Double],
-      errors: Map[String, String], dumped: Seq[String], env: String,
-      sfDir: String): String = {
+      errors: Map[String, String], env: String, sfDir: String): String = {
     val slow = results.toSeq.sortBy(-_._2).take(8)
       .map { case (k, v) => jstr(k) + ":" + jnum(v, "%.2f") }.mkString("{", ",", "}")
-    s"""{"metric":"total_compact","value":${jnum(results.values.sum)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":${wallMap(results)},"errors":${strMap(errors)},"dumped":${strList(dumped)},"slowest":$slow,"env":$env,"sf":${jstr(sfDir)}}"""
+    s"""{"metric":"total_compact","value":${jnum(results.values.sum)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":${wallMap(results)},"errors":${strMap(errors)},"dumped":[],"slowest":$slow,"env":$env,"sf":${jstr(sfDir)}}"""
   }
 }

@@ -52,9 +52,9 @@ object PlanAudit {
     //     the real shape. The k=1 default plan is the q37 entry above.
     sys.props.remove("graft.audit.nofinal")
     locally {
-      spark.conf.set(graft.queries.DedupQueries.VerifySlicesKey, "4")
+      spark.conf.set(Conf.VerifySlices.key, "4")
       val df = try SparkEntry.queries("q37_ngram_jaccard")(spark, sfDir)
-        finally spark.conf.unset(graft.queries.DedupQueries.VerifySlicesKey)
+        finally spark.conf.unset(Conf.VerifySlices.key)
       sb.append("\n## q37_ngram_jaccard (verifySlices=4 — sliced verify)\n\n```\n")
       sb.append(explain(df))
       sb.append("```\n")

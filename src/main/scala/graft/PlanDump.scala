@@ -24,10 +24,10 @@ object PlanDump {
     // cf. PlanAudit: skip the dedup final-stage checkpoint so the
     // verify-join shape is dumped instead of an opaque leaf scan
     sys.props("graft.audit.nofinal") = "true"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Conf.cpus(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -60,24 +60,9 @@ object ScopedConf {
     * 26.7 s interpreted vs 25.3 s codegen'd — a wash; shuffle cost
     * dominates well past the gate scale, so the threshold's exact
     * value is uncritical there and earns its keep in cold
-    * (JIT-throttled) environments. Override with
-    * SPARK_GRAFT_TINY_LOOP_ROWS for deployment-shaped tuning.
+    * (JIT-throttled) environments.
     */
-  val TinyLoopRows: Long = {
-    val default = 100L * 1000 * 1000
-    sys.env.get("SPARK_GRAFT_TINY_LOOP_ROWS") match {
-      case None => default
-      case Some(v) => v.trim.toLongOption.getOrElse {
-        // a malformed value must not surface as an opaque
-        // ExceptionInInitializerError at first ScopedConf use —
-        // warn with the env var named and keep the default
-        System.err.println(
-          s"[graft] SPARK_GRAFT_TINY_LOOP_ROWS='$v' is not a long; " +
-            s"using default $default")
-        default
-      }
-    }
-  }
+  val TinyLoopRows: Long = 100L * 1000 * 1000
 
   /** Loop-shuffle width budget, in measured per-round ROWS per
     * partition (r16, optimization round). A tiny-profile loop's
@@ -91,20 +76,17 @@ object ScopedConf {
     * partition sizing). Above [[TinyLoopRows]] the loop keeps session
     * defaults — AQE owns the width there.
     */
-  val LoopRowsPerPartitionKey = "spark.graft.loop.rowsPerPartition"
-  val LoopRowsPerPartitionDefault = 4L * 1000 * 1000
+  val LoopRowsPerPartition: Long = 4L * 1000 * 1000
 
   /** Size-aware loop scope: tiny profile under [[TinyLoopRows]]
     * per-round rows (with the loop's shuffle width derived from that
-    * same measured volume — see [[LoopRowsPerPartitionKey]]), session
+    * same measured volume — see [[LoopRowsPerPartition]]), session
     * defaults (codegen + AQE) above.
     */
   def forLoopOf[T](s: SparkSession, rowsPerRound: Long)(body: => T): T =
     if (rowsPerRound <= TinyLoopRows) {
-      val per = s.conf.getOption(LoopRowsPerPartitionKey)
-        .flatMap(_.trim.toLongOption).filter(_ > 0)
-        .getOrElse(LoopRowsPerPartitionDefault)
-      val w = math.max(1L, math.min(rowsPerRound / per + 1, 4096L))
+      val w = math.max(1L,
+        math.min(rowsPerRound / LoopRowsPerPartition + 1, 4096L))
       withConf(s,
         "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.adaptive.enabled" -> "false",

@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Conf, Tables}
 import graft.functions.{CosineSim, Hashing, TextFunctions => T}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication family q34–q38 (SURVEY.md §2).
   *
@@ -29,8 +28,8 @@ object DedupQueries {
     */
   val MaxBucket = 64
 
-  /** Above this many candidate ids the verify-fetch joins flip from
-    * broadcast to shuffle-hash (see [[attachFeaturesBy]]). Rationale:
+  /* `Conf.CandBroadcastMaxRows`: above this many candidate ids the
+    * verify-fetch joins flip from broadcast to shuffle-hash (see [[attachFeaturesBy]]). Rationale:
     * verify features run 0.1–3 KB/row (hashed shingle/gram arrays,
     * float embeddings), so 2^18 rows bound the broadcast build at
     * ~25–800 MB — comfortably inside a worker heap. Past it, a
@@ -41,16 +40,13 @@ object DedupQueries {
     * session (tests pin both shapes); [[dedupSession]] propagates it
     * to the child.
     */
-  private[graft] val CandBroadcastMaxKey =
-    "spark.graft.dedup.candBroadcastMaxRows"
-  private[graft] val CandBroadcastMaxDefault: Long = 1L << 18
 
-  /** Candidate ids per build partition on the flipped (shuffle-hash)
-    * verify path — see the fetchParts rationale in
-    * [[attachFeaturesBy]]: hash-relation builds are not spillable, so
-    * the partition count must grow with the measured candidate count.
-    * Conf-backed; a deployment with wider features sizes builds down
-    * the same way it sizes shuffle partitions.
+  /* `Conf.FetchIdsPerPartition`: candidate ids per build partition on
+    * the flipped (shuffle-hash) verify path — see the fetchParts
+    * rationale in [[attachFeaturesBy]]: hash-relation builds are not
+    * spillable, so the partition count must grow with the measured
+    * candidate count. A deployment with wider features sizes builds
+    * down the same way it sizes shuffle partitions.
     *
     * Default sizing against the PER-TASK execution cap, not the pool:
     * with T concurrent tasks Spark caps each task at ~pool/T (8 g ×
@@ -64,19 +60,9 @@ object DedupQueries {
     * an order of magnitude of headroom for the same candidate-sized
     * total exchange, at the cost of ~4× more (cheap, small) tasks.
     */
-  private[graft] val FetchIdsPerPartitionKey =
-    "spark.graft.dedup.fetchIdsPerPartition"
-  private[graft] val FetchIdsPerPartitionDefault: Long = 4096L
 
-  private def fetchIdsPerPartition(s: SparkSession): Long =
-    s.conf.get(FetchIdsPerPartitionKey, FetchIdsPerPartitionDefault.toString)
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $FetchIdsPerPartitionKey is not a " +
-          s"positive long; using $FetchIdsPerPartitionDefault")
-        FetchIdsPerPartitionDefault
-      }
-
-  /** Scan bytes per partition for the BUCKET-AGGREGATION exchanges —
+  /* `Conf.BucketScanBytesPerPartition`: scan bytes per partition for
+    * the BUCKET-AGGREGATION exchanges —
     * the blocking groupBys that collect (band/chunk/key → member
     * structs). With AQE off (see [[dedupSession]]) those exchanges
     * otherwise run at the session's static shuffle partitions, and at
@@ -97,24 +83,16 @@ object DedupQueries {
     * defaultSizeInBytes ≈ Long.Max and is treated as unknown →
     * session partitions).
     */
-  private[graft] val BucketScanBytesKey =
-    "spark.graft.dedup.bucketScanBytesPerPartition"
-  private[graft] val BucketScanBytesDefault: Long = 2L * 1024 * 1024
   private[graft] val BucketMaxParts = 16384
 
   /** Bucket-agg partition count for a pipeline whose corpus scan is
-    * `scan` (see [[BucketScanBytesKey]]). Deterministic per run: reads
-    * plan-time stats, never runs a job.
+    * `scan` (see `Conf.BucketScanBytesPerPartition`). Deterministic
+    * per run: reads plan-time stats, never runs a job.
     */
   private[graft] def bucketAggParts(scan: DataFrame): Int = {
     val s = scan.sparkSession
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val per = s.conf.get(BucketScanBytesKey, BucketScanBytesDefault.toString)
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $BucketScanBytesKey is not a " +
-          s"positive long; using $BucketScanBytesDefault")
-        BucketScanBytesDefault
-      }
+    val per = Conf.BucketScanBytesPerPartition(s)
     val bytes = scan.queryExecution.optimizedPlan.stats.sizeInBytes
     // > 1 PB ⇒ the "unknown size" sentinel (defaultSizeInBytes), not a
     // real corpus measurement — fall back to the session's static width
@@ -133,7 +111,7 @@ object DedupQueries {
     // the compute-heavy stages keep their own explicit widths (the
     // signature map side runs at the scan/fanOut partitioning; the
     // quadratic pair expansions size off their measured pair-volume
-    // estimate — see [[PairsPerTaskKey]]). Large corpora are
+    // estimate — see [[PairsPerTask]]). Large corpora are
     // unaffected: past ~64 MB of scan bytes the derived width exceeds
     // any session width the driver uses.
     else (bytes / per + 1).min(BigInt(BucketMaxParts)).toInt
@@ -161,20 +139,12 @@ object DedupQueries {
     * bucket-table width so a corpus-wide bucket set is never
     * funnelled down, and capped like [[BucketMaxParts]].
     */
-  private[graft] val PairsPerTaskKey = "spark.graft.dedup.pairsPerTask"
-  private[graft] val PairsPerTaskDefault = 2097152L
+  private val PairsPerTask = 2097152L
 
-  private[graft] def expandWidth(s: SparkSession, estPairs: Long,
-      floor: Int): Int = {
-    val per = s.conf.getOption(PairsPerTaskKey)
-      .flatMap(_.trim.toLongOption).filter(_ > 0)
-      .getOrElse(PairsPerTaskDefault)
-    val est = math.min(estPairs / per + 1L, BucketMaxParts.toLong).toInt
+  private[graft] def expandWidth(estPairs: Long, floor: Int): Int = {
+    val est = math.min(estPairs / PairsPerTask + 1L, BucketMaxParts.toLong).toInt
     math.max(math.max(1, floor), est)
   }
-
-  /** Marks a [[dedupSession]] child (see there). */
-  private[graft] val DedupChildKey = "spark.graft.dedup.isChildSession"
 
   /** Scope a dedup CHILD session's shuffle width to the pipeline's
     * corpus (r16, optimization round; guide §2.2). The dedup family
@@ -194,21 +164,20 @@ object DedupQueries {
   private def corpusSizedSession(scan: DataFrame): Int = {
     val w = bucketAggParts(scan)
     val s = scan.sparkSession
-    if (s.conf.getOption(DedupChildKey).contains("true"))
+    if (Conf.isDedupChild(s))
       s.conf.set("spark.sql.shuffle.partitions", w.toString)
     w
   }
 
   /** q36 level-3 re-block budget, in KEYED ROWS (members × 8
-    * interleaved keys — the unit is kept from r12 so a pinned conf
-    * keeps its meaning). Through r12 level 3 ran as a global
+    * interleaved keys). Through r12 level 3 ran as a global
     * explode→shuffle→sort pipeline and this guard bounded its ~24 B/
     * keyed-row scratch volume against the box's local disk (the
     * ×1024 probe's ~2.6 B rows exhausted ~40-60 GB of scratch). r13's
     * [[level3BucketPairs]] subdivides each oversized sub-bucket
     * LOCALLY (the l3 key is scoped inside the l2 key, so buckets
     * never interact) — zero exchange, CPU linear in forwarded
-    * members — so at the default the guard should never trip on
+    * members — so the guard should never trip on
     * realistic data; it remains as a bounded-degradation valve for
     * adversarial floods. Past the budget, level 3 is SKIPPED — loudly
     * (stderr) and visibly: the same kernel still runs in
@@ -219,9 +188,7 @@ object DedupQueries {
     * count off the sub-bucket checkpoint's own job (observe — no
     * extra action).
     */
-  private[graft] val Level3MaxRowsKey =
-    "spark.graft.dedup.simhashLevel3MaxRows"
-  // Default re-derived for the localized kernel (r13): the old 1.5 B
+  // Re-derived for the localized kernel (r13): the old 1.5 B
   // bounded ~24 B/keyed-row SHUFFLE scratch, which no longer exists —
   // the ×512 distinct corpus already measures ~1.3 B keyed-row
   // equivalents, so ×2048 (~5.2 B) would have tripped a guard that
@@ -230,18 +197,10 @@ object DedupQueries {
   // saturation). 16 B keyed rows ≈ 2 B forwarded members ≈ minutes of
   // kernel CPU on one box — the valve now trips only on floods an
   // order past the measured single-JVM envelope.
-  private[graft] val Level3MaxRowsDefault: Long = 16L * 1000L * 1000L * 1000L
+  private val Level3MaxRows: Long = 16L * 1000L * 1000L * 1000L
 
-  private def level3MaxRows(s: SparkSession): Long =
-    s.conf.get(Level3MaxRowsKey, Level3MaxRowsDefault.toString)
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $Level3MaxRowsKey is not a " +
-          s"positive long; using $Level3MaxRowsDefault")
-        Level3MaxRowsDefault
-      }
-
-  /** Storage level for PAIR/OUTPUT-sized eager materializations,
-    * stored SERIALIZED by default. The plain localCheckpoint keeps
+  /* Storage level (`Conf.pairStorageLevel`) for PAIR/OUTPUT-sized
+    * eager materializations, stored SERIALIZED by default. The plain localCheckpoint keeps
     * deserialized UnsafeRow objects in the memory store — per-row
     * object headers inflate a 40 M-pair set ~2× and the value-unroll
     * path is where the ×128 flood OOM'd (UnsafeRow.copy inside
@@ -257,19 +216,16 @@ object DedupQueries {
     * intermediate is written to storage and read back, with no
     * memory-pool residency at all. `DISK_ONLY` models exactly that
     * (local-disk blocks, zero storage-pool pressure) and extends the
-    * default-heap envelope. Resolution: session conf
-    * [[PairStorageKey]] > env `SPARK_GRAFT_PAIR_STORAGE` (reaches
-    * Bench/Verify/ScaleStress without plumbing, cf.
-    * SPARK_GRAFT_STREAM_SINK) > `MEMORY_AND_DISK_SER`. Gate-scale runs
-    * keep the default: pair tables there are tiny and re-read hot.
+    * default-heap envelope. Set as `Conf.PairStorageLevelKey` (Bench,
+    * Verify and ScaleStress take it through `SPARK_GRAFT_CONF`);
+    * unset, `MEMORY_AND_DISK_SER`. Gate-scale runs keep the default:
+    * pair tables there are tiny and re-read hot.
     */
-  private[graft] val PairStorageKey = "spark.graft.dedup.pairStorageLevel"
-  private[graft] val PairStorageDefault = "MEMORY_AND_DISK_SER"
 
-  /** Measured-volume escalation threshold (r11, closing VERDICT r10
-    * #5): when a pipeline's estimated pair-expansion volume crosses
+  /* `Conf.PairDiskOnlyMinRows`: the measured-volume escalation
+    * threshold (r11, closing VERDICT r10 #5): when a pipeline's estimated pair-expansion volume crosses
     * this row count, its remaining pair-sized checkpoints auto-select
-    * `DISK_ONLY` — no env var needed at deployment scale. Rationale:
+    * `DISK_ONLY` — no explicit pin needed at deployment scale. Rationale:
     * DISK_ONLY is strictly FASTER once the pair table competes with
     * the verify working set for unified memory (flood ×256 on the
     * default 8 g heap: q35 154.9 s DISK_ONLY vs 336.8 s serialized on
@@ -277,60 +233,26 @@ object DedupQueries {
     * shuffle-hash verify build), while below it the hot re-reads favor
     * the serialized-memory default. The estimate rides the bucket
     * checkpoint's own job as an `observe` metric (zero extra actions);
-    * an EXPLICIT level pin — session conf or SPARK_GRAFT_PAIR_STORAGE
-    * — always wins over the auto decision.
+    * an EXPLICIT level pin always wins over the auto decision (the
+    * auto-escalation must never override an explicit choice).
     */
-  private[graft] val PairDiskMinKey = "spark.graft.dedup.pairDiskOnlyMinRows"
-  private[graft] val PairDiskMinDefault: Long = 10L * 1000L * 1000L
-
-  private def pairDiskMin(s: SparkSession): Long =
-    s.conf.get(PairDiskMinKey, sys.env.getOrElse("SPARK_GRAFT_PAIR_DISK_MIN",
-        PairDiskMinDefault.toString))
-      .trim.toLongOption.filter(_ > 0).getOrElse {
-        System.err.println(s"[graft] $PairDiskMinKey/" +
-          "SPARK_GRAFT_PAIR_DISK_MIN is not a positive long; " +
-          s"using $PairDiskMinDefault")
-        PairDiskMinDefault
-      }
-
-  /** True when the pair storage level was pinned by the user — the
-    * auto-escalation must never override an explicit choice.
-    */
-  private def pairLevelPinned(s: SparkSession): Boolean =
-    s.conf.getOption(PairStorageKey).isDefined ||
-      sys.env.contains("SPARK_GRAFT_PAIR_STORAGE")
 
   /** Escalate the (pipeline-scoped) session's pair storage to
     * DISK_ONLY when the measured expansion volume crosses
-    * [[PairDiskMinKey]]. Called once per pipeline, right after the
-    * bucket checkpoint whose observe metric supplies `estPairRows`;
+    * `Conf.PairDiskOnlyMinRows`. Called once per pipeline, right after
+    * the bucket checkpoint whose observe metric supplies `estPairRows`;
     * every pair-sized [[bigCheckpoint]] downstream of that point picks
-    * the escalated level up through [[pairLevel]].
+    * the escalated level up through `Conf.pairStorageLevel`.
     */
   private def maybeEscalatePairStorage(s: SparkSession, estPairRows: Long,
       tag: String): Unit =
-    if (!pairLevelPinned(s) && estPairRows >= pairDiskMin(s)) {
+    if (!Conf.pairStorageLevelPinned(s) &&
+        estPairRows >= Conf.PairDiskOnlyMinRows(s)) {
       System.err.println(f"[graft] $tag: ~$estPairRows%,d estimated pair " +
-        s"rows ≥ ${pairDiskMin(s)} — pair checkpoints use DISK_ONLY " +
-        "for this pipeline")
-      s.conf.set(PairStorageKey, "DISK_ONLY")
+        s"rows ≥ ${Conf.PairDiskOnlyMinRows(s)} — pair checkpoints use " +
+        "DISK_ONLY for this pipeline")
+      s.conf.set(Conf.PairStorageLevelKey, "DISK_ONLY")
     }
-
-  private def pairLevel(s: SparkSession): StorageLevel = {
-    val spec = s.conf.get(PairStorageKey,
-      sys.env.getOrElse("SPARK_GRAFT_PAIR_STORAGE", PairStorageDefault))
-    // env hardening (cf. StreamingQueries.sinkMode): a typo'd level
-    // name must not throw deep inside every dedup pipeline — warn with
-    // the knob named and keep the default level
-    try StorageLevel.fromString(spec.trim.toUpperCase)
-    catch {
-      case _: IllegalArgumentException =>
-        System.err.println(s"[graft] $PairStorageKey/" +
-          s"SPARK_GRAFT_PAIR_STORAGE='$spec' is not a StorageLevel name; " +
-          s"using $PairStorageDefault")
-        StorageLevel.fromString(PairStorageDefault)
-    }
-  }
 
   /** Shared with the cluster-assignment path (Extended14 /
     * ConnectedComponents): its edge-sized checkpoints are pair-sized
@@ -343,7 +265,8 @@ object DedupQueries {
     * buffers instead.
     */
   private[graft] def bigCheckpoint(df: DataFrame): DataFrame =
-    registerCheckpoint(df.localCheckpoint(true, pairLevel(df.sparkSession)))
+    registerCheckpoint(
+      df.localCheckpoint(true, Conf.pairStorageLevel(df.sparkSession)))
 
   /** Scoped checkpoint tracking for the sliced verify (ADVICE r14):
     * the slice loop used to free its intermediates by DIFFING the
@@ -378,61 +301,8 @@ object DedupQueries {
     df
   }
 
-  /** Release a [[bigCheckpoint]]'s blocks the moment its LAST consumer
-    * has materialized (r13, from the ×2048 scratch attribution): a
-    * dedup pipeline's checkpoints all live until the section/bench
-    * harness releases them, so the PEAK scratch is their SUM — 15.5 GB
-    * for q37 alone at ×512, ~66 GB at ×2048, the box's binding
-    * resource and the measured ×4096 blocker. The bucket tables are
-    * roughly half of that and are dead as soon as the pair-expansion
-    * checkpoint (their only consumer, itself lineage-cut) is
-    * materialized — releasing them mid-pipeline halves the peak.
-    * `Dataset.unpersist` cannot do this (it consults the SQL cache
-    * manager, which never saw a localCheckpoint), so the release
-    * unpersists the checkpoint's own RDD via its LogicalRDD leaf.
-    * UNRECOVERABLE by design: the caller must guarantee no later plan
-    * references the frame (a localCheckpoint has no lineage to
-    * recompute from). `spark.graft.dedup.releaseBuckets=false` keeps
-    * the old hold-to-section-end behavior — a diagnostic hook (the
-    * width spec reads the bucket exchange's partition count off the
-    * surviving checkpoint; a debugging session may want the
-    * intermediates inspectable). [[dedupSession]] propagates the key,
-    * so setting it on the caller's session reaches the production
-    * pipelines (r14, ADVICE: it used to be read only off the child).
-    *
-    * Guarded (r14, ADVICE): the passed frame must BE a direct
-    * checkpoint — a single [[LogicalRDD]] plan. A derived/joined
-    * frame would make the old leaf-foreach free every reachable
-    * checkpoint, including live ones other pipelines still need
-    * (irrecoverable corruption); misuse now fails loudly instead.
-    */
-  private[graft] val ReleaseBucketsKey = "spark.graft.dedup.releaseBuckets"
-
-  /** Release-as-you-go for the SLICED verify's standing checkpoints
-    * (r16, VERDICT r15 #4 — the named ×8192 binding resource): with
-    * k ≥ 2 slices, q37's candidate table `pairs` used to stand
-    * through the entire verify phase (its exact-shortcut and
-    * work-list consumers are filters evaluated at the very end), so
-    * the gate's peak disk was pairs + per-slice transient — and
-    * slicing cannot reduce the standing component. With this on
-    * (default), the two consumers are materialized as their own
-    * (strictly smaller: implausible candidates dropped, flag columns
-    * gone) checkpoints immediately after `pairs` lands, and each
-    * standing checkpoint is released the moment its LAST consumer
-    * materializes: pairs → after the split lands; the verify
-    * work-list → after the last slice; the exact shortcut and the
-    * slice outputs → after the final (lineage-cut) union. Off =
-    * the pre-r16 hold-to-section-end lifetimes, the A/B lever for
-    * the peak-disk measurement. k = 1 (the bench/gate default) is
-    * UNTOUCHED either way — no new barriers in the benched plan.
-    */
-  private[graft] val ReleasePairsKey = "spark.graft.dedup.releasePairs"
-
-  private def releasePairsEnabled(s: SparkSession): Boolean =
-    s.conf.getOption(ReleasePairsKey)
-      .forall(_.trim.equalsIgnoreCase("true"))
-
-  /** Verify-stage slicing (r14, the measured ×4096 blocker): q37's
+  /* `Conf.VerifySlices`: verify-stage slicing (r14, the measured
+    * ×4096 blocker): q37's
     * candidate verify — fetch join + attach joins + distinct — runs
     * ~108 GB of TRANSIENT shuffle scratch at ×4096 distinct against
     * ~80 GB free disk, all live at once because the verify is one
@@ -449,11 +319,6 @@ object DedupQueries {
     * Default 1 (unsliced); the scale harness sets it for the ×4096
     * probe, a deployment sizes it like shuffle partitions.
     */
-  private[graft] val VerifySlicesKey = "spark.graft.dedup.verifySlices"
-
-  private def verifySlices(s: SparkSession): Int =
-    s.conf.getOption(VerifySlicesKey)
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
 
   /** Test hook: (rddId, numPartitions) of every checkpoint freed by
     * [[releaseCheckpoint]]. The release pin used to be a NEGATIVE
@@ -467,19 +332,38 @@ object DedupQueries {
   private[graft] val releasedCheckpoints =
     new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
 
+  /** Release a [[bigCheckpoint]]'s blocks the moment its LAST consumer
+    * has materialized (r13, from the ×2048 scratch attribution): a
+    * dedup pipeline's checkpoints all live until the section/bench
+    * harness releases them, so the PEAK scratch is their SUM — 15.5 GB
+    * for q37 alone at ×512, ~66 GB at ×2048, the box's binding
+    * resource and the measured ×4096 blocker. The bucket tables are
+    * roughly half of that and are dead as soon as the pair-expansion
+    * checkpoint (their only consumer, itself lineage-cut) is
+    * materialized — releasing them mid-pipeline halves the peak.
+    * `Dataset.unpersist` cannot do this (it consults the SQL cache
+    * manager, which never saw a localCheckpoint), so the release
+    * unpersists the checkpoint's own RDD via its LogicalRDD leaf.
+    * UNRECOVERABLE by design: the caller must guarantee no later plan
+    * references the frame (a localCheckpoint has no lineage to
+    * recompute from).
+    *
+    * Guarded (r14, ADVICE): the passed frame must BE a direct
+    * checkpoint — a single [[LogicalRDD]] plan. A derived/joined
+    * frame would make the old leaf-foreach free every reachable
+    * checkpoint, including live ones other pipelines still need
+    * (irrecoverable corruption); misuse now fails loudly instead.
+    */
   private def releaseCheckpoint(df: DataFrame): Unit =
-    if (df.sparkSession.conf
-        .getOption(ReleaseBucketsKey)
-        .forall(_.trim.equalsIgnoreCase("true")))
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          releasedCheckpoints.add((lr.rdd.id, lr.rdd.getNumPartitions))
-          lr.rdd.unpersist(false)
-        case other => throw new IllegalArgumentException(
-          "releaseCheckpoint expects a direct localCheckpoint frame " +
-            s"(a single LogicalRDD plan); got ${other.nodeName} — a " +
-            "derived frame could free unrelated live checkpoints")
-      }
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        releasedCheckpoints.add((lr.rdd.id, lr.rdd.getNumPartitions))
+        lr.rdd.unpersist(false)
+      case other => throw new IllegalArgumentException(
+        "releaseCheckpoint expects a direct localCheckpoint frame " +
+          s"(a single LogicalRDD plan); got ${other.nodeName} — a " +
+          "derived frame could free unrelated live checkpoints")
+    }
 
   /** Child session scoped to one dedup pipeline, with AQE off.
     *
@@ -505,33 +389,16 @@ object DedupQueries {
     s2.conf.set("spark.sql.session.timeZone",
       s.conf.get("spark.sql.session.timeZone"))
     s2.conf.set("spark.sql.adaptive.enabled", "false")
+    // every graft conf the caller set reaches the pipeline; an unset
+    // pair-storage level stays unset, which is what lets the measured
+    // auto-escalation (maybeEscalatePairStorage) own the decision
+    s.conf.getAll.foreach { case (k, v) =>
+      if (k.startsWith(Conf.Prefix)) s2.conf.set(k, v) }
     // marks this as a PIPELINE-SCOPED session: [[corpusSizedSession]]
     // may re-derive its shuffle width from the corpus scan (never a
     // caller's shared session — specs call pipeline internals on the
     // suite session directly, and a width mutation there would leak)
-    s2.conf.set(DedupChildKey, "true")
-    s2.conf.set(CandBroadcastMaxKey,
-      s.conf.get(CandBroadcastMaxKey, CandBroadcastMaxDefault.toString))
-    // Propagate a pair-storage level ONLY when the parent pinned one
-    // explicitly (the env var reaches the child through pairLevel's
-    // fallback) — an unset child key is what lets the measured
-    // auto-escalation (maybeEscalatePairStorage) own the decision.
-    s.conf.getOption(PairStorageKey)
-      .foreach(s2.conf.set(PairStorageKey, _))
-    s.conf.getOption(PairDiskMinKey)
-      .foreach(s2.conf.set(PairDiskMinKey, _))
-    s.conf.getOption(FetchIdsPerPartitionKey)
-      .foreach(s2.conf.set(FetchIdsPerPartitionKey, _))
-    s.conf.getOption(BucketScanBytesKey)
-      .foreach(s2.conf.set(BucketScanBytesKey, _))
-    s.conf.getOption(Level3MaxRowsKey)
-      .foreach(s2.conf.set(Level3MaxRowsKey, _))
-    s.conf.getOption(ReleaseBucketsKey)
-      .foreach(s2.conf.set(ReleaseBucketsKey, _))
-    s.conf.getOption(ReleasePairsKey)
-      .foreach(s2.conf.set(ReleasePairsKey, _))
-    s.conf.getOption(VerifySlicesKey)
-      .foreach(s2.conf.set(VerifySlicesKey, _))
+    s2.conf.set(Conf.DedupChildKey, "true")
     s2
   }
 
@@ -571,7 +438,7 @@ object DedupQueries {
       // rows back across the cluster first (explicit repartition is
       // exempt from AQE coalescing; the exchange is bucket-sized) at
       // the caller's measured pair-volume width (r16 — see
-      // expandWidth / PairsPerTaskKey).
+      // expandWidth / PairsPerTask).
       .repartition(math.max(1, width))
       .select(explode(col("ids")).as("a"), col("ids"))
       .select(col("a"), explode(col("ids")).as("b"))
@@ -590,7 +457,7 @@ object DedupQueries {
     * round-1 driver-stall hazard was broadcasting the FULL feature
     * table, which this never does. The JOIN STRATEGY is size-guarded
     * (cf. q133's broadcastMaxNodes): at or under
-    * [[CandBroadcastMaxKey]] candidate ids the prune and attach joins
+    * `Conf.CandBroadcastMaxRows` candidate ids the prune and attach joins
     * broadcast (zero shuffle of the pair stream); past it they pin
     * shuffle-hash — a flood-regime candidate set (every doc in a dup
     * clique) is corpus-sized, and a corpus-sized broadcast build is
@@ -654,8 +521,7 @@ object DedupQueries {
     // decision is deterministic per run — no AQE, no stats guesswork.
     val s = candIds.sparkSession
     val nIds = candIds.count()
-    val broadcastOk = nIds <= s.conf
-      .get(CandBroadcastMaxKey, CandBroadcastMaxDefault.toString).toLong
+    val broadcastOk = nIds <= Conf.CandBroadcastMaxRows(s)
     // Flipped-path partition count follows the MEASURED candidate
     // count, not the session's static shuffle.partitions: an SHJ hash
     // relation build is NOT spillable, so each build partition
@@ -668,8 +534,8 @@ object DedupQueries {
     // pool under 32 concurrent builds ("Can't acquire … to build hash
     // relation") — the flood regime never sees this because its
     // candidates are almost all exact-signature short-circuited.
-    // Ids-per-build sizing is owned by [[FetchIdsPerPartitionKey]]'s
-    // scaladoc (4096 ids ≈ ≤12 MB builds under the per-task
+    // Ids-per-build sizing is owned by the `Conf.FetchIdsPerPartition`
+    // note at the top of this object (4096 ids ≈ ≤12 MB builds under the per-task
     // execution-memory cap — r11 re-sizing); the pre-join
     // repartition satisfies the join's distribution so the planner
     // aligns the stream side to it (no extra exchange on the build
@@ -683,7 +549,7 @@ object DedupQueries {
     // exchange-free (DedupSpec pins the width on the SHJ nodes).
     val fetchParts = math.max(
       s.conf.get("spark.sql.shuffle.partitions").toLong,
-      nIds / fetchIdsPerPartition(s) + 1L).toInt
+      nIds / Conf.FetchIdsPerPartition(s) + 1L).toInt
     val prep: (DataFrame, String) => DataFrame =
       if (broadcastOk) (d, _) => broadcast(d)
       else (d, k) => d.repartition(fetchParts, col(k)).hint("shuffle_hash")
@@ -968,8 +834,8 @@ object DedupQueries {
     val estPairs = obsEst.get("est_pairs").asInstanceOf[Long]
     maybeEscalatePairStorage(buckets.sparkSession, estPairs, "minhash")
     // pair-volume-derived width for the quadratic expansion stages AND
-    // the co-located pair dedup below (see PairsPerTaskKey)
-    val exWidth = expandWidth(buckets.sparkSession, estPairs, bucketParts)
+    // the co-located pair dedup below (see PairsPerTask)
+    val exWidth = expandWidth(estPairs, bucketParts)
     // Level 2 (q36/q37 parity, closing q35's last silent cap): a
     // NEAR-dup clique larger than MaxBucket floods all 16 band
     // buckets past the cap, and — unlike an exact clique — gets no
@@ -1002,7 +868,7 @@ object DedupQueries {
     def expand(b: DataFrame, cap: Int): DataFrame = b
       .filter(size(col("members")) <= cap)
       // spread the quadratic pair expansion at the MEASURED pair
-      // volume (r16 — see PairsPerTaskKey), never narrower than the
+      // volume (r16 — see PairsPerTask), never narrower than the
       // corpus-proportional bucket table itself (don't funnel a
       // corpus-wide bucket set down to a constant)
       .repartition(exWidth)
@@ -1173,7 +1039,7 @@ object DedupQueries {
       // ×128 (r12): the 2 MB/partition width put single builds at
       // ~35 MB serialized / ~70 MB resident and 32 concurrent tasks
       // exhausted the pool ("Unable to acquire … got 0"); 4× finer ≈
-      // ≤12 MB builds — the same budget as fetchIdsPerPartition.
+      // ≤12 MB builds — the same budget as FetchIdsPerPartition.
       val statParts = bucketAggParts(rawBase)
       val bucketParts = math.min(BucketMaxParts, statParts * 4)
       // Index-scale storage policy (r12, the ×512 q136 OOM): the index
@@ -1186,12 +1052,12 @@ object DedupQueries {
       // same physics). Trigger: the scan stats pushed the width past
       // the session's static partitions ⇔ the corpus outgrew the
       // memory-friendly regime. An explicit pin always wins.
-      if (!pairLevelPinned(s) && statParts >
+      if (!Conf.pairStorageLevelPinned(s) && statParts >
           s.conf.get("spark.sql.shuffle.partitions").toInt) {
         System.err.println(s"[graft] incr: corpus-scale index " +
           s"($statParts stat partitions) — pipeline checkpoints use " +
           "DISK_ONLY")
-        s.conf.set(PairStorageKey, "DISK_ONLY")
+        s.conf.set(Conf.PairStorageLevelKey, "DISK_ONLY")
       }
       // corpus-sized child-session width (cf. corpusSizedSession) —
       // AFTER the storage-policy check above, which compares the stat
@@ -1202,7 +1068,7 @@ object DedupQueries {
       // candidate distincts, probe joins and final stages inherit the
       // base-corpus width set here; only the nn leg's expansion widths
       // re-derive from the shard's own scan stats (smaller by design).
-      if (s.conf.getOption(DedupChildKey).contains("true"))
+      if (Conf.isDedupChild(s))
         s.conf.set("spark.sql.shuffle.partitions", statParts.toString)
       val buckets = graft.RoundStats.timed("incr_index") {
         bigCheckpoint(minHashKeyed(shingle2Of(rawBase))
@@ -1522,7 +1388,7 @@ object DedupQueries {
       width: Int): DataFrame =
     buckets
       // spread the quadratic pair expansion at the caller's measured
-      // pair-volume width (r16 — see expandWidth / PairsPerTaskKey)
+      // pair-volume width (r16 — see expandWidth / PairsPerTask)
       .repartition(math.max(1, width))
       .select(explode(col("members")).as("m"), col("members"))
       .select(col("m"), explode(col("members")).as("n"))
@@ -1691,7 +1557,7 @@ object DedupQueries {
     maybeEscalatePairStorage(flat.sparkSession, estPairs, "simhash")
     // pair-volume-derived expansion/dedup width (cf. minHashPairs) —
     // here the estimate is the driver-side size census above
-    val exWidth = expandWidth(flat.sparkSession, estPairs, bucketParts)
+    val exWidth = expandWidth(estPairs, bucketParts)
     val memb = flat.join(
       broadcast(flat.sparkSession.createDataFrame(
         java.util.Arrays.asList(sizeRows: _*), sizesAgg.schema)),
@@ -1741,12 +1607,12 @@ object DedupQueries {
     val reblocked = sub2.filter(size(col("members")) <= MaxBucket)
     val level3Rows =
       obsFwd.get("fwd_members").asInstanceOf[Long] * 8L
-    val runLevel3 = level3Rows <= level3MaxRows(docs.sparkSession)
+    val runLevel3 = level3Rows <= Level3MaxRows
     if (!runLevel3)
       System.err.println(f"[graft] simhash: level-3 re-block skipped — " +
-        f"$level3Rows%,d keyed rows exceed $Level3MaxRowsKey=" +
-        f"${level3MaxRows(docs.sparkSession)}%,d; oversized sub-buckets " +
-        "drop (visible via simhash_reblock metrics; exact-code pairs kept)")
+        f"$level3Rows%,d keyed rows exceed $Level3MaxRows%,d; oversized " +
+        "sub-buckets drop (visible via simhash_reblock metrics; " +
+        "exact-code pairs kept)")
     // Level 3 (r12, found by the ×1024 distinct probe): at ~5 M docs a
     // TYPICAL level-2 sub-bucket holds ~N/256/128 ≳ 150 members, so
     // the cap was discarding near-pair recall wholesale (near pairs
@@ -2074,7 +1940,7 @@ object DedupQueries {
     val estPairs = obsEst.get("est_pairs").asInstanceOf[Long]
     maybeEscalatePairStorage(buckets.sparkSession, estPairs, "gram")
     // pair-volume-derived expansion/dedup width (cf. minHashPairs)
-    val exWidth = expandWidth(buckets.sparkSession, estPairs, bucketParts)
+    val exWidth = expandWidth(estPairs, bucketParts)
     val small = buckets.filter(!col("isx") &&
       size(col("members")) <= MaxBucket)
     val exactBuckets = buckets.filter(col("isx"))
@@ -2103,7 +1969,7 @@ object DedupQueries {
       .filter(size(col("members")).between(2, MaxBucket))
     def expandSigPairs(b: DataFrame): DataFrame = b
       // spread the quadratic pair expansion at the measured pair
-      // volume (r16 — cf. minHashPairs's expand; see PairsPerTaskKey)
+      // volume (r16 — cf. minHashPairs's expand; see PairsPerTask)
       .repartition(exWidth)
       .select(explode(col("members")).as("x"), col("members"))
       .select(col("x"), explode(col("members")).as("y"))
@@ -2140,16 +2006,20 @@ object DedupQueries {
     // only consumer — free the pipeline's largest block set now
     // instead of at section end (see releaseCheckpoint)
     releaseCheckpoint(buckets)
-    val k = verifySlices(raw.sparkSession)
-    // Release-as-you-go on the sliced scale path (see ReleasePairsKey):
-    // `pairs` carries every candidate (incl. implausible) plus two
-    // flag columns, and both its consumers below are lazy filters —
-    // without the split it must stand through the WHOLE verify phase,
-    // the measured ×8192 binding resource (SURVEY §21.3). Splitting
+    val k = Conf.VerifySlices(raw.sparkSession).toInt
+    // Release-as-you-go on the sliced scale path (r16): `pairs`
+    // carries every candidate (incl. implausible) plus two flag
+    // columns, and both its consumers below are lazy filters — without
+    // the split it must stand through the WHOLE verify phase, the
+    // measured ×8192 binding resource (SURVEY §21.3). Splitting
     // materializes the two consumers as strictly smaller checkpoints
     // (two filter jobs over a lineage-cut leaf — no shuffle), after
-    // which `pairs` is dead and released before any slice runs.
-    val splitPairs = k >= 2 && releasePairsEnabled(raw.sparkSession)
+    // which `pairs` is dead and released before any slice runs; the
+    // work-list is released after the last slice, the exact shortcut
+    // and slice outputs after the final (lineage-cut) union. k = 1
+    // (the bench/gate default) keeps the unsplit plan — no new
+    // barriers in the benched plan.
+    val splitPairs = k >= 2
     val (exactPairs, toVerify) =
       if (splitPairs) {
         val ep = graft.RoundStats.timed("gram_split_exact") {
@@ -2176,7 +2046,7 @@ object DedupQueries {
     val verified =
       if (k == 1) verifySliceOf(toVerify, "gram")
       else {
-        // sliced verify (see VerifySlicesKey): bound the transient
+        // sliced verify (see VerifySlices): bound the transient
         // scratch at ~1/k by materializing one hash-disjoint slice at
         // a time and releasing its intermediates before the next.
         // The slice frees exactly the checkpoints IT created (the
@@ -2268,8 +2138,8 @@ object DedupQueries {
           .cast("long") // cf. minHashPairs: `/` is double division
           .as("est_pairs"))) }
     // pair-volume-derived expansion/dedup width (cf. minHashPairs)
-    val exWidth = expandWidth(buckets.sparkSession,
-      obsEst.get("est_pairs").asInstanceOf[Long], bucketParts)
+    val exWidth =
+      expandWidth(obsEst.get("est_pairs").asInstanceOf[Long], bucketParts)
     bucketPairs(buckets.filter(col("tbl") < 8), width = exWidth)
       .union(bucketPairs(buckets.filter(col("tbl") === 8),
         cap = Int.MaxValue, width = exWidth))

@@ -224,7 +224,7 @@ object Extended22 {
                     .select(col("dst").as("node"),
                       (lit(base) + expr("(85 * in_mass) DIV 100")).as("r"))
                 // FUSED recurrence steps per checkpoint (r8, the
-                // BENCH_r07 residue fix; width conf'd r16): the fused
+                // BENCH_r07 residue fix; width 5 since r16): the fused
                 // plan runs k rounds' shuffles inside ONE action —
                 // same data volume, 1/k the job-launch/plan-analysis/
                 // checkpoint fixed cost that dominates when the
@@ -241,20 +241,15 @@ object Extended22 {
                 // in k (one join+explode+agg per step — r appears once
                 // per step), so the only cost of a wider fuse is
                 // retry granularity: a lost-executor recompute replays
-                // up to k rounds instead of 2. Default 5 (the r16 A/B,
+                // up to k rounds instead of 2. Width 5 (the r16 A/B,
                 // quiet-host subset bench, OPTIMIZATION_r16.md: fuse 2
                 // ran rounds in 3 actions at 4.58 s / 618 tasks, fuse 5
                 // in ONE action at 4.31 s / 554 tasks — same shuffle
                 // volume, ~1/3 the action/checkpoint fixed cost; the
                 // codegen+AQE arm of the same A/B regressed the fused
                 // round 4.31 → 7.56 s, re-confirming the interpreted
-                // tiny-loop gate). `spark.graft.pagerank.fuseRounds`
-                // sizes it per deployment the way shuffle partitions
-                // are sized.
-                val fuseK =
-                  if (nHeads != 0) 1
-                  else s.conf.getOption("spark.graft.pagerank.fuseRounds")
-                    .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(5)
+                // tiny-loop gate).
+                val fuseK = if (nHeads != 0) 1 else 5
                 var left = iters
                 var round = 0
                 while (left > 0) {

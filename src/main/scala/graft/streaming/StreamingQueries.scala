@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Conf, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -110,23 +110,13 @@ object StreamingQueries {
     * batch, so the cluster-side write is exactly what the sink
     * semantics emit), and the snapshot is a LAZY distributed
     * read-back — nothing output-sized ever touches the driver.
-    * Select with SPARK_GRAFT_STREAM_SINK=file (Bench/Verify at ×32+),
-    * or programmatically via [[sinkModeOverride]] for same-JVM
-    * harnesses (ScaleStress's stream sections).
+    * Select with `Conf.StreamSinkVar` (Bench/Verify at ×32+), or
+    * programmatically via [[sinkModeOverride]] for same-JVM harnesses
+    * (ScaleStress's stream sections).
     */
   @volatile private[graft] var sinkModeOverride: Option[String] = None
-  private def sinkMode: String = {
-    val raw = sinkModeOverride.orElse(sys.env.get("SPARK_GRAFT_STREAM_SINK"))
-      .map(_.trim.toLowerCase)
-    raw match {
-      case Some("file")           => "file"
-      case Some("memory") | None  => "memory"
-      case Some(other) =>
-        System.err.println(s"[graft] SPARK_GRAFT_STREAM_SINK='$other' is " +
-          "not memory|file; using the memory sink")
-        "memory"
-    }
-  }
+  private def sinkMode: String =
+    sinkModeOverride.fold(Conf.streamSink)(Conf.parseStreamSink)
 
   /** File-sink scratch dirs created by [[runToSnapshot]] (output +
     * checkpoint, output-sized): tracked so harness callers can reclaim
@@ -192,8 +182,8 @@ object StreamingQueries {
 
   /** Shuffle-partition count the LAST drained stateful query ran with
     * (0 for stateless/no-progress queries) — published so the scale
-    * harness and the partition-cap spec can assert the ingest-aware
-    * cap actually reached the executed stream (the conf is fixed into
+    * harness and the partition-cap spec can assert the cap actually
+    * reached the executed stream (the conf is fixed into
     * the checkpoint at start; the progress is the ground truth).
     */
   @volatile private[graft] var lastNumShufflePartitions: Long = 0L
@@ -269,8 +259,7 @@ object StreamingQueries {
           System.err.println("[graft] row-count footer probe failed " +
             s"for $key (${e.getClass.getSimpleName}: ${e.getMessage}) — " +
             "intra-batch ingest unknown; the IN-HEAP state provider " +
-            "and the gate-scale partition cap will be kept regardless " +
-            "of batch size for this query")
+            "will be kept regardless of batch size for this query")
           0L
       }
     }
@@ -280,52 +269,21 @@ object StreamingQueries {
     tableRowCount(s, dir, "events")
 
   /** In-heap intra-batch ingest ceiling (rows) before the state store
-    * must spill: default 6e7 sits between the measured 51.2 M survive
-    * and 102.4 M die points on the default 8 g heap. A cluster —
-    * whose per-executor share of one batch is ingest/executors —
-    * raises it; a real Kafka feed (many small micro-batches, the
-    * watermark advancing between them) never approaches it.
+    * must spill: 6e7 sits between the measured 51.2 M survive and
+    * 102.4 M die points on the default 8 g heap. A real Kafka feed
+    * (many small micro-batches, the watermark advancing between them)
+    * never approaches it.
     */
-  private def heapIngestMaxRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.stream.heapIngestMaxRows")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(60000000L)
-
-  /** Rows of single-batch ingest one stream shuffle partition should
-    * carry before the partition cap scales out. DEFAULT DISABLED
-    * (0 → the fixed gate cap), a MEASURED negative result (r15): the
-    * instrumented ×1024 q138 probe first showed 77% of the wall in
-    * one 4-task stage on a 32-core box — but the same-day partition
-    * sweep at ×1024 came out {4p: 1,737.7 s, 16p: 1,678.2 s,
-    * 32p: 2,080.7 s}: FLAT, then WORSE. Attribution for the 32p
-    * regression: per-group state-update latency inflated 53 µs →
-    * 440 µs almost entirely OFF-CPU (RocksDB writer stalls — 32
-    * instances flushing/compacting against ONE disk), and shuffle
-    * volume inflated 2.6× (4.6 → 12.2 GB: per-reducer compressed
-    * chunks shrink 8-fold and lz4 loses its dictionary on the highly
-    * redundant keyed-member rows). On a single-disk box the stateful
-    * stage is state-store-IO-bound, not core-bound, so width buys
-    * nothing; on a cluster, width scales per-EXECUTOR-DISK and this
-    * knob (rows per partition, e.g. 2e6) sizes it — which is why the
-    * mechanism ships but the single-box default stays off.
-    */
-  private def rowsPerStreamPartition(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.stream.rowsPerPartition")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(0L)
+  private val HeapIngestMaxRows = 60000000L
 
   /** The stream's shuffle-partition count (state store instances):
-    * the fixed gate cap (min(4, session)) unless
-    * [[rowsPerStreamPartition]] is enabled (> 0) AND the estimated
-    * single-batch ingest of the stateful operator exceeds it per
-    * partition — then linear in ingest up to the session's width.
-    * Pure — spec'd directly.
+    * the fixed gate cap, never wider than the session. A wider,
+    * ingest-proportional cap was measured FLAT then WORSE on one box
+    * (r15, ×1024 q138: 4p 1,737.7 s, 16p 1,678.2 s, 32p 2,080.7 s —
+    * the stateful stage is state-store-IO-bound on a single disk, not
+    * core-bound). Pure — spec'd directly.
     */
-  private[graft] def streamPartitionCap(prev: Int, ingestRows: Long,
-      rowsPerPart: Long): Int = {
-    val base = math.min(4, prev)
-    if (ingestRows <= 0L || rowsPerPart <= 0L) base
-    else math.max(base,
-      math.min(prev.toLong, ingestRows / rowsPerPart).toInt)
-  }
+  private[graft] def streamPartitionCap(prev: Int): Int = math.min(4, prev)
 
   /** Checkpoint file manager for a bounded drain whose checkpoint
     * lives at `ckpt`: Spark's FileSystem-based manager when the path
@@ -372,9 +330,7 @@ object StreamingQueries {
     // manager (checkpointFileManager) a commit no longer forks, and
     // state-store commits cost ~9x less (perfbench relational
     // `streaming.state_commit_ms` 352 -> 40 ms, 4 cores); fewer stores
-    // still mean fewer commits, so 4 stands. A real deployment sizes
-    // partitions to expected STATE volume; override via
-    // SPARK_GRAFT_STREAM_PARTITIONS for deployment-shaped runs.
+    // still mean fewer commits, so 4 stands (see streamPartitionCap).
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     // Stage attribution (cf. the dedup/loop families): the stream
     // demos are the bench's last opaque walls. `<q>_start` is plan +
@@ -405,7 +361,7 @@ object StreamingQueries {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProv = s.conf.getOption(provKey)
     val needRocks = corpusLinearState ||
-      (ingestRows > heapIngestMaxRows(s))
+      (ingestRows > HeapIngestMaxRows)
     // Changelog checkpointing rides along with the RocksDB pin (r16):
     // the ×2048 multi-batch probe measured default full-snapshot
     // checkpointing re-uploading every compaction-rewritten SST each
@@ -440,20 +396,8 @@ object StreamingQueries {
         s.sessionState.newHadoopConf())
     val q = graft.RoundStats.timed(s"${prefix}_start") {
       try {
-        // env hardening (cf. ScopedConf.TinyLoopRows): a malformed or
-        // non-positive override must not throw inside every stream
-        // drain — warn with the var named and keep the default
-        val cap = sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-          .flatMap { v =>
-            val p = v.trim.toIntOption.filter(_ > 0)
-            if (p.isEmpty) System.err.println(
-              s"[graft] SPARK_GRAFT_STREAM_PARTITIONS='$v' is not a " +
-                "positive int; using the default stream cap")
-            p
-          }
-          .getOrElse(streamPartitionCap(prev.toInt, ingestRows,
-            rowsPerStreamPartition(s)))
-        s.conf.set("spark.sql.shuffle.partitions", cap.toString)
+        s.conf.set("spark.sql.shuffle.partitions",
+          streamPartitionCap(prev.toInt).toString)
         ckptManager.foreach(s.conf.set(ckptKey, _))
         if (!useFile)
           df.writeStream.outputMode(mode).format("memory")
@@ -1071,7 +1015,7 @@ object StreamingQueries {
 
   case class CandPair(a: Long, b: Long, exact: Boolean)
 
-  /** Per-bucket cap on the streaming member state (default 4× the
+  /** Per-bucket cap on the streaming member state (4× the
     * batch [[graft.queries.DedupQueries.MaxBucket]]): past it a bucket
     * is saturated — later arrivals neither pair nor enter state. The
     * batch pipeline re-blocks oversized buckets instead; a saturated
@@ -1079,9 +1023,7 @@ object StreamingQueries {
     * pairs the uncapped exact band (16) still owns, and the cap is
     * what bounds per-key state under adversarial input.
     */
-  private def streamBucketCap(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.dedup.streamBucketCap")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(256)
+  private val StreamBucketCap = 256
 
   /** Streaming NEAR-dup dedup (r13) — the streaming form of q35, the
     * operator a Kafka-fed corpus pipeline runs to flag each incoming
@@ -1189,9 +1131,7 @@ object StreamingQueries {
     // Test/diagnostic knob: cap files per micro-batch so a multi-file
     // corpus drains in MULTIPLE batches (the per-batch-recompute
     // regression surface the 1-batch gates can't see).
-    val maxFiles = s.conf
-      .getOption("spark.graft.stream.maxFilesPerTrigger")
-      .flatMap(_.toIntOption).filter(_ > 0)
+    val maxFiles = Conf.maxFilesPerTrigger(s)
     // The documents table ships BOTH ways: the driver's testdata dirs
     // hold a single FILE `documents.parquet` (a file source needs a
     // directory + glob), while Spark-written dirs (ScaleStress's
@@ -1210,7 +1150,6 @@ object StreamingQueries {
     val docsStream = docSource.select(col("doc_id"), col("text"))
     val keyed = graft.queries.DedupQueries.streamKeyedMembers(docsStream)
       .as[KeyedMember]
-    val cap = streamBucketCap(s)
     val candidates = keyed
       .groupByKey(m => (m.band, m.key))
       .flatMapGroupsWithState[List[KeyedMember], CandPair](
@@ -1224,7 +1163,7 @@ object StreamingQueries {
             // batch pipeline: its expansion is output-sized for true
             // duplicate cliques, and it is the recall floor the cap
             // never touches
-            if (band == 16 || sz < cap) {
+            if (band == 16 || sz < StreamBucketCap) {
               mem.foreach { m =>
                 if (m.doc_id != r.doc_id) {
                   // ownership: emit from the min matching band only
@@ -1281,21 +1220,11 @@ object StreamingQueries {
       .filter(col("jaccard") >= 0.5)
   }
 
-  /** q138/q139's stateful-operator single-batch ingest estimate for
-    * the partition cap: ~17 keyed member rows per doc (16 LSH bands +
-    * the exact-signature band — the standing index shape). The
-    * replay regime feeds the corpus as one batch, so this IS the
-    * rows the sort + flatMapGroupsWithState stage carries.
-    */
-  private def docIngestRows(s: SparkSession, dir: String): Long =
-    17L * tableRowCount(s, dir, "documents")
-
   def q138(s: SparkSession, dir: String): DataFrame =
     // ~17 buckets/doc of member-list state ⇒ corpus-linear,
     // disk-backed at scale
     runToSnapshot(s, streamNearDupPairs(s, dir), "q138_sink",
-      OutputMode.Append, corpusLinearState = true,
-      ingestRows = docIngestRows(s, dir))
+      OutputMode.Append, corpusLinearState = true)
       .orderBy("a", "b")
 
   /** Streaming incremental APPLY (r13) — the keep/drop decision stream
@@ -1330,8 +1259,7 @@ object StreamingQueries {
     runToSnapshot(s,
       streamNearDupPairs(s, dir)
         .select(col("b").as("doc_id"), col("jaccard")),
-      "q139_sink", OutputMode.Append, corpusLinearState = true,
-      ingestRows = docIngestRows(s, dir))
+      "q139_sink", OutputMode.Append, corpusLinearState = true)
       .groupBy("doc_id")
       .agg(max(col("jaccard")).as("max_jaccard"),
         count(lit(1)).as("n_dup_sources"))

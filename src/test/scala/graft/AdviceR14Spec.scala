@@ -136,45 +136,26 @@ class AdviceR14Spec extends AnyFunSuite {
   }
 }
 
-/** r15 (VERDICT r14 #1): the ingest-aware stream partition cap — the
-  * q138 probe attributed 77% of the ×1024 wall to a 4-task stage on a
-  * 32-core box (the fixed gate cap); the cap now scales with the
-  * stateful operator's estimated single-batch ingest.
+/** The stream partition cap: the fixed gate cap, never wider than the
+  * session. (r15 shipped an ingest-proportional scale-out behind a conf
+  * that stayed off: measured flat then worse on one box.)
   */
 class StreamPartitionCapSpec extends org.scalatest.funsuite.AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
   import graft.streaming.StreamingQueries
 
-  test("streamPartitionCap: gate cap small, scales with ingest, bounded by session width") {
-    // knob disabled (the measured single-box default) -> the gate cap
-    // regardless of ingest
-    assert(StreamingQueries.streamPartitionCap(32, 87000000L, 0L) === 4)
-    // no estimate -> the fixed gate cap
-    assert(StreamingQueries.streamPartitionCap(32, 0L, 2000000L) === 4)
-    // small batch (the measured commit-bound regime, r6 x8 = 800k) -> 4
-    assert(StreamingQueries.streamPartitionCap(32, 800000L, 2000000L) === 4)
-    // corpus-sized single batch -> linear in ingest
-    assert(StreamingQueries.streamPartitionCap(32, 20000000L, 2000000L) === 10)
-    // never past the session's width (x512 keyed members = 87M)
-    assert(StreamingQueries.streamPartitionCap(32, 87000000L, 2000000L) === 32)
+  test("streamPartitionCap: the gate cap, bounded by session width") {
+    assert(StreamingQueries.streamPartitionCap(32) === 4)
+    assert(StreamingQueries.streamPartitionCap(4) === 4)
     // a session narrower than the gate cap keeps its width
-    assert(StreamingQueries.streamPartitionCap(2, 87000000L, 2000000L) === 2)
+    assert(StreamingQueries.streamPartitionCap(2) === 2)
   }
 
-  test("the cap reaches the executed stream: q138 scales out under a tiny rowsPerPartition") {
-    // gate default: sf0.001's 17k keyed members stay at the gate cap
+  test("the cap reaches the executed stream: q138 runs at the gate cap") {
     StreamingQueries.resetStateRows()
-    val base = SparkEntry.queries("q138_stream_dedup_near")(spark, sf).count()
+    SparkEntry.queries("q138_stream_dedup_near")(spark, sf).count()
     assert(StreamingQueries.lastNumShufflePartitions === 4L,
       s"gate-scale q138 left the fixed cap: ${StreamingQueries.lastNumShufflePartitions}")
-    // tiny budget -> the ingest estimate (17 x docs) exceeds it and the
-    // executed stream runs at the session width, results unchanged
-    spark.conf.set("spark.graft.stream.rowsPerPartition", "100")
-    val wide = try SparkEntry.queries("q138_stream_dedup_near")(spark, sf).count()
-      finally spark.conf.unset("spark.graft.stream.rowsPerPartition")
-    assert(StreamingQueries.lastNumShufflePartitions === 8L,
-      s"scaled q138 did not reach the session width: ${StreamingQueries.lastNumShufflePartitions}")
-    assert(wide === base, "partition scaling changed the pair set size")
   }
 }

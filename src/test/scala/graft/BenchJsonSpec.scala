@@ -10,7 +10,7 @@ class BenchJsonSpec extends AnyFunSuite {
   test("compact line with a NaN wall parses as JSON") {
     val line = Bench.compactLine(
       Map("q01" -> 1.25, "q02" -> Double.NaN, "q03" -> Double.PositiveInfinity),
-      Map("q02" -> "boom \"quoted\"\nsecond line"), Seq("q02"),
+      Map("q02" -> "boom \"quoted\"\nsecond line"),
       """{"steal_s":0.1}""", "/data/sf0.001")
     val j = new ObjectMapper().readTree(line)
     assert(j.get("metric").asText === "total_compact")
@@ -22,11 +22,12 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(j.get("slowest").get("q02").isNull)
     assert(j.get("n_queries").asInt === 3)
     assert(j.get("errors").get("q02").asText === "boom \"quoted\" second line")
+    assert(j.get("dumped").isArray && j.get("dumped").size === 0)
   }
 
   test("finite walls keep their values and total") {
     val j = new ObjectMapper().readTree(Bench.compactLine(
-      Map("a" -> 0.5, "b" -> 1.5), Map.empty, Seq.empty, "{}", "sf"))
+      Map("a" -> 0.5, "b" -> 1.5), Map.empty, "{}", "sf"))
     assert(j.get("value").asDouble === 2.0)
     assert(j.get("queries").get("b").asDouble === 1.5)
   }

@@ -374,7 +374,7 @@ class DedupSpec extends AnyFunSuite {
     assert(n === distinctTexts)
   }
 
-  /** The verify-fetch strategy guard (DedupQueries.CandBroadcastMaxKey):
+  /** The verify-fetch strategy guard (Conf.CandBroadcastMaxRows):
     * past the candidate-id threshold the attach joins pin sort-merge
     * instead of broadcast (the ×128 OOM class — a corpus-sized
     * broadcast build under AQE-off mis-estimates). Both shapes must
@@ -391,12 +391,13 @@ class DedupSpec extends AnyFunSuite {
       s.conf.set("spark.sql.shuffle.partitions",
         parts.getOrElse(spark.conf.get("spark.sql.shuffle.partitions")))
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set(DedupQueries.CandBroadcastMaxKey, threshold)
-      idsPerPart.foreach(s.conf.set(DedupQueries.FetchIdsPerPartitionKey, _))
+      s.conf.set(Conf.CandBroadcastMaxRows.key, threshold)
+      idsPerPart.foreach(s.conf.set(Conf.FetchIdsPerPartition.key, _))
       DedupQueries.minHashPairs(docsOn(s))
     }
-    val viaBroadcast = run(DedupQueries.CandBroadcastMaxDefault.toString)
-    val viaShuffle = run("0")
+    val viaBroadcast = run(Conf.CandBroadcastMaxRows.default.toString)
+    // 1: a candidate set always holds >= 2 ids, so this never broadcasts
+    val viaShuffle = run("1")
     val planB = viaBroadcast.queryExecution.executedPlan.toString
     val planS = viaShuffle.queryExecution.executedPlan.toString
     assert(planB.contains("BroadcastHashJoin"),
@@ -418,7 +419,7 @@ class DedupSpec extends AnyFunSuite {
     // PINS its session to 2 shuffle partitions so the assertion needs
     // only ≥2 candidate ids, not a corpus bigger than the suite's
     // partition setting (ADVICE r11: the suite-conf-sensitive form).
-    val viaNarrow = run("0", idsPerPart = Some("1"), parts = Some("2"))
+    val viaNarrow = run("1", idsPerPart = Some("1"), parts = Some("2"))
     val parts = 2
     val widths = viaNarrow.queryExecution.executedPlan.collect {
       case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec =>
@@ -432,7 +433,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   /** The bucket-aggregation exchange width
-    * (DedupQueries.BucketScanBytesKey, r12): with AQE off the blocking
+    * (Conf.BucketScanBytesPerPartition, r12): with AQE off the blocking
     * groupBys otherwise run at the session's static shuffle partitions
     * — at distinct ×512 that WAS q35's wall (43 M member structs over
     * 32 partitions). The width must (a) follow the corpus scan's
@@ -450,7 +451,7 @@ class DedupSpec extends AnyFunSuite {
       s.conf.set("spark.sql.shuffle.partitions",
         spark.conf.get("spark.sql.shuffle.partitions"))
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      bytesPerPart.foreach(s.conf.set(DedupQueries.BucketScanBytesKey, _))
+      bytesPerPart.foreach(s.conf.set(Conf.BucketScanBytesPerPartition.key, _))
       s
     }
     val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -463,42 +464,20 @@ class DedupSpec extends AnyFunSuite {
       s"tiny bytes/partition must out-size the session width ($expected)")
     assert(expected <= DedupQueries.BucketMaxParts)
     // the width must REACH an exchange: the bucket checkpoint persists
-    // at exactly the computed partition count. The r13 in-pipeline
-    // bucket release (releaseCheckpoint) frees that checkpoint before
-    // minHashPairs returns, so the width evidence needs the
-    // diagnostic hold-back knob; the release itself is pinned right
-    // after with the knob at its default. Snapshot the registry
-    // IMMEDIATELY after construction (the checkpoints are eager):
-    // once minHashPairs returns, its intermediate DataFrames are
-    // unreachable and a GC during the collect below lets the
-    // ContextCleaner unpersist them — the registry delta would come
-    // up empty (the suite's one intermittent flake, r12).
-    sTiny.conf.set("spark.graft.dedup.releaseBuckets", "false")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val viaWide = DedupQueries.minHashPairs(dfTiny)
-    val newWidths = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before(id) }
-      .values.map(_.getNumPartitions).toSet
-    val wideRows = viaWide.collect()
-      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
-        r.getAs[Double]("jaccard"))).sortBy(t => (t._1, t._2))
-    assert(newWidths.contains(expected),
-      s"no checkpoint ran at the stat-driven width $expected: $newWidths")
-    // r13 release pin, r14 form (ADVICE: the old negative registry
-    // assertion passed vacuously under the ContextCleaner GC race and
-    // would spuriously fail on a partition-count collision): the
-    // release hook records (rddId, width) for every freed checkpoint —
-    // assert the DIRECT evidence: a checkpoint at the stat-driven
-    // width was released, and that specific id is gone from the
-    // persistent-RDD registry.
-    sTiny.conf.unset("spark.graft.dedup.releaseBuckets")
+    // at exactly the computed partition count. The in-pipeline bucket
+    // release (releaseCheckpoint) frees that checkpoint before
+    // minHashPairs returns and records its (rddId, numPartitions):
+    // read the width off that record, then check the released id is
+    // gone from the persistent-RDD registry.
     DedupQueries.releasedCheckpoints.clear()
-    DedupQueries.minHashPairs(
-      sTiny.createDataFrame(docs).toDF("doc_id", "text"))
+    val viaWide = DedupQueries.minHashPairs(dfTiny)
     val released = {
       import scala.jdk.CollectionConverters._
       DedupQueries.releasedCheckpoints.asScala.toList
     }
+    val wideRows = viaWide.collect()
+      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
+        r.getAs[Double]("jaccard"))).sortBy(t => (t._1, t._2))
     val atWidth = released.filter(_._2 == expected)
     assert(atWidth.nonEmpty,
       s"no checkpoint at the stat-driven width $expected was released " +
@@ -535,7 +514,7 @@ class DedupSpec extends AnyFunSuite {
     assert(wideRows.nonEmpty)
   }
 
-  /** The pair-table storage knob (DedupQueries.PairStorageKey, r10):
+  /** The pair-table storage conf (Conf.PairStorageLevelKey, r10):
     * at flood ×256 the serialized pair table competes with the verify
     * working set for one JVM's unified memory; DISK_ONLY models the
     * written-to-storage intermediate a cluster pipeline uses and must
@@ -552,7 +531,7 @@ class DedupSpec extends AnyFunSuite {
       s.conf.set("spark.sql.shuffle.partitions",
         spark.conf.get("spark.sql.shuffle.partitions"))
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      level.foreach(s.conf.set(DedupQueries.PairStorageKey, _))
+      level.foreach(s.conf.set(Conf.PairStorageLevelKey, _))
       DedupQueries.minHashPairs(
         s.createDataFrame(docs).toDF("doc_id", "text"))
     }
@@ -575,7 +554,7 @@ class DedupSpec extends AnyFunSuite {
     assert(viaDisk.nonEmpty)
   }
 
-  /** The measured-volume escalation (DedupQueries.PairDiskMinKey, r11):
+  /** The measured-volume escalation (Conf.PairDiskOnlyMinRows, r11):
     * past the estimated pair-expansion threshold a pipeline's
     * remaining pair-sized checkpoints auto-select DISK_ONLY (the ×256
     * finding: DISK_ONLY beats serialized-memory once the pair table
@@ -594,8 +573,8 @@ class DedupSpec extends AnyFunSuite {
       s.conf.set("spark.sql.shuffle.partitions",
         spark.conf.get("spark.sql.shuffle.partitions"))
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      diskMin.foreach(s.conf.set(DedupQueries.PairDiskMinKey, _))
-      pin.foreach(s.conf.set(DedupQueries.PairStorageKey, _))
+      diskMin.foreach(s.conf.set(Conf.PairDiskOnlyMinRows.key, _))
+      pin.foreach(s.conf.set(Conf.PairStorageLevelKey, _))
       DedupQueries.minHashPairs(
         s.createDataFrame(docs).toDF("doc_id", "text"))
     }
@@ -629,40 +608,20 @@ class DedupSpec extends AnyFunSuite {
     assert(plain.nonEmpty)
   }
 
-  test("releaseBuckets knob reaches the production pipeline through dedupSession") {
-    // ADVICE r13 (medium): the knob used to be read only off the CHILD
-    // session, so a caller-session conf.set was silently ignored by
-    // the q35/q37 production pipelines (dedupSession did not propagate
-    // it). This drives the real entry — nearDupPairs → dedupSession →
-    // minHashPairs — both ways, using the release hook as evidence.
+  test("bucket release fires in the production pipeline") {
+    // drives the real entry — nearDupPairs → dedupSession →
+    // minHashPairs — with the release hook as evidence
     import graft.queries.DedupQueries
-    import scala.jdk.CollectionConverters._
     val docs = ((0 until 48).map(i => (i.toLong, s"alpha beta gamma delta u$i")) ++
       (0 until 16).map(i => (100L + i, "alpha beta gamma delta epsilon")))
-    def corpusDir(tag: String): String = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_knob_$tag")
-      spark.createDataFrame(docs).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      d.toString
-    }
-    // knob=false on the CALLER's session must suppress the in-pipeline
-    // release inside the child dedup session
-    val dirOff = corpusDir("off")
-    spark.conf.set(DedupQueries.ReleaseBucketsKey, "false")
-    try {
-      DedupQueries.releasedCheckpoints.clear()
-      assert(DedupQueries.nearDupPairs(spark, dirOff).count() > 0)
-      assert(DedupQueries.releasedCheckpoints.isEmpty,
-        "releaseBuckets=false on the caller session did not reach the " +
-          s"dedup child session: ${DedupQueries.releasedCheckpoints.asScala}")
-    } finally spark.conf.unset(DedupQueries.ReleaseBucketsKey)
-    // default (unset) releases — fresh dir so the pair memo can't
-    // short-circuit the pipeline
-    val dirOn = corpusDir("on")
+    // fresh dir so the pair memo can't short-circuit the pipeline
+    val dir = java.nio.file.Files.createTempDirectory("graft_release")
+    spark.createDataFrame(docs).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     DedupQueries.releasedCheckpoints.clear()
-    assert(DedupQueries.nearDupPairs(spark, dirOn).count() > 0)
+    assert(DedupQueries.nearDupPairs(spark, dir.toString).count() > 0)
     assert(!DedupQueries.releasedCheckpoints.isEmpty,
-      "default-on release did not fire through the production pipeline")
+      "the bucket release did not fire through the production pipeline")
   }
 
   test("q37 sliced verify (verifySlices=4) is value-identical to unsliced") {
@@ -675,10 +634,10 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Double]("jaccard"))).toSet
     val plain = rows(SparkEntry.queries("q37_ngram_jaccard")(spark, sf))
-    spark.conf.set(DedupQueries.VerifySlicesKey, "4")
+    spark.conf.set(Conf.VerifySlices.key, "4")
     val sliced = try
       rows(SparkEntry.queries("q37_ngram_jaccard")(spark, sf))
-    finally spark.conf.unset(DedupQueries.VerifySlicesKey)
+    finally spark.conf.unset(Conf.VerifySlices.key)
     assert(sliced === plain,
       s"slicing changed the pair set: only-sliced ${sliced -- plain}, " +
         s"only-plain ${plain -- sliced}")

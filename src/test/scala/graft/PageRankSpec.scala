@@ -176,18 +176,13 @@ class PageRankSpec extends AnyFunSuite {
       .filter(_.startsWith("pr_round"))
     assert(fused === Seq("pr_round1x4"),
       s"headless regular loop should fuse all 4 steps into one action: $fused")
-    // the conf knob narrows the fuse width (deployment-sized the way
-    // shuffle partitions are)
-    val s = edges.toDF("src", "dst").sparkSession
-    s.conf.set("spark.graft.pagerank.fuseRounds", "2")
-    try {
-      Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 4)
-        .collect()
-      val fused2 = graft.RoundStats.drain().map(_.tag)
-        .filter(_.startsWith("pr_round"))
-      assert(fused2 === Seq("pr_round1x2", "pr_round2x2"),
-        s"fuseRounds=2 should run 2 steps/action: $fused2")
-    } finally s.conf.unset("spark.graft.pagerank.fuseRounds")
+    // past the fuse width (5) the loop fuses 5 steps, then the rest
+    Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 7)
+      .collect()
+    val fused7 = graft.RoundStats.drain().map(_.tag)
+      .filter(_.startsWith("pr_round"))
+    assert(fused7 === Seq("pr_round1x5", "pr_round2x2"),
+      s"7 steps should run as a 5-step and a 2-step action: $fused7")
     Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 4,
         maxAdjArray = 2L)
       .collect()

@@ -4,54 +4,34 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** r16 (VERDICT r15 #4): release-as-you-go for the sliced verify's
   * standing checkpoints — the named ×8192 binding resource. With
-  * verifySlices ≥ 2 and releasePairs on (default), q37's candidate
-  * table is split into its two consumers (exact shortcut + verify
-  * work-list) as smaller checkpoints, and every standing checkpoint
-  * is released the moment its last consumer materializes. The value
-  * contract (sliced ≡ unsliced pair set) is pinned by DedupSpec's
-  * identity test, which now runs THROUGH the split path; this spec
-  * pins the release lifecycle itself.
+  * verifySlices ≥ 2, q37's candidate table is split into its two
+  * consumers (exact shortcut + verify work-list) as smaller
+  * checkpoints, and every standing checkpoint is released the moment
+  * its last consumer materializes. The value contract (sliced ≡
+  * unsliced pair set) is pinned by DedupSpec's identity test, which
+  * runs THROUGH the split path; this spec pins the release lifecycle
+  * itself.
   */
 class ReleaseAsYouGoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
   import graft.queries.DedupQueries
 
-  private def q37rows() = SparkEntry.queries("q37_ngram_jaccard")(spark, sf)
-    .collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
-      r.getAs[Double]("jaccard"))).toSet
-
-  test("sliced q37 releases pairs/work-list/exact/slice checkpoints " +
-      "as consumers land; off-path holds them to section end") {
+  test("sliced q37 releases each standing checkpoint as its consumers land") {
     import scala.jdk.CollectionConverters._
-    // split path: k=2, releasePairs default-on
-    spark.conf.set(DedupQueries.VerifySlicesKey, "2")
+    spark.conf.set(Conf.VerifySlices.key, "2")
     DedupQueries.releasedCheckpoints.clear()
-    val onRows = try q37rows()
-      finally spark.conf.unset(DedupQueries.VerifySlicesKey)
-    val onReleased = DedupQueries.releasedCheckpoints.asScala.toList
+    val rows = try SparkEntry.queries("q37_ngram_jaccard")(spark, sf).count()
+      finally spark.conf.unset(Conf.VerifySlices.key)
+    assert(rows > 0)
+    val released = DedupQueries.releasedCheckpoints.asScala.toList
     // buckets + pairs + work-list + exact shortcut + 2 slice outputs
-    assert(onReleased.size >= 6,
-      s"expected >= 6 release-as-you-go checkpoints, got $onReleased")
+    assert(released.size >= 6,
+      s"expected >= 6 release-as-you-go checkpoints, got $released")
     val registry = spark.sparkContext.getPersistentRDDs.keySet
-    onReleased.foreach { case (id, _) =>
+    released.foreach { case (id, _) =>
       assert(!registry(id),
         s"released checkpoint rdd_$id still in the persistent registry")
     }
-    // A/B lever: releasePairs=false keeps the pre-r16 lifetimes —
-    // only the bucket table is released mid-pipeline
-    spark.conf.set(DedupQueries.VerifySlicesKey, "2")
-    spark.conf.set(DedupQueries.ReleasePairsKey, "false")
-    DedupQueries.releasedCheckpoints.clear()
-    val offRows = try q37rows() finally {
-      spark.conf.unset(DedupQueries.VerifySlicesKey)
-      spark.conf.unset(DedupQueries.ReleasePairsKey)
-    }
-    val offReleased = DedupQueries.releasedCheckpoints.asScala.toList
-    assert(offReleased.size === 1,
-      s"releasePairs=false must release only the bucket table: $offReleased")
-    // both paths produce the identical pair set, and a non-trivial one
-    assert(onRows === offRows, "release-as-you-go changed the pair set")
-    assert(onRows.nonEmpty)
   }
 }
