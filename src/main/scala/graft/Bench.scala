@@ -229,12 +229,10 @@ object Bench {
         System.err.println(s"[bench] $tag warmup skipped: ${e.getMessage}"))
     warm("dedup") {
       import org.apache.spark.sql.functions._
-      // same child-session shape as the real dedup pipeline (AQE off —
-      // the documented AQE/explicit-broadcast deadlock applies to the
-      // warmup too); 64 docs never touch the per-dir pair cache, so
-      // the timed q35/q102 still do their full work
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
+      // the real dedup pipeline's child session; 64 docs never touch
+      // the per-dir pair cache, so the timed q35/q102 still do their
+      // full work
+      val s2 = graft.queries.DedupQueries.dedupSession(spark)
       val docs = s2.read.parquet(s"$sfDir/documents.parquet")
         .limit(64).select(col("doc_id"), col("text"))
       graft.queries.DedupQueries.minHashPairs(docs).count()
@@ -245,7 +243,7 @@ object Bench {
         .selectExpr("id % 50 AS src", "(id * 7 + 1) % 50 AS dst")
         .filter(col("src") =!= col("dst"))
       val sym = half.union(half.select(col("dst"), col("src")))
-      graft.queries.Extended22.integerPageRank(sym, iters = 2).count()
+      graft.queries.GraphQueries.integerPageRank(sym, iters = 2).count()
       graft.queries.ConnectedComponents.labelsFor(
         half.select(col("src").as("a"), col("dst").as("b"))).count()
       // q133's EDGE-GENERATION shape (collect_set → double explode →

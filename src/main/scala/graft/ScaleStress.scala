@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{TextFunctions => T}
+import graft.queries.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -231,7 +232,7 @@ object ScaleStress {
   private def runStreamFamily(spark: SparkSession, dir: String,
       sink: String): Seq[(String, Long, Double, Long)] = {
     import graft.streaming.StreamingQueries
-    StreamingQueries.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    StreamingQueries.queries.sortBy(_.name).map { case Query(name, fn, _) =>
       StreamingQueries.sinkModeOverride = Some(sink)
       StreamingQueries.resetStateRows()
       try {
@@ -402,7 +403,8 @@ object ScaleStress {
     // two memoized pair tables (q112's n_near_pairs and q136's
     // full-compare re-read them); the label-sized q102/q111/q112
     // sections stay unwrapped (their blocks are near-dup-rate-sized,
-    // and Extended14's memoized labels must survive into q111/q112).
+    // and DedupQueries.clusterLabels' memoized labels must survive into
+    // q111/q112).
     var baseQ35: DataFrame = null
     var xQ35: DataFrame = null
     var q35Total = 0L
@@ -764,8 +766,8 @@ object ScaleStress {
       // ~9 min); spark.graft.stream.maxFilesPerTrigger reaches the
       // query through SPARK_GRAFT_CONF for A/B runs.
       val qname = if (args.length > 3) args(3) else "q138_stream_dedup_near"
-      val fn = graft.streaming.StreamingQueries.queries.getOrElse(qname,
-        sys.error(s"unknown stream query $qname"))
+      val fn = graft.streaming.StreamingQueries.queries.find(_.name == qname)
+        .getOrElse(sys.error(s"unknown stream query $qname")).build
       val outDir = s"target/stress_distinct_x$rep"
       val allTables = Seq("region", "nation", "customer", "supplier",
         "part", "orders", "lineitem", "documents", "embeddings", "events")
@@ -892,8 +894,8 @@ object ScaleStress {
 
     if (mode == "streamparity") {
       var bad = 0
-      graft.streaming.StreamingQueries.queries.toSeq.sortBy(_._1)
-        .foreach { case (name, fn) =>
+      graft.streaming.StreamingQueries.queries.sortBy(_.name)
+        .foreach { case Query(name, fn, _) =>
           import graft.streaming.StreamingQueries.sinkModeOverride
           val mem = try { sinkModeOverride = Some("memory"); fn(spark, srcDir) }
             finally sinkModeOverride = None

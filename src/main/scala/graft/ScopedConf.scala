@@ -40,14 +40,6 @@ object ScopedConf {
     }
   }
 
-  /** The iterative-loop profile: no whole-stage codegen, no adaptive
-    * replanning — per-round plans compile to nothing and run as-is.
-    */
-  def forTinyLoop[T](s: SparkSession)(body: => T): T =
-    withConf(s,
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.adaptive.enabled" -> "false")(body)
-
   /** Per-round row volume below which an iterative loop runs with the
     * tiny profile. The trade: with codegen OFF each round saves
     * seconds of fixed driver/JIT cost but pays ~2-5× per ROW

@@ -1,77 +1,35 @@
 package graft
 
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract. The query inventory is [[registry]]: one
+  * [[graft.queries.Query]] record per operator, declared in the module
+  * that owns its operator family.
+  */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    graft.queries.Relational.flagship(spark, "/root/testdata/sf0.001")
+    Relational.flagship(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every registered query, module by module. */
+  def registry: Seq[Query] = Seq(
+    Relational.queries, JoinQueries.queries, WindowQueries.queries,
+    AggregateQueries.queries, ScalarQueries.queries,
+    SamplingQueries.queries, TextQueries.queries, DedupQueries.queries,
+    AnnQueries.queries, IvfAnn.queries, MultimodalQueries.queries,
+    GraphQueries.queries, graft.streaming.StreamingQueries.queries).flatten
+
+  /** Name → builder for every registered query; a repeated name throws. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.DedupQueries.queries ++
-      graft.queries.AnnQueries.queries ++
-      graft.queries.MultimodalQueries.queries ++
-      graft.queries.Extended.queries ++
-      graft.queries.Extended2.queries ++
-      graft.queries.Extended3.queries ++
-      graft.queries.Extended4.queries ++
-      graft.queries.Extended5.queries ++
-      graft.queries.Extended6.queries ++
-      graft.queries.Extended7.queries ++
-      graft.queries.Extended8.queries ++
-      graft.queries.Extended9.queries ++
-      graft.queries.Extended10.queries ++
-      graft.queries.Extended11.queries ++
-      graft.queries.Extended12.queries ++
-      graft.queries.Extended13.queries ++
-      graft.queries.Extended14.queries ++
-      graft.queries.Extended15.queries ++
-      graft.queries.Extended16.queries ++
-      graft.queries.Extended17.queries ++
-      graft.queries.Extended18.queries ++
-      graft.queries.Extended19.queries ++
-      graft.queries.Extended20.queries ++
-      graft.queries.Extended21.queries ++
-      graft.queries.Extended22.queries ++
-      graft.queries.IvfAnn.queries ++
-      graft.streaming.StreamingQueries.queries
+    Query.index(registry).map { case (name, q) => name -> q.build }
 
   /** DuckDB-runnable oracle SQL per query (same parquet tables).
     * Queries absent here are non-SQL-expressible (LSH/heuristic/
     * multimodal) → driver records the weaker rows-only check; each has
-    * a ScalaTest spec asserting its semantics instead (SURVEY.md §5).
+    * a ScalaTest spec asserting its semantics instead.
     */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-      graft.queries.TextQueries.oracles ++
-      graft.queries.DedupQueries.oracles ++
-      graft.queries.AnnQueries.oracles ++
-      graft.queries.Extended.oracles ++
-      graft.queries.Extended2.oracles ++
-      graft.queries.Extended3.oracles ++
-      graft.queries.Extended4.oracles ++
-      graft.queries.Extended5.oracles ++
-      graft.queries.Extended6.oracles ++
-      graft.queries.Extended7.oracles ++
-      graft.queries.Extended8.oracles ++
-      graft.queries.Extended9.oracles ++
-      graft.queries.Extended10.oracles ++
-      graft.queries.Extended11.oracles ++
-      graft.queries.Extended12.oracles ++
-      graft.queries.Extended13.oracles ++
-      graft.queries.Extended14.oracles ++
-      graft.queries.Extended15.oracles ++
-      graft.queries.Extended16.oracles ++
-      graft.queries.Extended17.oracles ++
-      graft.queries.Extended18.oracles ++
-      graft.queries.Extended19.oracles ++
-      graft.queries.Extended20.oracles ++
-      graft.queries.Extended21.oracles ++
-      graft.queries.Extended22.oracles ++
-      graft.streaming.StreamingQueries.oracles
+    Query.index(registry).collect { case (name, Query(_, _, Some(sql))) => name -> sql }
 }

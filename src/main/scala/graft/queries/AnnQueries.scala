@@ -7,7 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search q39–q40 (SURVEY.md §2). Query set: the 10
-  * vectors with vec_id < 10 (deterministic).
+  * vectors with vec_id < 10 (deterministic). Also the embedding-table
+  * operators: per-label centroids (q80) and int8 quantization (q118).
   */
 object AnnQueries {
 
@@ -94,10 +95,93 @@ object AnnQueries {
       .orderBy("query_id", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q39_ann_brute" -> (q39 _),
-    "q40_ann_lsh"   -> (q40 _))
+  // ---------------------------------------------------------------- q80
+  /** Per-label embedding centroids: element-wise mean over each
+    * label's vectors — the class-centroid computation behind nearest-
+    * centroid classification, IVF coarse init, and drift monitoring.
+    * Shape: posexplode to (label, pos, v) scalars → partial-agg mean
+    * per (label, pos). The shuffle carries labels × dims partial sums
+    * per task — independent of corpus size; no vector ever crosses
+    * the wire whole. Output is flat (label, pos) rows: deterministic,
+    * array-free (driver-comparator-safe), and exactly what a
+    * downstream broadcast join consumes.
+    */
+  private def q80(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy("label", "pos")
+      .agg(round(avg(col("v")), 6).as("centroid"), count(lit(1)).as("n_vecs"))
+      .orderBy("label", "pos")
 
-  val oracles: Map[String, String] = Map(
-    "q39_ann_brute" -> q39Sql)
+  private val q80Sql =
+    """SELECT label, CAST(i - 1 AS INT) AS pos,
+      |       ROUND(AVG(embedding[i]), 6) AS centroid,
+      |       COUNT(*) AS n_vecs
+      |FROM embeddings, range(1, 65) t(i)
+      |GROUP BY label, pos ORDER BY label, pos""".stripMargin
+
+  // --------------------------------------------------------------- q118
+  /** Per-dimension min/max scalar quantization to uint8 codes.
+    * Stats pass: posexplode → (dim, min, max) — a 64-row aggregate,
+    * broadcast back. Quantize pass: row-local rescale + round per
+    * dim, re-assembled in dim order. The corpus shuffles once for the
+    * stats (partial-agg on 64 keys) and never again; codes ship as
+    * JSON (array-typed result columns crash the driver comparator).
+    * Rounding parity: both engines evaluate the identical double
+    * expression ((x-min)/(max-min)*255) and HALF_UP-round it, so the
+    * codes are bit-deterministic cross-engine.
+    */
+  private def q118(s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val dims = emb
+      .select(posexplode(col("embedding")).as(Seq("dim", "x")))
+      .groupBy("dim")
+      .agg(min(col("x").cast("double")).as("lo"),
+        max(col("x").cast("double")).as("hi"))
+    // The stats table is DIMENSION-sized (bounded by the embedding
+    // width, not the corpus) — collect it once and apply the
+    // quantization as a map-side indexed transform over the stored
+    // array. The previous form re-exploded every vector into D rows,
+    // joined the stats and re-grouped by vec_id to rebuild the array:
+    // that second shuffle carried D rows PER VECTOR (plus a per-group
+    // sort) — at 100 TB, the dominant exchange of the query, now gone
+    // entirely. Same double expression and HALF_UP rounding, so the
+    // codes stay bit-identical to the oracle's.
+    val st = dims.orderBy("dim").collect()
+    val lo = typedLit(st.map(_.getDouble(1)).toSeq)
+    val hi = typedLit(st.map(_.getDouble(2)).toSeq)
+    // Cardinality parity on degenerate rows: the oracle's unnest path
+    // (and the old posexplode form) emits NO row for a null/empty
+    // embedding, while a bare transform would keep it with null/"[]"
+    // codes. size() is -1 for null, so one predicate covers both.
+    emb
+      .filter(size(col("embedding")) > 0)
+      .select(col("vec_id"),
+        to_json(transform(col("embedding"), (x, i) =>
+          round((x.cast("double") - element_at(lo, i + 1)) /
+              (element_at(hi, i + 1) - element_at(lo, i + 1)) * 255, 0)
+            .cast("int"))).as("codes"))
+      .orderBy("vec_id")
+  }
+
+  private val q118Sql =
+    """WITH flat AS (
+      |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS dim,
+      |         CAST(unnest(embedding) AS DOUBLE) AS x
+      |  FROM embeddings),
+      |stats AS (
+      |  SELECT dim, MIN(x) AS lo, MAX(x) AS hi FROM flat GROUP BY dim),
+      |coded AS (
+      |  SELECT vec_id, f.dim,
+      |         CAST(ROUND((x - lo) / (hi - lo) * 255, 0) AS INT) AS q
+      |  FROM flat f JOIN stats s ON f.dim = s.dim)
+      |SELECT vec_id,
+      |       CAST(to_json(list(q ORDER BY dim)) AS VARCHAR) AS codes
+      |FROM coded GROUP BY vec_id ORDER BY vec_id""".stripMargin
+
+  val queries: Seq[Query] = Seq(
+    Query("q39_ann_brute", q39, Some(q39Sql)),
+    Query("q40_ann_lsh", q40, None),
+    Query("q80_label_centroid", q80, Some(q80Sql)),
+    Query("q118_embed_quantize", q118, Some(q118Sql)))
 }

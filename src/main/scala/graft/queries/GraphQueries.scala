@@ -4,11 +4,11 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Twentieth extension batch: PageRank-style authority scoring — the
-  * iterative-fixpoint graph operator a web-corpus pipeline uses to
-  * weight domains/documents by link authority (the quality-weighting
-  * step next to dedup and filtering), joining connected components as
-  * the engine's second iterative graph primitive.
+/** Iterative graph operators: PageRank-style authority scoring — the
+  * iterative-fixpoint operator a web-corpus pipeline uses to weight
+  * domains/documents by link authority (the quality-weighting step
+  * next to dedup and filtering). Connected components, the other
+  * iterative graph primitive, is [[ConnectedComponents]].
   *
   * Oracle design: floating-point PageRank can never hash-match across
   * engines (per-engine summation order and rounding), so the ranks
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * micro-unit per node per round) is part of the defined semantics,
   * replicated identically on both sides.
   */
-object Extended22 {
+object GraphQueries {
 
   /** Integer PageRank over a directed edge list (`src`, `dst`):
     * `iters` rounds of r'(v) = 15% base + 85% of the sum of
@@ -364,145 +364,6 @@ object Extended22 {
        |ORDER BY pr DESC, node LIMIT 20""".stripMargin
   }
 
-  // --------------------------------------------------------------- q134
-  /** Binned band-join core: all pairs with |valᵃ − valᵇ| ≤ eps from a
-    * (key, value) table, as a pure EQUI-join — the scale path q93's
-    * doc promised for band joins where BOTH sides are large (q93
-    * broadcasts its tiny interval table; with two big sides that and
-    * the nested-loop fallback are non-starters). Buckets are
-    * `value DIV (2·eps)`; the probe side explodes into its own and
-    * both neighbour buckets. Width 2ε ⇒ any qualifying pair is at
-    * most one bucket apart, and since the build side sits in exactly
-    * ONE bucket each pair is found exactly once — no post-dedup
-    * (spec-pinned). Work is one bucket-keyed shuffle + a refine
-    * filter: output-bounded at any scale, no cartesian anywhere.
-    * Values must be non-negative integers (quantize first — exact,
-    * no float-boundary ambiguity).
-    */
-  def bandPairsBinned(items: DataFrame, keyCol: String, valCol: String,
-      eps: Long): DataFrame = {
-    require(eps > 0, s"band eps must be positive, got $eps")
-    val width = 2 * eps
-    val base = items.select(col(keyCol).as("k"), col(valCol).as("v"))
-    val probe = base
-      .withColumn("bb", expr(s"v DIV $width"))
-      .select(col("k"), col("v"),
-        explode(array(col("bb") - 1, col("bb"), col("bb") + 1)).as("b"))
-    val build = base
-      .select(col("k").as("k2"), col("v").as("v2"),
-        expr(s"v DIV $width").as("b"))
-    probe.join(build,
-        probe("b") === build("b") && probe("k") < build("k2") &&
-          abs(probe("v") - build("v2")) <= eps)
-      .select(col("k").as("a_key"), col("k2").as("b_key"),
-        col("v").as("a_val"), col("v2").as("b_val"))
-  }
-
-  /** Price-proximity order pairs: |Δ total price| ≤ $2.00 across the
-    * whole orders table — no equi key anywhere, both sides the same
-    * large table. Prices quantize to integer cents (exact in both
-    * engines). Oracle: DuckDB's own inequality join (IEJoin-friendly
-    * BETWEEN form) — an INDEPENDENT evaluation of the band predicate,
-    * so a bucketing bug (missed boundary pair) hash-mismatches. The
-    * sf0.001 data already exercises cross-bucket pairs (2 of its 9).
-    */
-  private def q134(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderkey").as("k"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    bandPairsBinned(o, "k", "cents", eps = 200L)
-      .select(col("a_key"), col("b_key"),
-        (col("a_val") / 100.0).as("a_price"),
-        (col("b_val") / 100.0).as("b_price"))
-      .orderBy("a_key", "b_key")
-  }
-
-  private val q134Sql =
-    """WITH o AS (SELECT o_orderkey AS k,
-      |                  CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
-      |           FROM orders)
-      |SELECT a.k AS a_key, b.k AS b_key,
-      |       a.c / 100.0 AS a_price, b.c / 100.0 AS b_price
-      |FROM o a JOIN o b
-      |  ON b.c >= a.c - 200 AND b.c <= a.c + 200 AND a.k < b.k
-      |ORDER BY a_key, b_key""".stripMargin
-
-  // --------------------------------------------------------------- q135
-  /** CDC MERGE apply (Delta/Iceberg `MERGE INTO` re-expressed on plain
-    * DataFrames): a changelog of typed ops — U(pdate), D(elete),
-    * I(nsert) — applied to a base table in ONE full-outer join pass:
-    * deletes drop, updates/inserts take the changelog's values,
-    * untouched keys keep the base row. At 100 TB both sides shuffle
-    * once on the merge key (or zero times if the base is bucketed on
-    * it — `Sources.writeBucketed`); nothing is quadratic and no
-    * driver-side diffing happens. The changelog here derives
-    * DETERMINISTICALLY from the base (keys ≡ 3 mod 10 → U at +100.00,
-    * keys ≡ 7 mod 10 → D, fresh keys beyond max → I), so an
-    * independent engine reproduces byte-identical input without
-    * shipping a second table.
-    */
-  private def q135(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.orders(s, dir)
-      .select(col("o_orderkey").as("k"),
-        col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-          .as("price"),
-        col("o_orderstatus").as("status"))
-    val changes = base
-      .filter(col("k") % 10 === 3 || col("k") % 10 === 7)
-      .select(col("k"),
-        when(col("k") % 10 === 3, lit("U")).otherwise(lit("D")).as("op"),
-        (col("price") + 100).as("new_price"),
-        lit("P").as("new_status"))
-      .unionByName(
-        base.agg(max(col("k")).as("mx")).select(
-          explode(sequence(col("mx") + 1, col("mx") + 5)).as("k"),
-          lit("I").as("op"),
-          lit(java.math.BigDecimal.valueOf(123456, 2)).cast(
-            org.apache.spark.sql.types.DecimalType(18, 2)).as("new_price"),
-          lit("N").as("new_status")))
-    base.join(changes, Seq("k"), "full_outer")
-      .filter(col("op").isNull || col("op") =!= "D")
-      .select(col("k"),
-        when(col("op").isin("U", "I"), col("new_price"))
-          .otherwise(col("price")).cast("double").as("price"),
-        when(col("op").isin("U", "I"), col("new_status"))
-          .otherwise(col("status")).as("status"))
-      .orderBy("k")
-  }
-
-  private val q135Sql =
-    """WITH base AS (SELECT o_orderkey AS k,
-      |                     CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-      |                     o_orderstatus AS status
-      |              FROM orders),
-      |changes AS (
-      |  SELECT k, CASE WHEN k % 10 = 3 THEN 'U' ELSE 'D' END AS op,
-      |         price + 100 AS new_price, 'P' AS new_status
-      |  FROM base WHERE k % 10 = 3 OR k % 10 = 7
-      |  UNION ALL
-      |  SELECT (SELECT MAX(k) FROM base) + i AS k, 'I' AS op,
-      |         CAST(1234.56 AS DECIMAL(18,2)) AS new_price, 'N' AS new_status
-      |  FROM range(1, 6) t(i)),
-      |merged AS (
-      |  SELECT COALESCE(b.k, c.k) AS k, b.price, b.status,
-      |         c.op, c.new_price, c.new_status
-      |  FROM base b FULL JOIN changes c ON b.k = c.k)
-      |SELECT k,
-      |       CAST(CASE WHEN op IN ('U','I') THEN new_price
-      |                 ELSE price END AS DOUBLE) AS price,
-      |       CASE WHEN op IN ('U','I') THEN new_status
-      |            ELSE status END AS status
-      |FROM merged
-      |WHERE op IS NULL OR op <> 'D'
-      |ORDER BY k""".stripMargin
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q133_pagerank" -> (q133 _),
-    "q134_binned_band_join" -> (q134 _),
-    "q135_cdc_merge" -> (q135 _))
-
-  val oracles: Map[String, String] = Map(
-    "q133_pagerank" -> q133Sql,
-    "q134_binned_band_join" -> q134Sql,
-    "q135_cdc_merge" -> q135Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q133_pagerank", q133, Some(q133Sql)))
 }

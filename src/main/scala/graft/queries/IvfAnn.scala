@@ -218,6 +218,6 @@ object IvfAnn {
       .orderBy("query_id", "rank")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q51_ann_ivf" -> (q51 _))
+  val queries: Seq[Query] = Seq(
+    Query("q51_ann_ivf", q51, None))
 }

@@ -96,10 +96,8 @@ object MultimodalQueries {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q41_mm_decode" -> (q41 _),
-    "q42_mm_frames" -> (q42 _),
-    "q62_mm_batch_decode" -> (q62 _))
-
-  val oracles: Map[String, String] = Map.empty
+  val queries: Seq[Query] = Seq(
+    Query("q41_mm_decode", q41, None),
+    Query("q42_mm_frames", q42, None),
+    Query("q62_mm_batch_decode", q62, None))
 }

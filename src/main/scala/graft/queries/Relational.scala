@@ -6,7 +6,10 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Relational/dataframe operator surface (SURVEY.md §2, q01–q27).
+/** Relational/dataframe operator surface (SURVEY.md §2, q01–q27), plus
+  * the set operations (q55 INTERSECT/EXCEPT, q88 union-by-name, q101
+  * UNION distinct), LIMIT/OFFSET pagination (q100) and the SQL facade's
+  * correlated subqueries (q90).
   *
   * Capability-equivalent to the ibis dataframe API the reference
   * exercises (reference: `/root/reference/window_aggregation.py`),
@@ -24,7 +27,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 object Relational {
 
   /** SUM(col) with exact cross-engine semantics (see class doc). */
-  private def dsum(c: Column, scale: Int = 2): Column =
+  private[queries] def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
 
   private def dsumOver(c: Column, w: WindowSpec, scale: Int = 2): Column =
@@ -558,64 +561,182 @@ object Relational {
        |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin
 
   // ------------------------------------------------------------ assembly
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_project"         -> (q01 _),
-    "q02_filter"          -> (q02 _),
-    "q03_agg_global"      -> (q03 _),
-    "q04_agg_group"       -> (q04 _),
-    "q05_having"          -> (q05 _),
-    "q06_distinct"        -> (q06 _),
-    "q07_topk"            -> (q07 _),
-    "q08_join_broadcast"  -> (q08 _),
-    "q09_join_multi"      -> (q09 _),
-    "q10_join_left"       -> (q10 _),
-    "q11_join_semi"       -> (q11 _),
-    "q12_join_anti"       -> (q12 _),
-    "q13_union"           -> (q13 _),
-    "q14_case_when"       -> (q14 _),
-    "q15_in_between"      -> (q15 _),
-    "q16_string_funcs"    -> (q16 _),
-    "q17_date_funcs"      -> (q17 _),
-    "q18_null_funcs"      -> (q18 _),
-    "q19_window_rows"     -> (q19 _),
-    "q20_window_range"    -> (q20 _),
-    "q21_lag_lead"        -> (q21 _),
-    "q22_count_distinct"  -> (q22 _),
-    "q23_value_counts"    -> (q23 _),
-    "q24_rollup"          -> (q24 _),
-    "q25_scalar_subquery" -> (q25 _),
-    "q26_sessionize"      -> (q26 _),
-    "q27_tumble_batch"    -> (q27 _))
+  // ---------------------------------------------------------------- q55
+  /** Set operations: customers ordering in both 1995 and 1996
+    * (INTERSECT) vs only in 1995 (EXCEPT), tagged and unioned. Both
+    * ops are distinct-semantics in Spark and ANSI SQL alike.
+    */
+  private def q55(s: SparkSession, dir: String): DataFrame = {
+    val o = Tables.orders(s, dir)
+    def inYear(y: Int) =
+      o.filter(year(col("o_orderdate")) === y).select("o_custkey")
+    val both = inYear(1995).intersect(inYear(1996))
+      .select(lit("both").as("tag"), col("o_custkey"))
+    val only95 = inYear(1995).except(inYear(1996))
+      .select(lit("only_1995").as("tag"), col("o_custkey"))
+    both.unionAll(only95).orderBy("tag", "o_custkey")
+  }
 
-  val oracles: Map[String, String] = Map(
-    "q01_project"         -> q01Sql,
-    "q02_filter"          -> q02Sql,
-    "q03_agg_global"      -> q03Sql,
-    "q04_agg_group"       -> q04Sql,
-    "q05_having"          -> q05Sql,
-    "q06_distinct"        -> q06Sql,
-    "q07_topk"            -> q07Sql,
-    "q08_join_broadcast"  -> q08Sql,
-    "q09_join_multi"      -> q09Sql,
-    "q10_join_left"       -> q10Sql,
-    "q11_join_semi"       -> q11Sql,
-    "q12_join_anti"       -> q12Sql,
-    "q13_union"           -> q13Sql,
-    "q14_case_when"       -> q14Sql,
-    "q15_in_between"      -> q15Sql,
-    "q16_string_funcs"    -> q16Sql,
-    "q17_date_funcs"      -> q17Sql,
-    "q18_null_funcs"      -> q18Sql,
-    "q19_window_rows"     -> q19Sql,
-    "q20_window_range"    -> q20Sql,
-    "q21_lag_lead"        -> q21Sql,
-    "q22_count_distinct"  -> q22Sql,
-    "q23_value_counts"    -> q23Sql,
-    "q24_rollup"          -> q24Sql,
-    "q25_scalar_subquery" -> q25Sql,
-    "q26_sessionize"      -> q26Sql,
-    "q27_tumble_batch"    -> q27Sql)
+  private val q55Sql =
+    """SELECT 'both' AS tag, o_custkey FROM (
+      |  SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
+      |  INTERSECT
+      |  SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
+      |UNION ALL
+      |SELECT 'only_1995' AS tag, o_custkey FROM (
+      |  SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
+      |  EXCEPT
+      |  SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
+      |ORDER BY tag, o_custkey""".stripMargin
+
+  // ---------------------------------------------------------------- q88
+  /** Schema-evolution union: merge two "shards" whose schemas drifted
+    * (the older extract lacks a column) via `unionByName(
+    * allowMissingColumns = true)` — name-based alignment with
+    * null-fill, the everyday shard-merging op `UNION ALL`'s
+    * positional semantics can't express. Row-local; the aggregate
+    * after it is one partial-agg shuffle.
+    */
+  private def q88(s: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.orders(s, dir)
+    val old = orders.filter(year(col("o_orderdate")) <= 1997)
+      .select(col("o_orderkey"), col("o_totalprice")) // pre-migration schema
+    val neu = orders.filter(year(col("o_orderdate")) >= 1998)
+      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
+    old.unionByName(neu, allowMissingColumns = true)
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+          .cast("double").as("total"))
+      .orderBy(col("o_orderpriority").asc_nulls_first)
+  }
+
+  private val q88Sql =
+    """WITH u AS (
+      |  SELECT o_orderkey, o_totalprice, NULL AS o_orderpriority
+      |  FROM orders WHERE year(o_orderdate) <= 1997
+      |  UNION ALL
+      |  SELECT o_orderkey, o_totalprice, o_orderpriority
+      |  FROM orders WHERE year(o_orderdate) >= 1998)
+      |SELECT o_orderpriority, COUNT(*) AS n,
+      |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+      |FROM u GROUP BY o_orderpriority
+      |ORDER BY o_orderpriority NULLS FIRST""".stripMargin
+
+  // ---------------------------------------------------------------- q90
+  /** The SQL facade: the engine's tables registered as views and a
+    * correlated EXISTS + correlated scalar subquery run through
+    * `spark.sql` — the declarative entry point (the reference drives
+    * its engine through SQL-generating ibis). Catalyst decorrelates
+    * both subqueries into joins (aggregate-then-join for the scalar,
+    * semi-join for EXISTS) — no per-row re-execution at any scale.
+    */
+  private def q90(s: SparkSession, dir: String): DataFrame = {
+    Tables.customer(s, dir).createOrReplaceTempView("customer_v")
+    Tables.orders(s, dir).createOrReplaceTempView("orders_v")
+    s.sql(
+      """SELECT c.c_custkey, c.c_name,
+        |       CAST((SELECT COUNT(*) FROM orders_v o
+        |             WHERE o.o_custkey = c.c_custkey) AS BIGINT) AS n_orders
+        |FROM customer_v c
+        |WHERE EXISTS (SELECT 1 FROM orders_v o
+        |              WHERE o.o_custkey = c.c_custkey
+        |                AND o.o_totalprice > 300000)
+        |ORDER BY c.c_custkey""".stripMargin)
+  }
+
+  private val q90Sql =
+    """SELECT c.c_custkey, c.c_name,
+      |       (SELECT COUNT(*) FROM orders o
+      |        WHERE o.o_custkey = c.c_custkey) AS n_orders
+      |FROM customer c
+      |WHERE EXISTS (SELECT 1 FROM orders o
+      |              WHERE o.o_custkey = c.c_custkey
+      |                AND o.o_totalprice > 300000)
+      |ORDER BY c.c_custkey""".stripMargin
+
+  // --------------------------------------------------------------- q100
+  /** Pagination (ibis `.limit(n, offset=m)`): a fully deterministic
+    * multi-key sort (computed NULL column exercises NULLS FIRST, key
+    * tiebreak makes page boundaries stable) → OFFSET 100 → LIMIT 50.
+    * At scale a global sort is one range-partitioned shuffle; OFFSET
+    * only materializes the first offset+limit rows per partition
+    * (TakeOrderedAndProject), not the table.
+    */
+  private def q100(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .select(col("o_orderkey"),
+        nullif(col("o_orderpriority"), lit("3-MEDIUM")).as("prio_or_null"),
+        col("o_totalprice"))
+      .orderBy(col("prio_or_null").asc_nulls_first,
+        col("o_totalprice").desc, col("o_orderkey").asc)
+      .offset(100)
+      .limit(50)
+
+  private val q100Sql =
+    """SELECT o_orderkey,
+      |       NULLIF(o_orderpriority, '3-MEDIUM') AS prio_or_null,
+      |       o_totalprice
+      |FROM orders
+      |ORDER BY prio_or_null ASC NULLS FIRST, o_totalprice DESC, o_orderkey ASC
+      |LIMIT 50 OFFSET 100""".stripMargin
+
+  // --------------------------------------------------------------- q101
+  /** UNION with distinct semantics (q13 covers UNION ALL; q55 covers
+    * INTERSECT/EXCEPT): two overlapping customer selections merged
+    * without duplicates. Spark plans union + distinct as one
+    * partial-aggregated shuffle on the full row — the same shape as a
+    * GROUP BY ALL COLUMNS, so it scales like any aggregation.
+    */
+  private def q101(s: SparkSession, dir: String): DataFrame = {
+    val c = Tables.customer(s, dir)
+    val big = c.filter(col("c_acctbal") > 7500)
+      .select(col("c_custkey"), col("c_nationkey"))
+    val inNation = c.filter(col("c_nationkey") < 5)
+      .select(col("c_custkey"), col("c_nationkey"))
+    big.union(inNation).distinct().orderBy("c_custkey")
+  }
+
+  private val q101Sql =
+    """SELECT c_custkey, c_nationkey FROM customer WHERE c_acctbal > 7500
+      |UNION
+      |SELECT c_custkey, c_nationkey FROM customer WHERE c_nationkey < 5
+      |ORDER BY c_custkey""".stripMargin
 
   /** Flagship for `SparkEntry.entry`. */
   def flagship(s: SparkSession, dir: String): DataFrame = q09(s, dir)
+
+  val queries: Seq[Query] = Seq(
+    Query("q01_project", q01, Some(q01Sql)),
+    Query("q02_filter", q02, Some(q02Sql)),
+    Query("q03_agg_global", q03, Some(q03Sql)),
+    Query("q04_agg_group", q04, Some(q04Sql)),
+    Query("q05_having", q05, Some(q05Sql)),
+    Query("q06_distinct", q06, Some(q06Sql)),
+    Query("q07_topk", q07, Some(q07Sql)),
+    Query("q08_join_broadcast", q08, Some(q08Sql)),
+    Query("q09_join_multi", q09, Some(q09Sql)),
+    Query("q10_join_left", q10, Some(q10Sql)),
+    Query("q11_join_semi", q11, Some(q11Sql)),
+    Query("q12_join_anti", q12, Some(q12Sql)),
+    Query("q13_union", q13, Some(q13Sql)),
+    Query("q14_case_when", q14, Some(q14Sql)),
+    Query("q15_in_between", q15, Some(q15Sql)),
+    Query("q16_string_funcs", q16, Some(q16Sql)),
+    Query("q17_date_funcs", q17, Some(q17Sql)),
+    Query("q18_null_funcs", q18, Some(q18Sql)),
+    Query("q19_window_rows", q19, Some(q19Sql)),
+    Query("q20_window_range", q20, Some(q20Sql)),
+    Query("q21_lag_lead", q21, Some(q21Sql)),
+    Query("q22_count_distinct", q22, Some(q22Sql)),
+    Query("q23_value_counts", q23, Some(q23Sql)),
+    Query("q24_rollup", q24, Some(q24Sql)),
+    Query("q25_scalar_subquery", q25, Some(q25Sql)),
+    Query("q26_sessionize", q26, Some(q26Sql)),
+    Query("q27_tumble_batch", q27, Some(q27Sql)),
+    Query("q55_set_ops", q55, Some(q55Sql)),
+    Query("q88_union_by_name", q88, Some(q88Sql)),
+    Query("q90_sql_correlated", q90, Some(q90Sql)),
+    Query("q100_pagination", q100, Some(q100Sql)),
+    Query("q101_union_distinct", q101, Some(q101Sql)))
 }

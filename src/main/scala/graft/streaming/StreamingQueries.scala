@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Conf, Tables}
+import graft.queries.Query
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -1265,42 +1266,47 @@ object StreamingQueries {
         count(lit(1)).as("n_dup_sources"))
       .orderBy("doc_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q75_stream_session_window" -> (q75 _),
-    "q28_stream_tumble"      -> (q28 _),
-    "q29_stream_range_state" -> (q29 _),
-    "q129_stream_range_held" -> (q129 _),
-    "q47_stream_dedup"       -> (q47 _),
-    "q57_stream_stream_join" -> (q57 _),
-    "q98_stream_left_join"   -> (q98 _),
-    "q125_stream_full_join"  -> (q125 _),
-    "q108_stream_static_join" -> (q108 _),
-    "q132_stream_temporal_join" -> (q132 _),
-    "q138_stream_dedup_near" -> (q138 _),
-    "q139_stream_dedup_apply" -> (q139 _))
-
   /** Streaming results are asserted identical to their batch forms, so
-    * they reuse the batch oracle SQL (q27 / q20 / join shapes).
+    * the oracles reuse the batch oracle SQL (q27 / q20 / join shapes).
     */
-  val oracles: Map[String, String] = Map(
-    "q28_stream_tumble" ->
+  val queries: Seq[Query] = Seq(
+    Query("q75_stream_session_window", q75, Some(
+      """WITH e AS (
+        |  SELECT user_id, ts, value,
+        |         CASE WHEN lag(ts) OVER w IS NULL
+        |                OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTES
+        |              THEN 1 ELSE 0 END AS is_new
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |s AS (
+        |  SELECT user_id, ts, value,
+        |         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
+        |                           ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM e)
+        |SELECT user_id, MIN(ts) AS session_start,
+        |       MAX(ts) + INTERVAL 30 MINUTES AS session_end,
+        |       COUNT(*) AS n_events,
+        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM s GROUP BY user_id, sid
+        |ORDER BY user_id, session_start""".stripMargin)),
+    Query("q28_stream_tumble", q28, Some(
       """SELECT date_trunc('hour', ts) AS win_start, event_type,
         |       COUNT(*) AS n,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin,
-    "q29_stream_range_state" ->
+        |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin)),
+    Query("q29_stream_range_state", q29, Some(
       """SELECT event_id, user_id AS province_id, ts,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER
         |       (PARTITION BY user_id ORDER BY ts
         |        RANGE BETWEEN INTERVAL 10 SECONDS PRECEDING AND CURRENT ROW)
         |       AS DOUBLE) AS pay_amount
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
     // held mode: same window sums, but only events the final watermark
     // passed are emitted — the cutoff replicates Spark's ms-truncated
     // watermark ((max_µs ÷ 1000 − 15000) ms) exactly. The window sum
     // itself still ranges over ALL events: a withheld event is history
     // for earlier peers even though its own row never emits.
-    "q129_stream_range_held" ->
+    Query("q129_stream_range_held", q129, Some(
       """SELECT event_id, user_id AS province_id, ts,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER
         |       (PARTITION BY user_id ORDER BY ts
@@ -1309,19 +1315,36 @@ object StreamingQueries {
         |FROM events
         |QUALIFY epoch_us(ts) <=
         |  ((SELECT MAX(epoch_us(ts)) FROM events) // 1000 - 15000) * 1000
-        |ORDER BY event_id""".stripMargin,
-    "q47_stream_dedup" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("q47_stream_dedup", q47, Some(
       """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q57_stream_stream_join" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Query("q57_stream_stream_join", q57, Some(
       """SELECT a.event_id AS click_id, b.event_id AS purchase_id,
         |       a.user_id, a.ts AS click_ts, b.ts AS purchase_ts
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id
         | AND a.event_type = 'click' AND b.event_type = 'purchase'
         | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 24 HOURS
-        |ORDER BY click_id, purchase_id""".stripMargin,
-    "q125_stream_full_join" ->
+        |ORDER BY click_id, purchase_id""".stripMargin)),
+    Query("q98_stream_left_join", q98, Some(
+      """WITH wm AS (
+        |  SELECT LEAST(MAX(ts) FILTER (WHERE event_type = 'click'),
+        |               MAX(ts) FILTER (WHERE event_type = 'purchase'))
+        |         - INTERVAL 15 SECONDS AS w
+        |  FROM events),
+        |j AS (
+        |  SELECT a.event_id AS click_id, b.event_id AS purchase_id,
+        |         a.user_id, a.ts AS click_ts, b.ts AS purchase_ts
+        |  FROM events a LEFT JOIN events b
+        |    ON a.user_id = b.user_id AND b.event_type = 'purchase'
+        |   AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 24 HOURS
+        |  WHERE a.event_type = 'click')
+        |SELECT * FROM j
+        |WHERE purchase_id IS NOT NULL
+        |   OR click_ts + INTERVAL 24 HOURS < (SELECT w FROM wm)
+        |ORDER BY click_id, purchase_id""".stripMargin)),
+    Query("q125_stream_full_join", q125, Some(
       """WITH wm AS (
         |  SELECT LEAST(MAX(ts) FILTER (WHERE event_type = 'click'),
         |               MAX(ts) FILTER (WHERE event_type = 'purchase'))
@@ -1344,60 +1367,24 @@ object StreamingQueries {
         |   OR (purchase_id IS NULL
         |       AND click_ts + INTERVAL 24 HOURS < (SELECT w FROM wm))
         |   OR (click_id IS NULL AND purchase_ts < (SELECT w FROM wm))
-        |ORDER BY click_id NULLS LAST, purchase_id NULLS LAST""".stripMargin,
-    "q98_stream_left_join" ->
-      """WITH wm AS (
-        |  SELECT LEAST(MAX(ts) FILTER (WHERE event_type = 'click'),
-        |               MAX(ts) FILTER (WHERE event_type = 'purchase'))
-        |         - INTERVAL 15 SECONDS AS w
-        |  FROM events),
-        |j AS (
-        |  SELECT a.event_id AS click_id, b.event_id AS purchase_id,
-        |         a.user_id, a.ts AS click_ts, b.ts AS purchase_ts
-        |  FROM events a LEFT JOIN events b
-        |    ON a.user_id = b.user_id AND b.event_type = 'purchase'
-        |   AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 24 HOURS
-        |  WHERE a.event_type = 'click')
-        |SELECT * FROM j
-        |WHERE purchase_id IS NOT NULL
-        |   OR click_ts + INTERVAL 24 HOURS < (SELECT w FROM wm)
-        |ORDER BY click_id, purchase_id""".stripMargin,
-    "q108_stream_static_join" ->
+        |ORDER BY click_id NULLS LAST, purchase_id NULLS LAST""".stripMargin)),
+    Query("q108_stream_static_join", q108, Some(
       """SELECT e.event_id, e.user_id, c.c_nationkey, e.value
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
         |WHERE e.event_type = 'purchase'
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
     // temporal join drains to exactly the batch as-of result
-    "q132_stream_temporal_join" ->
+    Query("q132_stream_temporal_join", q132, Some(
       """SELECT p.event_id, p.user_id, p.ts, p.value, l.ts AS last_click_ts
         |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') l
         |  ON p.user_id = l.user_id AND p.ts >= l.ts
-        |ORDER BY p.event_id""".stripMargin,
+        |ORDER BY p.event_id""".stripMargin)),
     // streaming near-dup ≡ batch q35 ≡ brute force at verify scale
-    "q138_stream_dedup_near" ->
-      graft.queries.DedupQueries.nearDupOracleSql,
+    Query("q138_stream_dedup_near", q138, Some(
+      graft.queries.DedupQueries.nearDupOracleSql)),
     // streaming apply ≡ the brute-force pair set grouped by its
     // larger member (the pairwise min-id-wins drop rule)
-    "q139_stream_dedup_apply" ->
-      graft.queries.DedupQueries.nearDupApplyOracleSql,
-    "q75_stream_session_window" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTES
-        |              THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-        |                           ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM e)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |       MAX(ts) + INTERVAL 30 MINUTES AS session_end,
-        |       COUNT(*) AS n_events,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin)
+    Query("q139_stream_dedup_apply", q139, Some(
+      graft.queries.DedupQueries.nearDupApplyOracleSql)))
 }

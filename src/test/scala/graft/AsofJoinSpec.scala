@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.AsofJoin
-import graft.queries.{Extended, Extended20}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -62,8 +61,8 @@ class AsofJoinSpec extends AnyFunSuite {
 
   test("q128 tolerance operator ≡ q124 with a post-cutoff on real data") {
     import org.apache.spark.sql.functions._
-    val native = Extended20.queries("q128_asof_tolerance")(spark, sf)
-    val composed = Extended20.queries("q124_asof_native")(spark, sf)
+    val native = SparkEntry.queries("q128_asof_tolerance")(spark, sf)
+    val composed = SparkEntry.queries("q124_asof_native")(spark, sf)
       .withColumn("last_click_ts",
         when(unix_micros(col("ts")) - unix_micros(col("last_click_ts")) <=
           24L * 3600 * 1000000, col("last_click_ts")))
@@ -73,16 +72,16 @@ class AsofJoinSpec extends AnyFunSuite {
     // both branches exercised: some matches survive, some are nulled
     val n = native.count()
     val kept = native.filter(col("last_click_ts").isNotNull).count()
-    val q124kept = Extended20.queries("q124_asof_native")(spark, sf)
+    val q124kept = SparkEntry.queries("q124_asof_native")(spark, sf)
       .filter(col("last_click_ts").isNotNull).count()
     assert(kept > 0, "tolerance nulled every match — not discriminating")
     assert(kept < q124kept, "tolerance nulled nothing — not discriminating")
-    assert(n === Extended20.queries("q124_asof_native")(spark, sf).count())
+    assert(n === SparkEntry.queries("q124_asof_native")(spark, sf).count())
   }
 
   test("q124 custom operator ≡ q43 composed union+window formulation") {
-    val native = Extended20.queries("q124_asof_native")(spark, sf)
-    val composed = Extended.queries("q43_asof_join")(spark, sf)
+    val native = SparkEntry.queries("q124_asof_native")(spark, sf)
+    val composed = SparkEntry.queries("q43_asof_join")(spark, sf)
     assert(native.columns.toSeq === composed.columns.toSeq)
     assert(native.exceptAll(composed).isEmpty && composed.exceptAll(native).isEmpty)
   }
@@ -203,7 +202,7 @@ class AsofJoinSpec extends AnyFunSuite {
   test("q130 forward operator ≡ window-composed next-click on real data") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val native = Extended20.queries("q130_asof_forward")(spark, sf)
+    val native = SparkEntry.queries("q130_asof_forward")(spark, sf)
     // independent composed formulation: union events, carry the NEXT
     // click time backward per user, keep purchases, apply the cutoff
     val ev = graft.Tables.events(spark, sf)
@@ -266,7 +265,7 @@ class AsofJoinSpec extends AnyFunSuite {
   }
 
   test("plan shape: AsofJoinExec node, one exchange per side, merge not window") {
-    val df = Extended20.queries("q124_asof_native")(spark, sf)
+    val df = SparkEntry.queries("q124_asof_native")(spark, sf)
     df.collect() // materialize so the adaptive plan is final
     val full = df.queryExecution.executedPlan.toString
     // AQE prints Final and Initial copies — assert on the final one

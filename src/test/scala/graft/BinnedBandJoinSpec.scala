@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Extended22
+import graft.queries.JoinQueries
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The binned band join (q134 / `bandPairsBinned`) — pure equi-join
@@ -25,7 +25,7 @@ class BinnedBandJoinSpec extends AnyFunSuite {
       (6L, 300L), // isolated
       (7L, 15L)   // duplicate value: pairs with 1 (Δ0), 2, 3
     ).toDF("id", "v")
-    val got = Extended22.bandPairsBinned(items, "id", "v", eps = 10L)
+    val got = JoinQueries.bandPairsBinned(items, "id", "v", eps = 10L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L),
       (1L, 7L), (2L, 7L), (3L, 7L)))
@@ -39,7 +39,7 @@ class BinnedBandJoinSpec extends AnyFunSuite {
       (ka, ca) <- orders; (kb, cb) <- orders
       if ka < kb && math.abs(ca - cb) <= 200
     } yield (ka, kb, ca / 100.0, cb / 100.0)).sortBy(p => (p._1, p._2))
-    val out = Extended22.queries("q134_binned_band_join")(spark, sf)
+    val out = SparkEntry.queries("q134_binned_band_join")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(out.toSeq === brute.toSeq)
@@ -50,13 +50,13 @@ class BinnedBandJoinSpec extends AnyFunSuite {
   }
 
   test("each pair is found exactly once (no post-dedup in the plan)") {
-    val keys = Extended22.queries("q134_binned_band_join")(spark, sf)
+    val keys = SparkEntry.queries("q134_binned_band_join")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(keys.nonEmpty && keys.distinct.size === keys.size)
   }
 
   test("plan is an equi-join: no nested-loop, no cartesian") {
-    val df = Extended22.queries("q134_binned_band_join")(spark, sf)
+    val df = SparkEntry.queries("q134_binned_band_join")(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)

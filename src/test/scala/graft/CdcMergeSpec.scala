@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.Extended22
 import graft.sources.Sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -19,7 +18,7 @@ class CdcMergeSpec extends AnyFunSuite {
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast("decimal(18,2)").as("price"),
         col("o_orderstatus").as("status"))
-    val out = Extended22.queries("q135_cdc_merge")(spark, sf)
+    val out = SparkEntry.queries("q135_cdc_merge")(spark, sf)
     val maxK = base.agg(max(col("k"))).collect()(0).getLong(0)
 
     val nBase = base.count()
@@ -53,7 +52,7 @@ class CdcMergeSpec extends AnyFunSuite {
       expect.exceptAll(untouched).isEmpty)
   }
 
-  /** The layout claim in q135's doc (Extended22.scala): the merge's
+  /** The layout claim in q135's doc (JoinQueries.scala): the merge's
     * full-outer join shuffles each side once on the merge key — or
     * ZERO times when the side is bucketed on it. Proven both ways:
     * bucketed base + bucketed changelog ⇒ no ShuffleExchange in the

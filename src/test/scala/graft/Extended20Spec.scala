@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.Extended20
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,7 @@ class Extended20Spec extends AnyFunSuite {
   import spark.implicits._
 
   test("q121: every sketch estimate is within its contract of exact") {
-    val rows = Extended20.queries("q121_sketch_distinct")(spark, sf).collect()
+    val rows = SparkEntry.queries("q121_sketch_distinct")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getBoolean(2), s"hllpp_ok false for ${r.get(0)}")
@@ -42,7 +41,7 @@ class Extended20Spec extends AnyFunSuite {
   }
 
   test("q122: approx booleans are all true and exact quantiles ordered") {
-    val rows = Extended20.queries("q122_sketch_quantiles")(spark, sf).collect()
+    val rows = SparkEntry.queries("q122_sketch_quantiles")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getDouble(1) <= r.getDouble(2), "p50 <= p95")
@@ -52,7 +51,7 @@ class Extended20Spec extends AnyFunSuite {
 
   test("q123: postings are sorted, df-consistent, and every posting is real") {
     import graft.functions.{TextFunctions => T}
-    val idx = Extended20.queries("q123_inverted_index")(spark, sf)
+    val idx = SparkEntry.queries("q123_inverted_index")(spark, sf)
       .as[(String, Long, String)].collect()
     assert(idx.nonEmpty)
     val docTokens: Map[Long, Set[String]] = Tables.documents(spark, sf)

@@ -43,7 +43,7 @@ class LeanCheckpointSpec extends AnyFunSuite {
     val before = sinkDirs()
     StreamingQueries.sinkModeOverride = Some("file")
     val snap =
-      try StreamingQueries.queries("q47_stream_dedup")(spark, sf)
+      try SparkEntry.queries("q47_stream_dedup")(spark, sf)
       finally StreamingQueries.sinkModeOverride = None
     assert(snap.count() > 0, "q47 file-sink run produced no rows")
     val fresh = (sinkDirs() -- before).filter(_.contains("q47_sink"))

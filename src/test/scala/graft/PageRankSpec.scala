@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Extended22
+import graft.queries.GraphQueries
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Integer PageRank vs an independent naive recurrence on authored
@@ -35,7 +35,7 @@ class PageRankSpec extends AnyFunSuite {
       Seq((10L, 11L), (11L, 10L), (11L, 12L), (12L, 11L), (12L, 10L), (10L, 12L))
 
   test("distributed integer PageRank == naive recurrence, node for node") {
-    val got = Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 5)
+    val got = GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === naive(edges, 5))
   }
@@ -51,7 +51,7 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("iteration count is respected (ranks differ between 1 and 5 rounds)") {
-    val one = Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 1)
+    val one = GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one === naive(edges, 1))
     assert(one !== naive(edges, 5))
@@ -87,7 +87,7 @@ class PageRankSpec extends AnyFunSuite {
 
   test("sink graph: dangling mass redistributed, matches naive general " +
     "recurrence over the full node set") {
-    val got = Extended22.integerPageRank(sinkEdges.toDF("src", "dst"),
+    val got = GraphQueries.integerPageRank(sinkEdges.toDF("src", "dst"),
         iters = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = naiveGeneral(sinkEdges, 4)
@@ -130,7 +130,7 @@ class PageRankSpec extends AnyFunSuite {
 
   test("plan shape under the guard: rank join is a broadcast hash join") {
     val joins = executedPlans(expectJoins = 2) {
-      Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 2).collect()
+      GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 2).collect()
     }.filter(isRankJoin)
     assert(joins.nonEmpty, "no rank-join plan captured")
     assert(joins.forall(_.contains("BroadcastHashJoin")),
@@ -138,7 +138,7 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("assumeRegular skips the census without changing regular-graph ranks") {
-    val got = Extended22.integerPageRank(edges.toDF("src", "dst"),
+    val got = GraphQueries.integerPageRank(edges.toDF("src", "dst"),
         iters = 5, assumeRegular = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === naive(edges, 5))
@@ -148,14 +148,14 @@ class PageRankSpec extends AnyFunSuite {
     // maxAdjArray=2 makes the star hub (degree 4) a head node while
     // the spokes/triangle (degree ≤ 2) stay on the array layout —
     // both contribution streams and their union are exercised
-    val split = Extended22.integerPageRank(edges.toDF("src", "dst"),
+    val split = GraphQueries.integerPageRank(edges.toDF("src", "dst"),
         iters = 5, maxAdjArray = 2L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(split === naive(edges, 5),
       "hybrid flat+array layout changed the answer")
     // degenerate: EVERY node a head (pure flat layout) still exact,
     // and on the sink graph the general path composes with the split
-    val allFlat = Extended22.integerPageRank(sinkEdges.toDF("src", "dst"),
+    val allFlat = GraphQueries.integerPageRank(sinkEdges.toDF("src", "dst"),
         iters = 3, maxAdjArray = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(allFlat === naiveGeneral(sinkEdges, 3))
@@ -170,20 +170,20 @@ class PageRankSpec extends AnyFunSuite {
     // ONE fused action at the default width (5 ≥ iters, the r16
     // measured default); same graph with a forced head split → all x1.
     graft.RoundStats.drain()
-    Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 4)
+    GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 4)
       .collect()
     val fused = graft.RoundStats.drain().map(_.tag)
       .filter(_.startsWith("pr_round"))
     assert(fused === Seq("pr_round1x4"),
       s"headless regular loop should fuse all 4 steps into one action: $fused")
     // past the fuse width (5) the loop fuses 5 steps, then the rest
-    Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 7)
+    GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 7)
       .collect()
     val fused7 = graft.RoundStats.drain().map(_.tag)
       .filter(_.startsWith("pr_round"))
     assert(fused7 === Seq("pr_round1x5", "pr_round2x2"),
       s"7 steps should run as a 5-step and a 2-step action: $fused7")
-    Extended22.integerPageRank(edges.toDF("src", "dst"), iters = 4,
+    GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 4,
         maxAdjArray = 2L)
       .collect()
     val split = graft.RoundStats.drain().map(_.tag)
@@ -197,7 +197,7 @@ class PageRankSpec extends AnyFunSuite {
     "table, and the same answer") {
     var result: Map[Long, Long] = Map.empty
     val joins = executedPlans(expectJoins = 2) {
-      result = Extended22.integerPageRank(edges.toDF("src", "dst"),
+      result = GraphQueries.integerPageRank(edges.toDF("src", "dst"),
           iters = 2, broadcastMaxNodes = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }.filter(isRankJoin)

@@ -26,7 +26,7 @@ class SinkParitySpec extends AnyFunSuite {
   }
 
   private def assertParity(name: String): Unit = {
-    val fn = StreamingQueries.queries(name)
+    val fn = SparkEntry.queries(name)
     val mem: DataFrame = withSink("memory") { fn(spark, sf) }
     val fil: DataFrame = withSink("file") { fn(spark, sf) }
     val (nm, nf) = (mem.count(), fil.count())
@@ -55,7 +55,7 @@ class SinkParitySpec extends AnyFunSuite {
 
   test("file-sink snapshot is a distributed scan, not a local collection") {
     val fil = withSink("file") {
-      StreamingQueries.queries("q29_stream_range_state")(spark, sf)
+      SparkEntry.queries("q29_stream_range_state")(spark, sf)
     }
     // The memory path returns a LocalRelation-backed frame (rows
     // already on the driver); the file path must plan as a parquet

@@ -33,7 +33,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(l)
-    try (rows(StreamingQueries.queries("q47_stream_dedup")(spark, sf)), atStart)
+    try (rows(SparkEntry.queries("q47_stream_dedup")(spark, sf)), atStart)
     finally spark.streams.removeListener(l)
   }
 
@@ -74,7 +74,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
     val before = sinks()
     StreamingQueries.sinkModeOverride = Some("file")
     try {
-      val snap = StreamingQueries.queries("q47_stream_dedup")(spark, sf)
+      val snap = SparkEntry.queries("q47_stream_dedup")(spark, sf)
       assert(snap.count() > 0)
       val ckpt = (sinks() -- before).filter(_.contains("q47_sink")).toSeq
         .flatMap(d => walk(new java.io.File(s"$d/ckpt")))
