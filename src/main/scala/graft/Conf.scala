@@ -5,7 +5,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** graft's whole tuning surface: every `spark.graft.*` session conf and
   * every `SPARK_GRAFT_*` environment variable the library reads, each
-  * with its default. Nothing else in `src/main` reads either (pinned by
+  * with its default, plus the one system property the plan dumps set.
+  * Nothing else in `src/main` reads any of them (pinned by
   * `ConfSurfaceSpec`). A malformed value throws an
   * `IllegalArgumentException` naming the setting and the value at its
   * first read; there is no warn-and-default path. Every other width,
@@ -101,6 +102,24 @@ object Conf {
 
   /** Every declared `spark.graft.*` key, the internal marker included. */
   val keys: Set[String] = settable.keySet + DedupChildKey
+
+  // ------------------------------------------------- system property
+
+  /** JVM system property that makes the dedup pipelines skip their
+    * final checkpoint, so a plan dump shows the verify-join plan
+    * instead of an opaque checkpoint scan (see
+    * `DedupQueries.finalStage`). Set only through [[withAuditNoFinal]];
+    * not a tuning value.
+    */
+  val AuditNoFinalProp = "graft.audit.nofinal"
+
+  def auditNoFinal: Boolean = sys.props.get(AuditNoFinalProp).contains("true")
+
+  /** Run `body` with [[auditNoFinal]] on. */
+  def withAuditNoFinal[T](body: => T): T = {
+    sys.props(AuditNoFinalProp) = "true"
+    try body finally sys.props.remove(AuditNoFinalProp)
+  }
 
   // ------------------------------------------------------ environment
 

@@ -27,7 +27,6 @@ object MicroBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     def medianSecs(f: => Unit, warmups: Int = 1, runs: Int = 3): Double = {
       (1 to warmups).foreach(_ => f)

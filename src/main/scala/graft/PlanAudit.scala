@@ -13,8 +13,8 @@ object PlanAudit {
     // Audit-only: skip the dedup pipelines' final-stage checkpoint so
     // their verify-join plans (the broadcast-fetch shape the 100 TB
     // story rests on) appear in the audit instead of an opaque
-    // `Scan ExistingRDD` leaf (see DedupQueries.finalStage).
-    sys.props("graft.audit.nofinal") = "true"
+    // `Scan ExistingRDD` leaf (see DedupQueries.finalStage); the main
+    // loop below runs under Conf.withAuditNoFinal.
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     // r15 (VERDICT r14 #3): the audit covers EVERY SparkEntry query —
     // the curated subset left q135-q139 (CDC merge, both incremental-
@@ -37,12 +37,14 @@ object PlanAudit {
     def explain(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-    audited.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(explain(df))
-      sb.append("```\n")
-      println(s"[audit] $name done")
+    Conf.withAuditNoFinal {
+      audited.foreach { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        sb.append(s"\n## $name\n\n```\n")
+        sb.append(explain(df))
+        sb.append("```\n")
+        println(s"[audit] $name done")
+      }
     }
     // Extra shapes the per-entry loop can't show (VERDICT r14 #3):
     // (a) q37 with verifySlices > 1 — the sliced verify's production
@@ -50,7 +52,6 @@ object PlanAudit {
     //     was materialized and its intermediates released at
     //     construction); audited WITHOUT nofinal so the leaves are
     //     the real shape. The k=1 default plan is the q37 entry above.
-    sys.props.remove("graft.audit.nofinal")
     locally {
       spark.conf.set(Conf.VerifySlices.key, "4")
       val df = try SparkEntry.queries("q37_ngram_jaccard")(spark, sfDir)
@@ -72,15 +73,14 @@ object PlanAudit {
       // the audited plan is the cc/final join CONSUMING the memo leaf
       // (Scan ExistingRDD) instead of recomputing the pair pipeline.
       // The main audit loop above already constructed q136 under
-      // nofinal, memoizing the UN-checkpointed pair plan with an
-      // unchanged fingerprint — evict it first or this "clean" run
-      // memo-hits the poisoned entry and the warm plan below shows
-      // the recomputed pipeline instead of the memo leaf (ADVICE r15).
-      graft.queries.DedupQueries.invalidateIncrementalIndex(sfDir)
+      // nofinal, memoizing the UN-checkpointed pair plan with
+      // unchanged input files — release the dir's stages first or this
+      // "clean" run memo-hits the poisoned entry and the warm plan below
+      // shows the recomputed pipeline instead of the memo leaf (ADVICE r15).
+      Memo.release(sfDir)
       SparkEntry.queries("q136_dedup_incremental")(spark, sfDir).count()
-      sys.props("graft.audit.nofinal") = "true"
-      val df = try SparkEntry.queries("q137_dedup_incr_apply")(spark, sfDir)
-        finally sys.props.remove("graft.audit.nofinal")
+      val df = Conf.withAuditNoFinal(
+        SparkEntry.queries("q137_dedup_incr_apply")(spark, sfDir))
       sb.append("\n## q137_dedup_incr_apply (WARM — memoized pair table leaf)\n\n```\n")
       sb.append(explain(df))
       sb.append("```\n")

@@ -21,9 +21,6 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    // cf. PlanAudit: skip the dedup final-stage checkpoint so the
-    // verify-join shape is dumped instead of an opaque leaf scan
-    sys.props("graft.audit.nofinal") = "true"
     val cpus = Conf.cpus(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -33,12 +30,16 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
-      println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
+    // cf. PlanAudit: skip the dedup final-stage checkpoint so the
+    // verify-join shape is dumped instead of an opaque leaf scan
+    Conf.withAuditNoFinal {
+      names.foreach { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+        println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
+      }
     }
     spark.stop()
   }

@@ -37,23 +37,16 @@ object ScaleStress {
     * families' dead blocks stack up and exhaust the box's ~61 GB
     * scratch inside q102's loop, and at distinct ×128 the RESIDENT
     * blocks squeezed the execution pool under q136's probe builds
-    * ("Unable to acquire … got 0", r12). `keep` exempts the RDD
-    * ancestry of memoized tables (the q35 pair table / q102 labels
-    * later sections re-read — unpersisting a lineage-cut checkpoint
-    * would be unrecoverable, not a recompute).
+    * ("Unable to acquire … got 0", r12). The tables [[Memo]] holds
+    * (the q35 pair table / q102 labels later sections re-read) are
+    * exempt — unpersisting a lineage-cut checkpoint would be
+    * unrecoverable, not a recompute; a section that is done with
+    * them calls `Memo.release(dir)`.
     */
-  private def ancestorIds(r: org.apache.spark.rdd.RDD[_]): Set[Int] = {
-    val seen = scala.collection.mutable.Set[Int]()
-    def go(x: org.apache.spark.rdd.RDD[_]): Unit =
-      if (seen.add(x.id)) x.dependencies.foreach(d => go(d.rdd))
-    go(r); seen.toSet
-  }
-
-  private def releasingExcept(spark: SparkSession)(keep: => Set[Int])(
-      f: => Unit): Unit = {
+  private def releasingExcept(spark: SparkSession)(f: => Unit): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     f
-    val keepIds = keep
+    val held = Memo.rddIds
     // BLOCKING unpersist + a GC pass (r12): after a block-heavy section
     // (q36's level-3 run writes tens of GB of serialized blocks) the
     // async release lagged into the NEXT section's first scan — the
@@ -61,7 +54,7 @@ object ScaleStress {
     // boundary is the deterministic reclaim point; paying its
     // synchronous cost here is the harness's job.
     spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before(id) && !keepIds(id) }
+      .filter { case (id, _) => !before(id) && !held(id) }
       .values.foreach(_.unpersist(blocking = true))
     System.gc()
   }
@@ -360,7 +353,7 @@ object ScaleStress {
     }, "distinct37-disk-sampler")
     sampler.setDaemon(true)
     sampler.start()
-    try releasingExcept(spark)(Set.empty) {
+    try releasingExcept(spark) {
       val baseQ37 = SparkEntry.queries("q37_ngram_jaccard")(spark, srcDir)
         .localCheckpoint()
       val t0 = System.nanoTime()
@@ -399,24 +392,21 @@ object ScaleStress {
     // Sections that build corpus-sized pipeline intermediates release
     // them on exit (cf. the flood path's releasingExcept; at ×128 the
     // resident bucket/fetch checkpoints of three families squeezed the
-    // execution pool under q136's probe builds). q35 keeps exactly the
-    // two memoized pair tables (q112's n_near_pairs and q136's
+    // execution pool under q136's probe builds). q35 keeps the two
+    // memoized pair tables (Memo-held; q112's n_near_pairs and q136's
     // full-compare re-read them); the label-sized q102/q111/q112
-    // sections stay unwrapped (their blocks are near-dup-rate-sized,
-    // and DedupQueries.clusterLabels' memoized labels must survive into
-    // q111/q112).
+    // sections stay unwrapped (their blocks are near-dup-rate-sized).
     var baseQ35: DataFrame = null
     var xQ35: DataFrame = null
     var q35Total = 0L
-    releasingExcept(spark)(
-        ancestorIds(baseQ35.rdd) ++ ancestorIds(xQ35.rdd)) {
+    releasingExcept(spark) {
       baseQ35 = DedupQueries.nearDupPairs(spark, srcDir)
       val (x, sQ35) = timed { DedupQueries.nearDupPairs(spark, outDir) }
       xQ35 = x
       q35Total = pairInvariance("q35", baseQ35, xQ35, sQ35)
     }
 
-    releasingExcept(spark)(Set.empty) {
+    releasingExcept(spark) {
       val baseQ37 = SparkEntry.queries("q37_ngram_jaccard")(spark, srcDir)
         .localCheckpoint()
       val (xQ37, sQ37) = timed {
@@ -441,7 +431,7 @@ object ScaleStress {
     var nBase36 = 0L
     var row36: org.apache.spark.sql.Row = null
     var s36 = 0.0
-    releasingExcept(spark)(Set.empty) {
+    releasingExcept(spark) {
       nBase36 = DedupQueries.simHashPairsFor(spark, srcDir).count()
       val (r, s) = timed {
         // one aggregate pass, nothing output-sized (cf. cliqueCheck)
@@ -560,11 +550,10 @@ object ScaleStress {
     // systematic probe hole (a key-space or cap bug) is orders larger.
     // Wrapped release (cf. the q35/q37/q36 sections): the standing
     // index and the base-only rerun are the two biggest block sets of
-    // the whole mode, all consumed inside this section. NOTE this also
-    // releases the memoized index — fine here (this is the JVM's last
-    // q136 consumer), but a longer-lived harness must keep its
-    // ancestry like the q35 pair table.
-    releasingExcept(spark)(Set.empty) { locally {
+    // the whole mode, all consumed inside this section; the memoized
+    // index and pair tables go with Memo.release after it (this is the
+    // JVM's last consumer of the scaled dir).
+    releasingExcept(spark) { locally {
     val split136 = DedupQueries.incrementalSplit(spark, outDir)
     val (xIncr, sIncr) = timed {
       DedupQueries.incrementalPairs(spark, outDir).localCheckpoint() }
@@ -625,10 +614,7 @@ object ScaleStress {
       s"q137 ×$rep kept-set deviation $dev137 exceeds 0.5% — systematic " +
         "apply divergence, not pair-draw noise")
     } }
-    // the block above released the memoized index's checkpoint blocks —
-    // evict the cache entry so a later probe in this JVM rebuilds
-    // instead of touching unrecoverable released blocks (ADVICE r12)
-    DedupQueries.invalidateIncrementalIndex(outDir)
+    Memo.release(outDir)
 
     println(f"[stress] distinct ×$rep: corpus ×$rep, pair volume linear " +
       "(≈ R × base) — the constant-near-dup-rate regime holds")
@@ -970,18 +956,15 @@ object ScaleStress {
         f"(${100.0 * clique / wantPairs}%.2f%%)")
       assert(clique == wantPairs, s"$name lost ${wantPairs - clique} clique pairs")
     }
-    releasingExcept(spark)(Set.empty) { cliqueCheck("q36_dedup_simhash", want) }
-    // q35's check builds the memoized pair table q102 re-reads — keep
-    // exactly its ancestry, release the pipeline's other checkpoints
-    releasingExcept(spark)(ancestorIds(
-        graft.queries.DedupQueries.nearDupPairs(spark, outDir).rdd)) {
-      cliqueCheck("q35_dedup_minhash", want)
-    }
+    releasingExcept(spark) { cliqueCheck("q36_dedup_simhash", want) }
+    // q35's check builds the memoized pair table q102 re-reads (Memo
+    // keeps it); the pipeline's other checkpoints are released
+    releasingExcept(spark) { cliqueCheck("q35_dedup_minhash", want) }
     // q37: the 100%-duplicated corpus is its adversarial shape — every
     // candidate used to need a corpus-sized gram fetch (16.6 s in r5);
     // the exact-signature shortcut must keep recall at 1 while the
     // verify stage sees only the non-exact remainder.
-    releasingExcept(spark)(Set.empty) { cliqueCheck("q37_ngram_jaccard", want37) }
+    releasingExcept(spark) { cliqueCheck("q37_ngram_jaccard", want37) }
 
     // q102 at ×R: cluster structure over the replicated pair graph.
     // Every base doc's R replicas are an exact-copy clique, so every
@@ -989,11 +972,11 @@ object ScaleStress {
     // cluster sizes must be multiples of R (2R+ where base-level
     // near-dups merge components), and the labeling must cover every
     // doc that appears in a pair.
-    // released wholesale after the asserts: the label table's stress
-    // consumers all live inside this block (q111/q112 reuse is a gate
-    // concern, not a stress one), and the loop's per-round checkpoints
-    // are pure scratch
-    releasingExcept(spark)(Set.empty) { locally {
+    // released wholesale after the asserts, memoized pairs and labels
+    // included (Memo.release): their stress consumers all live inside
+    // this block (q111/q112 reuse is a gate concern, not a stress one),
+    // and the loop's per-round checkpoints are pure scratch
+    releasingExcept(spark) { locally {
       val (labels, secs) = timed {
         SparkEntry.queries("q102_dedup_cluster")(spark, outDir)
           .localCheckpoint()
@@ -1010,6 +993,7 @@ object ScaleStress {
       assert(badSizes == 0, s"$badSizes cluster sizes not a multiple of $rep")
       assert(nLabeled > 0)
     } }
+    Memo.release(outDir)
 
     // q133 at ×R: l_partkey is a dim key (NOT offset by replication),
     // so the ×R co-purchase edge set must DEDUP to exactly the base

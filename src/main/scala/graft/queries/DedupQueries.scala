@@ -571,14 +571,14 @@ object DedupQueries {
   /** Final-stage materialization of a pipeline's verified pairs: an
     * output-sized timed `localCheckpoint` (the bench attributes it;
     * downstream consumers get a leaf scan). Under
-    * `-Dgraft.audit.nofinal=true` (set only by [[graft.PlanAudit]])
+    * [[Conf.auditNoFinal]] (set by the plan dumps)
     * the checkpoint is SKIPPED so the audit documents the verify-join
     * plan itself — otherwise every checkpoint-final pipeline audits
     * as an opaque `Scan ExistingRDD` and the broadcast-verify shape
     * disappears from docs/PLANS.md.
     */
   private def finalStage(tag: String)(df: => DataFrame): DataFrame =
-    if (sys.props.get("graft.audit.nofinal").contains("true")) df
+    if (Conf.auditNoFinal) df
     else graft.RoundStats.timed(tag) { bigCheckpoint(df) }
 
   /** Exact Jaccard over the HASHED feature encoding: both sides are
@@ -667,47 +667,39 @@ object DedupQueries {
   /** q35's verified pair set without the presentation sort — also the
     * edge list consumed by q102's cluster assignment ([[clusterLabels]]).
     *
-    * Memoized per scale-dir (same pattern as IvfAnn's persisted index
-    * build): the pair set is the materialized intermediate TABLE a
-    * production dedup pipeline writes once and reads from both the
-    * pair report and the cluster-assignment job. The checkpointed
-    * result is a leaf RDD on the shared SparkContext, so later
-    * consumers in the same JVM (q35 after q102, or vice versa) reuse
-    * it regardless of which child session computed it.
+    * A [[graft.Memo]] stage: the pair set is the materialized
+    * intermediate TABLE a production dedup pipeline writes once and
+    * reads from both the pair report and the cluster-assignment job.
+    * The checkpointed result is a leaf RDD on the shared SparkContext,
+    * so later consumers in the same JVM (q35 after q102, or vice versa)
+    * reuse it regardless of which child session computed it.
     */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Row count of the memoized pair table, observed ON the
-    * minhash_final checkpoint's own materialization job — consumers
-    * sizing themselves to pair volume (q102's label-loop width) read
-    * it here instead of re-counting (one fewer fixed-cost action per
-    * invocation, VERDICT r10 #4).
-    */
-  private val pairCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   private[graft] def nearDupPairs(s0: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate(dir, {
-      if (sys.props.get("graft.audit.nofinal").contains("true"))
-        nearDupPairsUncached(s0, dir) // cf. finalStage: audit skips it
+    pairTable(s0, dir)._1
+
+  /** [[nearDupPairs]]'s row count, observed ON the minhash_final
+    * checkpoint's own materialization job and kept in the stage —
+    * consumers sizing themselves to pair volume (q102's label-loop
+    * width) read it here instead of re-counting (one fewer fixed-cost
+    * action per invocation, VERDICT r10 #4). A leaf count only when
+    * the final checkpoint was skipped (PlanAudit).
+    */
+  private[graft] def nearDupPairCount(s0: SparkSession, dir: String): Long = {
+    val (pairs, n) = pairTable(s0, dir)
+    n.getOrElse(pairs.count())
+  }
+
+  private def pairTable(s0: SparkSession, dir: String): (DataFrame, Option[Long]) =
+    graft.Memo(s0, "near_dup_pairs", dir, "documents") {
+      if (Conf.auditNoFinal) // cf. finalStage: audit skips it
+        (nearDupPairsUncached(s0, dir), None)
       else graft.RoundStats.timed("minhash_final") {
         val obs = Observation()
         val out = bigCheckpoint(nearDupPairsUncached(s0, dir)
           .observe(obs, count(lit(1)).as("n_pairs")))
-        pairCountCache.put(dir, obs.get("n_pairs").asInstanceOf[Long])
-        out
+        (out, Some(obs.get("n_pairs").asInstanceOf[Long]))
       }
-    })
-
-  /** [[nearDupPairs]]'s row count without a second action (falls back
-    * to a leaf count only when the final checkpoint was skipped —
-    * PlanAudit — or a pre-count cached entry is ever seen).
-    */
-  private[graft] def nearDupPairCount(s0: SparkSession, dir: String): Long = {
-    val pairs = nearDupPairs(s0, dir)
-    pairCountCache.getOrElseUpdate(dir, pairs.count())
-  }
+    }(p => Seq(p._1))
 
   private def nearDupPairsUncached(s0: SparkSession, dir: String): DataFrame = {
     val s = dedupSession(s0)
@@ -977,53 +969,16 @@ object DedupQueries {
   private[graft] final case class IncrIndex(split: Long,
       buckets: DataFrame, reblock: DataFrame, exactKeys: DataFrame)
 
-  /** Standing-index cache, keyed by dir and GUARDED by a corpus
-    * fingerprint (row count, max doc_id): if the dir's data is
-    * regenerated in-JVM the fingerprint misses and the index rebuilds
-    * instead of returning frames over stale checkpoints (ADVICE r12).
-    * The fingerprint is one two-column agg over the documents scan
-    * per access — noise next to any probe. What no fingerprint can
-    * detect is the index's checkpoint BLOCKS being released
-    * (ScaleStress's releasingExcept): a harness that releases blocks
-    * must call [[invalidateIncrementalIndex]], as ScaleStress's
-    * distinct mode does.
-    */
-  private val incrIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, ((Long, Long), IncrIndex)]
-
-  /** Evict `dir`'s memoized standing index AND its memoized pair
-    * table (see [[incrIndexCache]], [[incrPairsCache]] — a harness
-    * that releases checkpoint blocks must drop both, or a later
-    * query reads freed blocks).
-    */
-  private[graft] def invalidateIncrementalIndex(dir: String): Unit = {
-    incrIndexCache.remove(dir)
-    incrPairsCache.remove(dir)
-  }
-
-  private[graft] def corpusFingerprint(s: SparkSession, dir: String): (Long, Long) = {
-    val r = Tables.documents(s, dir)
-      .agg(count(lit(1)), max(col("doc_id"))).head
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** The memoized standing index for `dir` at the data-derived split
     * (max doc_id · 4/5 — the q136 shard convention): cold build, warm
-    * probes, fingerprint-guarded (see [[incrIndexCache]]).
+    * probes, a [[graft.Memo]] stage over `documents`.
     */
-  private[graft] def incrementalIndex(s0: SparkSession, dir: String): IncrIndex = {
-    val s = dedupSession(s0)
-    val fp = corpusFingerprint(s, dir)
-    incrIndexCache.get(dir) match {
-      case Some((`fp`, idx)) =>
-        graft.RoundStats.record("incr_index_memo_hit", 0, 0)
-        idx
-      case _ =>
-        val idx = indexFor(s0, dir, fp._2 * 4L / 5L)
-        incrIndexCache.put(dir, (fp, idx))
-        idx
-    }
-  }
+  private[graft] def incrementalIndex(s0: SparkSession, dir: String): IncrIndex =
+    graft.Memo(s0, "incr_index", dir, "documents") {
+      val maxId = Tables.documents(dedupSession(s0), dir)
+        .agg(max(col("doc_id"))).head.getLong(0)
+      indexFor(s0, dir, maxId * 4L / 5L)
+    }(idx => Seq(idx.buckets, idx.reblock, idx.exactKeys))
 
   /** Build the standing index over docs with doc_id < `split`
     * (uncached — [[incrementalIndex]] memoizes the per-dir instance;
@@ -1131,8 +1086,8 @@ object DedupQueries {
     * [[indexFor]](newSplit) up to member order — every consumer (cap
     * filters, probes, explodes) is order-insensitive — which
     * IncrementalDedupSpec asserts end-to-end by comparing probe
-    * outputs. NOTE: does not touch [[incrIndexCache]] (the memoized
-    * entry stays at the dir convention's split); day-by-day harnesses
+    * outputs. NOTE: does not touch the [[incrementalIndex]] stage
+    * (it stays at the dir convention's split); day-by-day harnesses
     * own their index instances.
     */
   private[graft] def indexUpdatedWith(idx: IncrIndex, dir: String,
@@ -1165,38 +1120,18 @@ object DedupQueries {
     IncrIndex(newSplit, merged, reblockOf(merged, indexParts), mergedExact)
   }
 
-  /** Memoized [[incrementalPairs]] result per dir — the r13 bench
-    * showed q137 cold-recomputing the ENTIRE pair pipeline q136 just
-    * materialized (incr_probe_keys/incr_cands/minhash_* in both
-    * queries' stage lists): the pair table is the natural shared
-    * artifact of the daily job (the same cold/warm contract as
-    * [[pairCache]] for q35 and [[incrIndexCache]] for the index — a
-    * deployment writes it out once per increment and both the report
-    * and the apply read it). Fingerprint-guarded like the index;
-    * [[invalidateIncrementalIndex]] evicts it.
-    */
-  private val incrPairsCache =
-    scala.collection.concurrent.TrieMap.empty[String, ((Long, Long), DataFrame)]
-
   /** q136's pair pipeline: every near-dup pair (J ≥ 0.5, 2-shingles)
     * touching the increment (doc_id ≥ split), without recomputing any
     * base-vs-base pair. See the q136 scaladoc above for the design.
-    * Memoized per dir (fingerprint-guarded) so q137's apply step
-    * reuses the table q136 built instead of re-running the pipeline.
+    * A [[graft.Memo]] stage: the r13 bench showed q137 cold-recomputing
+    * the ENTIRE pair pipeline q136 just materialized — the pair table
+    * is the natural shared artifact of the daily job (a deployment
+    * writes it out once per increment and both the report and the
+    * apply read it).
     */
-  private[graft] def incrementalPairs(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
-    val fp = corpusFingerprint(s, dir)
-    incrPairsCache.get(dir) match {
-      case Some((`fp`, df)) =>
-        graft.RoundStats.record("incr_pairs_memo_hit", 0, 0)
-        df
-      case _ =>
-        val df = incrementalPairsWith(incrementalIndex(s0, dir), dir)
-        incrPairsCache.put(dir, (fp, df))
-        df
-    }
-  }
+  private[graft] def incrementalPairs(s0: SparkSession, dir: String): DataFrame =
+    graft.Memo(s0, "incr_pairs", dir, "documents")(
+      incrementalPairsWith(incrementalIndex(s0, dir), dir))(Seq(_))
 
   /** [[incrementalPairs]] against an EXPLICIT index instance and an
     * optional shard upper bound — the day-by-day surface: the shard
@@ -2376,16 +2311,13 @@ object DedupQueries {
     * closure over the same brute-force pair set q35's oracle uses.
     */
   /** Converged (doc_id → min-reachable-label) table for the near-dup
-    * pair graph. Memoized per scale dir like the pair set itself: the
+    * pair graph. A [[graft.Memo]] stage like the pair set itself: the
     * label table is the second materialized intermediate of a dedup
     * pipeline (pairs → labels → apply), consumed by q102 (report),
     * q111 (apply) and q112 (summary).
     */
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[queries] def clusterLabels(s0: SparkSession, dir: String): DataFrame =
-    labelCache.getOrElseUpdate(dir, {
+    graft.Memo(s0, "cluster_labels", dir, "documents") {
       // the pair pipeline and the label loop are attributed separately
       // in the bench's stage dump (the r7 residue question was "which
       // half of q102 is the fixed cost")
@@ -2440,7 +2372,7 @@ object DedupQueries {
       // it degrades to the O(log n) algorithm instead — see
       // ConnectedComponents).
       ConnectedComponents.labelsFor(pairs)
-    })
+    }(Seq(_))
 
   private def q102(s0: SparkSession, dir: String): DataFrame =
     clusterLabels(s0, dir)

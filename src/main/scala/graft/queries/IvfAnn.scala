@@ -37,13 +37,12 @@ object IvfAnn {
     */
   val SampleCap: Int = Cells * 256
 
-  /** Memoized per corpus dir: (assigned vectors persisted, centroids). */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Array[Array[Double]])]()
-
-  /** Build (or fetch) the IVF index for a corpus dir. */
+  /** Build (or fetch) the IVF index for a corpus dir: (assigned
+    * vectors persisted, centroids), a [[graft.Memo]] stage over
+    * `embeddings`.
+    */
   def index(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
-    indexCache.computeIfAbsent(dir, { _ =>
+    graft.Memo(s, "ivf_index", dir, "embeddings") {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       // Each one-time index phase is a RoundStats stage (cf. the dedup
       // family): q51's in-suite wall is ~all cold index build, and the
@@ -86,7 +85,7 @@ object IvfAnn {
         a
       }
       (assigned, centers.map(_.map(_.toDouble)))
-    })
+    }(ix => Seq(ix._1))
 
   /** The bounded fit-sample plan (factored out so AnnSpec can pin its
     * shape): hash-ordered top-SampleCap over (vec_id, embedding).

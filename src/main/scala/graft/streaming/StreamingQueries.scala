@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.{Conf, Tables}
 import graft.queries.Query
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -1060,66 +1060,19 @@ object StreamingQueries {
     */
   /** Memoized corpus feature table for the stream-static verify side
     * of q138/q139 — one eager `localCheckpoint(MEMORY_AND_DISK_SER)`
-    * per (dir, corpus-fingerprint), shared by every caller in the JVM
-    * (the daily-job contract: q138 emits pairs and q139 applies them
-    * over the SAME written feature table; cf. DedupQueries'
-    * incrPairsCache). A fingerprint change rebuilds and unpersists
-    * the stale entry. [[invalidateStreamFeats]] is the harness hook
-    * for anything that releases blocks out-of-band.
+    * per dir, a [[graft.Memo]] stage over `documents` shared by every
+    * caller in the JVM (the daily-job contract: q138 emits pairs and
+    * q139 applies them over the SAME written feature table).
     */
-  private val streamFeatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, ((Long, Long), DataFrame)]
-
-  private def unpersistFeats(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  private[graft] def invalidateStreamFeats(dir: String): Unit =
-    streamFeatsCache.remove(dir).foreach { case (_, df) =>
-      unpersistFeats(df)
-    }
-
-  private def streamFeats(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.queries.DedupQueries.corpusFingerprint(s, dir)
-    streamFeatsCache.get(dir) match {
-      case Some((`fp`, df)) =>
-        graft.RoundStats.record("stream_feats_memo_hit", 0, 0)
-        df
-      case stale =>
-        val df = graft.RoundStats.timed("stream_feats_ckpt") {
-          graft.queries.DedupQueries.hashedFeaturesOf(
-            Tables.documents(s, dir).select(col("doc_id"), col("text")))
-            .localCheckpoint(true,
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        }
-        installStreamFeats(dir, fp, df, stale)
-    }
-  }
-
-  /** CAS-install a freshly built feature table, freeing the stale
-    * entry's blocks eagerly — but only the EXACT entry observed at
-    * lookup: a concurrent caller may have installed (and be reading)
-    * a fresh entry since, and its lineage-free localCheckpoint cannot
-    * survive an unpersist (ADVICE r15 — the same corruption class the
-    * sliced-verify thread-local collector closed). On losing the
-    * install race to an equivalent (same-fingerprint) entry, OUR
-    * table — unseen by anyone — is freed and the winner's returned.
-    */
-  private[graft] def installStreamFeats(dir: String, fp: (Long, Long),
-      df: DataFrame, stale: Option[((Long, Long), DataFrame)]): DataFrame = {
-    stale.foreach { old =>
-      if (streamFeatsCache.remove(dir, old)) unpersistFeats(old._2)
-    }
-    streamFeatsCache.putIfAbsent(dir, (fp, df)) match {
-      case Some((`fp`, winner)) =>
-        unpersistFeats(df)
-        winner
-      case _ => df
-    }
-  }
+  private def streamFeats(s: SparkSession, dir: String): DataFrame =
+    graft.Memo(s, "stream_feats", dir, "documents") {
+      graft.RoundStats.timed("stream_feats_ckpt") {
+        graft.queries.DedupQueries.hashedFeaturesOf(
+          Tables.documents(s, dir).select(col("doc_id"), col("text")))
+          .localCheckpoint(true,
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      }
+    }(Seq(_))
 
   private[graft] def streamNearDupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1205,10 +1158,9 @@ object StreamingQueries {
     // deserialized-unroll OOM class is documented on
     // DedupQueries.bigCheckpoint — this is the written feature table
     // a deployment would keep next to the standing index).
-    // Memoized PER DIR, fingerprint-guarded (ADVICE r14: q138 and
-    // q139 each built their own corpus-sized checkpoint and never
-    // unpersisted it, so repeated calls in one JVM accumulated
-    // corpus-sized block sets — same contract as incrPairsCache).
+    // Memoized PER DIR (ADVICE r14: q138 and q139 each built their
+    // own corpus-sized checkpoint and never unpersisted it, so repeated
+    // calls in one JVM accumulated corpus-sized block sets).
     val feats = streamFeats(s, dir)
     candidates.toDF()
       .join(feats.select(col("doc_id").as("a"), col("hsh").as("f_a")), "a")

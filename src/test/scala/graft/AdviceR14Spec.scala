@@ -100,7 +100,7 @@ class AdviceR14Spec extends AnyFunSuite {
     assert(warm.contains("stream_feats_memo_hit") &&
       !warm.contains("stream_feats_ckpt"),
       s"repeat streamNearDupPairs rebuilt the corpus checkpoint: $warm")
-    StreamingQueries.invalidateStreamFeats(sf)
+    Memo.release(sf)
   }
 
   test("eventsRowCount: footer-exact, cached, and runs NO Spark job") {

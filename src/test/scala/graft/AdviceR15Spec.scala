@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. tableRowCount recurses into nested/partitioned parquet layouts
   *     and treats an empty file list under a real directory as a
   *     LOGGED probe failure (uncached), never a silent cached 0;
-  *  3. streamFeats' rebuild path frees only the exact stale entry it
-  *     observed — a fresh entry installed by a concurrent caller
+  *  3. a Memo stage's rebuild path (streamFeats') frees only the
+  *     exact stale entry it observed — a fresh entry installed by a concurrent caller
   *     survives (its lineage-free localCheckpoint could not recover
   *     from an unpersist).
   * (The 4th item — draining the async listener bus before snapshot
@@ -32,10 +32,8 @@ class AdviceR15Spec extends AnyFunSuite {
       p.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     // the audit main loop's shape: q136 constructed under nofinal —
     // this memoizes the UN-checkpointed pair plan (fingerprint valid)
-    DedupQueries.invalidateIncrementalIndex(sf)
-    sys.props("graft.audit.nofinal") = "true"
-    try SparkEntry.queries("q136_dedup_incremental")(spark, sf)
-    finally sys.props.remove("graft.audit.nofinal")
+    Memo.release(sf)
+    Conf.withAuditNoFinal(SparkEntry.queries("q136_dedup_incremental")(spark, sf))
     // the r15 bug: a "clean" run WITHOUT eviction memo-hits the
     // poisoned entry — the pair table is NOT a checkpoint leaf
     SparkEntry.queries("q136_dedup_incremental")(spark, sf).count()
@@ -45,12 +43,12 @@ class AdviceR15Spec extends AnyFunSuite {
     // the fix (PlanAudit's warm block): evict, THEN run clean — the
     // rebuilt memo is the materialized checkpoint leaf the audit's
     // WARM section documents
-    DedupQueries.invalidateIncrementalIndex(sf)
+    Memo.release(sf)
     SparkEntry.queries("q136_dedup_incremental")(spark, sf).count()
     assert(isCkpt(pairLeaf()),
       "clean q136 did not memoize a checkpointed pair table — the " +
         "warm q137 audit would show a recomputed pipeline again")
-    DedupQueries.invalidateIncrementalIndex(sf)
+    Memo.release(sf)
   }
 
   test("tableRowCount recurses into nested parquet layouts and does not " +
@@ -83,7 +81,7 @@ class AdviceR15Spec extends AnyFunSuite {
 
   test("streamFeats CAS install: a concurrently installed fresh entry " +
       "survives; the loser's table is the one freed") {
-    import graft.streaming.StreamingQueries
+    val dir = s"graft_feats_race_${System.nanoTime()}"
     def ckpt(n: Long): org.apache.spark.sql.DataFrame =
       spark.range(n).toDF("v").localCheckpoint(true)
     def rddOf(df: org.apache.spark.sql.DataFrame) =
@@ -91,29 +89,34 @@ class AdviceR15Spec extends AnyFunSuite {
         .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
     def persisted(df: org.apache.spark.sql.DataFrame) =
       rddOf(df).getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val dir = s"graft_feats_race_${System.nanoTime()}"
-    val fpOld = (1L, 1L); val fpNew = (2L, 2L)
+    def entry(fp: Memo.Fingerprint, df: org.apache.spark.sql.DataFrame) =
+      new Memo.Entry(fp, df, Seq(df))
+    def install(e: Memo.Entry, observed: Option[Memo.Entry]) =
+      Memo.install("stream_feats", dir, e, observed)
+    val fpOld = Seq(("old", 1L, 1L)); val fpNew = Seq(("new", 2L, 2L))
     val stale = ckpt(3)
-    StreamingQueries.installStreamFeats(dir, fpOld, stale, None)
+    val staleEntry = entry(fpOld, stale)
+    install(staleEntry, None)
     // thread A observes `stale`, then — before A installs — a
     // concurrent caller B invalidates and installs a FRESH entry
-    val observed = Some((fpOld, stale))
-    StreamingQueries.invalidateStreamFeats(dir) // B: frees stale
+    val observed = Some(staleEntry)
+    Memo.release(dir) // B: frees stale
     assert(!persisted(stale))
     val fresh = ckpt(5)
-    StreamingQueries.installStreamFeats(dir, fpNew, fresh, None) // B installs
+    install(entry(fpNew, fresh), None) // B installs
     // A's rebuild completes and installs against its stale OBSERVATION:
     // with the old code this unpersisted whatever was cached — B's
     // fresh, lineage-free table, an unrecoverable corruption
     val mine = ckpt(5)
-    val won = StreamingQueries.installStreamFeats(dir, fpNew, mine, observed)
+    val won = install(entry(fpNew, mine), observed)
+      .value.asInstanceOf[org.apache.spark.sql.DataFrame]
     assert(persisted(fresh), "the concurrent caller's fresh entry was " +
       "unpersisted by a loser's stale observation (ADVICE r15)")
     assert(!persisted(mine), "the racing loser's table must be freed " +
       "(nobody has seen it)")
     assert(rddOf(won).id === rddOf(fresh).id,
       "the loser must adopt the winner's table")
-    StreamingQueries.invalidateStreamFeats(dir)
+    Memo.release(dir)
     assert(!persisted(fresh))
   }
 

@@ -136,6 +136,7 @@ class ConfSurfaceSpec extends AnyFunSuite {
     val reads = Seq(
       "sys\\.env" -> "an environment read",
       "getenv" -> "an environment read",
+      "sys\\.props" -> "a system property read",
       "\"spark\\.graft\\." -> "a graft conf literal",
       "\"SPARK_GRAFT_" -> "a graft env literal",
       "conf\\s*\\.\\s*get\\w*\\(\\s*Conf\\." -> "a graft conf read")

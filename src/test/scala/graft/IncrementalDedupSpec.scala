@@ -121,15 +121,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   /** ADVICE r12: the memoized index is fingerprint-guarded and
     * harness-evictable — same corpus reuses the instance, an explicit
-    * invalidate (the releasingExcept hook) forces a rebuild whose
-    * probes still agree.
+    * `Memo.release` forces a rebuild whose probes still agree.
     */
   test("standing-index cache: fingerprint hit reuses, invalidate evicts") {
     val a = DedupQueries.incrementalIndex(spark, sf)
     val b = DedupQueries.incrementalIndex(spark, sf)
     assert(a eq b, "same fingerprint must reuse the cached instance")
     val before = pairRows(DedupQueries.incrementalPairs(spark, sf))
-    DedupQueries.invalidateIncrementalIndex(sf)
+    Memo.release(sf)
     val c = DedupQueries.incrementalIndex(spark, sf)
     assert(!(c eq a), "invalidate must evict the cached instance")
     assert(pairRows(DedupQueries.incrementalPairs(spark, sf)) === before)
@@ -145,7 +144,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     * ones; the q137 entry's stage list shows only apply-side tags.
     */
   test("incremental pairs memo: warm q136/q137 run zero pipeline stages") {
-    DedupQueries.invalidateIncrementalIndex(sf)
+    Memo.release(sf)
     RoundStats.drain()
     val cold = DedupQueries.incrementalPairs(spark, sf)
     val coldTags = RoundStats.drain().map(_.tag).toSet
