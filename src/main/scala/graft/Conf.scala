@@ -84,14 +84,6 @@ object Conf {
   private def parseMaxFiles(v: String): Int =
     positive(MaxFilesPerTriggerKey, v, Int.MaxValue).toInt
 
-  /** Marks a `DedupQueries.dedupSession` child. Internal: set only by
-    * `dedupSession`, never by a user, so [[SparkGraftConf]] rejects it.
-    */
-  val DedupChildKey = "spark.graft.dedup.isChildSession"
-
-  def isDedupChild(s: SparkSession): Boolean =
-    s.conf.getOption(DedupChildKey).contains("true")
-
   /** Every user-settable conf, with its validator. */
   private val settable: Map[String, String => Any] =
     Seq(CandBroadcastMaxRows, FetchIdsPerPartition,
@@ -100,8 +92,8 @@ object Conf {
         PairStorageLevelKey -> (parseStorageLevel _),
         MaxFilesPerTriggerKey -> (parseMaxFiles _))
 
-  /** Every declared `spark.graft.*` key, the internal marker included. */
-  val keys: Set[String] = settable.keySet + DedupChildKey
+  /** Every declared `spark.graft.*` key. */
+  val keys: Set[String] = settable.keySet
 
   // ------------------------------------------------- system property
 

@@ -25,13 +25,18 @@ import org.apache.spark.sql.SparkSession
   * thread, a streaming micro-batch) would silently plan with
   * codegen/AQE off, and nested scopes on different threads restore
   * stale values. Every caller in this repo runs its loop on the one
-  * driver thread of a dedicated/child session; if concurrent use is
-  * ever needed, isolate via `SparkSession.cloneSession()` (confs are
+  * driver thread, on the CALLER's session (q102's, q133's and q137's
+  * loops alike): a query planned on that session from another thread
+  * while a loop runs sees the override. If concurrent use is ever
+  * needed, isolate via `SparkSession.cloneSession()` (confs are
   * per-session) instead of widening this scope.
   */
 object ScopedConf {
   def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    // getAll holds only the explicitly set confs (getOption would
+    // return a default, and restoring it would pin it on the session)
+    val set = s.conf.getAll
+    val prev = kv.map { case (k, _) => k -> set.get(k) }
     kv.foreach { case (k, v) => s.conf.set(k, v) }
     try body
     finally prev.foreach {
@@ -73,9 +78,11 @@ object ScopedConf {
   /** Size-aware loop scope: tiny profile under [[TinyLoopRows]]
     * per-round rows (with the loop's shuffle width derived from that
     * same measured volume — see [[LoopRowsPerPartition]]), session
-    * defaults (codegen + AQE) above.
+    * defaults (codegen + AQE) above, with the shuffle width scoped to
+    * the caller's `width` when it passes one.
     */
-  def forLoopOf[T](s: SparkSession, rowsPerRound: Long)(body: => T): T =
+  def forLoopOf[T](s: SparkSession, rowsPerRound: Long,
+      width: Option[Int] = None)(body: => T): T =
     if (rowsPerRound <= TinyLoopRows) {
       val w = math.max(1L,
         math.min(rowsPerRound / LoopRowsPerPartition + 1, 4096L))
@@ -83,5 +90,6 @@ object ScopedConf {
         "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> w.toString)(body)
-    } else body
+    } else width.fold(body)(w =>
+      withConf(s, "spark.sql.shuffle.partitions" -> w.toString)(body))
 }

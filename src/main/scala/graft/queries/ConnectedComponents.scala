@@ -44,6 +44,11 @@ import org.apache.spark.sql.functions._
   *    below ~100M edge rows per round whole-stage codegen and AQE are
   *    scoped off (tiny per-round plans spend more compiling than
   *    running); a web-scale graph keeps both.
+  *
+  * Every entry takes the caller's loop width (`loopParts`: the width
+  * of its shuffles outside the tiny profile; None keeps the session's)
+  * and the checkpoint of its edge-sized tables (`checkpoint`; q102 and
+  * q137 pass their pair pipeline's storage level).
   */
 object ConnectedComponents {
 
@@ -56,7 +61,9 @@ object ConnectedComponents {
     * change" is a sum over the SAME job via `observe`, not a second
     * action re-joining the old labels.
     */
-  def minLabel(pairs: DataFrame, maxRounds: Int = 25)
+  def minLabel(pairs: DataFrame, maxRounds: Int = 25,
+      loopParts: Option[Int] = None,
+      checkpoint: DataFrame => DataFrame = DedupQueries.bigCheckpoint(_))
       : (DataFrame, Boolean, Int) = {
     // EDGE-sized (2× the pair set — the loop's biggest table, re-read
     // every round): pair-level storage policy, not the deserialized
@@ -64,7 +71,7 @@ object ConnectedComponents {
     // object arrays (the ×512 OOM; see DedupQueries.bigCheckpoint).
     // The node-sized label checkpoints below keep the default level.
     val obsNbr = Observation()
-    val nbr = DedupQueries.bigCheckpoint(pairs.select(col("a"), col("b"))
+    val nbr = checkpoint(pairs.select(col("a"), col("b"))
       .union(pairs.select(col("b"), col("a"))).toDF("id", "nb")
       .observe(obsNbr, count(lit(1)).as("n")))
     // per-round volume = the symmetric edge list each round re-joins;
@@ -73,7 +80,7 @@ object ConnectedComponents {
     // nbr checkpoint's own job (cf. checkpointed in largeSmallStar) —
     // not a separate action.
     ScopedConf.forLoopOf(pairs.sparkSession,
-        obsNbr.get("n").asInstanceOf[Long]) {
+        obsNbr.get("n").asInstanceOf[Long], loopParts) {
       var labels = nbr.select(col("id")).distinct()
         .select(col("id"), col("id").as("lbl")).localCheckpoint()
       val lblType = labels.schema("lbl").dataType
@@ -146,7 +153,10 @@ object ConnectedComponents {
     * are plain groupBy keys (no per-node adjacency lists are ever
     * collected).
     */
-  def largeSmallStar(pairs: DataFrame, maxRounds: Int = 100): DataFrame = {
+  def largeSmallStar(pairs: DataFrame, maxRounds: Int = 100,
+      loopParts: Option[Int] = None,
+      checkpoint: DataFrame => DataFrame = DedupQueries.bigCheckpoint(_))
+      : DataFrame = {
     // Fixpoint signature, computed as observe metrics ON the round's
     // checkpoint job (no separate collect). XOR-fold, not SUM: ANSI
     // mode makes a long SUM of 2^63-range hashes throw on overflow;
@@ -156,7 +166,7 @@ object ConnectedComponents {
       val obs = Observation()
       // edge-sized per round: pair-level storage policy (cf. minLabel's
       // nbr — the metrics still ride the same eager checkpoint job)
-      val out = DedupQueries.bigCheckpoint(
+      val out = checkpoint(
         e.observe(obs, count(lit(1)).as("cnt"),
           coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("sig")))
       (out, (obs.get("cnt").asInstanceOf[Long],
@@ -164,16 +174,18 @@ object ConnectedComponents {
     }
 
     // canonical undirected edges, self-loops dropped
-    val (edges0, sig0) = checkpointed(pairs
+    val canonical = pairs
       .select(least(col("a"), col("b")).as("s"),
         greatest(col("a"), col("b")).as("l"))
       .filter(col("s") =!= col("l"))
       .select(col("s").as("a"), col("l").as("b"))
+    val (edges0, sig0) = checkpointed(loopParts
+      .fold(canonical)(n => canonical.repartition(n, col("a"), col("b")))
       .distinct())
 
     // per-round volume ≈ the (shrinking) edge set; gate the loop
     // profile on the initial size
-    ScopedConf.forLoopOf(pairs.sparkSession, sig0._1) {
+    ScopedConf.forLoopOf(pairs.sparkSession, sig0._1, loopParts) {
       var edges = edges0
       var sig = sig0
 
@@ -239,14 +251,18 @@ object ConnectedComponents {
     * round cap is hit — long chains cost O(log n) extra rounds
     * instead of silently wrong labels.
     */
-  def labelsFor(pairs: DataFrame, minLabelRounds: Int = 25): DataFrame = {
-    val (labels, converged, rounds) = minLabel(pairs, minLabelRounds)
+  def labelsFor(pairs: DataFrame, minLabelRounds: Int = 25,
+      loopParts: Option[Int] = None,
+      checkpoint: DataFrame => DataFrame = DedupQueries.bigCheckpoint(_))
+      : DataFrame = {
+    val (labels, converged, rounds) =
+      minLabel(pairs, minLabelRounds, loopParts, checkpoint)
     if (converged) labels
     else {
       System.err.println(
         s"[graft-cc] min-label hit the $rounds-round cap (graph diameter " +
           "exceeds it); escalating to large-star/small-star")
-      largeSmallStar(pairs)
+      largeSmallStar(pairs, loopParts = loopParts, checkpoint = checkpoint)
     }
   }
 }

@@ -5,6 +5,7 @@ import graft.functions.{CosineSim, Hashing, TextFunctions => T}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication family: exact, MinHash, SimHash, n-gram and embedding
   * near-dup pairs (q34–q38), the pipeline steps after them — cluster
@@ -43,8 +44,7 @@ object DedupQueries {
     * (found at ×128: q36's output-sized contract probe OOM'd the 8 g
     * heap at ~78 M pairs), while the flipped strategy distributes the
     * build with the exchange still candidate-sized. Tunable per
-    * session (tests pin both shapes); [[dedupSession]] propagates it
-    * to the child.
+    * session (tests pin both shapes).
     */
 
   /* `Conf.FetchIdsPerPartition`: candidate ids per build partition on
@@ -70,9 +70,9 @@ object DedupQueries {
   /* `Conf.BucketScanBytesPerPartition`: scan bytes per partition for
     * the BUCKET-AGGREGATION exchanges —
     * the blocking groupBys that collect (band/chunk/key → member
-    * structs). With AQE off (see [[dedupSession]]) those exchanges
-    * otherwise run at the session's static shuffle partitions, and at
-    * distinct ×512 that WAS q35's wall (r11 stage maps: 43 M member
+    * structs). AQE only merges partitions, so those exchanges
+    * otherwise run at most at the session's static shuffle partitions,
+    * and at distinct ×512 that WAS q35's wall (r11 stage maps: 43 M member
     * structs over 32 partitions — 207 s of spill-bound collect_list,
     * the exact analog of the verify-width fix one stage earlier).
     * Sizing basis: the corpus SCAN's plan-time size estimate (free —
@@ -152,29 +152,6 @@ object DedupQueries {
     math.max(math.max(1, floor), est)
   }
 
-  /** Scope a dedup CHILD session's shuffle width to the pipeline's
-    * corpus (r16, optimization round; guide §2.2). The dedup family
-    * runs AQE-OFF (see [[dedupSession]]) so nothing coalesces its
-    * session-width exchanges — candidate-id distincts, cross-table
-    * pair dedups' residual unions, final orderBys — and they
-    * otherwise stay at the driver's static width: a constant tuned to
-    * the core count, near-empty at gate scale and potentially too
-    * NARROW at corpus scale. The width is the same measured
-    * bytes/partition derivation as [[bucketAggParts]] (this IS the
-    * AQE-equivalent for the opted-out family). Only a tagged child
-    * session is ever resized: pipeline internals invoked directly on
-    * a shared/suite session (DedupSpec, the bench warmup) keep the
-    * caller's width. Returns the derived width (= the bucket-agg
-    * width, so callers use it for their keyed exchanges too).
-    */
-  private def corpusSizedSession(scan: DataFrame): Int = {
-    val w = bucketAggParts(scan)
-    val s = scan.sparkSession
-    if (Conf.isDedupChild(s))
-      s.conf.set("spark.sql.shuffle.partitions", w.toString)
-    w
-  }
-
   /** q36 level-3 re-block budget, in KEYED ROWS (members × 8
     * interleaved keys). Through r12 level 3 ran as a global
     * explode→shuffle→sort pipeline and this guard bounded its ~24 B/
@@ -243,22 +220,37 @@ object DedupQueries {
     * auto-escalation must never override an explicit choice).
     */
 
-  /** Escalate the (pipeline-scoped) session's pair storage to
-    * DISK_ONLY when the measured expansion volume crosses
-    * `Conf.PairDiskOnlyMinRows`. Called once per pipeline, right after
-    * the bucket checkpoint whose observe metric supplies `estPairRows`;
-    * every pair-sized [[bigCheckpoint]] downstream of that point picks
-    * the escalated level up through `Conf.pairStorageLevel`.
+  /** One pipeline's storage level for its pair-sized checkpoints: the
+    * session's `Conf.pairStorageLevel` until [[escalateIf]] sees the
+    * pipeline's measured volume cross its threshold, `DISK_ONLY` for
+    * every [[checkpoint]] after that. The pipeline holds it — the pair
+    * stage and the incremental index carry theirs to the queries that
+    * read them (CC edges, q136/q137) — and nothing is written to the
+    * session, which may be shared. An explicit pin always wins.
     */
-  private def maybeEscalatePairStorage(s: SparkSession, estPairRows: Long,
-      tag: String): Unit =
-    if (!Conf.pairStorageLevelPinned(s) &&
-        estPairRows >= Conf.PairDiskOnlyMinRows(s)) {
-      System.err.println(f"[graft] $tag: ~$estPairRows%,d estimated pair " +
-        s"rows ≥ ${Conf.PairDiskOnlyMinRows(s)} — pair checkpoints use " +
-        "DISK_ONLY for this pipeline")
-      s.conf.set(Conf.PairStorageLevelKey, "DISK_ONLY")
-    }
+  private[graft] final class PairStorage {
+    private var diskOnly = false
+
+    def escalateIf(s: SparkSession, cond: Boolean, why: => String): Unit =
+      if (cond && !diskOnly && !Conf.pairStorageLevelPinned(s)) {
+        System.err.println(s"[graft] $why — pair checkpoints use " +
+          "DISK_ONLY for this pipeline")
+        diskOnly = true
+      }
+
+    /** Escalate once the estimated pair-expansion volume reaches
+      * `Conf.PairDiskOnlyMinRows`; called right after the bucket
+      * checkpoint whose observe metric supplies `estPairRows`.
+      */
+    def escalateFor(s: SparkSession, estPairRows: Long, tag: String): Unit =
+      escalateIf(s, estPairRows >= Conf.PairDiskOnlyMinRows(s),
+        f"$tag: ~$estPairRows%,d estimated pair rows ≥ " +
+          Conf.PairDiskOnlyMinRows(s))
+
+    def checkpoint(df: DataFrame): DataFrame =
+      if (!diskOnly) bigCheckpoint(df)
+      else registerCheckpoint(df.localCheckpoint(true, StorageLevel.DISK_ONLY))
+  }
 
   /** Shared with the cluster-assignment path ([[clusterLabels]] /
     * ConnectedComponents): its edge-sized checkpoints are pair-sized
@@ -371,43 +363,6 @@ object DedupQueries {
           "derived frame could free unrelated live checkpoints")
     }
 
-  /** Child session scoped to one dedup pipeline, with AQE off.
-    *
-    * AQE's final-plan event loop intermittently deadlocks when
-    * explicit broadcast stages are in play — measured r2/r3 as a
-    * 100-300 s park in `AdaptiveSparkPlanExec.withFinalPlanUpdate`
-    * with every pool idle, self-resolving near the broadcast timeout
-    * (the driver's r3 bench: q35 216 s, q37 302 s on code that runs
-    * 4-12 s locally; ~50% of r2 runs). localCheckpoint'ing the
-    * broadcast children to leaf RDDs shrank but did not close the
-    * race, so the dedup family opts out of AQE entirely: these plans
-    * already manage what AQE would (skew → MaxBucket cap + explicit
-    * salt-spread `repartition`; coalescing → explicitly fought, see
-    * `bucketPairs`), and the classic non-adaptive broadcast path has
-    * no event loop to wedge. Scoped via `newSession` so the caller's
-    * session — where AQE earns its keep on ad-hoc relational plans —
-    * is untouched.
-    */
-  private[graft] def dedupSession(s: SparkSession): SparkSession = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.sql.shuffle.partitions"))
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone"))
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    // every graft conf the caller set reaches the pipeline; an unset
-    // pair-storage level stays unset, which is what lets the measured
-    // auto-escalation (maybeEscalatePairStorage) own the decision
-    s.conf.getAll.foreach { case (k, v) =>
-      if (k.startsWith(Conf.Prefix)) s2.conf.set(k, v) }
-    // marks this as a PIPELINE-SCOPED session: [[corpusSizedSession]]
-    // may re-derive its shuffle width from the corpus scan (never a
-    // caller's shared session — specs call pipeline internals on the
-    // suite session directly, and a width mutation there would leak)
-    s2.conf.set(Conf.DedupChildKey, "true")
-    s2
-  }
-
   /** Fan a small-file scan out to the session's full parallelism
     * before a compute-heavy map/partial-agg pipeline (signatures: one
     * explode + 64-128 aggregate expressions per row). A 1-row-group
@@ -468,13 +423,13 @@ object DedupQueries {
     * shuffle-hash — a flood-regime candidate set (every doc in a dup
     * clique) is corpus-sized, and a corpus-sized broadcast build is
     * exactly the ×128 OOM this guard closes. The guard must be
-    * explicit because the dedup family runs AQE-off on checkpointed
-    * leaf RDDs: plan-time stats through a distinct() chain
-    * under-estimate, so the planner would happily broadcast an
-    * unbounded side. Shuffle-hash (not sort-merge) on the flipped
-    * path: the stream side is the pair set WITH KB-wide feature
-    * arrays attached, and SMJ would sort that whole stream (measured
-    * at ×128: ~80 GB of 2–4 KB rows through the sorters helped OOM
+    * explicit because plan-time stats of checkpointed leaf RDDs
+    * through a distinct() chain under-estimate, so the planner would
+    * happily broadcast an unbounded side. Shuffle-hash (not
+    * sort-merge) on the flipped path: the stream side is the pair
+    * set WITH KB-wide feature arrays attached, and SMJ would sort
+    * that whole stream (measured at ×128: ~80 GB of 2–4 KB rows
+    * through the sorters helped OOM
     * the shared local heap), while SHJ builds only the
     * candidate-pruned feature side per partition — bounded, and
     * spillable since Spark 3.2.
@@ -494,9 +449,10 @@ object DedupQueries {
     * r2/r3 bench bimodality).
     */
   private def attachFeatures(cands0: DataFrame, feats: DataFrame,
-      idCol: String, featCol: String, tag: String = "dedup"): DataFrame =
+      idCol: String, featCol: String, tag: String,
+      store: PairStorage): DataFrame =
     attachFeaturesBy(cands0, ids => feats.join(ids, idCol),
-      idCol, featCol, tag)
+      idCol, featCol, tag, store)
 
   /** Generalized verify fetch: `featsOf` receives the candidate-id set
     * — ALREADY wrapped in the size-guarded strategy (broadcast or a
@@ -511,13 +467,14 @@ object DedupQueries {
     */
   private def attachFeaturesBy(cands0: DataFrame,
       featsOf: DataFrame => DataFrame,
-      idCol: String, featCol: String, tag: String = "dedup"): DataFrame = {
+      idCol: String, featCol: String, tag: String,
+      store: PairStorage): DataFrame = {
     // Each materialization is a RoundStats stage (tagged per family):
     // the r6/r7 driver runs inflated dedup queries 3-6× with no way to
     // tell WHICH phase (blocking, candidate set, feature fetch) paid —
     // the same attribution gap the loop stages closed for q133/q102.
     val cands = graft.RoundStats.timed(s"${tag}_cands") {
-      bigCheckpoint(cands0) }
+      store.checkpoint(cands0) }
     val candIds = graft.RoundStats.timed(s"${tag}_ids") {
       registerCheckpoint(cands.select(col("a").as(idCol))
         .union(cands.select(col("b").as(idCol)))
@@ -546,10 +503,10 @@ object DedupQueries {
     // repartition satisfies the join's distribution so the planner
     // aligns the stream side to it (no extra exchange on the build
     // side, and the exchanges are candidate-sized either way). AQE
-    // would size these exchanges itself, but the dedup family runs
-    // AQE-off (see dedupSession). In the executed plan the ATTACH
-    // joins' repartitions are usually ELIDED as redundant: the pruned
-    // checkpoint is a LogicalRDD that PRESERVES the prune join's
+    // cannot size them: it only merges partitions, and an explicit
+    // repartition is exempt from its coalescing. In the executed plan
+    // the ATTACH joins' repartitions are usually ELIDED as redundant:
+    // the pruned checkpoint is a LogicalRDD that PRESERVES the prune join's
     // hashpartitioning(id, fetchParts), so the width is set once at
     // the prune join and rides the checkpoint into both attach builds
     // exchange-free (DedupSpec pins the width on the SHJ nodes).
@@ -560,7 +517,7 @@ object DedupQueries {
       if (broadcastOk) (d, _) => broadcast(d)
       else (d, k) => d.repartition(fetchParts, col(k)).hint("shuffle_hash")
     val pruned = graft.RoundStats.timed(s"${tag}_fetch") {
-      bigCheckpoint(featsOf(prep(candIds, idCol))) }
+      store.checkpoint(featsOf(prep(candIds, idCol))) }
     cands
       .join(prep(pruned.select(col(idCol).as("a"), col(featCol).as("f_a")),
         "a"), "a")
@@ -577,9 +534,10 @@ object DedupQueries {
     * as an opaque `Scan ExistingRDD` and the broadcast-verify shape
     * disappears from docs/PLANS.md.
     */
-  private def finalStage(tag: String)(df: => DataFrame): DataFrame =
+  private def finalStage(tag: String, store: PairStorage)(
+      df: => DataFrame): DataFrame =
     if (Conf.auditNoFinal) df
-    else graft.RoundStats.timed(tag) { bigCheckpoint(df) }
+    else graft.RoundStats.timed(tag) { store.checkpoint(df) }
 
   /** Exact Jaccard over the HASHED feature encoding: both sides are
     * sorted distinct 64-bit shingle/gram hash arrays (the same `hs`
@@ -672,40 +630,34 @@ object DedupQueries {
     * reads from both the pair report and the cluster-assignment job.
     * The checkpointed result is a leaf RDD on the shared SparkContext,
     * so later consumers in the same JVM (q35 after q102, or vice versa)
-    * reuse it regardless of which child session computed it.
+    * reuse it.
     */
   private[graft] def nearDupPairs(s0: SparkSession, dir: String): DataFrame =
-    pairTable(s0, dir)._1
+    pairTable(s0, dir).pairs
 
-  /** [[nearDupPairs]]'s row count, observed ON the minhash_final
-    * checkpoint's own materialization job and kept in the stage —
-    * consumers sizing themselves to pair volume (q102's label-loop
-    * width) read it here instead of re-counting (one fewer fixed-cost
-    * action per invocation, VERDICT r10 #4). A leaf count only when
-    * the final checkpoint was skipped (PlanAudit).
+  /** The `near_dup_pairs` stage: the pairs, their row count observed ON
+    * the minhash_final checkpoint's own materialization job (None only
+    * when the audit skipped that checkpoint), and the pipeline's
+    * storage level, which q102's label loop reuses for its edge-sized
+    * checkpoints.
     */
-  private[graft] def nearDupPairCount(s0: SparkSession, dir: String): Long = {
-    val (pairs, n) = pairTable(s0, dir)
-    n.getOrElse(pairs.count())
-  }
+  private final case class PairTable(pairs: DataFrame, count: Option[Long],
+      store: PairStorage)
 
-  private def pairTable(s0: SparkSession, dir: String): (DataFrame, Option[Long]) =
+  private def pairTable(s0: SparkSession, dir: String): PairTable =
     graft.Memo(s0, "near_dup_pairs", dir, "documents") {
+      val store = new PairStorage
+      def pairs = minHashPairs(fanOut(
+        Tables.documents(s0, dir).select(col("doc_id"), col("text"))), store)
       if (Conf.auditNoFinal) // cf. finalStage: audit skips it
-        (nearDupPairsUncached(s0, dir), None)
+        PairTable(pairs, None, store)
       else graft.RoundStats.timed("minhash_final") {
         val obs = Observation()
-        val out = bigCheckpoint(nearDupPairsUncached(s0, dir)
-          .observe(obs, count(lit(1)).as("n_pairs")))
-        (out, Some(obs.get("n_pairs").asInstanceOf[Long]))
+        val out = store.checkpoint(
+          pairs.observe(obs, count(lit(1)).as("n_pairs")))
+        PairTable(out, Some(obs.get("n_pairs").asInstanceOf[Long]), store)
       }
-    }(p => Seq(p._1))
-
-  private def nearDupPairsUncached(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
-    minHashPairs(fanOut(
-      Tables.documents(s, dir).select(col("doc_id"), col("text"))))
-  }
+    }(t => Seq(t.pairs))
 
   /** MinHash-LSH pair pipeline over an explicit (doc_id, text) corpus
     * (factored so a replicated stress corpus can be fed directly).
@@ -768,8 +720,9 @@ object DedupQueries {
   /** [[jaccard]] for callers outside this object (q138's verify). */
   private[graft] def jaccardCol(a: Column, b: Column): Column = jaccard(a, b)
 
-  private[graft] def minHashPairs(raw: DataFrame): DataFrame = {
-    val bucketParts = corpusSizedSession(raw)
+  private[graft] def minHashPairs(raw: DataFrame,
+      store: PairStorage = new PairStorage): DataFrame = {
+    val bucketParts = bucketAggParts(raw)
     // Band keys PLUS an exact-signature key (band index 16, the q37
     // salted-h1 move, r7): an exact-dup clique larger than MaxBucket
     // floods ALL its band buckets past the cap — without this key its
@@ -794,7 +747,7 @@ object DedupQueries {
     minHashPairsFromKeyed(raw,
       minHashKeyed(shingle2Of(raw))
         .repartition(bucketParts, col("band"), col("key")),
-      bucketParts)
+      bucketParts, store)
   }
 
   /** The symmetric pair pipeline over PRE-KEYED member rows that are
@@ -809,8 +762,8 @@ object DedupQueries {
     * redundant pass over the daily shard (guide §1.2: don't compute
     * things twice).
     */
-  private[graft] def minHashPairsFromKeyed(raw: DataFrame, keyed: DataFrame,
-      bucketParts: Int): DataFrame = {
+  private def minHashPairsFromKeyed(raw: DataFrame, keyed: DataFrame,
+      bucketParts: Int, store: PairStorage): DataFrame = {
     // Pair-volume upper bound per bucket, riding the bucket
     // checkpoint's own job (no extra action): exact/small buckets
     // expand to exactly C(sz,2); an oversized band bucket re-blocks
@@ -820,7 +773,7 @@ object DedupQueries {
     val szEst = size(col("members")).cast("long")
     val obsEst = Observation()
     val buckets = graft.RoundStats.timed("minhash_buckets") {
-      bigCheckpoint(keyed
+      store.checkpoint(keyed
         .groupBy("band", "key").agg(collect_list("m").as("members"))
         .filter(size(col("members")) >= 2)
         .observe(obsEst, coalesce(sum(
@@ -830,7 +783,7 @@ object DedupQueries {
           .cast("long") // Column `/` is double division — cast back
           .as("est_pairs"))) }
     val estPairs = obsEst.get("est_pairs").asInstanceOf[Long]
-    maybeEscalatePairStorage(buckets.sparkSession, estPairs, "minhash")
+    store.escalateFor(keyed.sparkSession, estPairs, "minhash")
     // pair-volume-derived width for the quadratic expansion stages AND
     // the co-located pair dedup below (see PairsPerTask)
     val exWidth = expandWidth(estPairs, bucketParts)
@@ -892,7 +845,7 @@ object DedupQueries {
       // bought nothing here — duplicate pairs come from DIFFERENT band
       // buckets, which the round-robin expansion spread lands in
       // different partitions anyway.
-      bigCheckpoint(expand(buckets.filter(col("band") < 16), MaxBucket)
+      store.checkpoint(expand(buckets.filter(col("band") < 16), MaxBucket)
         .union(expand(reblocked, MaxBucket))
         .union(expand(buckets.filter(col("band") === 16), Int.MaxValue))
         .repartition(exWidth, col("a"), col("b"))
@@ -907,7 +860,7 @@ object DedupQueries {
       pairs.filter(!col("exact") && col("plausible"))
         .select(col("a"), col("b")),
       ids => hashedFeatures(shingle2Of(raw.join(ids, "doc_id")), "shingles"),
-      "doc_id", "hsh", tag = "minhash")
+      "doc_id", "hsh", "minhash", store)
       .select(col("a"), col("b"), jaccard(col("f_a"), col("f_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
     exactPairs.union(verified)
@@ -964,10 +917,15 @@ object DedupQueries {
     * (eh1, eh2) text-hash pairs of the covered docs — the APPLY
     * step's exact-duplicate membership probe (q137; double-xxhash64
     * membership is the q37 signature pattern, 2^-128 collision
-    * class).
+    * class). `parts`: the base corpus's scan-stat width
+    * ([[bucketAggParts]]), which the q136/q137 stages over this index
+    * take for their corpus- and pair-sized exchanges (AQE only merges,
+    * so the session width would cap them). `store`: the storage level
+    * of every pair-sized checkpoint built on this index.
     */
-  private[graft] final case class IncrIndex(split: Long,
-      buckets: DataFrame, reblock: DataFrame, exactKeys: DataFrame)
+  private[graft] final case class IncrIndex(split: Long, parts: Int,
+      buckets: DataFrame, reblock: DataFrame, exactKeys: DataFrame,
+      store: PairStorage)
 
   /** The memoized standing index for `dir` at the data-derived split
     * (max doc_id · 4/5 — the q136 shard convention): cold build, warm
@@ -975,7 +933,7 @@ object DedupQueries {
     */
   private[graft] def incrementalIndex(s0: SparkSession, dir: String): IncrIndex =
     graft.Memo(s0, "incr_index", dir, "documents") {
-      val maxId = Tables.documents(dedupSession(s0), dir)
+      val maxId = Tables.documents(s0, dir)
         .agg(max(col("doc_id"))).head.getLong(0)
       indexFor(s0, dir, maxId * 4L / 5L)
     }(idx => Seq(idx.buckets, idx.reblock, idx.exactKeys))
@@ -985,9 +943,8 @@ object DedupQueries {
     * IncrementalDedupSpec drives explicit splits for the day-by-day
     * equivalence proof).
     */
-  private[graft] def indexFor(s0: SparkSession, dir: String,
+  private[graft] def indexFor(s: SparkSession, dir: String,
       split: Long): IncrIndex = {
-      val s = dedupSession(s0)
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val rawBase = fanOut(docs.filter(col("doc_id") < split))
       // Index PROBE-JOIN width — 4× finer than the flow-through bucket
@@ -1013,26 +970,12 @@ object DedupQueries {
       // same physics). Trigger: the scan stats pushed the width past
       // the session's static partitions ⇔ the corpus outgrew the
       // memory-friendly regime. An explicit pin always wins.
-      if (!Conf.pairStorageLevelPinned(s) && statParts >
-          s.conf.get("spark.sql.shuffle.partitions").toInt) {
-        System.err.println(s"[graft] incr: corpus-scale index " +
-          s"($statParts stat partitions) — pipeline checkpoints use " +
-          "DISK_ONLY")
-        s.conf.set(Conf.PairStorageLevelKey, "DISK_ONLY")
-      }
-      // corpus-sized child-session width (cf. corpusSizedSession) —
-      // AFTER the storage-policy check above, which compares the stat
-      // width against the DRIVER's width as its memory-regime proxy.
-      // This resize is ALSO the q136/q137 pipeline width (r17, ADVICE
-      // r16 #4 clarified): incrementalPairsWith/incrementalApplyWith
-      // run on idx.buckets.sparkSession — i.e. THIS session — so their
-      // candidate distincts, probe joins and final stages inherit the
-      // base-corpus width set here; only the nn leg's expansion widths
-      // re-derive from the shard's own scan stats (smaller by design).
-      if (Conf.isDedupChild(s))
-        s.conf.set("spark.sql.shuffle.partitions", statParts.toString)
+      val store = new PairStorage
+      store.escalateIf(s,
+        statParts > s.conf.get("spark.sql.shuffle.partitions").toInt,
+        s"incr: corpus-scale index ($statParts stat partitions)")
       val buckets = graft.RoundStats.timed("incr_index") {
-        bigCheckpoint(minHashKeyed(shingle2Of(rawBase))
+        store.checkpoint(minHashKeyed(shingle2Of(rawBase))
           .repartition(bucketParts, col("band"), col("key"))
           .groupBy("band", "key").agg(collect_list("m").as("members"))) }
       // exact-text membership keys for the APPLY step (q137): one
@@ -1041,24 +984,28 @@ object DedupQueries {
       // second exchange and the checkpoint PRESERVES (eh1, eh2)
       // hash-partitioning for the probe-side-only anti-join.
       val exactKeys = graft.RoundStats.timed("incr_exact_index") {
-        bigCheckpoint(docs.filter(col("doc_id") < split)
+        store.checkpoint(docs.filter(col("doc_id") < split)
           .select(xxhash64(col("text")).as("eh1"),
             xxhash64(lit("ex2"), col("text")).as("eh2"))
           .repartition(bucketParts, col("eh1"), col("eh2"))
           .distinct()) }
-      IncrIndex(split, buckets, reblockOf(buckets, bucketParts), exactKeys)
+      IncrIndex(split, statParts, buckets,
+        reblockOf(buckets, bucketParts, statParts, store), exactKeys, store)
     }
 
   /** Level-2 re-block of `buckets`' oversized-bucket members on their
     * bottom-4 sketch keys — factored (r13) so [[indexUpdatedWith]]
     * rebuilds it from the MERGED bucket table exactly as the cold
-    * build does (overflow-population-sized either way).
+    * build does (overflow-population-sized either way; the member
+    * dedup runs at the index's `parts`, the sub-key groups at `width`).
     */
-  private def reblockOf(buckets: DataFrame, width: Int): DataFrame =
+  private def reblockOf(buckets: DataFrame, width: Int, parts: Int,
+      store: PairStorage): DataFrame =
     graft.RoundStats.timed("incr_reblock") {
-      bigCheckpoint(buckets
+      store.checkpoint(buckets
         .filter(col("band") < 16 && size(col("members")) > MaxBucket)
         .select(explode(col("members")).as("m"))
+        .repartition(parts, col("m"))
         .distinct()
         .select(col("m"), explode(slice(col("m.sk"), 1, 4)).as("subkey"))
         .repartition(width, col("subkey"))
@@ -1093,6 +1040,7 @@ object DedupQueries {
   private[graft] def indexUpdatedWith(idx: IncrIndex, dir: String,
       newSplit: Long): IncrIndex = {
     val s = idx.buckets.sparkSession
+    val store = idx.store
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val shard = fanOut(docs.filter(col("doc_id") >= idx.split &&
       col("doc_id") < newSplit))
@@ -1101,7 +1049,7 @@ object DedupQueries {
       .repartition(indexParts, col("band"), col("key"))
       .groupBy("band", "key").agg(collect_list("m").as("new_members"))
     val merged = graft.RoundStats.timed("incr_index_merge") {
-      bigCheckpoint(idx.buckets
+      store.checkpoint(idx.buckets
         .join(shardBuckets, Seq("band", "key"), "full_outer")
         .select(col("band"), col("key"),
           when(col("members").isNull, col("new_members"))
@@ -1115,9 +1063,10 @@ object DedupQueries {
       .repartition(indexParts, col("eh1"), col("eh2"))
       .distinct()
     val mergedExact = graft.RoundStats.timed("incr_exact_merge") {
-      bigCheckpoint(idx.exactKeys
+      store.checkpoint(idx.exactKeys
         .join(shardKeys, Seq("eh1", "eh2"), "full_outer")) }
-    IncrIndex(newSplit, merged, reblockOf(merged, indexParts), mergedExact)
+    IncrIndex(newSplit, idx.parts, merged,
+      reblockOf(merged, indexParts, idx.parts, store), mergedExact, store)
   }
 
   /** q136's pair pipeline: every near-dup pair (J ≥ 0.5, 2-shingles)
@@ -1143,7 +1092,8 @@ object DedupQueries {
   private[graft] def incrementalPairsWith(idx: IncrIndex, dir: String,
       until: Long = Long.MaxValue): DataFrame = {
     val (split, buckets, reblock) = (idx.split, idx.buckets, idx.reblock)
-    val s = buckets.sparkSession // the index's dedup session (AQE off)
+    val store = idx.store
+    val s = buckets.sparkSession
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val rawNew = fanOut(docs.filter(col("doc_id") >= split &&
       col("doc_id") < until))
@@ -1159,10 +1109,10 @@ object DedupQueries {
     // partitions stay at the index's fine width instead of the scan's
     // (a 32-partition shard table meant ~70 MB serialized partitions —
     // exactly the whole-partition re-cache allocations the DISK_ONLY
-    // escalation above is defending against).
+    // escalation in indexFor is defending against).
     val indexParts = buckets.rdd.getNumPartitions
     val newKeyed = graft.RoundStats.timed("incr_probe_keys") {
-      bigCheckpoint(minHashKeyed(shingle2Of(rawNew))
+      store.checkpoint(minHashKeyed(shingle2Of(rawNew))
         .repartition(indexParts, col("band"), col("key"))) }
     // Level-1 probe: capped LSH buckets + the uncapped exact band.
     // The index side builds the hash relation (shuffle-hash, never a
@@ -1180,13 +1130,16 @@ object DedupQueries {
       .join(buckets.filter(col("band") < 16 &&
           size(col("members")) > MaxBucket).select("band", "key"),
         Seq("band", "key"), "left_semi")
-      .select(col("m")).distinct()
+      // the index-width dedups below co-locate on their keys: a
+      // duplicate comes from another band, i.e. another partition, so
+      // a map-side partial aggregate would catch nothing
+      .select(col("m")).repartition(idx.parts, col("m")).distinct()
     val l2 = hitOversized
       .select(col("m").as("y"), explode(slice(col("m.sk"), 1, 4)).as("subkey"))
       .join(reblock.hint("shuffle_hash"), Seq("subkey"))
       .select(col("y"), explode(col("members")).as("x"))
     val nbCands = graft.RoundStats.timed("incr_cands") {
-      bigCheckpoint(l1.union(l2)
+      store.checkpoint(l1.union(l2)
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
           (col("x.n") === col("y.n") && col("x.h1") === col("y.h1") &&
             col("x.h2") === col("y.h2")).as("exact"),
@@ -1194,6 +1147,7 @@ object DedupQueries {
           (least(col("x.n"), col("y.n")).cast("double") /
               greatest(col("x.n"), col("y.n")).cast("double") >= 0.5)
             .as("plausible"))
+        .repartition(idx.parts, col("a"), col("b"))
         .distinct()) }
     val exactNB = nbCands.filter(col("exact"))
       .select(col("a"), col("b"), lit(1.0).as("jaccard"))
@@ -1201,7 +1155,7 @@ object DedupQueries {
       nbCands.filter(!col("exact") && col("plausible"))
         .select(col("a"), col("b")),
       ids => hashedFeatures(shingle2Of(raw.join(ids, "doc_id")), "shingles"),
-      "doc_id", "hsh", tag = "incr")
+      "doc_id", "hsh", "incr", store)
       .select(col("a"), col("b"), jaccard(col("f_a"), col("f_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
     // New-vs-new: the symmetric pipeline on the shard alone — shard-
@@ -1215,8 +1169,9 @@ object DedupQueries {
     // The bucket agg rides newKeyed's own (index-width) partitioning;
     // the expand/re-block widths keep following the SHARD's scan stats
     // exactly as the standalone pipeline would size them.
-    val nn = minHashPairsFromKeyed(rawNew, newKeyed, bucketAggParts(rawNew))
-    finalStage("incr_final") {
+    val nn = minHashPairsFromKeyed(rawNew, newKeyed, bucketAggParts(rawNew),
+      store)
+    finalStage("incr_final", store) {
       exactNB.union(verifiedNB).union(nn)
         .select(col("a"), col("b"), col("jaccard"),
           (col("a") < split).as("vs_base"))
@@ -1227,13 +1182,11 @@ object DedupQueries {
     * "yesterday's corpus" q35; IncrementalDedupSpec and the
     * ScaleStress distinct hook assert base ∪ increment ≡ full rerun.
     */
-  private[graft] def nearDupPairsBelow(s0: SparkSession, dir: String,
-      split: Long): DataFrame = {
-    val s = dedupSession(s0)
+  private[graft] def nearDupPairsBelow(s: SparkSession, dir: String,
+      split: Long): DataFrame =
     minHashPairs(fanOut(Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") < split)))
-  }
 
   /** The split the incremental convention derives for `dir` (exposed
     * for specs/harnesses; builds or reuses the memoized index).
@@ -1280,6 +1233,7 @@ object DedupQueries {
     // index side building from its checkpoint's PRESERVED (eh1, eh2)
     // partitioning — only the (already shard-sized) probe exchanges
     val exactKept = shard
+      .repartition(idx.parts, col("text"))
       .withColumn("min_id",
         min(col("doc_id")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("text"))))
@@ -1299,11 +1253,12 @@ object DedupQueries {
     val pairs =
       if (pairs0.queryExecution.analyzed
           .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) pairs0
-      else bigCheckpoint(pairs0)
+      else idx.store.checkpoint(pairs0)
     val vsBase = pairs.filter(col("vs_base"))
       .select(col("b").as("id")).distinct()
     val nn = pairs.filter(!col("vs_base")).select(col("a"), col("b"))
-    val labels = ConnectedComponents.labelsFor(nn)
+    val labels = ConnectedComponents.labelsFor(nn,
+      loopParts = Some(idx.parts), checkpoint = idx.store.checkpoint)
     val touched = labels.join(vsBase, Seq("id"), "left_semi")
       .select(col("lbl")).distinct()
     val dropNear = vsBase
@@ -1313,7 +1268,7 @@ object DedupQueries {
       .withColumnRenamed("id", "doc_id")
     // the drop set is candidate-sized (cf. q111) — broadcast so the
     // shard side never shuffles for it
-    finalStage("incr_apply_final") {
+    finalStage("incr_apply_final", idx.store) {
       exactKept.join(broadcast(dropNear), Seq("doc_id"), "left_anti")
     }
   }
@@ -1451,12 +1406,12 @@ object DedupQueries {
     * (key…, id, sim) rows, no arrays — so every exchange stays
     * bounded by the overflow population, not the corpus.
     */
-  private[graft] def simHashPairs(docs: DataFrame,
-      maxHamming: Int = 7): DataFrame = {
+  private[graft] def simHashPairs(docs: DataFrame, maxHamming: Int = 7,
+      store: PairStorage = new PairStorage): DataFrame = {
     // scan-stat-sized bucket exchanges (cf. minHashPairs) — sized off
     // `docs`' own plan stats (the (id, code) projection), the actual
     // pre-shuffle relation here
-    val bucketParts = corpusSizedSession(docs)
+    val bucketParts = bucketAggParts(docs)
     // LEVEL-1 MEMBERSHIP STAYS FLAT (r13, found by the ×2048 distinct
     // probe): the chunk key space is only 8×256 = 2048 values, so the
     // old collect_list here sat UNDER ObjectHashAggregate's 128-key
@@ -1482,7 +1437,7 @@ object DedupQueries {
     // the caller's pair-set checkpoint and the unions below.
     val (flat, sizesAgg, sizeRows) =
       graft.RoundStats.timed("simhash_buckets") {
-        val f = bigCheckpoint(docs
+        val f = store.checkpoint(docs
           .select(col("doc_id"), col("sim"),
             posexplode(Hashing.simHashChunks(col("sim")))
               .as(Seq("chunk_idx", "chunk"))))
@@ -1495,7 +1450,7 @@ object DedupQueries {
       val sz = r.getLong(2)
       if (sz <= MaxBucket) sz * (sz - 1L) / 2L else 8L * MaxBucket * sz
     }.sum
-    maybeEscalatePairStorage(flat.sparkSession, estPairs, "simhash")
+    store.escalateFor(docs.sparkSession, estPairs, "simhash")
     // pair-volume-derived expansion/dedup width (cf. minHashPairs) —
     // here the estimate is the driver-side size census above
     val exWidth = expandWidth(estPairs, bucketParts)
@@ -1523,7 +1478,7 @@ object DedupQueries {
     // drop, odds ~#buckets²/2⁶⁴ ≈ 1e-6 at 5 M docs).
     val obsFwd = Observation()
     val sub2 = graft.RoundStats.timed("simhash_sub2") {
-      bigCheckpoint(memb.filter(col("bsz") > MaxBucket)
+      store.checkpoint(memb.filter(col("bsz") > MaxBucket)
         .select(col("chunk_idx"), col("chunk"),
           struct(col("doc_id"), col("sim")).as("m"))
         .select(col("m"),
@@ -1676,10 +1631,8 @@ object DedupQueries {
   /** q36's raw pair set (a, b, hamming) — the operator output proper,
     * consumed by [[graft.ScaleStress]] and DedupSpec.
     */
-  private[graft] def simHashPairsFor(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
+  private[graft] def simHashPairsFor(s: SparkSession, dir: String): DataFrame =
     simHashPairs(simHashDocs(s, dir))
-  }
 
   private def simHashDocs(s: SparkSession, dir: String): DataFrame =
     Hashing.simHashes(shingle2Of(fanOut(Tables.documents(s, dir)
@@ -1701,8 +1654,8 @@ object DedupQueries {
     * The pair LISTING stays asserted by DedupSpec (planted-pair and
     * oversized-bucket specs) and ScaleStress (×8 clique recall).
     */
-  private def q36(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
+  private def q36(s: SparkSession, dir: String): DataFrame = {
+    val store = new PairStorage
     val shingled = shingle2Of(fanOut(Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))))
     // ONE corpus pass (r16, guide §1.2): the SimHash signature and the
@@ -1715,7 +1668,7 @@ object DedupQueries {
     // at deployment scale (the same class as q136's r16 fix).
     val sorted = array_sort(col("shingles"))
     val sig = graft.RoundStats.timed("simhash_sig") {
-      bigCheckpoint(shingled.select(col("doc_id"),
+      store.checkpoint(shingled.select(col("doc_id"),
         Hashing.simHashCol(col("shingles")).as("sim"),
         size(sorted).as("n"),
         xxhash64(sorted).as("h1"),
@@ -1724,7 +1677,7 @@ object DedupQueries {
       .select(col("doc_id"), col("sim"))
     // feeds three aggregates below — materialize the pair pipeline once
     val pairs = graft.RoundStats.timed("simhash_pairs") {
-      bigCheckpoint(simHashPairs(docs)) }
+      store.checkpoint(simHashPairs(docs, store = store)) }
     // Exact-dup pairs join on the (n, h1, h2) signature of the sorted
     // shingle set, not the set's JSON encoding: equal signatures ⇒
     // equal sets at 2^-128 collision odds (q37's documented pattern),
@@ -1734,11 +1687,11 @@ object DedupQueries {
     // single-pass `sig` checkpoint (no second corpus scan).
     val canon = sig.select(col("doc_id"), col("n"), col("h1"), col("h2"))
     // Both contract probes pin sort-merge: canon is corpus-sized and
-    // `pairs` is OUTPUT-sized, and with AQE off the planner's
-    // under-estimate of the checkpointed/distinct()-derived sides
-    // chose a broadcast here — the driver-side hash build of the ×128
-    // pair set (~78 M rows) was the first genuine scale OOM this
-    // harness found (r10). SMJ keeps both probes spill-safe at any
+    // `pairs` is OUTPUT-sized, and the planner's under-estimate of
+    // the checkpointed/distinct()-derived sides chose a broadcast here —
+    // the driver-side hash build of the ×128 pair set (~78 M rows)
+    // was the first genuine scale OOM this harness found (r10). SMJ
+    // keeps both probes spill-safe at any
     // corpus/output size; the exchange is the probe's own input
     // either way.
     val exactPairs = canon.select(col("doc_id").as("a"),
@@ -1758,7 +1711,7 @@ object DedupQueries {
     // (exact-signature self-join, anti-join recall probe, bounds scan)
     // are the query's last compute — stamp them as their own stage so
     // q36's stages map covers its wall (1-row result; cost-free).
-    finalStage("simhash_final") {
+    finalStage("simhash_final", store) {
       nExact.crossJoin(missed).crossJoin(bounds)
         .select(col("n_exact_dup_pairs"),
           (col("n_missed") === 0).as("exact_recall_ok"),
@@ -1814,18 +1767,17 @@ object DedupQueries {
     .select(col("doc_id"),
       array_distinct(T.wordNGrams(col("toks"), 3)).as("grams"))
 
-  private def q37(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
+  private def q37(s: SparkSession, dir: String): DataFrame =
     gramJaccardPairs(fanOut(Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))))
       .orderBy("a", "b")
-  }
 
   /** q37's pair pipeline over an explicit (doc_id, text) corpus
     * (factored for the flood spec, cf. [[minHashPairs]]).
     */
   private[graft] def gramJaccardPairs(raw: DataFrame): DataFrame = {
-    val bucketParts = corpusSizedSession(raw)
+    val store = new PairStorage
+    val bucketParts = bucketAggParts(raw)
     val docs = gram3Of(raw)
     // Bind the sorted hash array as an attribute before fanning it
     // into h1/h2/sk (cf. q36: unbound HOF chains re-evaluate per
@@ -1868,7 +1820,7 @@ object DedupQueries {
     val obsEst = Observation()
     val buckets = graft.RoundStats.timed("gram_buckets") {
       // scan-stat-sized exchange (cf. minhash_buckets)
-      bigCheckpoint(keyed
+      store.checkpoint(keyed
         .repartition(bucketParts, col("minkey"), col("isx"))
         .groupBy("minkey", "isx").agg(collect_list("m").as("members"))
         .filter(size(col("members")) >= 2)
@@ -1879,7 +1831,7 @@ object DedupQueries {
           .cast("long") // cf. minHashPairs: `/` is double division
           .as("est_pairs"))) }
     val estPairs = obsEst.get("est_pairs").asInstanceOf[Long]
-    maybeEscalatePairStorage(buckets.sparkSession, estPairs, "gram")
+    store.escalateFor(raw.sparkSession, estPairs, "gram")
     // pair-volume-derived expansion/dedup width (cf. minHashPairs)
     val exWidth = expandWidth(estPairs, bucketParts)
     val small = buckets.filter(!col("isx") &&
@@ -1938,7 +1890,7 @@ object DedupQueries {
       // (a, b) repartition co-locates the cross-bucket dedup at the
       // pair-volume width (r16 — cf. minHashPairs's expand: partial
       // agg bought nothing, duplicates sit in different partitions)
-      bigCheckpoint(expandSigPairs(small)
+      store.checkpoint(expandSigPairs(small)
         .union(expandSigPairs(reblocked))
         .union(expandSigPairs(exactBuckets))
         .repartition(exWidth, col("a"), col("b"))
@@ -1964,10 +1916,10 @@ object DedupQueries {
     val (exactPairs, toVerify) =
       if (splitPairs) {
         val ep = graft.RoundStats.timed("gram_split_exact") {
-          bigCheckpoint(pairs.filter(col("exact"))
+          store.checkpoint(pairs.filter(col("exact"))
             .select(col("a"), col("b"), lit(1.0).as("jaccard"))) }
         val tv = graft.RoundStats.timed("gram_split_vlist") {
-          bigCheckpoint(pairs.filter(!col("exact") && col("plausible"))
+          store.checkpoint(pairs.filter(!col("exact") && col("plausible"))
             .select(col("a"), col("b"))) }
         releaseCheckpoint(pairs)
         (ep, tv)
@@ -1979,7 +1931,7 @@ object DedupQueries {
     def verifySliceOf(cands: DataFrame, tag: String): DataFrame =
       attachFeaturesBy(cands,
         ids => hashedFeatures(gram3Of(raw.join(ids, "doc_id")), "grams"),
-        "doc_id", "hsh", tag = tag)
+        "doc_id", "hsh", tag, store)
         .select(col("a"), col("b"),
           jaccard(col("f_a"), col("f_b")).as("jaccard"))
         .filter(col("jaccard") >= 0.3)
@@ -1998,7 +1950,7 @@ object DedupQueries {
         (0 until k).map { i =>
           val made = scala.collection.mutable.Set[Int]()
           val out = collectCheckpoints(made) {
-            bigCheckpoint(verifySliceOf(
+            store.checkpoint(verifySliceOf(
               toVerify.filter(
                 pmod(xxhash64(lit("slice"), col("a")), lit(k.toLong)) === i),
               s"gram_s$i")) }
@@ -2023,7 +1975,7 @@ object DedupQueries {
     // the caller's final action (the one attribution hole the r8
     // stages map left: q37 showed 2.4 s of stages under a 6 s query).
     // Output-sized: only above-threshold pairs land in the checkpoint.
-    val fin = finalStage("gram_final") { exactPairs.union(verified) }
+    val fin = finalStage("gram_final", store) { exactPairs.union(verified) }
     // On the split path the final union COPIED the exact-shortcut and
     // slice-output blocks into its own lineage-cut checkpoint — they
     // are dead the moment it lands. Guarded on the final actually
@@ -2051,7 +2003,7 @@ object DedupQueries {
     */
   private[graft] def embeddingPairs(emb: DataFrame): DataFrame = {
     // scan-stat-sized bucket exchange (cf. minHashPairs)
-    val bucketParts = corpusSizedSession(emb)
+    val bucketParts = bucketAggParts(emb)
     val coded = emb.select(col("vec_id"),
       posexplode(concat(
         Lsh.srpCodes(col("embedding"), tables = 8, bits = 8),
@@ -2090,8 +2042,8 @@ object DedupQueries {
       .distinct()
   }
 
-  private def q38(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
+  private def q38(s: SparkSession, dir: String): DataFrame = {
+    val store = new PairStorage
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val cands = embeddingPairs(emb)
     // cf. q37's gram_final: the cosine verify is the last compute —
@@ -2101,11 +2053,11 @@ object DedupQueries {
     // the verify join (tags stay non-overlapping). Output-sized
     // (cos ≥ 0.4 pairs only).
     val verified = attachFeatures(cands, emb, "vec_id", "embedding",
-        tag = "emb")
+        "emb", store)
       .select(col("a"), col("b"),
         CosineSim(col("f_a"), col("f_b")).as("cos"))
       .filter(col("cos") >= 0.4)
-    finalStage("emb_final") { verified }
+    finalStage("emb_final", store) { verified }
       .orderBy("a", "b")
   }
 
@@ -2198,11 +2150,8 @@ object DedupQueries {
     * map-side explode feeding a broadcast hash join — the 100 TB scan
     * never shuffles its grams, and the only exchange is the
     * (contaminated-doc, count) aggregation, sized by the hit rate.
-    * Runs in the dedup family's AQE-off session (same explicit-
-    * broadcast pathology, see [[dedupSession]]).
     */
-  private def q70(s0: SparkSession, dir: String): DataFrame = {
-    val s = dedupSession(s0)
+  private def q70(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), T.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -2328,9 +2277,8 @@ object DedupQueries {
       // (at ×512 the duplicate was ~a quarter of the q102 path's disk
       // peak). The timed block attributes the pair build on a cold
       // cache and costs nothing on a warm one.
-      val pairs = graft.RoundStats.timed("q102_pairs") {
-        nearDupPairs(s0, dir)
-      }.select(col("a"), col("b"))
+      val table = graft.RoundStats.timed("q102_pairs") { pairTable(s0, dir) }
+      val pairs = table.pairs.select(col("a"), col("b"))
       // The label loop iterates over the verified PAIR set — orders of
       // magnitude smaller than the corpus (it is the near-dup rate).
       // Its per-round shuffles would otherwise inherit the corpus-sized
@@ -2351,27 +2299,24 @@ object DedupQueries {
       // task per ~4 cores matches the per-executor heap share a real
       // cluster gives (4-5 cores/executor); local[32]'s
       // 32-threads-one-heap shape is the outlier the cap protects.
-      // (`pairs` is already materialized, so this conf change on the
-      // dedup child session can't affect the blocking/verify stages
-      // above.)
       // Loop width also multiplies CONCURRENT spill volume (each
       // round holds ~width × two sorted join sides of shuffle files):
       // measured at ×512 on a ~61 GB-scratch box, width 4 fits
       // (1579 s green) and width 8 runs out of device mid-loop.
-      val s2 = pairs.sparkSession
-      val cap = math.max(4L, s2.sparkContext.defaultParallelism / 4L)
+      val cap = math.max(4L, s0.sparkContext.defaultParallelism / 4L)
       // pair volume observed on the pair checkpoint's own job
-      // (nearDupPairCount) — no per-invocation count
-      // action (VERDICT r10 #4)
+      // — no per-invocation count action (VERDICT r10 #4); a leaf count
+      // only when the audit skipped that checkpoint
       val loopParts = math.max(4L, math.min(cap,
-        2L * nearDupPairCount(s0, dir) / 4000000L)).toString
-      s2.conf.set("spark.sql.shuffle.partitions", loopParts)
+        2L * table.count.getOrElse(table.pairs.count()) / 4000000L)).toInt
       // Min-label with automatic escalation to large-star/small-star
       // if the graph's diameter exceeds the round cap (r6: the cap
       // used to return silently-partial labels on a long chain; now
       // it degrades to the O(log n) algorithm instead — see
-      // ConnectedComponents).
-      ConnectedComponents.labelsFor(pairs)
+      // ConnectedComponents). The edge-sized checkpoints take the pair
+      // pipeline's storage level.
+      ConnectedComponents.labelsFor(pairs, loopParts = Some(loopParts),
+        checkpoint = table.store.checkpoint)
     }(Seq(_))
 
   private def q102(s0: SparkSession, dir: String): DataFrame =

@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bench's compact last line must stay valid JSON for any wall:
-  * NaN and infinities are written as `null`.
+  * NaN and infinities are written as `null`; and the timed action runs
+  * the whole plan a caller consumes.
   */
 class BenchJsonSpec extends AnyFunSuite {
   test("compact line with a NaN wall parses as JSON") {
@@ -30,5 +31,30 @@ class BenchJsonSpec extends AnyFunSuite {
       Map("a" -> 0.5, "b" -> 1.5), Map.empty, "{}", "sf"))
     assert(j.get("value").asDouble === 2.0)
     assert(j.get("queries").get("b").asDouble === 1.5)
+  }
+
+  test("the timed action materializes q20's window over the columns it reads") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val spark = SparkTestSession.spark
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Bench.materialize(SparkEntry.queries("q20_window_range")(
+        spark, SparkTestSession.sf))
+      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plan = plans.asScala.mkString("\n")
+    assert(plan.contains("Window"), plan)
+    val readSchema = "ReadSchema: struct<([^>]*)>".r
+      .findAllMatchIn(plan).map(_.group(1)).mkString(",")
+    Seq("user_id", "ts", "value").foreach(c =>
+      assert(readSchema.contains(s"$c:"), s"the scan does not read $c: $plan"))
   }
 }

@@ -87,8 +87,10 @@ class ConfSurfaceSpec extends AnyFunSuite {
     Conf.applyConf(s, s"${Conf.VerifySlices.key}=4;spark.sql.shuffle.partitions=3")
     assert(s.conf.get(Conf.VerifySlices.key) === "4")
     assert(s.conf.get("spark.sql.shuffle.partitions") === "3")
-    // a typo'd key, the internal child marker, and a bad value all fail
-    Seq("spark.graft.dedup.verifySlice=4", s"${Conf.DedupChildKey}=true",
+    // a typo'd key, the retired child-session marker, and a bad value
+    // all fail
+    Seq("spark.graft.dedup.verifySlice=4",
+        "spark.graft.dedup.isChildSession=true",
         s"${Conf.VerifySlices.key}=0").foreach { spec =>
       intercept[IllegalArgumentException](Conf.applyConf(session(), spec))
     }
@@ -113,7 +115,7 @@ class ConfSurfaceSpec extends AnyFunSuite {
   private val envVar = "SPARK_GRAFT_[A-Z_]*[A-Z]".r
 
   test("the surface is 7 confs and 6 env vars, plus the child-session marker") {
-    assert(Conf.keys.size === 8)
+    assert(Conf.keys.size === 7)
     assert(Conf.envVars.size === 6)
   }
 

@@ -609,8 +609,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("bucket release fires in the production pipeline") {
-    // drives the real entry — nearDupPairs → dedupSession →
-    // minHashPairs — with the release hook as evidence
+    // drives the real entry — nearDupPairs → minHashPairs — with the
+    // release hook as evidence
     import graft.queries.DedupQueries
     val docs = ((0 until 48).map(i => (i.toLong, s"alpha beta gamma delta u$i")) ++
       (0 until 16).map(i => (100L + i, "alpha beta gamma delta epsilon")))
@@ -647,14 +647,37 @@ class DedupSpec extends AnyFunSuite {
   test("q36 contract probes plan corpus/output-sized joins as sort-merge") {
     // the entry checkpoints its 1-row result (finalStage), hiding the
     // probe joins — the audit flag skips that, exposing the real plan
-    System.setProperty("graft.audit.nofinal", "true")
-    val df = try SparkEntry.queries("q36_dedup_simhash")(spark, sf)
-      finally System.clearProperty("graft.audit.nofinal")
+    val df = Conf.withAuditNoFinal(
+      SparkEntry.queries("q36_dedup_simhash")(spark, sf))
     val plan = df.queryExecution.executedPlan.toString
     // the 1-row bounds crossJoins legitimately plan as nested-loop;
     // what must never appear is a hash-relation build of canon/pairs
     assert(!plan.contains("BroadcastHashJoin"),
       "contract probe broadcast-builds a corpus/output-sized side")
     assert(plan.contains("SortMergeJoin"))
+  }
+
+  test("dedup entries plan on the caller's session and leave its confs unchanged") {
+    // a fresh dir: the pair, label and index stages are built here, by
+    // these calls, not by an earlier suite
+    val dir = java.nio.file.Files.createTempDirectory("graft_one_session")
+    Seq("documents", "embeddings").foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      // q102 first: it builds the pair stage and runs its label loop
+      // on that stage's session, which q35 then plans on
+      Seq("q102_dedup_cluster", "q35_dedup_minhash", "q36_dedup_simhash",
+          "q37_ngram_jaccard", "q38_dedup_embedding", "q70_decontaminate",
+          "q136_dedup_incremental", "q137_dedup_incr_apply").foreach { q =>
+        val before = spark.conf.getAll
+        val df = SparkEntry.queries(q)(spark, dir.toString)
+        df.collect()
+        assert(df.sparkSession eq spark, s"$q planned on another session")
+        assert(df.sparkSession.conf.get("spark.sql.shuffle.partitions") === width,
+          s"$q planned at another shuffle width")
+        assert(spark.conf.getAll === before, s"$q changed the caller's confs")
+      }
+    } finally Memo.release(dir.toString)
   }
 }
