@@ -283,7 +283,7 @@ object Bench {
     val fence0 = concurrentGraftJvms()
     if (fence0.nonEmpty) {
       System.err.println("=" * 72)
-      System.err.println("[bench] WARNING: CONCURRENT GRAFT PROCESSES — " +
+      System.err.println("[bench] WARNING: CONCURRENT GRAFT PROCESSES - " +
         "this window is CONTAMINATED; per-query walls are not clean:")
       fence0.foreach(p => System.err.println(s"[bench]   $p"))
       System.err.println("=" * 72)

@@ -259,7 +259,7 @@ object MicroBench {
       bench("jaccard verify", "merge-pass kernel (hashed)", nPairs) {
         pairs.select(sum(merged)).collect()
       }
-      bench("jaccard verify", "union-free |a|+|b|-|∩|", nPairs) {
+      bench("jaccard verify", "union-free |a|+|b|-|a&b|", nPairs) {
         pairs.select(sum(unionFree)).collect()
       }
       bench("jaccard verify", "intersect + union arrays", nPairs) {
@@ -398,7 +398,7 @@ object MicroBench {
     // ---- report ----------------------------------------------------
     val sb = new StringBuilder
     sb.append("# Kernel microbenchmarks (generated by graft.MicroBench)\n\n")
-    sb.append(s"Input dir: `$dir` (embeddings ×8 = $nEmb rows; shingled docs = $nDocs; raw docs ×4 = $nRaw).\n")
+    sb.append(s"Input dir: `$dir` (embeddings x8 = $nEmb rows; shingled docs = $nDocs; raw docs x4 = $nRaw).\n")
     sb.append("Median of 3 timed runs after 1 warmup, local[32]. Ratios are\n")
     sb.append("per-operator speedups of the native kernel over the naive form.\n\n")
     sb.append("| operator | variant | rows | median s | rows/s | speedup |\n")
@@ -407,7 +407,7 @@ object MicroBench {
       val base = rs.last._4
       rs.foreach { case (op, v, n, s) =>
         val ratio = if (s > 0) base / s else Double.NaN
-        sb.append(f"| $op | $v | $n | $s%.3f | ${n / s}%,.0f | ${ratio}%.1f× |\n")
+        sb.append(f"| $op | $v | $n | $s%.3f | ${n / s}%,.0f | ${ratio}%.1fx |\n")
       }
     }
     Files.createDirectories(Paths.get("docs"))

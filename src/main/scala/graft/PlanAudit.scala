@@ -34,9 +34,6 @@ object PlanAudit {
     sb.append("# Physical plan audit (generated by graft.PlanAudit)\n\n")
     sb.append(s"Scale dir: `$sfDir`. Criteria: pushdown reaches the scan, ")
     sb.append("dims broadcast, no redundant exchanges, codegen spans wide.\n")
-    def explain(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
     Conf.withAuditNoFinal {
       audited.foreach { name =>
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -56,7 +53,7 @@ object PlanAudit {
       spark.conf.set(Conf.VerifySlices.key, "4")
       val df = try SparkEntry.queries("q37_ngram_jaccard")(spark, sfDir)
         finally spark.conf.unset(Conf.VerifySlices.key)
-      sb.append("\n## q37_ngram_jaccard (verifySlices=4 — sliced verify)\n\n```\n")
+      sb.append("\n## q37_ngram_jaccard (verifySlices=4 - sliced verify)\n\n```\n")
       sb.append(explain(df))
       sb.append("```\n")
       println("[audit] q37 sliced done")
@@ -81,7 +78,7 @@ object PlanAudit {
       SparkEntry.queries("q136_dedup_incremental")(spark, sfDir).count()
       val df = Conf.withAuditNoFinal(
         SparkEntry.queries("q137_dedup_incr_apply")(spark, sfDir))
-      sb.append("\n## q137_dedup_incr_apply (WARM — memoized pair table leaf)\n\n```\n")
+      sb.append("\n## q137_dedup_incr_apply (WARM - memoized pair table leaf)\n\n```\n")
       sb.append(explain(df))
       sb.append("```\n")
       println("[audit] q137 warm done")
@@ -91,4 +88,18 @@ object PlanAudit {
     println(s"wrote docs/PLANS.md (${audited.size + 2} plans)")
     spark.stop()
   }
+
+  /** `explain("formatted")` without the JVM's running counters — plan
+    * ids, expression ids, RDD ids and the identity hashes of lambdas
+    * and arrays printed as arguments — so a regenerated audit diffs
+    * only where a plan changed.
+    */
+  private[graft] def explain(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+      .replaceAll(",? ?\\[plan_id=\\d+\\]", "")
+      .replaceAll("#\\d+L?\\b", "")
+      .replaceAll("RDD\\[\\d+\\]", "RDD")
+      .replaceAll("\\$\\$Lambda\\$?[\\d/x]*[0-9a-f]*@[0-9a-f]+", "\\$\\$Lambda")
+      .replaceAll("(\\[+[A-Z]|\\[L[\\w.$]+;)@[0-9a-f]+", "$1")
 }

@@ -16,8 +16,8 @@ package graft
   * pairs instead of one opaque number — every instrumented query's
   * stages map covers its wall time.
   *
-  * CPU is process-wide (the loops are single-threaded driver-side by
-  * design — see [[ScopedConf]]'s session assumption), so a stage's cpu
+  * CPU is process-wide (each loop runs its rounds one after another
+  * on the one driver thread), so a stage's cpu
   * ≫ wall×1 means executor-side work, cpu ≈ wall means driver-bound,
   * wall ≫ cpu means off-JVM (host contention / IO).
   *

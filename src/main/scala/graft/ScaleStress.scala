@@ -109,13 +109,15 @@ object ScaleStress {
     * partition (a 1.7 GB single part file whose row-group-sized scan
     * buffers OOM'd q37), and repartition-before-write spools the
     * whole replicated table (~60 GB at ×2048) through shuffle scratch
-    * and filled the disk.
+    * and filled the disk. The base is read with its footer schema, so
+    * a TIMESTAMP(NANOS) `ts` replicates as the raw int64 the events
+    * loader expects.
     */
   private def replicated(spark: SparkSession, srcPath: String,
       rep: Int): DataFrame =
     spark.range(0L, rep.toLong, 1L, replWriteParts(spark, rep))
       .select(col("id").as("__r"))
-      .crossJoin(broadcast(spark.read.parquet(srcPath)))
+      .crossJoin(broadcast(Tables.read(spark, srcPath, nanosAsLong = true)))
 
   /** `docsOnly`: build just the dims + documents table. The distinct
     * dedup gate reads NOTHING else, and at ×2048 the unused
@@ -133,7 +135,6 @@ object ScaleStress {
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
     def repl(name: String, idCols: Seq[String], singleFile: Boolean = false): Unit = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val out = idCols.foldLeft(replicated(spark, s"$srcDir/$name.parquet", rep))(
           (d, c) => d.withColumn(c, col(c) + col("__r") * Base))
         .drop("__r")
@@ -308,8 +309,8 @@ object ScaleStress {
       .collect()(0).getLong(0)
     val total = scaled.count()
     val nBase = base.count()
-    println(f"[stress] $name distinct ×$rep: $total%,d pairs " +
-      f"(base $nBase%,d × $rep) in $secs%.1f s; cross-replica " +
+    println(f"[stress] $name distinct x$rep: $total%,d pairs " +
+      f"(base $nBase%,d x $rep) in $secs%.1f s; cross-replica " +
       f"$crossed, exact-pair violations $exactBad, near-pair " +
       f"deviation $nearDev/${rep * nBase}%,d instances")
     joined.filter(col("dev") =!= 0L).limit(5).collect().foreach(r =>
@@ -317,9 +318,9 @@ object ScaleStress {
     assert(crossed == 0L, s"$name emitted $crossed cross-replica pairs " +
       "(disjoint shingle spaces make any such pair impossible)")
     assert(exactBad == 0L,
-      s"$name ×$rep lost/invented exact-dup pairs ($exactBad rows)")
+      s"$name x$rep lost/invented exact-dup pairs ($exactBad rows)")
     assert(nearDev <= math.max(4L, rep * nBase / 1000L),
-      s"$name ×$rep near-pair deviation $nearDev exceeds 0.1% — " +
+      s"$name x$rep near-pair deviation $nearDev exceeds 0.1% - " +
         "systematic recall regression, not LSH draw noise")
     total
   }
@@ -363,7 +364,7 @@ object ScaleStress {
         (System.nanoTime() - t0) / 1e9)
     } finally {
       sampling = false
-      println(f"[stress] q37 ×$rep peak disk delta ${
+      println(f"[stress] q37 x$rep peak disk delta ${
         (free0 - minFree.get) / 1e9}%.2f GB (start free ${free0 / 1e9}%.2f " +
         f"GB, min free ${minFree.get / 1e9}%.2f GB)")
     }
@@ -446,10 +447,10 @@ object ScaleStress {
     }
     val (n36, cross36, ham036) =
       (row36.getLong(0), row36.getLong(1), row36.getLong(2))
-    println(f"[stress] q36 distinct ×$rep: $n36%,d pairs in $s36%.1f s " +
-      f"(base $nBase36%,d; within-replica hamming-0 $ham036%,d ≥ " +
+    println(f"[stress] q36 distinct x$rep: $n36%,d pairs in $s36%.1f s " +
+      f"(base $nBase36%,d; within-replica hamming-0 $ham036%,d >= " +
       f"${rep * nExactBase}%,d exact floor; cross-replica $cross36%,d " +
-      "— 64-bit-code collisions, true Hamming answers)")
+      "- 64-bit-code collisions, true Hamming answers)")
     assert(ham036 >= rep * nExactBase,
       s"q36 lost within-replica exact-dup pairs: $ham036 < ${rep * nExactBase}")
     // Linear-volume ceiling decomposed along what is and isn't a hash
@@ -467,7 +468,7 @@ object ScaleStress {
     val ceil36 = rep * nExactBase + 3L * rep * nearBase36 + 8L * rep + cross36
     assert(n36 <= ceil36,
       s"q36 distinct volume is super-linear: $n36 pairs vs ceiling $ceil36 " +
-        s"(base exact $nExactBase + near $nearBase36 × $rep)")
+        s"(base exact $nExactBase + near $nearBase36 x $rep)")
 
     // ---- q102: label table is R copies of the base's (bounded dev) ----
     val baseLbl = SparkEntry.queries("q102_dedup_cluster")(spark, srcDir)
@@ -492,11 +493,11 @@ object ScaleStress {
       .agg(coalesce(sum(col("dev")), lit(0L)).cast("long"))
       .collect()(0).getLong(0)
     val (nLbl, nBaseLbl) = (xLbl.count(), baseLbl.count())
-    println(f"[stress] q102 distinct ×$rep: $nLbl%,d labeled docs " +
-      f"(base $nBaseLbl%,d × $rep) in $sLbl%.1f s; deviation " +
+    println(f"[stress] q102 distinct x$rep: $nLbl%,d labeled docs " +
+      f"(base $nBaseLbl%,d x $rep) in $sLbl%.1f s; deviation " +
       f"$devLbl/${rep * nBaseLbl}%,d row instances")
     assert(devLbl <= math.max(8L, rep * nBaseLbl / 200L),
-      s"q102 ×$rep label deviation $devLbl exceeds 0.5% — systematic " +
+      s"q102 x$rep label deviation $devLbl exceeds 0.5% - systematic " +
         "clustering divergence, not pair-draw noise")
 
     // ---- q111/q112: apply/report conservation at corpus scale ----
@@ -521,8 +522,8 @@ object ScaleStress {
     val (nDocsX, nTextsX, nPairsX, nKeptX) =
       (row112.getAs[Long]("n_docs"), row112.getAs[Long]("n_distinct_texts"),
         row112.getAs[Long]("n_near_pairs"), row112.getAs[Long]("n_kept"))
-    println(f"[stress] q111/q112 distinct ×$rep: kept $n111%,d of " +
-      f"$nDocsX%,d docs (base kept $baseKept%,d × $rep) in " +
+    println(f"[stress] q111/q112 distinct x$rep: kept $n111%,d of " +
+      f"$nDocsX%,d docs (base kept $baseKept%,d x $rep) in " +
       f"$s111%.1f + $s112%.1f s")
     assert(nDocsX == rep * baseDocs,
       s"report n_docs $nDocsX != corpus ${rep * baseDocs}")
@@ -532,11 +533,11 @@ object ScaleStress {
     assert(nPairsX == q35Total,
       s"report n_near_pairs $nPairsX != the verified q35 total $q35Total")
     assert(nKeptX == n111,
-      s"report n_kept $nKeptX != apply's $n111 rows — kept + dropped " +
+      s"report n_kept $nKeptX != apply's $n111 rows - kept + dropped " +
         "no longer partitions the corpus")
     val devKept = math.abs(n111 - rep * baseKept)
     assert(devKept <= math.max(8L, rep * baseKept / 200L),
-      s"q111 ×$rep kept-count deviation $devKept exceeds 0.5% — " +
+      s"q111 x$rep kept-count deviation $devKept exceeds 0.5% - " +
         "systematic apply divergence, not pair-draw noise")
 
     // ---- q136: incremental ≡ full, at corpus scale ----
@@ -573,16 +574,16 @@ object ScaleStress {
       recon.filter(col("jaccard") < 1.0)
         .exceptAll(full.filter(col("jaccard") < 1.0)).count()
     val nIncr = xIncr.count()
-    println(f"[stress] q136 distinct ×$rep: $nIncr%,d incremental pairs " +
+    println(f"[stress] q136 distinct x$rep: $nIncr%,d incremental pairs " +
       f"(split $split136%,d) in $sIncr%.1f s (base-only rerun " +
       f"$sBase136%.1f s); exact missed/invented $exactMissed/" +
       f"$exactInvented, near deviation $nearDev136")
     assert(nIncr > 0, "q136 found no pairs touching the increment")
     assert(exactMissed == 0L && exactInvented == 0L,
-      s"q136 ∪ base-only diverged from the full rerun on EXACT pairs " +
+      s"q136 union base-only diverged from the full rerun on EXACT pairs " +
         s"($exactMissed missed, $exactInvented invented)")
     assert(nearDev136 <= math.max(4L, q35Total / 1000L),
-      s"q136 ∪ base-only near-pair deviation $nearDev136 exceeds 0.1% — " +
+      s"q136 union base-only near-pair deviation $nearDev136 exceeds 0.1% - " +
         "systematic incremental recall hole, not LSH draw noise")
 
     // ---- q137: incremental APPLY ≡ full apply, restricted (r13) ----
@@ -606,18 +607,18 @@ object ScaleStress {
     val dev137 = x137.exceptAll(fullKeptNew).count() +
       fullKeptNew.exceptAll(x137).count()
     val n137 = x137.count()
-    println(f"[stress] q137 distinct ×$rep: kept $n137%,d shard docs " +
+    println(f"[stress] q137 distinct x$rep: kept $n137%,d shard docs " +
       f"(full-rerun restriction $nFullNew%,d) in $s137%.1f s; " +
       f"symmetric difference $dev137")
     assert(n137 > 0, "q137 kept nothing for the increment shard")
     assert(dev137 <= math.max(8L, nFullNew / 200L),
-      s"q137 ×$rep kept-set deviation $dev137 exceeds 0.5% — systematic " +
+      s"q137 x$rep kept-set deviation $dev137 exceeds 0.5% - systematic " +
         "apply divergence, not pair-draw noise")
     } }
     Memo.release(outDir)
 
-    println(f"[stress] distinct ×$rep: corpus ×$rep, pair volume linear " +
-      "(≈ R × base) — the constant-near-dup-rate regime holds")
+    println(f"[stress] distinct x$rep: corpus x$rep, pair volume linear " +
+      "(~ R x base) - the constant-near-dup-rate regime holds")
   }
 
   def main(args: Array[String]): Unit = {
@@ -718,15 +719,15 @@ object ScaleStress {
       val tS = System.nanoTime()
       val res = runStreamFamily(spark, outDir, "file")
       val wall = (System.nanoTime() - tS) / 1e9
-      assert(res.forall(_._2 > 0), "a stream query returned no rows at ×" + rep)
+      assert(res.forall(_._2 > 0), "a stream query returned no rows at x" + rep)
       res.foreach { case (name, _, _, st) =>
         val bound = 2L * rep * baseState.getOrElse(name, 0L) + 64L
         assert(st <= bound,
           s"$name state rows $st exceed the linear bound $bound (base " +
-            s"${baseState.getOrElse(name, 0L)} × $rep) — super-linear " +
+            s"${baseState.getOrElse(name, 0L)} x $rep) - super-linear " +
             "state growth")
       }
-      println(f"[stress] stream family ×$rep distinct via file sink: " +
+      println(f"[stress] stream family x$rep distinct via file sink: " +
         f"${res.size} queries, ${res.map(_._2).sum}%,d total rows, " +
         f"${res.map(_._4).sum}%,d final-batch state rows, " +
         f"$wall%.1f s, zero errors, state linear in R")
@@ -951,7 +952,7 @@ object ScaleStress {
       }
       val n = row.getLong(0)
       val clique = row.getLong(1)
-      println(f"[stress] $name ×$rep: $n%,d pairs in $secs%.1f s; " +
+      println(f"[stress] $name x$rep: $n%,d pairs in $secs%.1f s; " +
         f"clique recall $clique%,d / $wantPairs%,d " +
         f"(${100.0 * clique / wantPairs}%.2f%%)")
       assert(clique == wantPairs, s"$name lost ${wantPairs - clique} clique pairs")
@@ -988,7 +989,7 @@ object ScaleStress {
       val badSizes = labels.select(col("cluster_size")).distinct()
         .filter(col("cluster_size") % rep =!= 0).count()
       val nClusters = labels.select(col("cluster_id")).distinct().count()
-      println(f"[stress] q102 ×$rep: $nLabeled%,d docs in $nClusters%,d " +
+      println(f"[stress] q102 x$rep: $nLabeled%,d docs in $nClusters%,d " +
         f"clusters in $secs%.1f s")
       assert(badSizes == 0, s"$badSizes cluster sizes not a multiple of $rep")
       assert(nLabeled > 0)
@@ -1008,10 +1009,10 @@ object ScaleStress {
       }
       val base = SparkEntry.queries("q133_pagerank")(spark, srcDir)
         .collect().map(_.toSeq).toSeq
-      println(f"[stress] q133 ×$rep: top-${x8.size} ranks in $secs%.1f s; " +
+      println(f"[stress] q133 x$rep: top-${x8.size} ranks in $secs%.1f s; " +
         s"replica-invariance ${if (x8 == base) "EXACT" else "BROKEN"}")
       assert(x8 == base,
-        "×R pagerank diverged from base — dedup or degree drift")
+        "xR pagerank diverged from base - dedup or degree drift")
     }
 
     // ANN at ×R: brute top-k scan, then IVF cold (sampled fit +
@@ -1027,7 +1028,7 @@ object ScaleStress {
     val brute = timeQuery("q39_ann_brute")
     val ivfCold = timeQuery("q51_ann_ivf")
     val ivfWarm = timeQuery("q51_ann_ivf")
-    println(f"[stress] q39 brute top-k ×$rep: $brute%.1f s; " +
+    println(f"[stress] q39 brute top-k x$rep: $brute%.1f s; " +
       f"q51 IVF cold $ivfCold%.1f s, warm $ivfWarm%.1f s")
     spark.stop()
   }

@@ -3,33 +3,34 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Temporarily override session confs around an EAGERLY-executed block.
+  * The two places graft still writes the caller's session go through
+  * here, each restoring exactly the explicitly set confs it found:
   *
-  * The iterative graph loops (connected components, PageRank) launch
-  * dozens of small jobs over KB–MB-sized label/rank tables. Per-job
-  * fixed costs dominate there — plan/codegen text construction and
-  * freshly compiled codegen classes per round were measured as the
-  * r2–r6 driver-bench spike (BENCH_r06: q102 315 CPU-s, q133 397 CPU-s
-  * vs 5–6 s for the same code warm; the watchdog dump caught the driver
-  * in codegen-string machinery, executors idle). Whole-stage codegen
-  * and AQE's replan loop buy nothing on tiny per-round plans, so the
-  * loops scope them OFF — in a try/finally so the caller's session
-  * (where both earn their keep on real scans) is untouched.
+  *  - a bounded stream drain's `start()` ([[withConf]]): the partition
+  *    cap, checkpoint manager and state-store provider are fixed into
+  *    the query when it starts. The drain starts on the caller's
+  *    session, not a clone, because a stream started from another
+  *    session reports to that session's listeners and catalog;
+  *  - the iterative graph loops ([[forLoopOf]]): q102's, q133's and
+  *    q137's rounds launch dozens of small jobs over KB-MB label/rank
+  *    tables, where whole-stage codegen and AQE's replanning cost more
+  *    than the rounds do. An A/B against plain session defaults on
+  *    perfbench (4 cores, 10 alternating pairs per workload) kept the
+  *    profile: without it the medians of `queries.q133_pagerank_s`
+  *    (4.97 -> 5.99 s) and `dedup.s` (12.6 -> 14.0 s) rose by more
+  *    than the quartile spread of the runs with it.
   *
   * Only valid around code whose Spark actions all run INSIDE `body`
-  * (the loops checkpoint eagerly each round); a lazily returned plan
-  * would be planned after restore, outside the scope.
+  * (the loops checkpoint eagerly each round, a stream is planned by
+  * `start()`); a lazily returned plan would be planned after restore,
+  * outside the scope.
   *
   * SINGLE-THREADED SESSION ASSUMPTION: the override mutates
-  * session-global SQL confs for the duration of `body` — any query
+  * session-global SQL confs for the duration of `body`, so a query
   * planned CONCURRENTLY on the same SparkSession (a parallel bench
-  * thread, a streaming micro-batch) would silently plan with
-  * codegen/AQE off, and nested scopes on different threads restore
-  * stale values. Every caller in this repo runs its loop on the one
-  * driver thread, on the CALLER's session (q102's, q133's and q137's
-  * loops alike): a query planned on that session from another thread
-  * while a loop runs sees the override. If concurrent use is ever
-  * needed, isolate via `SparkSession.cloneSession()` (confs are
-  * per-session) instead of widening this scope.
+  * thread, a streaming micro-batch) would plan with the override, and
+  * nested scopes on different threads restore stale values. Every
+  * caller runs on the one driver thread, on the caller's session.
   */
 object ScopedConf {
   def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {

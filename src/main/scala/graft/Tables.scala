@@ -30,20 +30,30 @@ object Tables {
     * one-task job, ~65 ms per load at bench scale). The conversion is
     * the one that job runs per footer, under the session's SQL conf
     * (`nanosAsLong`, `inferTimestampNTZ`, Spark's row-metadata key all
-    * apply), so the schema is exactly the inferred one. Directories —
-    * Spark-written part-file dirs — keep Spark's own listing and
-    * inference, which also discovers partition columns.
+    * apply), so the schema is exactly the inferred one. `nanosAsLong`
+    * reads a TIMESTAMP(NANOS) column as its raw int64 whatever the
+    * session says: the declared `LONG` is all the reader needs, so the
+    * caller's session is never written. Directories — Spark-written
+    * part-file dirs — keep Spark's own listing and inference, which
+    * also discovers partition columns.
     */
-  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def read(spark: SparkSession, path: String,
+      nanosAsLong: Boolean = false): DataFrame = {
     val p = new Path(path)
     val conf = spark.sessionState.newHadoopConf()
     // a missing path or a glob falls through to Spark's own error/match
     val isFile = scala.util.Try(p.getFileSystem(conf).getFileStatus(p))
       .toOption.exists(_.isFile)
     if (isFile) {
+      val c = spark.sessionState.conf
+      val converter = new ParquetToSparkSchemaConverter(
+        c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+        c.caseSensitiveAnalysis, c.parquetInferTimestampNTZEnabled,
+        nanosAsLong || c.legacyParquetNanosAsLong,
+        c.parquetFieldIdReadEnabled, c.parquetIgnoreVariantAnnotation,
+        c.parquetReaderRespectUnknownTypeAnnotation)
       val schema = ParquetFileFormat.readSchemaFromFooter(
-        new Footer(p, footer(p, conf)),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        new Footer(p, footer(p, conf)), converter)
       spark.read.schema(schema).parquet(path)
     } else spark.read.parquet(path)
   }
@@ -62,9 +72,9 @@ object Tables {
     * driver rounds, so the loader probes and adapts instead of
     * assuming:
     *  - TIMESTAMP(NANOS) (pandas ns, rounds 1-6): Spark has no ns
-    *    timestamp — read the raw int64
-    *    (`spark.sql.legacy.parquet.nanosAsLong`) and truncate to
-    *    microseconds, exactly what DuckDB does on the same file;
+    *    timestamp — declare the footer's int64 as `LONG` (see
+    *    [[read]]'s `nanosAsLong`) and truncate to microseconds, exactly
+    *    what DuckDB does on the same file;
     *  - timestamp[us] WITHOUT timezone (round 7+): Spark infers
     *    TIMESTAMP_NTZ, which watermarks and `unix_micros` reject —
     *    cast to TIMESTAMP. The session timezone is UTC everywhere in
@@ -72,8 +82,7 @@ object Tables {
     *    DuckDB's naive read of the same column.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = read(spark, s"$dir/events.parquet")
+    val raw = read(spark, s"$dir/events.parquet", nanosAsLong = true)
     raw.schema("ts").dataType match {
       case LongType =>
         // An int64 ts could be epoch-NANOS (TIMESTAMP(NANOS) read via

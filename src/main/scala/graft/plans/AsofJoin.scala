@@ -78,7 +78,7 @@ object AsofJoin {
     def sameType(what: String, l: Attribute, r: Attribute): Unit =
       if (l.dataType != r.dataType)
         throw new IllegalArgumentException(
-          s"asof: $what column types must match across sides — " +
+          s"asof: $what column types must match across sides - " +
             s"left ${l.name}: ${l.dataType.simpleString}, " +
             s"right ${r.name}: ${r.dataType.simpleString}")
     sameType("key", attr(lPlan, key), attr(rPlan, key))
@@ -171,7 +171,7 @@ object AsofJoin {
     val clash = payload.intersect(left.columns.toSeq)
     require(clash.isEmpty,
       s"asofNearest: right payload column(s) ${clash.mkString(", ")} " +
-        "collide with left columns — rename one side before joining")
+        "collide with left columns - rename one side before joining")
     val prefClash = payload.flatMap(c => Seq("__b_" + c, "__f_" + c))
       .intersect(left.columns.toSeq)
     require(prefClash.isEmpty,
@@ -185,7 +185,7 @@ object AsofJoin {
     require(intraClash.isEmpty,
       s"asofNearest: right payload column(s) ${intraClash.mkString(", ")} " +
         "collide with the internal __b_/__f_ prefix of another payload " +
-        "column — rename before joining")
+        "column - rename before joining")
     def tagged(df: DataFrame, tag: String): DataFrame =
       payload.foldLeft(df)((d, c) => d.withColumnRenamed(c, tag + c))
     val b = tagged(asof(left, right, key, leftTime, rightTime, toleranceUs), "__b_")

@@ -233,7 +233,7 @@ object DedupQueries {
 
     def escalateIf(s: SparkSession, cond: Boolean, why: => String): Unit =
       if (cond && !diskOnly && !Conf.pairStorageLevelPinned(s)) {
-        System.err.println(s"[graft] $why — pair checkpoints use " +
+        System.err.println(s"[graft] $why - pair checkpoints use " +
           "DISK_ONLY for this pipeline")
         diskOnly = true
       }
@@ -244,7 +244,7 @@ object DedupQueries {
       */
     def escalateFor(s: SparkSession, estPairRows: Long, tag: String): Unit =
       escalateIf(s, estPairRows >= Conf.PairDiskOnlyMinRows(s),
-        f"$tag: ~$estPairRows%,d estimated pair rows ≥ " +
+        f"$tag: ~$estPairRows%,d estimated pair rows >= " +
           Conf.PairDiskOnlyMinRows(s))
 
     def checkpoint(df: DataFrame): DataFrame =
@@ -359,7 +359,7 @@ object DedupQueries {
         lr.rdd.unpersist(false)
       case other => throw new IllegalArgumentException(
         "releaseCheckpoint expects a direct localCheckpoint frame " +
-          s"(a single LogicalRDD plan); got ${other.nodeName} — a " +
+          s"(a single LogicalRDD plan); got ${other.nodeName} - a " +
           "derived frame could free unrelated live checkpoints")
     }
 
@@ -1505,7 +1505,7 @@ object DedupQueries {
       obsFwd.get("fwd_members").asInstanceOf[Long] * 8L
     val runLevel3 = level3Rows <= Level3MaxRows
     if (!runLevel3)
-      System.err.println(f"[graft] simhash: level-3 re-block skipped — " +
+      System.err.println(f"[graft] simhash: level-3 re-block skipped - " +
         f"$level3Rows%,d keyed rows exceed $Level3MaxRows%,d; oversized " +
         "sub-buckets drop (visible via simhash_reblock metrics; " +
         "exact-code pairs kept)")

@@ -75,11 +75,13 @@ object GraphQueries {
     * (measured O(iters²) passes). The iteration loop runs under
     * [[graft.ScopedConf.forLoopOf]]: below ~100M edge cells per round
     * codegen + AQE are scoped OFF — the per-round plans are KB-sized
-    * and the fixed compile cost per round was the BENCH_r06 driver
-    * spike (397 CPU-s vs 5 s warm) — while a web-scale graph keeps
-    * both (per-row interpreted cost would dominate there, and
-    * compilation amortizes over billions of cells). All persisted
-    * intermediates are unpersisted before returning.
+    * and cost more to compile and replan than to run; on plain
+    * session defaults perfbench's q133 ran 4.97 -> 5.99 s (median of
+    * 10 alternating pairs, 4 cores), so the profile stays — while a
+    * web-scale graph keeps both (per-row interpreted cost would
+    * dominate there, and compilation amortizes over billions of
+    * cells). All persisted intermediates are unpersisted before
+    * returning.
     */
   /** `assumeRegular = true` skips the in/out-coverage census (a
     * 2E-row tagged shuffle) for graphs that are regular BY
@@ -213,7 +215,7 @@ object GraphQueries {
             val base = (15L * r0) / 100L
             // per-round volume = exploded edge cells; the loop profile
             // is size-gated (interpreted under the threshold, codegen +
-            // AQE above it — ScopedConf.forLoopOf)
+            // AQE above it), kept by the A/B cited above
             graft.ScopedConf.forLoopOf(s, eCells) {
               if (regular) {
                 // no checkpoint on the seed: its lineage is one hop

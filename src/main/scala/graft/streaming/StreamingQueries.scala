@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Conf, Tables}
+import graft.ScopedConf.withConf
 import graft.queries.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,14 +25,13 @@ object StreamingQueries {
     * ([[graft.Tables.events]]): the stored type is probed from the
     * parquet footer (a metadata-only batch read) because the driver's
     * generator has shipped `ts` both as TIMESTAMP(NANOS) (pandas ns —
-    * readable only as raw int64 via `nanosAsLong`, then truncated
+    * declared as its raw int64 from the footer, then truncated
     * µs-ward) and as plain TIMESTAMP(MICROS); a streaming source needs
     * its schema declared up front, so the declared type must match the
     * file, not an assumption.
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchRaw = Tables.read(s, s"$dir/events.parquet")
+    val batchRaw = Tables.read(s, s"$dir/events.parquet", nanosAsLong = true)
     val stored = batchRaw.schema("ts").dataType
     // Watermarks demand TIMESTAMP (local-tz): declare it for either
     // stored timestamp flavor — the file's µs payload is read as the
@@ -258,7 +258,7 @@ object StreamingQueries {
       } catch {
         case e: Exception =>
           System.err.println("[graft] row-count footer probe failed " +
-            s"for $key (${e.getClass.getSimpleName}: ${e.getMessage}) — " +
+            s"for $key (${e.getClass.getSimpleName}: ${e.getMessage}) - " +
             "intra-batch ingest unknown; the IN-HEAP state provider " +
             "will be kept regardless of batch size for this query")
           0L
@@ -332,7 +332,6 @@ object StreamingQueries {
     // state-store commits cost ~9x less (perfbench relational
     // `streaming.state_commit_ms` 352 -> 40 ms, 4 cores); fewer stores
     // still mean fewer commits, so 4 stands (see streamPartitionCap).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
     // Stage attribution (cf. the dedup/loop families): the stream
     // demos are the bench's last opaque walls. `<q>_start` is plan +
     // source listing + state-store setup, `<q>_drain_bN` the actual
@@ -359,8 +358,6 @@ object StreamingQueries {
     // class — see eventsRowCount): even a watermark-bounded query
     // must spill when ONE micro-batch ingests more rows than the
     // heap can buffer as intra-batch state.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
     val needRocks = corpusLinearState ||
       (ingestRows > HeapIngestMaxRows)
     // Changelog checkpointing rides along with the RocksDB pin (r16):
@@ -373,14 +370,11 @@ object StreamingQueries {
     // maintenance thread. Exactly-once semantics are unchanged (the
     // changelog replays over the last snapshot on recovery), so this
     // applies wherever corpus-linear state already forced RocksDB.
-    val clogKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prevClog = s.conf.getOption(clogKey)
-    if (useFile && needRocks) {
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      s.conf.set(clogKey, "true")
-    }
+    val rocks = if (useFile && needRocks) Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled" -> "true") else Nil
     // Checkpoint file manager: see checkpointFileManager. Memory-sink
     // drains checkpoint where Spark puts an unnamed query's checkpoint
     // (the session's checkpoint root, else a temp dir). A manager the
@@ -395,11 +389,17 @@ object StreamingQueries {
         else s.conf.getOption("spark.sql.streaming.checkpointLocation")
           .getOrElse(System.getProperty("java.io.tmpdir")),
         s.sessionState.newHadoopConf())
+    // The drain starts on the CALLER's session inside one scoped
+    // window, not on a clone carrying these confs: a stream started
+    // from another session reports to that session's listeners (the
+    // caller's StreamingQueryListener saw 0 of 3 events), registers
+    // its memory-sink view in that session's catalog, and leaves one
+    // more listener on the SparkContext bus per drain.
+    val scoped = Seq("spark.sql.shuffle.partitions" -> streamPartitionCap(
+      s.conf.get("spark.sql.shuffle.partitions").toInt).toString) ++
+      ckptManager.map(ckptKey -> _) ++ rocks
     val q = graft.RoundStats.timed(s"${prefix}_start") {
-      try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          streamPartitionCap(prev.toInt).toString)
-        ckptManager.foreach(s.conf.set(ckptKey, _))
+      withConf(s, scoped: _*) {
         if (!useFile)
           df.writeStream.outputMode(mode).format("memory")
             .queryName(name).start()
@@ -425,19 +425,6 @@ object StreamingQueries {
           throw new IllegalArgumentException(
             s"file snapshot sink supports Append/Complete, not $mode " +
               "(Update emits deltas; a full-state snapshot would be wrong)")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        if (ckptManager.isDefined) s.conf.unset(ckptKey)
-        if (useFile && needRocks) {
-          prevProv match {
-            case Some(p) => s.conf.set(provKey, p)
-            case None    => s.conf.unset(provKey)
-          }
-          prevClog match {
-            case Some(p) => s.conf.set(clogKey, p)
-            case None    => s.conf.unset(clogKey)
-          }
-        }
       }
     }
     try {

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graft's tuning surface is exactly what [[Conf]] declares: every
   * kept conf fails loudly on a bad value at its first read, the
   * `SPARK_GRAFT_CONF` parser rejects malformed entries by name, and a
-  * source scan keeps the surface from growing back outside `Conf`.
+  * source scan keeps the surface from growing back outside `Conf`. The
+  * same scan keeps log text ASCII.
   */
 class ConfSurfaceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -131,6 +132,16 @@ class ConfSurfaceSpec extends AnyFunSuite {
         s"$name names an undeclared conf: ${confKey.findAllIn(src).toSet -- Conf.keys}")
       assert(envVar.findAllIn(src).toSet.subsetOf(Conf.envVars),
         s"$name names an undeclared env var: ${envVar.findAllIn(src).toSet -- Conf.envVars}")
+    }
+  }
+
+  // Under a JVM whose default charset is not UTF-8 a non-ASCII
+  // character prints as `?`: `[stress] q36 distinct ?70` loses the
+  // replication factor. Comments may use any character; code may not.
+  test("src/main log and error text is ASCII") {
+    sources.foreach { case (name, src) =>
+      val bad = code(src).linesIterator.filter(_.exists(_ > '\u007f')).toSeq
+      assert(bad.isEmpty, s"$name has non-ASCII text: ${bad.map(_.trim).mkString(" | ")}")
     }
   }
 

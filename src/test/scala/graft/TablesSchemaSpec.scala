@@ -24,20 +24,32 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   private def inferred(path: String) = spark.read.parquet(path).schema
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `body` with `nanosAsLong` set on the shared session, which Spark's
+    * own inference of a TIMESTAMP(NANOS) file needs; unset after, so no
+    * later test runs with it.
+    */
+  private def withNanosAsLong[A](body: => A): A = {
+    spark.conf.set(nanosAsLong, "true")
+    try body finally spark.conf.unset(nanosAsLong)
+  }
+
   test("footer schema equals Spark's inferred schema for every sf table") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for (t <- tables) {
-      val path = s"$sf/$t.parquet"
-      assert(Tables.read(spark, path).schema === inferred(path), t)
+    withNanosAsLong {
+      for (t <- tables) {
+        val path = s"$sf/$t.parquet"
+        assert(Tables.read(spark, path).schema === inferred(path), t)
+      }
+      // the public loaders: only `events.ts` is normalized (NTZ → TIMESTAMP
+      // in this layout); every other table loads exactly as inferred
+      for (t <- tables.filterNot(_ == "events"))
+        assert(Tables(spark, sf, t).schema === inferred(s"$sf/$t.parquet"), t)
+      val events = inferred(s"$sf/events.parquet")
+      assert(Tables.events(spark, sf).schema === events.copy(fields =
+        events.fields.map(f =>
+          if (f.name == "ts") f.copy(dataType = TimestampType) else f)))
     }
-    // the public loaders: only `events.ts` is normalized (NTZ → TIMESTAMP
-    // in this layout); every other table loads exactly as inferred
-    for (t <- tables.filterNot(_ == "events"))
-      assert(Tables(spark, sf, t).schema === inferred(s"$sf/$t.parquet"), t)
-    val events = inferred(s"$sf/events.parquet")
-    assert(Tables.events(spark, sf).schema === events.copy(fields =
-      events.fields.map(f =>
-        if (f.name == "ts") f.copy(dataType = TimestampType) else f)))
   }
 
   test("Spark-written part-file directory and part file keep Spark's schema") {
@@ -81,10 +93,9 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("both events.ts layouts: footer schema equals inferred, same instant") {
     val instantUs = 1700000000000000L // 2023-11-14T22:13:20 in µs
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for ((unit, stored, expectTs) <- Seq(
         ("NANOS", instantUs * 1000L, LongType),
-        ("MICROS", instantUs, TimestampNTZType))) {
+        ("MICROS", instantUs, TimestampNTZType))) withNanosAsLong {
       val dir = eventsFile(unit, stored)
       val path = s"$dir/events.parquet"
       val raw = Tables.read(spark, path).schema
@@ -102,6 +113,23 @@ class TablesSchemaSpec extends AnyFunSuite {
       assert(Tables.read(spark, path).schema("ts").dataType === TimestampType)
       assert(Tables.read(spark, path).schema === inferred(path))
     } finally spark.conf.unset(ntzOff)
+  }
+
+  test("with nanosAsLong unset, both events.ts layouts load the same instant and leave it unset") {
+    // a fresh session: nothing any other test set applies here
+    val s = spark.newSession()
+    assert(!s.conf.getAll.contains(nanosAsLong))
+    val instantUs = 1700000000000000L
+    val dirs = Seq(eventsFile("NANOS", instantUs * 1000L),
+      eventsFile("MICROS", instantUs))
+    val batch = dirs.map(d =>
+      Tables.events(s, d).select(unix_micros(col("ts"))).head.getLong(0))
+    assert(batch === Seq(instantUs, instantUs))
+    val streamed = dirs.map(d =>
+      SparkEntry.queries("q28_stream_tumble")(s, d).collect().toSeq)
+    assert(streamed.head.nonEmpty)
+    assert(streamed.head === streamed.last, "the stream read another instant")
+    assert(!s.conf.getAll.contains(nanosAsLong), "a loader set nanosAsLong")
   }
 
   test("a single-file load starts no Spark job") {
