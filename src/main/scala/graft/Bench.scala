@@ -172,7 +172,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = Conf.sfDir
-    val cpus = Conf.cpus(4)
+    val cpus = Conf.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -5,7 +5,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** graft's whole tuning surface: every `spark.graft.*` session conf and
   * every `SPARK_GRAFT_*` environment variable the library reads, each
-  * with its default, plus the one system property the plan dumps set.
+  * with its default. The library reads no JVM system property.
   * Nothing else in `src/main` reads any of them (pinned by
   * `ConfSurfaceSpec`). A malformed value throws an
   * `IllegalArgumentException` naming the setting and the value at its
@@ -95,24 +95,6 @@ object Conf {
   /** Every declared `spark.graft.*` key. */
   val keys: Set[String] = settable.keySet
 
-  // ------------------------------------------------- system property
-
-  /** JVM system property that makes the dedup pipelines skip their
-    * final checkpoint, so a plan dump shows the verify-join plan
-    * instead of an opaque checkpoint scan (see
-    * `DedupQueries.finalStage`). Set only through [[withAuditNoFinal]];
-    * not a tuning value.
-    */
-  val AuditNoFinalProp = "graft.audit.nofinal"
-
-  def auditNoFinal: Boolean = sys.props.get(AuditNoFinalProp).contains("true")
-
-  /** Run `body` with [[auditNoFinal]] on. */
-  def withAuditNoFinal[T](body: => T): T = {
-    sys.props(AuditNoFinalProp) = "true"
-    try body finally sys.props.remove(AuditNoFinalProp)
-  }
-
   // ------------------------------------------------------ environment
 
   val SfDirVar = "SPARK_GRAFT_SF_DIR"
@@ -131,10 +113,10 @@ object Conf {
   def sfDir: String = env(SfDirVar).getOrElse("/root/testdata/sf0.1")
 
   /** Cores (`local[N]`, and the session's shuffle partitions) of the
-    * Bench, Verify and PlanDump sessions.
+    * Bench and Verify sessions; unset, 4.
     */
-  def cpus(default: Int): Int =
-    env(CpusVar).fold(default)(v =>
+  def cpus: Int =
+    env(CpusVar).fold(4)(v =>
       v.trim.toIntOption.filter(_ > 0).getOrElse(
         throw invalid(CpusVar, v, "a positive whole number")))
 

@@ -1,27 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import java.nio.file.{Files, Paths}
+import java.util.regex.{Matcher, Pattern}
 
-/** Dumps `explain("formatted")` for headline queries → docs/PLANS.md.
+/** Dumps `explain("formatted")` for every query → docs/PLANS.md.
   * The audit criteria (SURVEY.md §4): filters/projections pushed to
   * the parquet scan, broadcast joins on dim tables, no redundant
   * exchanges, whole-stage codegen spans over the hot expressions.
+  *
+  * Each query is built inside [[Profile.actions]] on a dir with no
+  * memoized stages, so its section shows the executed plan of every
+  * action its construction ran (each distinct plan once, with the
+  * action names and counts), then the plan of the returned frame. A
+  * checkpoint-final pipeline's verify join is the plan of its last
+  * `localCheckpoint`; the returned frame scans that checkpoint. A
+  * streaming entry's micro-batch plans are construction actions too;
+  * its returned frame reads the drained snapshot.
+  *
+  * Usage: runMain graft.PlanAudit [sfDir]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    // Audit-only: skip the dedup pipelines' final-stage checkpoint so
-    // their verify-join plans (the broadcast-fetch shape the 100 TB
-    // story rests on) appear in the audit instead of an opaque
-    // `Scan ExistingRDD` leaf (see DedupQueries.finalStage); the main
-    // loop below runs under Conf.withAuditNoFinal.
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    // r15 (VERDICT r14 #3): the audit covers EVERY SparkEntry query —
-    // the curated subset left q135-q139 (CDC merge, both incremental-
-    // dedup and both streaming-dedup flagships) with no recorded plan
-    // evidence. Streaming entries audit as their drained-snapshot
-    // batch plan (the sink read) — the STREAMING plan evidence lives
-    // in the stream1 probe's per-batch progress and the ×R gates.
     val audited = SparkEntry.queries.keys.toSeq.sorted
     val spark = SparkSession.builder()
       .master("local[8]")
@@ -34,72 +36,94 @@ object PlanAudit {
     sb.append("# Physical plan audit (generated by graft.PlanAudit)\n\n")
     sb.append(s"Scale dir: `$sfDir`. Criteria: pushdown reaches the scan, ")
     sb.append("dims broadcast, no redundant exchanges, codegen spans wide.\n")
-    Conf.withAuditNoFinal {
-      audited.foreach { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        sb.append(s"\n## $name\n\n```\n")
-        sb.append(explain(df))
-        sb.append("```\n")
-        println(s"[audit] $name done")
+    sb.append("Each section lists the executed plan of every action the ")
+    sb.append("query's construction ran, then the plan of the returned frame.\n")
+    def section(title: String)(build: => DataFrame): Unit = {
+      val (df, actions) = Profile.actions(spark)(build)
+      val plans = actions.map(a => explain(a.qe) -> a.name)
+      sb.append(s"\n## $title\n")
+      plans.map(_._1).distinct.foreach { plan =>
+        val names = plans.collect { case (`plan`, n) => n }
+        val counts = names.distinct.sorted.map(n => s"$n x${names.count(_ == n)}")
+        sb.append(s"\n### Construction action: ${counts.mkString(", ")}\n\n```\n$plan```\n")
       }
+      sb.append(s"\n### Returned frame\n\n```\n${explain(df.queryExecution)}```\n")
+      println(s"[audit] $title done")
     }
-    // Extra shapes the per-entry loop can't show (VERDICT r14 #3):
-    // (a) q37 with verifySlices > 1 — the sliced verify's production
-    //     plan is a union of per-slice checkpoint leaves (each slice
-    //     was materialized and its intermediates released at
-    //     construction); audited WITHOUT nofinal so the leaves are
-    //     the real shape. The k=1 default plan is the q37 entry above.
-    locally {
-      spark.conf.set(Conf.VerifySlices.key, "4")
-      val df = try SparkEntry.queries("q37_ngram_jaccard")(spark, sfDir)
-        finally spark.conf.unset(Conf.VerifySlices.key)
-      sb.append("\n## q37_ngram_jaccard (verifySlices=4 - sliced verify)\n\n```\n")
-      sb.append(explain(df))
-      sb.append("```\n")
-      println("[audit] q37 sliced done")
-    }
-    // (b) q137 WARM — after a q136 run populated the standing-index
-    //     and pair memos, the apply plan consumes the memoized pair
-    //     checkpoint as a leaf (Scan ExistingRDD) instead of
-    //     recomputing the pipeline; this is the shape the r14 bench
-    //     fix shipped and the spec pins by stage list.
-    locally {
-      // q136 runs CLEAN so the memoized pair table is a materialized
-      // checkpoint leaf; nofinal is then set for the q137 construction
-      // only, so ITS final checkpoint doesn't hide the apply shape —
-      // the audited plan is the cc/final join CONSUMING the memo leaf
-      // (Scan ExistingRDD) instead of recomputing the pair pipeline.
-      // The main audit loop above already constructed q136 under
-      // nofinal, memoizing the UN-checkpointed pair plan with
-      // unchanged input files — release the dir's stages first or this
-      // "clean" run memo-hits the poisoned entry and the warm plan below
-      // shows the recomputed pipeline instead of the memo leaf (ADVICE r15).
+    audited.foreach { name =>
       Memo.release(sfDir)
-      SparkEntry.queries("q136_dedup_incremental")(spark, sfDir).count()
-      val df = Conf.withAuditNoFinal(
-        SparkEntry.queries("q137_dedup_incr_apply")(spark, sfDir))
-      sb.append("\n## q137_dedup_incr_apply (WARM - memoized pair table leaf)\n\n```\n")
-      sb.append(explain(df))
-      sb.append("```\n")
-      println("[audit] q137 warm done")
+      section(name)(SparkEntry.queries(name)(spark, sfDir))
     }
+    // Shapes the per-entry loop can't show:
+    // (a) q37 with verifySlices > 1: the sliced verify's plan is a
+    //     union of per-slice checkpoint leaves, each slice materialized
+    //     and its intermediates released at construction.
+    ScopedConf.withConf(spark, Conf.VerifySlices.key -> "4")(
+      section("q37_ngram_jaccard (verifySlices=4 - sliced verify)")(
+        SparkEntry.queries("q37_ngram_jaccard")(spark, sfDir)))
+    // (b) q137 WARM: after a q136 run memoized the standing index and
+    //     the pair table, the apply plan consumes the pair checkpoint
+    //     as a leaf (Scan ExistingRDD) instead of recomputing the pair
+    //     pipeline.
+    SparkEntry.queries("q136_dedup_incremental")(spark, sfDir).count()
+    section("q137_dedup_incr_apply (WARM - memoized pair table leaf)")(
+      SparkEntry.queries("q137_dedup_incr_apply")(spark, sfDir))
     Files.createDirectories(Paths.get("docs"))
     Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
-    println(s"wrote docs/PLANS.md (${audited.size + 2} plans)")
+    println(s"wrote docs/PLANS.md (${audited.size + 2} sections)")
     spark.stop()
   }
 
   /** `explain("formatted")` without the JVM's running counters — plan
-    * ids, expression ids, RDD ids and the identity hashes of lambdas
-    * and arrays printed as arguments — so a regenerated audit diffs
-    * only where a plan changed.
+    * ids, expression ids, RDD ids, identity hashes, random UUIDs and
+    * nanoTime-named sinks — with codegen and query-stage ids numbered
+    * in plan order rather than in the order stages happened to run,
+    * and with distinct-aggregate groups in name order, so a
+    * regenerated audit diffs only where a plan changed.
     */
-  private[graft] def explain(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+  private[graft] def explain(qe: QueryExecution): String = {
+    val plan = qe.explainString(FormattedMode)
       .replaceAll(",? ?\\[plan_id=\\d+\\]", "")
       .replaceAll("#\\d+L?\\b", "")
       .replaceAll("RDD\\[\\d+\\]", "RDD")
       .replaceAll("\\$\\$Lambda\\$?[\\d/x]*[0-9a-f]*@[0-9a-f]+", "\\$\\$Lambda")
-      .replaceAll("(\\[+[A-Z]|\\[L[\\w.$]+;)@[0-9a-f]+", "$1")
+      .replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "")
+      .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "uuid")
+      .replaceAll("(?<=\\w)_\\d{10,}\\b", "")
+    val ids = scala.collection.mutable.Map[(Char, String), Int]()
+    sortDistinctGroups("(\\[codegen id : |QueryStage\n(?:Output[^\n]*\n)?Arguments: )(\\d+)".r
+      .replaceAllIn(plan, m => Matcher.quoteReplacement(m.group(1) + ids.getOrElseUpdate(
+        (m.group(1).head, m.group(2)), ids.keys.count(_._1 == m.group(1).head) + 1))))
+  }
+
+  /** Spark's distinct-aggregate rewrite (an `Expand` that tags each
+    * row with a `gid`) orders its distinct groups by hashes of
+    * expression ids, which differ per JVM. With one column per group,
+    * put the groups in column-name order: renumber `gid` and reorder
+    * the group columns in the `Expand` and in every list after it.
+    * Other shapes are left as they are.
+    */
+  private[graft] def sortDistinctGroups(plan: String): String = {
+    val expandArgs = "(?m)^Arguments: \\[\\[(.*)\\]\\], \\[(.*, gid\\b.*)\\]$".r
+    expandArgs.findFirstMatchIn(plan).fold(plan) { m =>
+      val projs = m.group(1).split("\\], \\[").toSeq.map(_.split(", ").toSeq)
+      val out = m.group(2).split(", ").toSeq
+      // the column gid j adds: the one slot projection j fills and gid 0's
+      // leaves null; Spark lays the groups' columns out in gid order
+      lazy val slots = projs.tail.map(p => out.indices.filter(i => p(i) != "null" && projs.head(i) == "null"))
+      if (projs.exists(_.size != out.size) || slots.exists(_.size != 1)) plan else {
+        val cols = slots.map(s => out(s.head))
+        val sorted = cols.sorted
+        val expand = (projs.head +: projs.tail.zip(slots).zip(sorted).map {
+          case ((p, s), c) => p.updated(s.head, c) }).map(_.mkString("[", ", ", "]"))
+        val run = cols.map(c => s"((?:[^,\\[\\]]*? AS )?${Pattern.quote(c)})")
+          .mkString("(?<=[\\[(]|, )", ", ", "(?=[,\\])])").r
+        val rest = run.replaceAllIn(s"[${m.group(2)}]${plan.substring(m.end)}", r =>
+          Matcher.quoteReplacement(sorted.map(c => r.group(cols.indexOf(c) + 1)).mkString(", ")))
+        plan.substring(0, m.start) + expand.mkString("Arguments: [", ", ", "], ") +
+          "\\(gid = ([1-9]\\d*)\\)".r.replaceAllIn(rest,
+            r => cols.lift(r.group(1).toInt - 1).fold(r.matched)(c => s"(gid = ${sorted.indexOf(c) + 1})"))
+      }
+    }
+  }
 }

@@ -15,7 +15,7 @@ object Verify {
     // probe inside its artifact.
     Bench.concurrentGraftJvms().foreach(p =>
       System.err.println(s"[verify] WARNING: concurrent graft process $p"))
-    val cpus = Conf.cpus(4)
+    val cpus = Conf.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -527,17 +527,13 @@ object DedupQueries {
 
   /** Final-stage materialization of a pipeline's verified pairs: an
     * output-sized timed `localCheckpoint` (the bench attributes it;
-    * downstream consumers get a leaf scan). Under
-    * [[Conf.auditNoFinal]] (set by the plan dumps)
-    * the checkpoint is SKIPPED so the audit documents the verify-join
-    * plan itself — otherwise every checkpoint-final pipeline audits
-    * as an opaque `Scan ExistingRDD` and the broadcast-verify shape
-    * disappears from docs/PLANS.md.
+    * downstream consumers get a leaf scan). The verify-join plan it
+    * ran is the executed plan of that `localCheckpoint` action, which
+    * `graft.Profile.actions` captures (docs/PLANS.md shows it).
     */
   private def finalStage(tag: String, store: PairStorage)(
       df: => DataFrame): DataFrame =
-    if (Conf.auditNoFinal) df
-    else graft.RoundStats.timed(tag) { store.checkpoint(df) }
+    graft.RoundStats.timed(tag)(store.checkpoint(df))
 
   /** Exact Jaccard over the HASHED feature encoding: both sides are
     * sorted distinct 64-bit shingle/gram hash arrays (the same `hs`
@@ -636,12 +632,11 @@ object DedupQueries {
     pairTable(s0, dir).pairs
 
   /** The `near_dup_pairs` stage: the pairs, their row count observed ON
-    * the minhash_final checkpoint's own materialization job (None only
-    * when the audit skipped that checkpoint), and the pipeline's
-    * storage level, which q102's label loop reuses for its edge-sized
-    * checkpoints.
+    * the minhash_final checkpoint's own materialization job, and the
+    * pipeline's storage level, which q102's label loop reuses for its
+    * edge-sized checkpoints.
     */
-  private final case class PairTable(pairs: DataFrame, count: Option[Long],
+  private final case class PairTable(pairs: DataFrame, count: Long,
       store: PairStorage)
 
   private def pairTable(s0: SparkSession, dir: String): PairTable =
@@ -649,13 +644,11 @@ object DedupQueries {
       val store = new PairStorage
       def pairs = minHashPairs(fanOut(
         Tables.documents(s0, dir).select(col("doc_id"), col("text"))), store)
-      if (Conf.auditNoFinal) // cf. finalStage: audit skips it
-        PairTable(pairs, None, store)
-      else graft.RoundStats.timed("minhash_final") {
+      graft.RoundStats.timed("minhash_final") {
         val obs = Observation()
         val out = store.checkpoint(
           pairs.observe(obs, count(lit(1)).as("n_pairs")))
-        PairTable(out, Some(obs.get("n_pairs").asInstanceOf[Long]), store)
+        PairTable(out, obs.get("n_pairs").asInstanceOf[Long], store)
       }
     }(t => Seq(t.pairs))
 
@@ -1246,14 +1239,8 @@ object DedupQueries {
     // `pairsOverride` is the memoized q136 table (q137's entry path —
     // the r13 bench showed the full pipeline re-running here); the
     // default keeps the explicit-index day-by-day surface. Either way
-    // finalStage already lineage-cut it to a LogicalRDD leaf — only
-    // re-checkpoint when the audit harness skipped that cut (a second
-    // bigCheckpoint of a leaf just copies the blocks).
-    val pairs0 = pairsOverride.getOrElse(incrementalPairsWith(idx, dir, until))
-    val pairs =
-      if (pairs0.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) pairs0
-      else idx.store.checkpoint(pairs0)
+    // finalStage already lineage-cut it to a checkpoint leaf.
+    val pairs = pairsOverride.getOrElse(incrementalPairsWith(idx, dir, until))
     val vsBase = pairs.filter(col("vs_base"))
       .select(col("b").as("id")).distinct()
     val nn = pairs.filter(!col("vs_base")).select(col("a"), col("b"))
@@ -1978,12 +1965,8 @@ object DedupQueries {
     val fin = finalStage("gram_final", store) { exactPairs.union(verified) }
     // On the split path the final union COPIED the exact-shortcut and
     // slice-output blocks into its own lineage-cut checkpoint — they
-    // are dead the moment it lands. Guarded on the final actually
-    // being a checkpoint leaf: under the audit's nofinal the returned
-    // plan still READS them (releasing would corrupt it).
-    if (splitPairs &&
-        fin.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) {
+    // are dead the moment it lands.
+    if (splitPairs) {
       releaseCheckpoint(exactPairs)
       sliceOuts.foreach(releaseCheckpoint)
     }
@@ -2305,10 +2288,9 @@ object DedupQueries {
       // (1579 s green) and width 8 runs out of device mid-loop.
       val cap = math.max(4L, s0.sparkContext.defaultParallelism / 4L)
       // pair volume observed on the pair checkpoint's own job
-      // — no per-invocation count action (VERDICT r10 #4); a leaf count
-      // only when the audit skipped that checkpoint
+      // — no per-invocation count action (VERDICT r10 #4)
       val loopParts = math.max(4L, math.min(cap,
-        2L * table.count.getOrElse(table.pairs.count()) / 4000000L)).toInt
+        2L * table.count / 4000000L)).toInt
       // Min-label with automatic escalation to large-star/small-star
       // if the graph's diameter exceeds the round cap (r6: the cap
       // used to return silently-partial labels on a long chain; now

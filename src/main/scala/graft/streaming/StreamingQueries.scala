@@ -377,8 +377,9 @@ object StreamingQueries {
         "changelogCheckpointing.enabled" -> "true") else Nil
     // Checkpoint file manager: see checkpointFileManager. Memory-sink
     // drains checkpoint where Spark puts an unnamed query's checkpoint
-    // (the session's checkpoint root, else a temp dir). A manager the
-    // session already names is kept. Like the partition cap, the
+    // (the session's checkpoint root, else a local temp dir, whose
+    // scheme-less path resolves like `.`). A manager the session
+    // already names is kept. Like the partition cap, the
     // class is fixed into the query when it starts (the stream clones
     // the session), so the session conf is restored right after.
     val ckptKey = "spark.sql.streaming.checkpointFileManagerClass"
@@ -387,7 +388,7 @@ object StreamingQueries {
       else checkpointFileManager(
         if (useFile) s"$fileBase/ckpt"
         else s.conf.getOption("spark.sql.streaming.checkpointLocation")
-          .getOrElse(System.getProperty("java.io.tmpdir")),
+          .getOrElse("."),
         s.sessionState.newHadoopConf())
     // The drain starts on the CALLER's session inside one scoped
     // window, not on a clone carrying these confs: a stream started

@@ -28,8 +28,9 @@ object GraftSqlBridge {
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 
-  /** Drain the listener bus (test-only: job-count assertions read
-    * listener-fed counters, and delivery is asynchronous).
+  /** Drain the listener bus: listener delivery is asynchronous, so a
+    * reader of listener-fed records (job counts, Bench's scheduler
+    * windows, `graft.Profile`) drains it before reading.
     */
   def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

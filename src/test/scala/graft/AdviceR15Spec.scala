@@ -3,10 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Direct-evidence closures for the ADVICE r15 items:
-  *  1. the plan audit's warm-q137 block evicts the nofinal-poisoned
-  *     pair memo before the clean q136 run, so the memoized pair
-  *     table really is a checkpoint leaf (Scan ExistingRDD) — the
-  *     shape docs/PLANS.md's WARM section claims;
+  *  1. the memoized q136 pair table is a checkpoint leaf (Scan
+  *     ExistingRDD) after a construction under `Profile.actions`, the
+  *     shape docs/PLANS.md's WARM q137 section shows;
   *  2. tableRowCount recurses into nested/partitioned parquet layouts
   *     and treats an empty file list under a real directory as a
   *     LOGGED probe failure (uncached), never a silent cached 0;
@@ -25,29 +24,21 @@ class AdviceR15Spec extends AnyFunSuite {
 
   test("warm-audit sequence: evicting the nofinal-poisoned memo yields a " +
       "checkpoint-leaf pair table; without the evict the memo is poisoned") {
+    // Every construction checkpoints its pair table, and an audit
+    // reads plans through Profile.actions rather than skipping the
+    // final checkpoint, so no construction memoizes an un-checkpointed
+    // table. Pinned: q136 built under the capture (the audit loop's
+    // shape), then run clean with no evict, leaves a checkpoint leaf.
     import graft.queries.DedupQueries
-    def pairLeaf(): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-      DedupQueries.incrementalPairs(spark, sf).queryExecution.analyzed
-    def isCkpt(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-      p.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    // the audit main loop's shape: q136 constructed under nofinal —
-    // this memoizes the UN-checkpointed pair plan (fingerprint valid)
     Memo.release(sf)
-    Conf.withAuditNoFinal(SparkEntry.queries("q136_dedup_incremental")(spark, sf))
-    // the r15 bug: a "clean" run WITHOUT eviction memo-hits the
-    // poisoned entry — the pair table is NOT a checkpoint leaf
+    val (_, actions) = Profile.actions(spark)(
+      SparkEntry.queries("q136_dedup_incremental")(spark, sf))
+    assert(actions.exists(_.name == "localCheckpoint"))
     SparkEntry.queries("q136_dedup_incremental")(spark, sf).count()
-    assert(!isCkpt(pairLeaf()),
-      "expected the nofinal-poisoned memo to survive a clean run " +
-        "(the bug this spec pins); did the memo key change?")
-    // the fix (PlanAudit's warm block): evict, THEN run clean — the
-    // rebuilt memo is the materialized checkpoint leaf the audit's
-    // WARM section documents
-    Memo.release(sf)
-    SparkEntry.queries("q136_dedup_incremental")(spark, sf).count()
-    assert(isCkpt(pairLeaf()),
-      "clean q136 did not memoize a checkpointed pair table — the " +
-        "warm q137 audit would show a recomputed pipeline again")
+    assert(DedupQueries.incrementalPairs(spark, sf).queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      "q136 memoized a pair table that is not a checkpoint leaf - the " +
+        "warm q137 audit would show a recomputed pipeline")
     Memo.release(sf)
   }
 

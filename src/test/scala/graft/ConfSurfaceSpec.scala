@@ -149,7 +149,6 @@ class ConfSurfaceSpec extends AnyFunSuite {
     val reads = Seq(
       "sys\\.env" -> "an environment read",
       "getenv" -> "an environment read",
-      "sys\\.props" -> "a system property read",
       "\"spark\\.graft\\." -> "a graft conf literal",
       "\"SPARK_GRAFT_" -> "a graft env literal",
       "conf\\s*\\.\\s*get\\w*\\(\\s*Conf\\." -> "a graft conf read")
@@ -157,6 +156,19 @@ class ConfSurfaceSpec extends AnyFunSuite {
       val body = code(src)
       reads.foreach { case (pattern, what) =>
         assert(pattern.r.findFirstIn(body).isEmpty, s"$name has $what ($pattern)")
+      }
+    }
+  }
+
+  // The surface holds no JVM system property: a harness reads a
+  // pipeline's plans through `Profile.actions` instead of a property
+  // that makes the pipeline skip a step.
+  test("src/main reads no JVM system property") {
+    sources.foreach { case (name, src) =>
+      val body = code(src)
+      Seq("sys\\.props", "System\\.getPropert", "System\\.setProperty",
+          "System\\.clearProperty").foreach { pattern =>
+        assert(pattern.r.findFirstIn(body).isEmpty, s"$name reads a system property ($pattern)")
       }
     }
   }

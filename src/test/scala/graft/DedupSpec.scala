@@ -645,11 +645,13 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("q36 contract probes plan corpus/output-sized joins as sort-merge") {
-    // the entry checkpoints its 1-row result (finalStage), hiding the
-    // probe joins — the audit flag skips that, exposing the real plan
-    val df = Conf.withAuditNoFinal(
+    // the entry checkpoints its 1-row result (finalStage), so the
+    // returned frame only scans that checkpoint; the probe joins are
+    // the executed plan of the final localCheckpoint action
+    val (_, actions) = Profile.actions(spark)(
       SparkEntry.queries("q36_dedup_simhash")(spark, sf))
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = actions.filter(_.name == "localCheckpoint").last
+      .qe.executedPlan.toString
     // the 1-row bounds crossJoins legitimately plan as nested-loop;
     // what must never appear is a hash-relation build of canon/pairs
     assert(!plan.contains("BroadcastHashJoin"),
