@@ -65,56 +65,6 @@ object Bench {
       }
   }
 
-  /** Scheduler-level evidence for the r13 weak mark (q136/q137's
-    * nondeterministic 17-22× per-stage CPU inflation on the driver
-    * host, same binary/data): per-query deltas of task count, task
-    * FAILURES, stage re-attempts (attemptNumber > 0 ⇒ a FetchFailed/
-    * lost-block resubmission recomputed work), and the sum of task
-    * executorRunTime/executorCpuTime. Reading: inflated task count or
-    * stage re-attempts ⇒ a retry storm recomputed stages; normal task
-    * counts with task-CPU matching a clean run but PROCESS CPU
-    * inflated ⇒ the burn is outside the scheduler (GC/JIT/VM threads
-    * — see [[threadCpuByClass]]); task-CPU itself inflated ⇒ the
-    * stage genuinely did more work per task.
-    */
-  private[graft] final class SchedCounters
-      extends org.apache.spark.scheduler.SparkListener {
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val taskFails = new java.util.concurrent.atomic.AtomicLong
-    val stageReattempts = new java.util.concurrent.atomic.AtomicLong
-    val execRunMs = new java.util.concurrent.atomic.AtomicLong
-    val execCpuNs = new java.util.concurrent.atomic.AtomicLong
-    /** First failure reason within the CURRENT measurement window
-      * (ADVICE r14: a once-per-JVM slot mis-attributed every failure
-      * after the first — query B's sched entry reported query A's
-      * reason). The bench clears it before each query; the reported
-      * reason is then by construction the first failure of THAT
-      * query's window.
-      */
-    @volatile var windowFailure: String = ""
-    def resetWindowFailure(): Unit = windowFailure = ""
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      if (e.reason != org.apache.spark.Success) {
-        taskFails.incrementAndGet()
-        if (windowFailure.isEmpty)
-          windowFailure = e.reason.toString.linesIterator.take(1)
-            .mkString.take(200)
-      }
-      Option(e.taskMetrics).foreach { m =>
-        execRunMs.addAndGet(m.executorRunTime)
-        execCpuNs.addAndGet(m.executorCpuTime)
-      }
-    }
-    override def onStageSubmitted(
-        e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      if (e.stageInfo.attemptNumber() > 0) stageReattempts.incrementAndGet()
-    def snapshot(): (Long, Long, Long, Long, Long) =
-      (tasks.get, taskFails.get, stageReattempts.get,
-        execRunMs.get, execCpuNs.get)
-  }
-
   /** Native-thread CPU by class from /proc/self/task (jiffies →
     * seconds at HZ=100), attributing PROCESS CPU that the MXBeans
     * can't see: G1's concurrent mark/refine workers and the GC
@@ -192,8 +142,6 @@ object Bench {
     // Session confs for A/B bench runs (see Conf.applyConfEnv); every
     // query, the dedup pipelines included, plans on this session.
     Conf.applyConfEnv(spark)
-    val sched = new SchedCounters
-    spark.sparkContext.addSparkListener(sched)
     // optional local-iteration subset (driver runs the full set)
     val only = Conf.only
     // Untimed warmup: first query otherwise pays one-off JVM/JIT,
@@ -294,68 +242,51 @@ object Bench {
     // shows wall ≫ cpu with cpu matching a clean run's; a genuine
     // regression inflates cpu too.
     val cpuSec = scala.collection.mutable.Map[String, Double]()
-    // Per-stage attribution for the iterative queries (RoundStats):
-    // each loop round / build stage lands here as (tag, wall, cpu),
-    // emitted under "stages" in the full JSON — the BENCH_r07 residue
-    // (q133/q102 fixed cost) becomes per-round attributable.
-    val stages = scala.collection.mutable.Map[String, Seq[RoundStats.Stage]]()
-    // per-query scheduler deltas: tasks, task failures, stage
-    // re-attempts, sum executor run s, sum executor CPU s (+ first
-    // failure reason when any task failed)
-    val schedQ = scala.collection.mutable.Map[
-      String, (Long, Long, Long, Double, Double, String)]()
+    // Per-query Spark evidence, read from the query's Profile: each
+    // action's (name, wall, task CPU) under "stages", and the
+    // scheduler totals under "sched" (tasks, failed tasks, stage
+    // re-attempts, task run s, task CPU s, first failure reason):
+    // nonzero failed/re-attempts means work was recomputed.
+    val stages = scala.collection.mutable.Map[String, Seq[(String, Double, Double)]]()
+    val schedQ = scala.collection.mutable.Map[String, Profile.Tasks]()
     // per-query native-thread CPU seconds by class (gc/jit/exec/other)
     val threadQ = scala.collection.mutable.Map[String, Map[String, Double]]()
-    RoundStats.drain() // discard anything the warmup recorded
     // toSeq.sortBy: fixed execution order + per-query progress on
     // stderr (stdout stays JSON-only for the driver)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      val c0 = jvmStat()._1
-      // Drain the async listener bus so the previous query's trailing
-      // task/stage events land BEFORE this window's baseline snapshot
-      // and failure-slot reset (ADVICE r15 — the same residual race
-      // the stream1 probe closes before reading its stage table).
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(
-        spark.sparkContext)
-      val sc0 = sched.snapshot()
-      sched.resetWindowFailure()
       val th0 = threadCpuByClass()
-      val t0 = System.nanoTime()
-      try materialize(fn(spark, sfDir))
-      catch {
-        // A crashed query must be visible as a crash, not a timing:
-        // record it in `errors` (the driver sees both maps).
-        case e: Throwable =>
-          errors(name) = s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").linesIterator.take(1)
-              .mkString.take(160)
+      // the wall and CPU windows close before the profile drains the
+      // listener bus
+      val profile = Profile.of(spark) {
+        val c0 = jvmStat()._1
+        val t0 = System.nanoTime()
+        try materialize(fn(spark, sfDir))
+        catch {
+          // A crashed query must be visible as a crash, not a timing:
+          // record it in `errors` (the JSON carries both maps).
+          case e: Throwable =>
+            errors(name) = s"${e.getClass.getSimpleName}: " +
+              Option(e.getMessage).getOrElse("").linesIterator.take(1)
+                .mkString.take(160)
+        }
+        val dt = (System.nanoTime() - t0) / 1e9
+        val c1 = jvmStat()._1
+        if (c0 >= 0 && c1 >= 0) cpuSec(name) = (c1 - c0) / 1e9
+        dt
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val c1 = jvmStat()._1
-      if (c0 >= 0 && c1 >= 0) cpuSec(name) = (c1 - c0) / 1e9
-      locally {
-        val st = RoundStats.drain()
-        if (st.nonEmpty) stages(name) = st
-      }
-      locally {
-        // symmetric drain: this query's own trailing events must land
-        // before the closing snapshot or they leak into the NEXT
-        // query's window despite the baseline drain above
-        org.apache.spark.sql.GraftSqlBridge.waitForListeners(
-          spark.sparkContext)
-        val sc1 = sched.snapshot()
-        val newFail =
-          if ((sc1._2 - sc0._2) > 0) sched.windowFailure else ""
-        schedQ(name) = (sc1._1 - sc0._1, sc1._2 - sc0._2, sc1._3 - sc0._3,
-          (sc1._4 - sc0._4) / 1e3, (sc1._5 - sc0._5) / 1e9, newFail)
-        val th1 = threadCpuByClass()
-        threadQ(name) = (th0.keySet ++ th1.keySet).map { k =>
-          k -> math.max(0L,
-            th1.getOrElse(k, 0L) - th0.getOrElse(k, 0L)) / 100.0
-        }.toMap
-      }
+      val dt = profile.value
+      // names and numbers only: a held QueryExecution would pin its
+      // plan's checkpoint blocks for the rest of the run
+      stages(name) = profile.actions.map(a =>
+        (a.name, a.durationNs / 1e9, a.tasks.cpuNs / 1e9))
+      schedQ(name) = profile.tasks
+      val th1 = threadCpuByClass()
+      threadQ(name) = (th0.keySet ++ th1.keySet).map { k =>
+        k -> math.max(0L,
+          th1.getOrElse(k, 0L) - th0.getOrElse(k, 0L)) / 100.0
+      }.toMap
       System.err.println(f"[bench] $name%-24s $dt%8.2f s" +
         (if (errors.contains(name)) s"  ERROR ${errors(name)}" else ""))
       spark.catalog.clearCache()
@@ -389,19 +320,18 @@ object Bench {
     }
     val cpuQs = cpuSec.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jnum(v, "%.3f") }.mkString("{", ",", "}")
-    // per-stage (round-level) attribution: {"q":[["tag",wall,cpu],...]}
+    // per-action attribution: {"q":[["action",wall_s,task_cpu_s],...]}
     val stageQs = stages.toSeq.sortBy(_._1)
-      .map { case (q, ss) =>
-        jstr(q) + ":" + ss.map(s =>
-          s"[${jstr(s.tag)},${f"${s.wallS}%.3f"},${f"${s.cpuS}%.3f"}]")
+      .map { case (q, as) =>
+        jstr(q) + ":" + as.map { case (a, wall, cpu) =>
+          s"[${jstr(a)},${f"$wall%.3f"},${f"$cpu%.3f"}]" }
           .mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     // scheduler evidence: {"q":[tasks,failed,stage_reattempts,
-    // exec_run_s,exec_cpu_s,"first failure reason"]} — nonzero failed/
-    // reattempts means work was RECOMPUTED (retry storm)
+    // exec_run_s,exec_cpu_s,"first failure reason"]}
     val schedJs = schedQ.toSeq.sortBy(_._1)
-      .map { case (q, (t, f, r, run, cpu, why)) =>
-        jstr(q) + s""":[$t,$f,$r,${f"$run%.2f"},${f"$cpu%.2f"},${jstr(why)}]"""
+      .map { case (q, t) =>
+        jstr(q) + s""":[${t.tasks},${t.failed},${t.reattempts},${f"${t.runMs / 1e3}%.2f"},${f"${t.cpuNs / 1e9}%.2f"},${jstr(t.firstFailure)}]"""
       }.mkString("{", ",", "}")
     // native-thread CPU: {"q":{"gc":s,"jit":s,"exec":s,"other":s}} —
     // concurrent-GC/JIT burn the MXBeans can't attribute

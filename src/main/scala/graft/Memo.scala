@@ -16,8 +16,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * rule: a fingerprint of its input tables' files (path, length,
   * modification time), listed on the driver through the Hadoop
   * FileSystem, so a lookup runs no Spark job. A mismatch rebuilds the
-  * entry and frees the stale one's blocks; a hit records
-  * `<stage>_memo_hit` in [[RoundStats]].
+  * entry and frees the stale one's blocks; a hit returns the held value
+  * itself (the same frame, `eq`) and runs no Spark job, which is how a
+  * caller tells a hit from a build ([[Profile]] counts the jobs).
   *
   * Held frames are checkpoints or persisted tables whose lineage may
   * be cut, so a harness that frees blocks either exempts [[rddIds]]
@@ -46,9 +47,7 @@ object Memo {
       build: => T)(frames: T => Seq[DataFrame]): T = {
     val fp = fingerprint(s, dir, inputs)
     entries.get((stage, dir)) match {
-      case Some(e) if e.fingerprint == fp =>
-        RoundStats.record(s"${stage}_memo_hit", 0, 0)
-        e.value.asInstanceOf[T]
+      case Some(e) if e.fingerprint == fp => e.value.asInstanceOf[T]
       case observed =>
         val v = build
         install(stage, dir, new Entry(fp, v, frames(v)), observed)

@@ -10,7 +10,7 @@ import java.util.regex.{Matcher, Pattern}
   * the parquet scan, broadcast joins on dim tables, no redundant
   * exchanges, whole-stage codegen spans over the hot expressions.
   *
-  * Each query is built inside [[Profile.actions]] on a dir with no
+  * Each query is built inside a [[Profile]] on a dir with no
   * memoized stages, so its section shows the executed plan of every
   * action its construction ran (each distinct plan once, with the
   * action names and counts), then the plan of the returned frame. A
@@ -39,15 +39,15 @@ object PlanAudit {
     sb.append("Each section lists the executed plan of every action the ")
     sb.append("query's construction ran, then the plan of the returned frame.\n")
     def section(title: String)(build: => DataFrame): Unit = {
-      val (df, actions) = Profile.actions(spark)(build)
-      val plans = actions.map(a => explain(a.qe) -> a.name)
+      val p = Profile.of(spark)(build)
+      val plans = p.actions.map(a => explain(a.qe) -> a.name)
       sb.append(s"\n## $title\n")
       plans.map(_._1).distinct.foreach { plan =>
         val names = plans.collect { case (`plan`, n) => n }
         val counts = names.distinct.sorted.map(n => s"$n x${names.count(_ == n)}")
         sb.append(s"\n### Construction action: ${counts.mkString(", ")}\n\n```\n$plan```\n")
       }
-      sb.append(s"\n### Returned frame\n\n```\n${explain(df.queryExecution)}```\n")
+      sb.append(s"\n### Returned frame\n\n```\n${explain(p.value.queryExecution)}```\n")
       println(s"[audit] $title done")
     }
     audited.foreach { name =>

@@ -218,6 +218,13 @@ object ScaleStress {
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
   }
 
+  /** Final-batch state rows across a profile's streams' stateful
+    * operators (numRowsTotal from each stream's last progress, the
+    * ×R bound's input).
+    */
+  private def stateRows(p: Profile[_]): Long =
+    p.streams.flatMap(_.stateOperators).map(_.numRowsTotal).sum
+
   /** Run every stream-family query through the chosen snapshot sink
     * ("memory" or "file" — see StreamingQueries.sinkMode). Returns
     * name → (rows, secs); any query error propagates (zero-error is
@@ -228,15 +235,12 @@ object ScaleStress {
     import graft.streaming.StreamingQueries
     StreamingQueries.queries.sortBy(_.name).map { case Query(name, fn, _) =>
       StreamingQueries.sinkModeOverride = Some(sink)
-      StreamingQueries.resetStateRows()
       try {
         val t0 = System.nanoTime()
-        val df = fn(spark, dir)
-        val n = df.count()
+        val p = Profile.of(spark)(fn(spark, dir).count())
+        val n = p.value
         val secs = (System.nanoTime() - t0) / 1e9
-        // final-batch state rows across the query's stateful operators
-        // (numRowsTotal from the last progress — the ×R bound's input)
-        val state = StreamingQueries.lastStateRowsByOp.map(_._2).sum
+        val state = stateRows(p)
         println(f"[stress] $name [$sink] $n%,d rows in $secs%.1f s; " +
           f"state rows $state%,d")
         // counted = consumed: reclaim this query's sink + checkpoint
@@ -684,7 +688,7 @@ object ScaleStress {
 
     // build-only modes: materialize a stress dir and exit, so Bench
     // (SPARK_GRAFT_SF_DIR=target/stress_* [SPARK_GRAFT_ONLY=qNN]) can
-    // drive any single query against it WITH its per-stage dump — the
+    // drive any single query against it WITH its per-action dump — the
     // stress asserts prove correctness at ×R, the bench attributes
     // where an ×R wall actually goes
     if (mode == "build" || mode == "builddistinct") {
@@ -739,13 +743,13 @@ object ScaleStress {
       // Instrumented SINGLE stream-query probe (r15, VERDICT r14 #1:
       // attribute q138's superlinear ×1024 wall). Runs ONE stream
       // family query on the ×R distinct dir through the file sink
-      // with full attribution attached:
-      //  - per-micro-batch StreamingQueryProgress JSON (durationMs
+      // inside a graft.Profile:
+      //  - the stream's final StreamingQueryProgress JSON (durationMs
       //    breakdown + stateOperators incl. the RocksDB custom
       //    metrics: flush/compaction/commit latencies, bytes);
-      //  - per-STAGE scheduler metrics (wall, task run/CPU, GC,
-      //    shuffle read/write, memory/disk spill, input bytes) — the
-      //    decomposition the per-query RoundStats drain can't see;
+      //  - per-ACTION task totals (wall, task run/CPU, GC, shuffle
+      //    read/write, spill, input bytes) and the scope's totals,
+      //    which include the file-sink micro-batches;
       //  - host steal/iowait + native-thread CPU by class around the
       //    run (the ×1024 probe log recorded no per-run steal — the
       //    gap the verdict named).
@@ -765,49 +769,7 @@ object ScaleStress {
         buildDir(spark, srcDir, outDir, rep, distinctDocs = true)
         println(f"[probe] built $outDir in ${(System.nanoTime() - tB) / 1e9}%.1f s")
       }
-      // stage-level attribution listener
-      case class StageRow(id: Int, attempt: Int, name: String, tasks: Int,
-        wallS: Double, runS: Double, cpuS: Double, gcS: Double,
-        shuffleReadMB: Double, shuffleWriteMB: Double, spillMemMB: Double,
-        spillDiskMB: Double, inputMB: Double)
-      val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
-      val stageListener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val m = si.taskMetrics
-          val wall = (for { s <- si.submissionTime; c <- si.completionTime }
-            yield (c - s) / 1e3).getOrElse(-1.0)
-          stageRows.add(StageRow(si.stageId, si.attemptNumber(),
-            si.name.linesIterator.next().take(100), si.numTasks, wall,
-            m.executorRunTime / 1e3, m.executorCpuTime / 1e9,
-            m.jvmGCTime / 1e3,
-            m.shuffleReadMetrics.totalBytesRead / 1e6,
-            m.shuffleWriteMetrics.bytesWritten / 1e6,
-            m.memoryBytesSpilled / 1e6, m.diskBytesSpilled / 1e6,
-            m.inputMetrics.bytesRead / 1e6))
-        }
-      }
-      // per-micro-batch progress capture (full JSON: durationMs +
-      // stateOperators with the provider's custom metrics)
-      val progressListener =
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener
-              .QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener
-                .QueryProgressEvent): Unit =
-            println(s"[probe] progress ${e.progress.json}")
-        }
-      spark.sparkContext.addSparkListener(stageListener)
-      spark.streams.addListener(progressListener)
       graft.streaming.StreamingQueries.sinkModeOverride = Some("file")
-      graft.streaming.StreamingQueries.resetStateRows()
-      graft.RoundStats.drain()
       val st0 = Bench.procStat()
       val th0 = Bench.threadCpuByClass()
       // 1 Hz peak-disk sampler (r16, same as distinct37's): the ×2048
@@ -828,7 +790,7 @@ object ScaleStress {
       diskSampler.setDaemon(true)
       diskSampler.start()
       val t0 = System.nanoTime()
-      val n = try fn(spark, outDir).count()
+      val p = try Profile.of(spark)(fn(spark, outDir).count())
         finally {
           graft.streaming.StreamingQueries.sinkModeOverride = None
           sampling = false
@@ -836,30 +798,23 @@ object ScaleStress {
       val wall = (System.nanoTime() - t0) / 1e9
       val th1 = Bench.threadCpuByClass()
       val st1 = Bench.procStat()
-      // Listener delivery is asynchronous: drain the bus before
-      // detaching, or trailing SparkListenerStageCompleted events
-      // (e.g. the final snapshot count) silently miss the per-stage
-      // attribution table (ADVICE r15).
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      spark.streams.removeListener(progressListener)
-      spark.sparkContext.removeSparkListener(stageListener)
-      val state = graft.streaming.StreamingQueries
-        .lastStateRowsByOp.map(_._2).sum
-      graft.RoundStats.drain().foreach(s =>
-        println(f"[probe] roundstat ${s.tag}%-28s wall ${s.wallS}%9.2f s  " +
-          f"cpu ${s.cpuS}%9.2f s"))
-      import scala.jdk.CollectionConverters._
-      val rows = stageRows.asScala.toSeq.sortBy(-_.runS)
-      println("[probe] stages by task run time (top 30 of " +
-        s"${rows.size}; wall=submit->complete, run/cpu/gc=task sums):")
-      println("[probe]   id att tasks    wall     run     cpu      gc " +
-        "  shRdMB  shWrMB spillMem spillDsk  inputMB  name")
-      rows.take(30).foreach(r =>
-        println(f"[probe] ${r.id}%4d ${r.attempt}%3d ${r.tasks}%5d " +
-          f"${r.wallS}%7.1f ${r.runS}%7.1f ${r.cpuS}%7.1f ${r.gcS}%7.1f " +
-          f"${r.shuffleReadMB}%8.1f ${r.shuffleWriteMB}%7.1f " +
-          f"${r.spillMemMB}%8.1f ${r.spillDiskMB}%8.1f ${r.inputMB}%8.1f" +
-          s"  ${r.name}"))
+      val n = p.value
+      val state = stateRows(p)
+      p.streams.foreach(sp => println(s"[probe] progress ${sp.json}"))
+      val rows = p.actions.sortBy(-_.tasks.runMs)
+      println("[probe] actions by task run time (top 30 of " +
+        s"${rows.size}; wall=action duration, run/cpu/gc=task sums):")
+      println("[probe]  tasks    wall     run     cpu      gc " +
+        "  shRdMB  shWrMB  spillMB  inputMB  action")
+      def row(t: Profile.Tasks, wallS: Double, what: String): Unit =
+        println(f"[probe] ${t.tasks}%6d $wallS%7.1f ${t.runMs / 1e3}%7.1f " +
+          f"${t.cpuNs / 1e9}%7.1f ${t.gcMs / 1e3}%7.1f ${t.shuffleReadBytes / 1e6}%8.1f " +
+          f"${t.shuffleWriteBytes / 1e6}%7.1f ${t.spillBytes / 1e6}%8.1f " +
+          f"${t.inputBytes / 1e6}%8.1f  $what")
+      rows.take(30).foreach(a => row(a.tasks, a.durationNs / 1e9, a.name))
+      // a file-sink micro-batch reports no action of its own; its
+      // stages are in the scope's totals
+      row(p.tasks, wall, s"(scope: ${p.jobs} jobs)")
       val steal = (st0, st1) match {
         case (Some((_, _, w0, s0)), Some((_, _, w1, s1))) =>
           f""""steal_s":${(s1 - s0) / 100.0}%.1f,"iowait_s":${(w1 - w0) / 100.0}%.1f,"""
@@ -868,7 +823,8 @@ object ScaleStress {
       val thr = (th0.keySet ++ th1.keySet).toSeq.sorted.map(k =>
         s""""$k":${(th1.getOrElse(k, 0L) - th0.getOrElse(k, 0L)) / 100.0}""")
         .mkString("{", ",", "}")
-      val nparts = graft.streaming.StreamingQueries.lastNumShufflePartitions
+      val nparts = p.streams.flatMap(_.stateOperators)
+        .map(_.numShufflePartitions).maxOption.getOrElse(0L)
       println(s"""[probe] summary {"query":"$qname","rep":$rep,"rows":$n,""" +
         f""""wall_s":$wall%.1f,"state_rows":$state,""" +
         f""""peak_disk_gb":${(free0 - minFree.get) / 1e9}%.2f,""" +

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * result ARRAY of the intersection per row — per-element hashing,
   * boxing inside the set, and an output array the caller immediately
   * reduces to its size. On the verify join — per CANDIDATE PAIR, the
-  * dedup family's largest compute at scale (gram_final was 3426 CPU-s
+  * dedup family's largest compute at scale (q37's final verify was 3426 CPU-s
   * at distinct ×512, corpus-linear) — that constant is the wall. The
   * inputs are already sorted distinct hash arrays (the same `hs`
   * encoding the (n, h1, h2) exact-signature shortcut hashes), so a

@@ -119,21 +119,14 @@ object ConnectedComponents {
       // stays sound: the observe compares against the FUSED plan's
       // midpoint, so changed == 0 still certifies a fixpoint (the
       // second step changed nothing); at worst one extra step of work
-      // is done after the true fixpoint. `rounds` counts steps; stage
-      // tags count ACTIONS (rNxK = Nth action running K fused steps),
-      // the same convention as PageRank's pr_roundNxK — a stages-map
-      // reader sees contiguous indices from both loops.
-      var action = 0
+      // is done after the true fixpoint. `rounds` counts steps; each
+      // loop action is one `localCheckpoint` running `fuse` steps.
       while (changed > 0 && rounds < maxRounds) {
         val fuse = if (rounds + 2 <= maxRounds) 2 else 1
-        action += 1
         val obs = Observation()
-        val next = graft.RoundStats.timed(s"cc_minlabel_r${action}x$fuse") {
-          val mid = if (fuse == 2) step(labels) else labels
-          observedStep(mid, obs).localCheckpoint()
-        }
+        val mid = if (fuse == 2) step(labels) else labels
+        labels = observedStep(mid, obs).localCheckpoint()
         changed = obs.get("changed").asInstanceOf[Long]
-        labels = next
         rounds += fuse
       }
       (labels, changed == 0L, rounds)
@@ -224,9 +217,7 @@ object ConnectedComponents {
       // k rounds grows the un-materialized plan tree ~4^k — the
       // per-round checkpoint is what keeps this path's plans linear
       while (!fixed && rounds < maxRounds) {
-        val (next, nextSig) = graft.RoundStats.timed(s"cc_star_r${rounds + 1}") {
-          checkpointed(smallStar(largeStar(edges)))
-        }
+        val (next, nextSig) = checkpointed(smallStar(largeStar(edges)))
         fixed = nextSig == sig
         sig = nextSig
         edges = next

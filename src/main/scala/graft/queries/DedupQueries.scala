@@ -352,13 +352,21 @@ object DedupQueries {
     * checkpoint, including live ones other pipelines still need
     * (irrecoverable corruption); misuse now fails loudly instead.
     */
-  private def releaseCheckpoint(df: DataFrame): Unit =
+  private def releaseCheckpoint(df: DataFrame): Unit = {
+    val rdd = checkpointRdd(df)
+    releasedCheckpoints.add((rdd.id, rdd.getNumPartitions))
+    rdd.unpersist(false)
+  }
+
+  /** The RDD under a direct checkpoint frame, read from its
+    * `LogicalRDD` leaf: its partition count needs no physical plan
+    * (`df.rdd` would plan one for the same number).
+    */
+  private def checkpointRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        releasedCheckpoints.add((lr.rdd.id, lr.rdd.getNumPartitions))
-        lr.rdd.unpersist(false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       case other => throw new IllegalArgumentException(
-        "releaseCheckpoint expects a direct localCheckpoint frame " +
+        "expected a direct localCheckpoint frame " +
           s"(a single LogicalRDD plan); got ${other.nodeName} - a " +
           "derived frame could free unrelated live checkpoints")
     }
@@ -370,11 +378,16 @@ object DedupQueries {
     * the whole signature stage onto one core (measured: the r3 bench
     * watchdog caught 1 RUNNABLE task + 31 idle). At cluster scale a
     * real corpus scan is already thousands of splits and the
-    * repartition branch never fires.
+    * repartition branch never fires. Reading `df`'s split count plans
+    * it (an `rdd` action); a caller that fans out several filters of
+    * one scan passes the scan's count, which a filter keeps.
     */
-  private def fanOut(df: DataFrame): DataFrame = {
+  private[queries] def fanOut(df: DataFrame,
+      scanParts: Option[Int] = None): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (scanParts.getOrElse(df.rdd.getNumPartitions) < target)
+      df.repartition(target)
+    else df
   }
 
   /** Expand capped buckets (`ids` array) into distinct candidate pairs
@@ -449,10 +462,9 @@ object DedupQueries {
     * r2/r3 bench bimodality).
     */
   private def attachFeatures(cands0: DataFrame, feats: DataFrame,
-      idCol: String, featCol: String, tag: String,
-      store: PairStorage): DataFrame =
+      idCol: String, featCol: String, store: PairStorage): DataFrame =
     attachFeaturesBy(cands0, ids => feats.join(ids, idCol),
-      idCol, featCol, tag, store)
+      idCol, featCol, store)
 
   /** Generalized verify fetch: `featsOf` receives the candidate-id set
     * — ALREADY wrapped in the size-guarded strategy (broadcast or a
@@ -467,18 +479,14 @@ object DedupQueries {
     */
   private def attachFeaturesBy(cands0: DataFrame,
       featsOf: DataFrame => DataFrame,
-      idCol: String, featCol: String, tag: String,
-      store: PairStorage): DataFrame = {
-    // Each materialization is a RoundStats stage (tagged per family):
-    // the r6/r7 driver runs inflated dedup queries 3-6× with no way to
-    // tell WHICH phase (blocking, candidate set, feature fetch) paid —
-    // the same attribution gap the loop stages closed for q133/q102.
-    val cands = graft.RoundStats.timed(s"${tag}_cands") {
-      store.checkpoint(cands0) }
-    val candIds = graft.RoundStats.timed(s"${tag}_ids") {
-      registerCheckpoint(cands.select(col("a").as(idCol))
-        .union(cands.select(col("b").as(idCol)))
-        .distinct().localCheckpoint()) }
+      idCol: String, featCol: String, store: PairStorage): DataFrame = {
+    // Each materialization is its own `localCheckpoint` action, so a
+    // profile tells which phase (candidate set, id set, feature fetch)
+    // paid.
+    val cands = store.checkpoint(cands0)
+    val candIds = registerCheckpoint(cands.select(col("a").as(idCol))
+      .union(cands.select(col("b").as(idCol)))
+      .distinct().localCheckpoint())
     // The strategy guard (see the Scaladoc above): the id set is
     // checkpointed, so the count is a cheap leaf scan, and the
     // decision is deterministic per run — no AQE, no stats guesswork.
@@ -516,24 +524,13 @@ object DedupQueries {
     val prep: (DataFrame, String) => DataFrame =
       if (broadcastOk) (d, _) => broadcast(d)
       else (d, k) => d.repartition(fetchParts, col(k)).hint("shuffle_hash")
-    val pruned = graft.RoundStats.timed(s"${tag}_fetch") {
-      store.checkpoint(featsOf(prep(candIds, idCol))) }
+    val pruned = store.checkpoint(featsOf(prep(candIds, idCol)))
     cands
       .join(prep(pruned.select(col(idCol).as("a"), col(featCol).as("f_a")),
         "a"), "a")
       .join(prep(pruned.select(col(idCol).as("b"), col(featCol).as("f_b")),
         "b"), "b")
   }
-
-  /** Final-stage materialization of a pipeline's verified pairs: an
-    * output-sized timed `localCheckpoint` (the bench attributes it;
-    * downstream consumers get a leaf scan). The verify-join plan it
-    * ran is the executed plan of that `localCheckpoint` action, which
-    * `graft.Profile.actions` captures (docs/PLANS.md shows it).
-    */
-  private def finalStage(tag: String, store: PairStorage)(
-      df: => DataFrame): DataFrame =
-    graft.RoundStats.timed(tag)(store.checkpoint(df))
 
   /** Exact Jaccard over the HASHED feature encoding: both sides are
     * sorted distinct 64-bit shingle/gram hash arrays (the same `hs`
@@ -543,8 +540,8 @@ object DedupQueries {
     * per pair) and |a ∪ b| = |a| + |b| − |a ∩ b| holds exactly. The
     * verify join is the per-pair hot path at scale — billions of
     * candidates at 100 TB each save an `array_intersect` hash build
-    * (r12: gram_final was 3426 corpus-linear CPU-s at distinct ×512
-    * on the string-array form).
+    * (r12: q37's final verify checkpoint was 3426 corpus-linear CPU-s
+    * at distinct ×512 on the string-array form).
     *
     * Hash-space exactness: within a doc `array_distinct` over hashes
     * equals distinct-over-strings unless two of its shingles collide
@@ -632,7 +629,7 @@ object DedupQueries {
     pairTable(s0, dir).pairs
 
   /** The `near_dup_pairs` stage: the pairs, their row count observed ON
-    * the minhash_final checkpoint's own materialization job, and the
+    * the final pair checkpoint's own materialization job, and the
     * pipeline's storage level, which q102's label loop reuses for its
     * edge-sized checkpoints.
     */
@@ -642,14 +639,12 @@ object DedupQueries {
   private def pairTable(s0: SparkSession, dir: String): PairTable =
     graft.Memo(s0, "near_dup_pairs", dir, "documents") {
       val store = new PairStorage
-      def pairs = minHashPairs(fanOut(
+      val pairs = minHashPairs(fanOut(
         Tables.documents(s0, dir).select(col("doc_id"), col("text"))), store)
-      graft.RoundStats.timed("minhash_final") {
-        val obs = Observation()
-        val out = store.checkpoint(
-          pairs.observe(obs, count(lit(1)).as("n_pairs")))
-        PairTable(out, obs.get("n_pairs").asInstanceOf[Long], store)
-      }
+      val obs = Observation()
+      val out = store.checkpoint(
+        pairs.observe(obs, count(lit(1)).as("n_pairs")))
+      PairTable(out, obs.get("n_pairs").asInstanceOf[Long], store)
     }(t => Seq(t.pairs))
 
   /** MinHash-LSH pair pipeline over an explicit (doc_id, text) corpus
@@ -765,16 +760,15 @@ object DedupQueries {
     // for the expand/fetch/final checkpoints below.
     val szEst = size(col("members")).cast("long")
     val obsEst = Observation()
-    val buckets = graft.RoundStats.timed("minhash_buckets") {
-      store.checkpoint(keyed
-        .groupBy("band", "key").agg(collect_list("m").as("members"))
-        .filter(size(col("members")) >= 2)
-        .observe(obsEst, coalesce(sum(
-            when(col("band") === 16 || szEst <= MaxBucket,
-              szEst * (szEst - 1L) / 2L)
-              .otherwise(lit(4L * MaxBucket) * szEst)), lit(0L))
-          .cast("long") // Column `/` is double division — cast back
-          .as("est_pairs"))) }
+    val buckets = store.checkpoint(keyed
+      .groupBy("band", "key").agg(collect_list("m").as("members"))
+      .filter(size(col("members")) >= 2)
+      .observe(obsEst, coalesce(sum(
+          when(col("band") === 16 || szEst <= MaxBucket,
+            szEst * (szEst - 1L) / 2L)
+            .otherwise(lit(4L * MaxBucket) * szEst)), lit(0L))
+        .cast("long") // Column `/` is double division — cast back
+        .as("est_pairs")))
     val estPairs = obsEst.get("est_pairs").asInstanceOf[Long]
     store.escalateFor(keyed.sparkSession, estPairs, "minhash")
     // pair-volume-derived width for the quadratic expansion stages AND
@@ -830,19 +824,18 @@ object DedupQueries {
         (least(col("x.n"), col("y.n")).cast("double") /
             greatest(col("x.n"), col("y.n")).cast("double") >= 0.5)
           .as("plausible"))
-    val pairs = graft.RoundStats.timed("minhash_expand") {
-      // feeds two consumers (shortcut + verify): materialize once.
-      // The (a, b) hash repartition CO-LOCATES the cross-band dedup at
-      // the pair-volume width (r16): distinct's own exchange would run
-      // at the session's static width, and its map-side partial agg
-      // bought nothing here — duplicate pairs come from DIFFERENT band
-      // buckets, which the round-robin expansion spread lands in
-      // different partitions anyway.
-      store.checkpoint(expand(buckets.filter(col("band") < 16), MaxBucket)
-        .union(expand(reblocked, MaxBucket))
-        .union(expand(buckets.filter(col("band") === 16), Int.MaxValue))
-        .repartition(exWidth, col("a"), col("b"))
-        .distinct()) }
+    // feeds two consumers (shortcut + verify): materialize once.
+    // The (a, b) hash repartition CO-LOCATES the cross-band dedup at
+    // the pair-volume width (r16): distinct's own exchange would run
+    // at the session's static width, and its map-side partial agg
+    // bought nothing here — duplicate pairs come from DIFFERENT band
+    // buckets, which the round-robin expansion spread lands in
+    // different partitions anyway.
+    val pairs = store.checkpoint(expand(buckets.filter(col("band") < 16), MaxBucket)
+      .union(expand(reblocked, MaxBucket))
+      .union(expand(buckets.filter(col("band") === 16), Int.MaxValue))
+      .repartition(exWidth, col("a"), col("b"))
+      .distinct())
     // `pairs` (its own lineage-cut checkpoint) was the bucket table's
     // only consumer — free the pipeline's largest block set now
     // instead of at section end (see releaseCheckpoint)
@@ -853,7 +846,7 @@ object DedupQueries {
       pairs.filter(!col("exact") && col("plausible"))
         .select(col("a"), col("b")),
       ids => hashedFeatures(shingle2Of(raw.join(ids, "doc_id")), "shingles"),
-      "doc_id", "hsh", "minhash", store)
+      "doc_id", "hsh", store)
       .select(col("a"), col("b"), jaccard(col("f_a"), col("f_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
     exactPairs.union(verified)
@@ -967,21 +960,19 @@ object DedupQueries {
       store.escalateIf(s,
         statParts > s.conf.get("spark.sql.shuffle.partitions").toInt,
         s"incr: corpus-scale index ($statParts stat partitions)")
-      val buckets = graft.RoundStats.timed("incr_index") {
-        store.checkpoint(minHashKeyed(shingle2Of(rawBase))
-          .repartition(bucketParts, col("band"), col("key"))
-          .groupBy("band", "key").agg(collect_list("m").as("members"))) }
+      val buckets = store.checkpoint(minHashKeyed(shingle2Of(rawBase))
+        .repartition(bucketParts, col("band"), col("key"))
+        .groupBy("band", "key").agg(collect_list("m").as("members")))
       // exact-text membership keys for the APPLY step (q137): one
       // exchange at the index width; the repartition keys equal the
       // distinct's grouping keys, so the dedup agg rides it with no
       // second exchange and the checkpoint PRESERVES (eh1, eh2)
       // hash-partitioning for the probe-side-only anti-join.
-      val exactKeys = graft.RoundStats.timed("incr_exact_index") {
-        store.checkpoint(docs.filter(col("doc_id") < split)
-          .select(xxhash64(col("text")).as("eh1"),
-            xxhash64(lit("ex2"), col("text")).as("eh2"))
-          .repartition(bucketParts, col("eh1"), col("eh2"))
-          .distinct()) }
+      val exactKeys = store.checkpoint(docs.filter(col("doc_id") < split)
+        .select(xxhash64(col("text")).as("eh1"),
+          xxhash64(lit("ex2"), col("text")).as("eh2"))
+        .repartition(bucketParts, col("eh1"), col("eh2"))
+        .distinct())
       IncrIndex(split, statParts, buckets,
         reblockOf(buckets, bucketParts, statParts, store), exactKeys, store)
     }
@@ -994,21 +985,20 @@ object DedupQueries {
     */
   private def reblockOf(buckets: DataFrame, width: Int, parts: Int,
       store: PairStorage): DataFrame =
-    graft.RoundStats.timed("incr_reblock") {
-      store.checkpoint(buckets
-        .filter(col("band") < 16 && size(col("members")) > MaxBucket)
-        .select(explode(col("members")).as("m"))
-        .repartition(parts, col("m"))
-        .distinct()
-        .select(col("m"), explode(slice(col("m.sk"), 1, 4)).as("subkey"))
-        .repartition(width, col("subkey"))
-        .groupBy("subkey").agg(collect_list("m").as("members"))
-        // a sub-bucket that ALSO overflows is dropped, never
-        // silently (cf. minHashPairs's level 2)
-        .observe("incr_reblock_drops",
-          count(when(size(col("members")) > MaxBucket, 1))
-            .as("dropped_subbuckets"))
-        .filter(size(col("members")) <= MaxBucket)) }
+    store.checkpoint(buckets
+      .filter(col("band") < 16 && size(col("members")) > MaxBucket)
+      .select(explode(col("members")).as("m"))
+      .repartition(parts, col("m"))
+      .distinct()
+      .select(col("m"), explode(slice(col("m.sk"), 1, 4)).as("subkey"))
+      .repartition(width, col("subkey"))
+      .groupBy("subkey").agg(collect_list("m").as("members"))
+      // a sub-bucket that ALSO overflows is dropped, never
+      // silently (cf. minHashPairs's level 2)
+      .observe("incr_reblock_drops",
+        count(when(size(col("members")) > MaxBucket, 1))
+          .as("dropped_subbuckets"))
+      .filter(size(col("members")) <= MaxBucket))
 
   /** The standing index ADVANCED to cover [0, newSplit): the daily
     * index-UPDATE step, so day-N+1 probes see day-N docs without a
@@ -1037,27 +1027,25 @@ object DedupQueries {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val shard = fanOut(docs.filter(col("doc_id") >= idx.split &&
       col("doc_id") < newSplit))
-    val indexParts = idx.buckets.rdd.getNumPartitions
+    val indexParts = checkpointRdd(idx.buckets).getNumPartitions
     val shardBuckets = minHashKeyed(shingle2Of(shard))
       .repartition(indexParts, col("band"), col("key"))
       .groupBy("band", "key").agg(collect_list("m").as("new_members"))
-    val merged = graft.RoundStats.timed("incr_index_merge") {
-      store.checkpoint(idx.buckets
-        .join(shardBuckets, Seq("band", "key"), "full_outer")
-        .select(col("band"), col("key"),
-          when(col("members").isNull, col("new_members"))
-            .when(col("new_members").isNull, col("members"))
-            .otherwise(concat(col("members"), col("new_members")))
-            .as("members"))) }
+    val merged = store.checkpoint(idx.buckets
+      .join(shardBuckets, Seq("band", "key"), "full_outer")
+      .select(col("band"), col("key"),
+        when(col("members").isNull, col("new_members"))
+          .when(col("new_members").isNull, col("members"))
+          .otherwise(concat(col("members"), col("new_members")))
+          .as("members")))
     val shardKeys = docs.filter(col("doc_id") >= idx.split &&
         col("doc_id") < newSplit)
       .select(xxhash64(col("text")).as("eh1"),
         xxhash64(lit("ex2"), col("text")).as("eh2"))
       .repartition(indexParts, col("eh1"), col("eh2"))
       .distinct()
-    val mergedExact = graft.RoundStats.timed("incr_exact_merge") {
-      store.checkpoint(idx.exactKeys
-        .join(shardKeys, Seq("eh1", "eh2"), "full_outer")) }
+    val mergedExact = store.checkpoint(idx.exactKeys
+      .join(shardKeys, Seq("eh1", "eh2"), "full_outer"))
     IncrIndex(newSplit, idx.parts, merged,
       reblockOf(merged, indexParts, idx.parts, store), mergedExact, store)
   }
@@ -1088,9 +1076,10 @@ object DedupQueries {
     val store = idx.store
     val s = buckets.sparkSession
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val scanParts = Some(docs.rdd.getNumPartitions)
     val rawNew = fanOut(docs.filter(col("doc_id") >= split &&
-      col("doc_id") < until))
-    val raw = fanOut(docs)
+      col("doc_id") < until), scanParts)
+    val raw = fanOut(docs, scanParts)
     // bigCheckpoint, NOT a plain localCheckpoint: the keyed probe table
     // is shard-corpus-sized (17 keys × ~200 B member structs per doc)
     // and a deserialized memory-store unroll of it is the r10
@@ -1103,10 +1092,9 @@ object DedupQueries {
     // (a 32-partition shard table meant ~70 MB serialized partitions —
     // exactly the whole-partition re-cache allocations the DISK_ONLY
     // escalation in indexFor is defending against).
-    val indexParts = buckets.rdd.getNumPartitions
-    val newKeyed = graft.RoundStats.timed("incr_probe_keys") {
-      store.checkpoint(minHashKeyed(shingle2Of(rawNew))
-        .repartition(indexParts, col("band"), col("key"))) }
+    val indexParts = checkpointRdd(buckets).getNumPartitions
+    val newKeyed = store.checkpoint(minHashKeyed(shingle2Of(rawNew))
+      .repartition(indexParts, col("band"), col("key")))
     // Level-1 probe: capped LSH buckets + the uncapped exact band.
     // The index side builds the hash relation (shuffle-hash, never a
     // corpus-sized broadcast); its checkpoint PRESERVES the bucket
@@ -1131,24 +1119,23 @@ object DedupQueries {
       .select(col("m").as("y"), explode(slice(col("m.sk"), 1, 4)).as("subkey"))
       .join(reblock.hint("shuffle_hash"), Seq("subkey"))
       .select(col("y"), explode(col("members")).as("x"))
-    val nbCands = graft.RoundStats.timed("incr_cands") {
-      store.checkpoint(l1.union(l2)
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-          (col("x.n") === col("y.n") && col("x.h1") === col("y.h1") &&
-            col("x.h2") === col("y.h2")).as("exact"),
-          // exact size-ratio bound, cf. minHashPairs's expand
-          (least(col("x.n"), col("y.n")).cast("double") /
-              greatest(col("x.n"), col("y.n")).cast("double") >= 0.5)
-            .as("plausible"))
-        .repartition(idx.parts, col("a"), col("b"))
-        .distinct()) }
+    val nbCands = store.checkpoint(l1.union(l2)
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+        (col("x.n") === col("y.n") && col("x.h1") === col("y.h1") &&
+          col("x.h2") === col("y.h2")).as("exact"),
+        // exact size-ratio bound, cf. minHashPairs's expand
+        (least(col("x.n"), col("y.n")).cast("double") /
+            greatest(col("x.n"), col("y.n")).cast("double") >= 0.5)
+          .as("plausible"))
+      .repartition(idx.parts, col("a"), col("b"))
+      .distinct())
     val exactNB = nbCands.filter(col("exact"))
       .select(col("a"), col("b"), lit(1.0).as("jaccard"))
     val verifiedNB = attachFeaturesBy(
       nbCands.filter(!col("exact") && col("plausible"))
         .select(col("a"), col("b")),
       ids => hashedFeatures(shingle2Of(raw.join(ids, "doc_id")), "shingles"),
-      "doc_id", "hsh", "incr", store)
+      "doc_id", "hsh", store)
       .select(col("a"), col("b"), jaccard(col("f_a"), col("f_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
     // New-vs-new: the symmetric pipeline on the shard alone — shard-
@@ -1164,11 +1151,11 @@ object DedupQueries {
     // exactly as the standalone pipeline would size them.
     val nn = minHashPairsFromKeyed(rawNew, newKeyed, bucketAggParts(rawNew),
       store)
-    finalStage("incr_final", store) {
-      exactNB.union(verifiedNB).union(nn)
-        .select(col("a"), col("b"), col("jaccard"),
-          (col("a") < split).as("vs_base"))
-    }
+    // the final stage: an output-sized checkpoint, so consumers get a
+    // leaf scan and the verify join is this action's executed plan
+    store.checkpoint(exactNB.union(verifiedNB).union(nn)
+      .select(col("a"), col("b"), col("jaccard"),
+        (col("a") < split).as("vs_base")))
   }
 
   /** Base-only symmetric run (docs with doc_id < split) — the
@@ -1239,7 +1226,7 @@ object DedupQueries {
     // `pairsOverride` is the memoized q136 table (q137's entry path —
     // the r13 bench showed the full pipeline re-running here); the
     // default keeps the explicit-index day-by-day surface. Either way
-    // finalStage already lineage-cut it to a checkpoint leaf.
+    // the pipeline's final checkpoint already lineage-cut it to a leaf.
     val pairs = pairsOverride.getOrElse(incrementalPairsWith(idx, dir, until))
     val vsBase = pairs.filter(col("vs_base"))
       .select(col("b").as("id")).distinct()
@@ -1255,9 +1242,8 @@ object DedupQueries {
       .withColumnRenamed("id", "doc_id")
     // the drop set is candidate-sized (cf. q111) — broadcast so the
     // shard side never shuffles for it
-    finalStage("incr_apply_final", idx.store) {
-      exactKept.join(broadcast(dropNear), Seq("doc_id"), "left_anti")
-    }
+    idx.store.checkpoint(
+      exactKept.join(broadcast(dropNear), Seq("doc_id"), "left_anti"))
   }
 
   private def q136(s0: SparkSession, dir: String): DataFrame =
@@ -1422,17 +1408,14 @@ object DedupQueries {
     // MaxBucket → ≤ 8·MaxBucket·sz) now computes driver-side from the
     // collected sizes and drives the same DISK_ONLY escalation for
     // the caller's pair-set checkpoint and the unions below.
-    val (flat, sizesAgg, sizeRows) =
-      graft.RoundStats.timed("simhash_buckets") {
-        val f = store.checkpoint(docs
-          .select(col("doc_id"), col("sim"),
-            posexplode(Hashing.simHashChunks(col("sim")))
-              .as(Seq("chunk_idx", "chunk"))))
-        val agg = f.groupBy("chunk_idx", "chunk")
-          .agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") >= 2) // singleton buckets pair with nothing
-        (f, agg, agg.collect())
-      }
+    val flat = store.checkpoint(docs
+      .select(col("doc_id"), col("sim"),
+        posexplode(Hashing.simHashChunks(col("sim")))
+          .as(Seq("chunk_idx", "chunk"))))
+    val sizesAgg = flat.groupBy("chunk_idx", "chunk")
+      .agg(count(lit(1)).as("bsz"))
+      .filter(col("bsz") >= 2) // singleton buckets pair with nothing
+    val sizeRows = sizesAgg.collect()
     val estPairs = sizeRows.iterator.map { r =>
       val sz = r.getLong(2)
       if (sz <= MaxBucket) sz * (sz - 1L) / 2L else 8L * MaxBucket * sz
@@ -1464,29 +1447,28 @@ object DedupQueries {
     // collision merely MERGES two buckets (at worst a visible cap
     // drop, odds ~#buckets²/2⁶⁴ ≈ 1e-6 at 5 M docs).
     val obsFwd = Observation()
-    val sub2 = graft.RoundStats.timed("simhash_sub2") {
-      store.checkpoint(memb.filter(col("bsz") > MaxBucket)
-        .select(col("chunk_idx"), col("chunk"),
-          struct(col("doc_id"), col("sim")).as("m"))
-        .select(col("m"),
-          posexplode(Hashing.simHashSubChunks(col("m.sim"), col("chunk_idx")))
-            .as(Seq("sub_idx", "sub")),
-          col("chunk_idx"), col("chunk"))
-        .select(xxhash64(lit("l2"), col("chunk_idx"), col("chunk"),
-          col("sub_idx"), col("sub")).as("k2"), col("m"))
-        // corpus-sized under a flood (cf. minHashPairs's reblock)
-        .repartition(bucketParts, col("k2"))
-        .groupBy("k2")
-        .agg(collect_list(col("m")).as("members"))
-        .filter(size(col("members")) >= 2)
-        // measured level-3 volume, riding the checkpoint job — the
-        // budget decision below reads it with zero extra actions.
-        // Single-code buckets don't count: they never forward (below).
-        .observe(obsFwd, coalesce(sum(when(
-            size(col("members")) > MaxBucket &&
-              size(array_distinct(transform(col("members"),
-                m => m("sim")))) >= 2, size(col("members")))),
-          lit(0L)).cast("long").as("fwd_members"))) }
+    val sub2 = store.checkpoint(memb.filter(col("bsz") > MaxBucket)
+      .select(col("chunk_idx"), col("chunk"),
+        struct(col("doc_id"), col("sim")).as("m"))
+      .select(col("m"),
+        posexplode(Hashing.simHashSubChunks(col("m.sim"), col("chunk_idx")))
+          .as(Seq("sub_idx", "sub")),
+        col("chunk_idx"), col("chunk"))
+      .select(xxhash64(lit("l2"), col("chunk_idx"), col("chunk"),
+        col("sub_idx"), col("sub")).as("k2"), col("m"))
+      // corpus-sized under a flood (cf. minHashPairs's reblock)
+      .repartition(bucketParts, col("k2"))
+      .groupBy("k2")
+      .agg(collect_list(col("m")).as("members"))
+      .filter(size(col("members")) >= 2)
+      // measured level-3 volume, riding the checkpoint job — the
+      // budget decision below reads it with zero extra actions.
+      // Single-code buckets don't count: they never forward (below).
+      .observe(obsFwd, coalesce(sum(when(
+          size(col("members")) > MaxBucket &&
+            size(array_distinct(transform(col("members"),
+              m => m("sim")))) >= 2, size(col("members")))),
+        lit(0L)).cast("long").as("fwd_members")))
     val reblocked = sub2.filter(size(col("members")) <= MaxBucket)
     val level3Rows =
       obsFwd.get("fwd_members").asInstanceOf[Long] * 8L
@@ -1654,17 +1636,15 @@ object DedupQueries {
     // 2-shingle pass ran TWICE per q36 — a full redundant corpus scan
     // at deployment scale (the same class as q136's r16 fix).
     val sorted = array_sort(col("shingles"))
-    val sig = graft.RoundStats.timed("simhash_sig") {
-      store.checkpoint(shingled.select(col("doc_id"),
-        Hashing.simHashCol(col("shingles")).as("sim"),
-        size(sorted).as("n"),
-        xxhash64(sorted).as("h1"),
-        xxhash64(lit("g2"), sorted).as("h2"))) }
+    val sig = store.checkpoint(shingled.select(col("doc_id"),
+      Hashing.simHashCol(col("shingles")).as("sim"),
+      size(sorted).as("n"),
+      xxhash64(sorted).as("h1"),
+      xxhash64(lit("g2"), sorted).as("h2")))
     val docs = sig.filter(col("sim").isNotNull)
       .select(col("doc_id"), col("sim"))
     // feeds three aggregates below — materialize the pair pipeline once
-    val pairs = graft.RoundStats.timed("simhash_pairs") {
-      store.checkpoint(simHashPairs(docs, store = store)) }
+    val pairs = store.checkpoint(simHashPairs(docs, store = store))
     // Exact-dup pairs join on the (n, h1, h2) signature of the sorted
     // shingle set, not the set's JSON encoding: equal signatures ⇒
     // equal sets at 2^-128 collision odds (q37's documented pattern),
@@ -1694,16 +1674,13 @@ object DedupQueries {
       coalesce(expr("bool_and(hamming <= 7)"), lit(true))
         .as("hamming_bound_ok"),
       coalesce(expr("bool_and(a < b)"), lit(true)).as("ordering_ok"))
-    // cf. gram_final/emb_final: the contract view's three aggregates
-    // (exact-signature self-join, anti-join recall probe, bounds scan)
-    // are the query's last compute — stamp them as their own stage so
-    // q36's stages map covers its wall (1-row result; cost-free).
-    finalStage("simhash_final", store) {
-      nExact.crossJoin(missed).crossJoin(bounds)
-        .select(col("n_exact_dup_pairs"),
-          (col("n_missed") === 0).as("exact_recall_ok"),
-          col("hamming_bound_ok"), col("ordering_ok"))
-    }
+    // the contract view's three aggregates (exact-signature
+    // self-join, anti-join recall probe, bounds scan) are the query's
+    // last compute, checkpointed as their own action (1-row result)
+    store.checkpoint(nExact.crossJoin(missed).crossJoin(bounds)
+      .select(col("n_exact_dup_pairs"),
+        (col("n_missed") === 0).as("exact_recall_ok"),
+        col("hamming_bound_ok"), col("ordering_ok")))
   }
 
   private val q36Sql =
@@ -1805,18 +1782,17 @@ object DedupQueries {
     // 4·MaxBucket·sz) — drives the DISK_ONLY escalation downstream
     val szEst = size(col("members")).cast("long")
     val obsEst = Observation()
-    val buckets = graft.RoundStats.timed("gram_buckets") {
-      // scan-stat-sized exchange (cf. minhash_buckets)
-      store.checkpoint(keyed
-        .repartition(bucketParts, col("minkey"), col("isx"))
-        .groupBy("minkey", "isx").agg(collect_list("m").as("members"))
-        .filter(size(col("members")) >= 2)
-        .observe(obsEst, coalesce(sum(
-            when(col("isx") || szEst <= MaxBucket,
-              szEst * (szEst - 1L) / 2L)
-              .otherwise(lit(4L * MaxBucket) * szEst)), lit(0L))
-          .cast("long") // cf. minHashPairs: `/` is double division
-          .as("est_pairs"))) }
+    // scan-stat-sized exchange (cf. minHashPairs's bucket table)
+    val buckets = store.checkpoint(keyed
+      .repartition(bucketParts, col("minkey"), col("isx"))
+      .groupBy("minkey", "isx").agg(collect_list("m").as("members"))
+      .filter(size(col("members")) >= 2)
+      .observe(obsEst, coalesce(sum(
+          when(col("isx") || szEst <= MaxBucket,
+            szEst * (szEst - 1L) / 2L)
+            .otherwise(lit(4L * MaxBucket) * szEst)), lit(0L))
+        .cast("long") // cf. minHashPairs: `/` is double division
+        .as("est_pairs")))
     val estPairs = obsEst.get("est_pairs").asInstanceOf[Long]
     store.escalateFor(raw.sparkSession, estPairs, "gram")
     // pair-volume-derived expansion/dedup width (cf. minHashPairs)
@@ -1872,16 +1848,15 @@ object DedupQueries {
         (least(col("x.n"), col("y.n")).cast("double") /
             greatest(col("x.n"), col("y.n")).cast("double") >= 0.3)
           .as("plausible"))
-    val pairs = graft.RoundStats.timed("gram_expand") {
-      // feeds two consumers (shortcut + verify): materialize once.
-      // (a, b) repartition co-locates the cross-bucket dedup at the
-      // pair-volume width (r16 — cf. minHashPairs's expand: partial
-      // agg bought nothing, duplicates sit in different partitions)
-      store.checkpoint(expandSigPairs(small)
-        .union(expandSigPairs(reblocked))
-        .union(expandSigPairs(exactBuckets))
-        .repartition(exWidth, col("a"), col("b"))
-        .distinct()) }
+    // feeds two consumers (shortcut + verify): materialize once.
+    // (a, b) repartition co-locates the cross-bucket dedup at the
+    // pair-volume width (r16 — cf. minHashPairs's expand: partial
+    // agg bought nothing, duplicates sit in different partitions)
+    val pairs = store.checkpoint(expandSigPairs(small)
+      .union(expandSigPairs(reblocked))
+      .union(expandSigPairs(exactBuckets))
+      .repartition(exWidth, col("a"), col("b"))
+      .distinct())
     // `pairs` (its own lineage-cut checkpoint) was the bucket table's
     // only consumer — free the pipeline's largest block set now
     // instead of at section end (see releaseCheckpoint)
@@ -1902,12 +1877,10 @@ object DedupQueries {
     val splitPairs = k >= 2
     val (exactPairs, toVerify) =
       if (splitPairs) {
-        val ep = graft.RoundStats.timed("gram_split_exact") {
-          store.checkpoint(pairs.filter(col("exact"))
-            .select(col("a"), col("b"), lit(1.0).as("jaccard"))) }
-        val tv = graft.RoundStats.timed("gram_split_vlist") {
-          store.checkpoint(pairs.filter(!col("exact") && col("plausible"))
-            .select(col("a"), col("b"))) }
+        val ep = store.checkpoint(pairs.filter(col("exact"))
+          .select(col("a"), col("b"), lit(1.0).as("jaccard")))
+        val tv = store.checkpoint(pairs.filter(!col("exact") && col("plausible"))
+          .select(col("a"), col("b")))
         releaseCheckpoint(pairs)
         (ep, tv)
       } else (
@@ -1915,16 +1888,16 @@ object DedupQueries {
           .select(col("a"), col("b"), lit(1.0).as("jaccard")),
         pairs.filter(!col("exact") && col("plausible"))
           .select(col("a"), col("b")))
-    def verifySliceOf(cands: DataFrame, tag: String): DataFrame =
+    def verifySliceOf(cands: DataFrame): DataFrame =
       attachFeaturesBy(cands,
         ids => hashedFeatures(gram3Of(raw.join(ids, "doc_id")), "grams"),
-        "doc_id", "hsh", tag, store)
+        "doc_id", "hsh", store)
         .select(col("a"), col("b"),
           jaccard(col("f_a"), col("f_b")).as("jaccard"))
         .filter(col("jaccard") >= 0.3)
     val sliceOuts = scala.collection.mutable.Buffer[DataFrame]()
     val verified =
-      if (k == 1) verifySliceOf(toVerify, "gram")
+      if (k == 1) verifySliceOf(toVerify)
       else {
         // sliced verify (see VerifySlices): bound the transient
         // scratch at ~1/k by materializing one hash-disjoint slice at
@@ -1939,8 +1912,7 @@ object DedupQueries {
           val out = collectCheckpoints(made) {
             store.checkpoint(verifySliceOf(
               toVerify.filter(
-                pmod(xxhash64(lit("slice"), col("a")), lit(k.toLong)) === i),
-              s"gram_s$i")) }
+                pmod(xxhash64(lit("slice"), col("a")), lit(k.toLong)) === i))) }
           val keep = out.queryExecution.analyzed match {
             case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
             case _ => -1
@@ -1958,11 +1930,9 @@ object DedupQueries {
     if (splitPairs) releaseCheckpoint(toVerify)
     // The exact-Jaccard verify join is the pipeline's last (and, on a
     // near-dup-rich corpus, largest) compute — materialize it as its
-    // own stage so the bench attributes it instead of folding it into
-    // the caller's final action (the one attribution hole the r8
-    // stages map left: q37 showed 2.4 s of stages under a 6 s query).
+    // own action instead of folding it into the caller's.
     // Output-sized: only above-threshold pairs land in the checkpoint.
-    val fin = finalStage("gram_final", store) { exactPairs.union(verified) }
+    val fin = store.checkpoint(exactPairs.union(verified))
     // On the split path the final union COPIED the exact-shortcut and
     // slice-output blocks into its own lineage-cut checkpoint — they
     // are dead the moment it lands.
@@ -1994,25 +1964,24 @@ object DedupQueries {
         .as(Seq("tbl", "code")))
     val szEst = size(col("ids")).cast("long")
     val obsEst = Observation()
-    val buckets = graft.RoundStats.timed("emb_buckets") {
-      bigCheckpoint(coded
-        .repartition(bucketParts, col("tbl"), col("code"))
-        .groupBy("tbl", "code").agg(collect_list("vec_id").as("ids"))
-        // drop singleton buckets BEFORE the checkpoint (cf. the ≥2
-        // filters in minHashPairs/gramJaccardPairs): the exact-emb key
-        // gives nearly every vector a unique bucket on a non-duplicated
-        // corpus, so an unfiltered checkpoint materializes a
-        // corpus-sized table the pair expansion immediately discards
-        .filter(size(col("ids")) >= 2)
-        // pair-volume estimate riding the checkpoint job (cf.
-        // minHashPairs): capped SRP buckets expand C(sz,2) (oversized
-        // ones are dropped by the cap filter → 0), the exact-emb
-        // table (tbl 8) is uncapped by construction
-        .observe(obsEst, coalesce(sum(
-            when(col("tbl") === 8 || szEst <= MaxBucket,
-              szEst * (szEst - 1L) / 2L).otherwise(lit(0L))), lit(0L))
-          .cast("long") // cf. minHashPairs: `/` is double division
-          .as("est_pairs"))) }
+    val buckets = bigCheckpoint(coded
+      .repartition(bucketParts, col("tbl"), col("code"))
+      .groupBy("tbl", "code").agg(collect_list("vec_id").as("ids"))
+      // drop singleton buckets BEFORE the checkpoint (cf. the ≥2
+      // filters in minHashPairs/gramJaccardPairs): the exact-emb key
+      // gives nearly every vector a unique bucket on a non-duplicated
+      // corpus, so an unfiltered checkpoint materializes a
+      // corpus-sized table the pair expansion immediately discards
+      .filter(size(col("ids")) >= 2)
+      // pair-volume estimate riding the checkpoint job (cf.
+      // minHashPairs): capped SRP buckets expand C(sz,2) (oversized
+      // ones are dropped by the cap filter → 0), the exact-emb
+      // table (tbl 8) is uncapped by construction
+      .observe(obsEst, coalesce(sum(
+          when(col("tbl") === 8 || szEst <= MaxBucket,
+            szEst * (szEst - 1L) / 2L).otherwise(lit(0L))), lit(0L))
+        .cast("long") // cf. minHashPairs: `/` is double division
+        .as("est_pairs")))
     // pair-volume-derived expansion/dedup width (cf. minHashPairs)
     val exWidth =
       expandWidth(obsEst.get("est_pairs").asInstanceOf[Long], bucketParts)
@@ -2029,18 +1998,12 @@ object DedupQueries {
     val store = new PairStorage
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val cands = embeddingPairs(emb)
-    // cf. q37's gram_final: the cosine verify is the last compute —
-    // give it its own stage so the bench's stages map covers the
-    // whole query wall time. attachFeatures runs its own eager timed
-    // sub-stages at construction time, so the block below times ONLY
-    // the verify join (tags stay non-overlapping). Output-sized
-    // (cos ≥ 0.4 pairs only).
-    val verified = attachFeatures(cands, emb, "vec_id", "embedding",
-        "emb", store)
+    // cf. q37: the cosine verify is the last compute, checkpointed as
+    // its own action. Output-sized (cos >= 0.4 pairs only).
+    store.checkpoint(attachFeatures(cands, emb, "vec_id", "embedding", store)
       .select(col("a"), col("b"),
         CosineSim(col("f_a"), col("f_b")).as("cos"))
-      .filter(col("cos") >= 0.4)
-    finalStage("emb_final", store) { verified }
+      .filter(col("cos") >= 0.4))
       .orderBy("a", "b")
   }
 
@@ -2250,17 +2213,12 @@ object DedupQueries {
     */
   private[queries] def clusterLabels(s0: SparkSession, dir: String): DataFrame =
     graft.Memo(s0, "cluster_labels", dir, "documents") {
-      // the pair pipeline and the label loop are attributed separately
-      // in the bench's stage dump (the r7 residue question was "which
-      // half of q102 is the fixed cost")
       // NO second materialization: nearDupPairs IS already an eager
-      // pair-level checkpoint (minhash_final), so narrowing to (a, b)
-      // stays a lazy projection over that leaf — a checkpointed copy
-      // here doubled the pair table's scratch footprint for nothing
-      // (at ×512 the duplicate was ~a quarter of the q102 path's disk
-      // peak). The timed block attributes the pair build on a cold
-      // cache and costs nothing on a warm one.
-      val table = graft.RoundStats.timed("q102_pairs") { pairTable(s0, dir) }
+      // pair-level checkpoint, so narrowing to (a, b) stays a lazy
+      // projection over that leaf — a checkpointed copy here doubled
+      // the pair table's scratch footprint for nothing (at ×512 the
+      // duplicate was ~a quarter of the q102 path's disk peak).
+      val table = pairTable(s0, dir)
       val pairs = table.pairs.select(col("a"), col("b"))
       // The label loop iterates over the verified PAIR set — orders of
       // magnitude smaller than the corpus (it is the near-dup rate).

@@ -118,11 +118,9 @@ object GraphQueries {
       // pinned to one task, the q123 posting-list skew surface;
       // Σd = E bounds the head count by E/maxAdjArray, so the head
       // table is always broadcast-tiny).
-      val degStats = graft.RoundStats.timed("pr_deg_census") {
-        deg.agg(count(lit(1)),
-          coalesce(sum(col("d")), lit(0L)),
-          count(when(col("d") > maxAdjArray, 1))).collect()(0)
-      }
+      val degStats = deg.agg(count(lit(1)),
+        coalesce(sum(col("d")), lit(0L)),
+        count(when(col("d") > maxAdjArray, 1))).collect()(0)
       val (nOut, eCells, nHeads) =
         (degStats.getLong(0), degStats.getLong(1), degStats.getLong(2))
       require(nOut > 0, "pagerank needs a non-empty graph")
@@ -144,10 +142,8 @@ object GraphQueries {
           val (nAll, nIn) = nodes0 match {
             case None => (nOut, nOut)
             case Some(n0) =>
-              val nst = graft.RoundStats.timed("pr_node_census") {
-                n0.agg(count(lit(1)),
-                  coalesce(sum(col("has_in")), lit(0L))).collect()(0)
-              }
+              val nst = n0.agg(count(lit(1)),
+                coalesce(sum(col("has_in")), lit(0L))).collect()(0)
               (nst.getLong(0), nst.getLong(1))
           }
           def nodes = nodes0.get.select(col("node")) // general path only
@@ -183,9 +179,8 @@ object GraphQueries {
             // job and one fewer cache pass; rounds 2+ read the cache
             // exactly as before (BlockInfoManager serializes any
             // concurrent first-compute of a partition, so a fused
-            // 2-step round can't double-build it). Attribution-wise
-            // the build now lands inside `pr_round1xK` — read round 1
-            // vs round 2 in the stages map for the build cost.
+            // 2-step round can't double-build it). The build's cost is
+            // in round 1's `localCheckpoint` action.
             def rankJoin(r: DataFrame): DataFrame = {
               // past the guard, pin sort-merge: the checkpointed rank
               // table has no size stats, and a planner fallback to a
@@ -253,21 +248,17 @@ object GraphQueries {
                 // tiny-loop gate).
                 val fuseK = if (nHeads != 0) 1 else 5
                 var left = iters
-                var round = 0
                 while (left > 0) {
                   val k = math.min(fuseK, left)
-                  round += 1
-                  r = graft.RoundStats.timed(s"pr_round${round}x$k") {
-                    var cur = r
-                    for (_ <- 1 to k) cur = step(cur)
-                    cur.localCheckpoint()
-                  }
+                  var cur = r
+                  for (_ <- 1 to k) cur = step(cur)
+                  r = cur.localCheckpoint()
                   left -= k
                 }
                 r
               } else {
                 var r = nodes.select(col("node"), lit(r0).as("r"))
-                for (i <- 1 to iters) {
+                for (_ <- 1 to iters) {
                   // dangling mass: rank parked on out-degree-0 nodes,
                   // shared uniformly — a 1-row aggregate broadcast into
                   // the same round job
@@ -275,16 +266,14 @@ object GraphQueries {
                       Seq("node"), "left_anti")
                     .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
                     .select(expr(s"dm DIV ${n}L").as("share"))
-                  r = graft.RoundStats.timed(s"pr_general_r$i") {
-                    nodes
-                      .join(rankJoin(r).withColumnRenamed("dst", "node"),
-                        Seq("node"), "left")
-                      .crossJoin(broadcast(dang))
-                      .select(col("node"), (lit(base) +
-                        expr("(85 * (coalesce(in_mass, 0L) + share)) DIV 100"))
-                        .as("r"))
-                      .localCheckpoint()
-                  }
+                  r = nodes
+                    .join(rankJoin(r).withColumnRenamed("dst", "node"),
+                      Seq("node"), "left")
+                    .crossJoin(broadcast(dang))
+                    .select(col("node"), (lit(base) +
+                      expr("(85 * (coalesce(in_mass, 0L) + share)) DIV 100"))
+                      .as("r"))
+                    .localCheckpoint()
                 }
                 r
               }

@@ -44,11 +44,6 @@ object IvfAnn {
   def index(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
     graft.Memo(s, "ivf_index", dir, "embeddings") {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      // Each one-time index phase is a RoundStats stage (cf. the dedup
-      // family): q51's in-suite wall is ~all cold index build, and the
-      // bench stages map should say whether the k-means fit or the
-      // assignment scan paid it.
-      //
       // The fit is DRIVER-SIDE Lloyd's over the collected sample: the
       // sample is bounded by design (that is the whole point of
       // sampling before the fit), so a cluster-side iterative fit —
@@ -58,7 +53,7 @@ object IvfAnn {
       // the sample is one scan-thin job; the Lloyd's loop itself is
       // microseconds of driver math. Seeded k-means++ init keeps the
       // index deterministic across runs and partitionings.
-      val centers = graft.RoundStats.timed("ivf_fit") {
+      val centers = {
         // Deterministic hash-ordered top-SampleCap: the collect is
         // bounded by a fixed ROW COUNT, never a corpus fraction (a
         // 1-in-m fraction is corpus-proportional — ~25 TB through the
@@ -76,7 +71,7 @@ object IvfAnn {
       // Assignment: ONE codegen'd scan with the centroid table carried
       // into the generated code (functions/NearestCell) — no ML
       // pipeline in the per-row path.
-      val assigned = graft.RoundStats.timed("ivf_assign") {
+      val assigned = {
         val a = emb
           .select(col("vec_id"), col("embedding"),
             NearestCell(col("embedding"), centers).as("cell"))

@@ -643,11 +643,9 @@ object TextQueries {
     // 2.5 CPU-s on 4 tasks, 3.7 s wall at sf0.1). The narrow-scan
     // repartition spreads the regex stage across the session's cores;
     // at cluster scale a real corpus scan is already thousands of
-    // splits and the branch never fires (cf. DedupQueries.fanOut).
-    val t0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val target = s.sparkContext.defaultParallelism
-    val t = (if (t0.rdd.getNumPartitions < target) t0.repartition(target)
-             else t0)
+    // splits and the branch never fires.
+    val t = DedupQueries.fanOut(
+        Tables.documents(s, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), T.normText(col("text")).as("t"))
     t.select(col("doc_id"),
         explode(array(Patterns.map { case (kind, re) =>

@@ -162,39 +162,6 @@ object StreamingQueries {
     */
   private[graft] def cleanupFileSinkDirs(): Unit = deleteTrackedSinkDirs()
 
-  /** Start `df` into the selected snapshot sink, drain the source,
-    * snapshot the sink (memory-table collect or distributed parquet
-    * read-back — see [[sinkMode]]), and tear everything down (shared
-    * session hygiene).
-    */
-  /** State-operator row counts (operatorName → numRowsTotal, from the
-    * final StreamingQueryProgress), ACCUMULATED across every drain
-    * since the last [[resetStateRows]] — published for harness
-    * assertions (ScaleStress's ×R state-bound gate, r12). A reader
-    * resets BEFORE running a query and reads after it returns; a
-    * query that drains several streams (none today) then sums all of
-    * them instead of only the last drain's (ADVICE r12 — the
-    * overwrite-per-drain slot under-measured multi-drain state).
-    * Like [[sinkModeOverride]], this is part of the sequential-
-    * harness contract: readers run queries one at a time.
-    */
-  @volatile private[graft] var lastStateRowsByOp: Seq[(String, Long)] =
-    Seq.empty
-
-  /** Shuffle-partition count the LAST drained stateful query ran with
-    * (0 for stateless/no-progress queries) — published so the scale
-    * harness and the partition-cap spec can assert the cap actually
-    * reached the executed stream (the conf is fixed into
-    * the checkpoint at start; the progress is the ground truth).
-    */
-  @volatile private[graft] var lastNumShufflePartitions: Long = 0L
-
-  /** Clear the accumulated state-row capture (call before the query
-    * under measurement — a stateless query must not inherit its
-    * predecessor's rows).
-    */
-  private[graft] def resetStateRows(): Unit = lastStateRowsByOp = Seq.empty
-
   /** Estimated rows micro-batch 1 will ingest from `dir`'s events
     * table — the SIXTH envelope class's trigger (r14, found by the
     * ×1024 streams probe): a replay harness feeds the whole scaled
@@ -310,6 +277,13 @@ object StreamingQueries {
     else None
   }
 
+  /** Start `df` into the selected snapshot sink, drain the source,
+    * snapshot the sink (memory-table collect or distributed parquet
+    * read-back — see [[sinkMode]]), and tear everything down (shared
+    * session hygiene). Batches, state rows and partitions are in the
+    * stream's progress events, which a caller reads through
+    * [[graft.Profile]].
+    */
   private def runToSnapshot(s: SparkSession, df: DataFrame, prefix: String,
       mode: OutputMode, corpusLinearState: Boolean = false,
       ingestRows: Long = 0L): DataFrame = {
@@ -332,12 +306,6 @@ object StreamingQueries {
     // state-store commits cost ~9x less (perfbench relational
     // `streaming.state_commit_ms` 352 -> 40 ms, 4 cores); fewer stores
     // still mean fewer commits, so 4 stands (see streamPartitionCap).
-    // Stage attribution (cf. the dedup/loop families): the stream
-    // demos are the bench's last opaque walls. `<q>_start` is plan +
-    // source listing + state-store setup, `<q>_drain_bN` the actual
-    // micro-batch drain (N = batches run — a per-batch fixed cost
-    // shows as the batch count next to the wall), `<q>_snap` the sink
-    // snapshot + state-store unload.
     // State-store provider: disk-backed RocksDB iff the query's state
     // is CORPUS-LINEAR and the run is in the file-sink (scale) regime
     // (r13, found by the ×512 distinct streams probe): the default
@@ -399,76 +367,51 @@ object StreamingQueries {
     val scoped = Seq("spark.sql.shuffle.partitions" -> streamPartitionCap(
       s.conf.get("spark.sql.shuffle.partitions").toInt).toString) ++
       ckptManager.map(ckptKey -> _) ++ rocks
-    val q = graft.RoundStats.timed(s"${prefix}_start") {
-      withConf(s, scoped: _*) {
-        if (!useFile)
-          df.writeStream.outputMode(mode).format("memory")
-            .queryName(name).start()
-        else if (mode == OutputMode.Append())
-          df.writeStream.outputMode(mode).format("parquet")
-            .option("path", filePath)
-            .option("checkpointLocation", s"$fileBase/ckpt").start()
-        else if (mode == OutputMode.Complete())
-          // the parquet file sink is append-only: Complete-mode demos
-          // snapshot through a per-batch full-state overwrite instead
-          // (complete output IS the full state each batch, so the last
-          // overwrite is the whole result)
-          df.writeStream.outputMode(mode)
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(filePath)
-            }
-            .option("checkpointLocation", s"$fileBase/ckpt").start()
-        else
-          // Update (or any future mode) emits per-batch DELTAS, not
-          // full state: the overwrite branch above would silently
-          // snapshot only the LAST batch's changed rows. No stream
-          // demo uses Update today — fail loudly rather than wrong.
-          throw new IllegalArgumentException(
-            s"file snapshot sink supports Append/Complete, not $mode " +
-              "(Update emits deltas; a full-state snapshot would be wrong)")
-      }
+    val q = withConf(s, scoped: _*) {
+      if (!useFile)
+        df.writeStream.outputMode(mode).format("memory")
+          .queryName(name).start()
+      else if (mode == OutputMode.Append())
+        df.writeStream.outputMode(mode).format("parquet")
+          .option("path", filePath)
+          .option("checkpointLocation", s"$fileBase/ckpt").start()
+      else if (mode == OutputMode.Complete())
+        // the parquet file sink is append-only: Complete-mode demos
+        // snapshot through a per-batch full-state overwrite instead
+        // (complete output IS the full state each batch, so the last
+        // overwrite is the whole result)
+        df.writeStream.outputMode(mode)
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            b.write.mode("overwrite").parquet(filePath)
+          }
+          .option("checkpointLocation", s"$fileBase/ckpt").start()
+      else
+        // Update (or any future mode) emits per-batch DELTAS, not
+        // full state: the overwrite branch above would silently
+        // snapshot only the LAST batch's changed rows. No stream
+        // demo uses Update today — fail loudly rather than wrong.
+        throw new IllegalArgumentException(
+          s"file snapshot sink supports Append/Complete, not $mode " +
+            "(Update emits deltas; a full-state snapshot would be wrong)")
     }
-    try {
-      val c0 = cpuNow()
-      val t0 = System.nanoTime()
-      q.processAllAvailable()
-      lastStateRowsByOp = lastStateRowsByOp ++ Option(q.lastProgress).toSeq
-        .flatMap(_.stateOperators.toSeq)
-        .map(so => (so.operatorName, so.numRowsTotal))
-      lastNumShufflePartitions = Option(q.lastProgress).toSeq
-        .flatMap(_.stateOperators.toSeq)
-        .map(_.numShufflePartitions).maxOption.getOrElse(0L)
-      val nb = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
-      graft.RoundStats.record(s"${prefix}_drain_b$nb",
-        (System.nanoTime() - t0) / 1e9,
-        cpuNow().map(c1 => c0.map(c => (c1 - c) / 1e9).getOrElse(-1.0))
-          .getOrElse(-1.0))
-    } finally {
+    try q.processAllAvailable()
+    finally {
       q.stop()
       q.awaitTermination()
     }
-    graft.RoundStats.timed(s"${prefix}_snap") {
-      if (!useFile) materializeAndDrop(s, name)
-      else {
-        // same state-store hygiene as the memory path (see
-        // materializeAndDrop); the snapshot itself is a lazy
-        // distributed scan of what the sink committed
-        org.apache.spark.sql.GraftSqlBridge.unloadStateStores()
-        if (new java.io.File(filePath).exists())
-          s.read.schema(df.schema).parquet(filePath)
-        else // zero batches / all rows withheld: sink dir never created
-          s.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
-      }
+    if (!useFile) materializeAndDrop(s, name)
+    else {
+      // same state-store hygiene as the memory path (see
+      // materializeAndDrop); the snapshot itself is a lazy
+      // distributed scan of what the sink committed
+      org.apache.spark.sql.GraftSqlBridge.unloadStateStores()
+      if (new java.io.File(filePath).exists())
+        s.read.schema(df.schema).parquet(filePath)
+      else // zero batches / all rows withheld: sink dir never created
+        s.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
     }
   }
-
-  private def cpuNow(): Option[Long] =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean =>
-        Some(os.getProcessCpuTime)
-      case _ => None
-    }
 
   /** Snapshot a memory-sink table into a local DataFrame and drop the
     * temp view, so finished streaming queries leave no session state
@@ -1052,14 +995,12 @@ object StreamingQueries {
     * caller in the JVM (the daily-job contract: q138 emits pairs and
     * q139 applies them over the SAME written feature table).
     */
-  private def streamFeats(s: SparkSession, dir: String): DataFrame =
+  private[graft] def streamFeats(s: SparkSession, dir: String): DataFrame =
     graft.Memo(s, "stream_feats", dir, "documents") {
-      graft.RoundStats.timed("stream_feats_ckpt") {
-        graft.queries.DedupQueries.hashedFeaturesOf(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      }
+      graft.queries.DedupQueries.hashedFeaturesOf(
+        Tables.documents(s, dir).select(col("doc_id"), col("text")))
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }(Seq(_))
 
   private[graft] def streamNearDupPairs(s: SparkSession, dir: String): DataFrame = {

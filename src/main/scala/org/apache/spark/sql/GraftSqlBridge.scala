@@ -29,9 +29,16 @@ object GraftSqlBridge {
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 
   /** Drain the listener bus: listener delivery is asynchronous, so a
-    * reader of listener-fed records (job counts, Bench's scheduler
-    * windows, `graft.Profile`) drains it before reading.
+    * reader of listener-fed records (`graft.Profile`) drains it
+    * before reading.
     */
   def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The query execution an execution-end event reports (the object a
+    * `QueryExecutionListener` receives for the same action); null for
+    * an event posted without one.
+    */
+  def queryExecution(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : org.apache.spark.sql.execution.QueryExecution = e.qe
 }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  1. the sliced verify frees ONLY its own checkpoints (thread-local
   *     collector, not a context-global registry diff);
   *  2. Bench's per-query failure attribution is per-window (a later
-  *     failing query no longer inherits the first failure's reason);
+  *     failing query no longer inherits the first failure's reason:
+  *     each query's scheduler totals come from its own Profile);
   *  3. q138/q139's corpus feature checkpoint is memoized per dir
   *     (repeated calls in one JVM reuse ONE block set);
   *  4. eventsRowCount reads parquet footers driver-side (no Spark
@@ -64,42 +65,34 @@ class AdviceR14Spec extends AnyFunSuite {
   }
 
   test("SchedCounters attributes each window's FIRST failure, not the JVM's") {
-    import org.apache.spark.scheduler._
-    val sched = new Bench.SchedCounters
-    val info = new TaskInfo(0L, 0, 0, 0, 0L, "driver", "localhost",
-      TaskLocality.PROCESS_LOCAL, false)
-    def end(reason: org.apache.spark.TaskEndReason) =
-      SparkListenerTaskEnd(1, 0, "ResultTask", reason, info, null, null)
-    // query A fails with TaskResultLost
-    sched.onTaskEnd(end(org.apache.spark.TaskResultLost))
-    assert(sched.windowFailure.contains("TaskResultLost"))
-    // query B's window starts: the bench resets, then B fails with a
-    // DIFFERENT reason — the reported reason must be B's own
-    sched.resetWindowFailure()
-    assert(sched.windowFailure.isEmpty)
-    sched.onTaskEnd(end(org.apache.spark.UnknownReason))
-    assert(sched.windowFailure.contains("UnknownReason"),
-      s"window failure '${sched.windowFailure}' is not this window's " +
-        "first failure (the r14 bug: the once-per-JVM slot reported " +
-        "query A's reason for query B)")
+    // Bench's per-query sched entry is its query's Profile: a scope
+    // reports the first task failure inside it, never an earlier one
+    def failing(why: String) = Profile.of(spark)(scala.util.Try(
+      spark.range(4).selectExpr(s"assert_true(id < 0, '$why')").collect()))
+    val a = failing("query A failed")
+    assert(a.value.isFailure)
+    assert(a.tasks.failed > 0)
+    assert(a.tasks.firstFailure.contains("query A failed"), a.tasks.firstFailure)
+    val ok = Profile.of(spark)(spark.range(4).count())
+    assert(ok.tasks.failed === 0 && ok.tasks.firstFailure.isEmpty)
+    val b = failing("query B failed")
+    assert(b.tasks.firstFailure.contains("query B failed"),
+      s"window failure '${b.tasks.firstFailure}' is not this window's " +
+        "first failure (a once-per-JVM slot would report query A's " +
+        "reason for query B)")
   }
 
   test("q138/q139 corpus feature checkpoint is memoized per dir " +
       "(one block set, fingerprint-guarded)") {
     import graft.streaming.StreamingQueries
-    graft.RoundStats.drain()
-    StreamingQueries.streamNearDupPairs(spark, sf)
-    val cold = graft.RoundStats.drain().map(_.tag)
-    StreamingQueries.streamNearDupPairs(spark, sf)
-    val warm = graft.RoundStats.drain().map(_.tag)
-    // cold call either builds ("stream_feats_ckpt") or hits a memo a
-    // previous suite already planted in this shared JVM; the SECOND
-    // call right after must be a memo hit — never a rebuild
-    assert(cold.contains("stream_feats_ckpt") ||
-      cold.contains("stream_feats_memo_hit"))
-    assert(warm.contains("stream_feats_memo_hit") &&
-      !warm.contains("stream_feats_ckpt"),
-      s"repeat streamNearDupPairs rebuilt the corpus checkpoint: $warm")
+    Memo.release(sf)
+    val cold = Profile.of(spark)(StreamingQueries.streamFeats(spark, sf))
+    assert(cold.actions.map(_.name) === Seq("localCheckpoint"))
+    val warm = Profile.of(spark)(StreamingQueries.streamFeats(spark, sf))
+    // the second call is a memo hit: the same checkpoint, no job
+    assert(warm.value eq cold.value,
+      "repeat streamFeats rebuilt the corpus checkpoint")
+    assert(warm.jobs === 0)
     Memo.release(sf)
   }
 
@@ -110,29 +103,16 @@ class AdviceR14Spec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_evcount")
     spark.read.parquet(s"$sf/events.parquet").limit(777)
       .write.parquet(s"$tmp/events.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // listener delivery is async; quiesce the bus around the probe
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      val j0 = jobs.get()
-      val n = StreamingQueries.eventsRowCount(spark, tmp.toString)
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      assert(n === 777L, s"footer count $n != written 777")
-      assert(jobs.get() === j0,
-        "eventsRowCount scheduled a Spark job — the probe must be a " +
-          "driver-side footer read (ADVICE r14)")
-      // cached on repeat
-      assert(StreamingQueries.eventsRowCount(spark, tmp.toString) === 777L)
-      // missing dir: logged fallback, returns 0, does not throw
-      assert(StreamingQueries.eventsRowCount(spark,
-        s"$tmp/definitely_missing") === 0L)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val probe = Profile.of(spark)(StreamingQueries.eventsRowCount(spark, tmp.toString))
+    assert(probe.value === 777L, s"footer count ${probe.value} != written 777")
+    assert(probe.jobs === 0,
+      "eventsRowCount scheduled a Spark job — the probe must be a " +
+        "driver-side footer read (ADVICE r14)")
+    // cached on repeat
+    assert(StreamingQueries.eventsRowCount(spark, tmp.toString) === 777L)
+    // missing dir: logged fallback, returns 0, does not throw
+    assert(StreamingQueries.eventsRowCount(spark,
+      s"$tmp/definitely_missing") === 0L)
   }
 }
 
@@ -153,9 +133,10 @@ class StreamPartitionCapSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("the cap reaches the executed stream: q138 runs at the gate cap") {
-    StreamingQueries.resetStateRows()
-    SparkEntry.queries("q138_stream_dedup_near")(spark, sf).count()
-    assert(StreamingQueries.lastNumShufflePartitions === 4L,
-      s"gate-scale q138 left the fixed cap: ${StreamingQueries.lastNumShufflePartitions}")
+    val p = Profile.of(spark)(
+      SparkEntry.queries("q138_stream_dedup_near")(spark, sf).count())
+    val parts = p.streams.flatMap(_.stateOperators).map(_.numShufflePartitions)
+    assert(parts.nonEmpty && parts.forall(_ == 4L),
+      s"gate-scale q138 left the fixed cap: $parts")
   }
 }

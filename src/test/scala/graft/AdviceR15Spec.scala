@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Direct-evidence closures for the ADVICE r15 items:
   *  1. the memoized q136 pair table is a checkpoint leaf (Scan
-  *     ExistingRDD) after a construction under `Profile.actions`, the
+  *     ExistingRDD) after a construction under a `Profile`, the
   *     shape docs/PLANS.md's WARM q137 section shows;
   *  2. tableRowCount recurses into nested/partitioned parquet layouts
   *     and treats an empty file list under a real directory as a
@@ -14,9 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     survives (its lineage-free localCheckpoint could not recover
   *     from an unpersist).
   * (The 4th item — draining the async listener bus before snapshot
-  * reads in the stream1 probe and Bench's sched windows — is two call
-  * sites of GraftSqlBridge.waitForListeners, the primitive the
-  * AdviceR14Spec footer test already exercises around its probes.)
+  * reads — is `Profile.of`'s GraftSqlBridge.waitForListeners call,
+  * which every profile-reading spec exercises.)
   */
 class AdviceR15Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -25,15 +24,15 @@ class AdviceR15Spec extends AnyFunSuite {
   test("warm-audit sequence: evicting the nofinal-poisoned memo yields a " +
       "checkpoint-leaf pair table; without the evict the memo is poisoned") {
     // Every construction checkpoints its pair table, and an audit
-    // reads plans through Profile.actions rather than skipping the
+    // reads plans through a Profile rather than skipping the
     // final checkpoint, so no construction memoizes an un-checkpointed
     // table. Pinned: q136 built under the capture (the audit loop's
     // shape), then run clean with no evict, leaves a checkpoint leaf.
     import graft.queries.DedupQueries
     Memo.release(sf)
-    val (_, actions) = Profile.actions(spark)(
+    val built = Profile.of(spark)(
       SparkEntry.queries("q136_dedup_incremental")(spark, sf))
-    assert(actions.exists(_.name == "localCheckpoint"))
+    assert(built.actions.exists(_.name == "localCheckpoint"))
     SparkEntry.queries("q136_dedup_incremental")(spark, sf).count()
     assert(DedupQueries.incrementalPairs(spark, sf).queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],

@@ -34,23 +34,10 @@ class BenchJsonSpec extends AnyFunSuite {
   }
 
   test("the timed action materializes q20's window over the columns it reads") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     val spark = SparkTestSession.spark
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      Bench.materialize(SparkEntry.queries("q20_window_range")(
-        spark, SparkTestSession.sf))
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val plan = plans.asScala.mkString("\n")
+    val plan = Profile.of(spark)(Bench.materialize(SparkEntry.queries(
+        "q20_window_range")(spark, SparkTestSession.sf)))
+      .actions.map(_.qe.executedPlan.toString).mkString("\n")
     assert(plan.contains("Window"), plan)
     val readSchema = "ReadSchema: struct<([^>]*)>".r
       .findAllMatchIn(plan).map(_.group(1)).mkString(",")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * kept conf fails loudly on a bad value at its first read, the
   * `SPARK_GRAFT_CONF` parser rejects malformed entries by name, and a
   * source scan keeps the surface from growing back outside `Conf`. The
-  * same scan keeps log text ASCII.
+  * same scan keeps log text ASCII and Spark listeners inside `Profile`.
   */
 class ConfSurfaceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -161,7 +161,7 @@ class ConfSurfaceSpec extends AnyFunSuite {
   }
 
   // The surface holds no JVM system property: a harness reads a
-  // pipeline's plans through `Profile.actions` instead of a property
+  // pipeline's plans through `Profile` instead of a property
   // that makes the pipeline skip a step.
   test("src/main reads no JVM system property") {
     sources.foreach { case (name, src) =>
@@ -171,5 +171,15 @@ class ConfSurfaceSpec extends AnyFunSuite {
         assert(pattern.r.findFirstIn(body).isEmpty, s"$name reads a system property ($pattern)")
       }
     }
+  }
+
+  // One recorder: Spark's listener events reach src/main only through
+  // a Profile scope, so no number depends on a listener that outlived
+  // its query.
+  test("src/main registers Spark listeners only in Profile") {
+    val registrations = "addSparkListener|streams\\s*\\.\\s*addListener|listenerManager\\s*\\.\\s*register".r
+    val registering = sources.filter { case (_, src) =>
+      registrations.findFirstIn(code(src)).isDefined }.map(_._1)
+    assert(registering === Seq("Profile.scala"))
   }
 }

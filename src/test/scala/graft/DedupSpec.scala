@@ -261,40 +261,24 @@ class DedupSpec extends AnyFunSuite {
     */
   test("q35 near-dup flood: capped sub-buckets are observed, not silent") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.QueryExecution
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    @volatile var metric: Option[org.apache.spark.sql.Row] = None
-    // the observe sits upstream of the pair checkpoint, so its metric
-    // surfaces on the CHECKPOINT action — capture via the listener a
-    // production pipeline would use
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.get("minhash_reblock")
-          .foreach(r => metric = Some(r))
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
       val common = (1 to 50).map(i => s"w$i").mkString(" ")
       val docs = (0 until 100).map(i => (i.toLong, s"$common u$i"))
         .toDF("doc_id", "text")
-      val pairs = graft.queries.DedupQueries.minHashPairs(docs).collect()
-      assert(pairs.forall(_.getAs[Double]("jaccard") >= 0.5),
+      // the observe sits upstream of the pair checkpoint, so its
+      // metric surfaces on the CHECKPOINT action's query execution
+      val p = Profile.of(spark)(
+        graft.queries.DedupQueries.minHashPairs(docs).collect())
+      assert(p.value.forall(_.getAs[Double]("jaccard") >= 0.5),
         "emitted pair below the verify threshold")
-      val deadline = System.nanoTime() + 10000000000L
-      while (metric.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(metric.isDefined, "minhash_reblock metric never observed")
-      assert(metric.get.getAs[Long]("dropped_subbuckets") >= 1L,
+      val metric = p.actions.flatMap(_.qe.observedMetrics.get("minhash_reblock"))
+      assert(metric.nonEmpty, "minhash_reblock metric never observed")
+      assert(metric.last.getAs[Long]("dropped_subbuckets") >= 1L,
         "homogeneous flood must report its dropped sub-buckets")
-      assert(metric.get.getAs[Long]("dropped_members") >= 65L)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prev)
-    }
+      assert(metric.last.getAs[Long]("dropped_members") >= 65L)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("q38 exact-embedding flood past the bucket cap keeps full pair recall") {
@@ -645,12 +629,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("q36 contract probes plan corpus/output-sized joins as sort-merge") {
-    // the entry checkpoints its 1-row result (finalStage), so the
+    // the entry checkpoints its 1-row result, so the
     // returned frame only scans that checkpoint; the probe joins are
     // the executed plan of the final localCheckpoint action
-    val (_, actions) = Profile.actions(spark)(
-      SparkEntry.queries("q36_dedup_simhash")(spark, sf))
-    val plan = actions.filter(_.name == "localCheckpoint").last
+    val plan = Profile.of(spark)(SparkEntry.queries("q36_dedup_simhash")(spark, sf))
+      .actions.filter(_.name == "localCheckpoint").last
       .qe.executedPlan.toString
     // the 1-row bounds crossJoins legitimately plan as nested-loop;
     // what must never appear is a hash-relation build of canon/pairs

@@ -137,34 +137,28 @@ class IncrementalDedupSpec extends AnyFunSuite {
   /** r14 (VERDICT r13 #2): the pair-pipeline recompute pin. A cold
     * q136 materializes the pipeline ONCE per corpus; the warm path —
     * q136 rerun or q137's apply — must reuse the memoized table and
-    * run ZERO pipeline stages (the r13 bench showed q137 cold-re-
-    * running incr_probe_keys/incr_cands/minhash_* q136 had just
+    * run ZERO pipeline stages (the r13 bench showed q137 re-running
+    * the probe, candidate and MinHash checkpoints q136 had just
     * built, roughly doubling the family's bench cost). Evidence is
-    * RoundStats: pipeline tags on the cold call, none on the warm
-    * ones; the q137 entry's stage list shows only apply-side tags.
+    * each scope's Profile: the cold call runs the pipeline's actions,
+    * the warm one returns the same frame with no job, and the q137
+    * entry runs none of the pipeline's executed plans.
     */
   test("incremental pairs memo: warm q136/q137 run zero pipeline stages") {
     Memo.release(sf)
-    RoundStats.drain()
-    val cold = DedupQueries.incrementalPairs(spark, sf)
-    val coldTags = RoundStats.drain().map(_.tag).toSet
-    assert(coldTags.contains("incr_probe_keys") &&
-      coldTags.contains("minhash_expand"),
-      s"cold build must run the pipeline (saw $coldTags)")
-    val warm = DedupQueries.incrementalPairs(spark, sf)
-    assert(warm eq cold, "same fingerprint must reuse the pair table")
-    val warmTags = RoundStats.drain().map(_.tag).toSet
-    assert(warmTags === Set("incr_pairs_memo_hit"),
-      s"warm q136 re-ran pipeline stages: ${warmTags - "incr_pairs_memo_hit"}")
-    // the q137 ENTRY (memoized-pairs path): only apply-side stages
-    SparkEntry.queries("q137_dedup_incr_apply")(spark, sf).count()
-    val applyTags = RoundStats.drain().map(_.tag).toSet
-    val pipelineTags = applyTags.filter(t =>
-      t.startsWith("incr_probe") || t.startsWith("incr_cands") ||
-        t.startsWith("minhash_") || t.startsWith("incr_index"))
-    assert(pipelineTags.isEmpty ||
-      pipelineTags === Set("incr_index_memo_hit"),
-      s"q137 re-ran pair-pipeline stages: $pipelineTags")
-    assert(applyTags.contains("incr_apply_final"))
+    val cold = Profile.of(spark)(DedupQueries.incrementalPairs(spark, sf))
+    val pipeline = cold.actions.map(a => PlanAudit.explain(a.qe)).toSet
+    assert(cold.actions.count(_.name == "localCheckpoint") > 4,
+      s"cold build must run the pipeline (saw ${cold.actions.map(_.name)})")
+    val warm = Profile.of(spark)(DedupQueries.incrementalPairs(spark, sf))
+    assert(warm.value eq cold.value, "same fingerprint must reuse the pair table")
+    assert(warm.jobs === 0, "warm q136 ran a Spark job")
+    // the q137 ENTRY (memoized-pairs path): only apply-side actions
+    val apply = Profile.of(spark)(
+      SparkEntry.queries("q137_dedup_incr_apply")(spark, sf).count())
+    val applyPlans = apply.actions.map(a => PlanAudit.explain(a.qe))
+    assert(applyPlans.nonEmpty)
+    assert(applyPlans.forall(p => !pipeline.contains(p)),
+      "q137 re-ran a pair-pipeline action")
   }
 }

@@ -66,7 +66,7 @@ class MemoSpec extends AnyFunSuite {
     corpus(a, 500)
     corpus(b, 300)
     val others = Memo.rddIds
-    DedupQueries.nearDupPairs(spark, b)
+    val pairsOfB = DedupQueries.nearDupPairs(spark, b)
     val held = Memo.rddIds
     val ofB = held -- others
     // each stage of `a` adds the blocks it holds
@@ -88,9 +88,9 @@ class MemoSpec extends AnyFunSuite {
     assert((ofA & persisted).isEmpty, s"still persisted: ${ofA & persisted}")
     assert(Memo.rddIds === held)
     assert(ofB.nonEmpty && ofB.subsetOf(persisted))
-    RoundStats.drain()
-    DedupQueries.nearDupPairs(spark, b)
-    assert(RoundStats.drain().map(_.tag) === Seq("near_dup_pairs_memo_hit"))
+    val hit = Profile.of(spark)(DedupQueries.nearDupPairs(spark, b))
+    assert(hit.value eq pairsOfB, "releasing a must leave b's pair stage held")
+    assert(hit.jobs === 0)
     Memo.release(b)
   }
 
@@ -98,27 +98,15 @@ class MemoSpec extends AnyFunSuite {
       "streamNearDupPairs") {
     val dir = tmpDir("graft_memo_warm")
     corpus(dir, 500)
-    DedupQueries.incrementalPairs(spark, dir)
-    StreamingQueries.streamNearDupPairs(spark, dir)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // listener delivery is async; quiesce the bus around the calls
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      val j0 = jobs.get()
-      RoundStats.drain()
-      DedupQueries.incrementalPairs(spark, dir)
-      StreamingQueries.streamNearDupPairs(spark, dir)
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      assert(RoundStats.drain().map(_.tag).toSet ===
-        Set("incr_pairs_memo_hit", "stream_feats_memo_hit"))
-      assert(jobs.get() === j0, "a memo hit scheduled a Spark job")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val pairs = DedupQueries.incrementalPairs(spark, dir)
+    val feats = StreamingQueries.streamFeats(spark, dir)
+    val warm = Profile.of(spark)((DedupQueries.incrementalPairs(spark, dir),
+      StreamingQueries.streamFeats(spark, dir)))
+    assert(warm.value._1 eq pairs)
+    assert(warm.value._2 eq feats)
+    // streamNearDupPairs only plans over the held feature table
+    val near = Profile.of(spark)(StreamingQueries.streamNearDupPairs(spark, dir))
+    assert(warm.jobs + near.jobs === 0, "a memo hit scheduled a Spark job")
     Memo.release(dir)
   }
 

@@ -1,6 +1,9 @@
 package graft
 
 import graft.queries.GraphQueries
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Integer PageRank vs an independent naive recurrence on authored
@@ -8,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * defined integer semantics node-for-node, and the semantics must
   * behave like PageRank (hubs outrank leaves, symmetry ⇒ equal rank).
   */
-class PageRankSpec extends AnyFunSuite {
+class PageRankSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -99,37 +102,28 @@ class PageRankSpec extends AnyFunSuite {
     assert(naiveGeneral(sinkEdges, 1)(2L) > 0L)
   }
 
-  /** Captures every executed plan (localCheckpoint runs through the
-    * execution listener) so the in-loop join strategy is assertable
-    * even though the returned DataFrame's lineage is cut.
+  /** Every executed plan the body's actions ran (each round is a
+    * `localCheckpoint` action), so the in-loop join strategy is
+    * assertable even though the returned DataFrame's lineage is cut.
     */
   private def isRankJoin(p: String): Boolean =
     p.contains("Join") && p.contains("dsts")
 
-  private def executedPlans(expectJoins: Int)(body: => Unit): Seq[String] = {
-    val plans = new scala.collection.concurrent.TrieMap[Long, String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        plans.put(qe.id, qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // listener delivery is async; wait for one join plan per round
-      val deadline = System.nanoTime() + 10000000000L
-      while (System.nanoTime() < deadline &&
-        plans.values.count(isRankJoin) < expectJoins) Thread.sleep(50)
-      plans.values.toSeq
-    } finally spark.listenerManager.unregister(listener)
-  }
+  private def executedPlans(body: => Unit): Seq[String] =
+    Profile.of(spark)(body).actions.map(_.qe.executedPlan.toString)
+
+  /** The rank joins (the adjacency-list side carries `dsts`) in each
+    * round's `localCheckpoint` plan: one per fused step.
+    */
+  private def rankJoinsPerRound(body: => Any): Seq[Int] =
+    Profile.of(spark)(body).actions.filter(_.name == "localCheckpoint")
+      .map(a => collect(a.qe.executedPlan) {
+        case j: BaseJoinExec if Seq(j.left, j.right)
+          .exists((c: SparkPlan) => c.output.exists(_.name == "dsts")) => j
+      }.size)
 
   test("plan shape under the guard: rank join is a broadcast hash join") {
-    val joins = executedPlans(expectJoins = 2) {
+    val joins = executedPlans {
       GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 2).collect()
     }.filter(isRankJoin)
     assert(joins.nonEmpty, "no rank-join plan captured")
@@ -165,38 +159,30 @@ class PageRankSpec extends AnyFunSuite {
     // Fusing recurrence steps per action is sound only while the
     // rank join reads its input ONCE; with heads active it reads it
     // twice (array join + broadcast head slice), so a fused plan
-    // would embed the prior step twice. The stage tags expose the
-    // per-action step count (pr_roundNxK): headless regular graph →
-    // ONE fused action at the default width (5 ≥ iters, the r16
-    // measured default); same graph with a forced head split → all x1.
-    graft.RoundStats.drain()
-    GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 4)
-      .collect()
-    val fused = graft.RoundStats.drain().map(_.tag)
-      .filter(_.startsWith("pr_round"))
-    assert(fused === Seq("pr_round1x4"),
+    // would embed the prior step twice. Each round is one
+    // `localCheckpoint` action whose plan holds one rank join per
+    // step: headless regular graph → ONE fused action at the default
+    // width (5 ≥ iters, the r16 measured default); same graph with a
+    // forced head split → one step per action.
+    def pageRank(iters: Int, maxAdjArray: Long = 1L << 20) =
+      GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = iters,
+        maxAdjArray = maxAdjArray).collect()
+    val fused = rankJoinsPerRound(pageRank(4))
+    assert(fused === Seq(4),
       s"headless regular loop should fuse all 4 steps into one action: $fused")
     // past the fuse width (5) the loop fuses 5 steps, then the rest
-    GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 7)
-      .collect()
-    val fused7 = graft.RoundStats.drain().map(_.tag)
-      .filter(_.startsWith("pr_round"))
-    assert(fused7 === Seq("pr_round1x5", "pr_round2x2"),
+    val fused7 = rankJoinsPerRound(pageRank(7))
+    assert(fused7 === Seq(5, 2),
       s"7 steps should run as a 5-step and a 2-step action: $fused7")
-    GraphQueries.integerPageRank(edges.toDF("src", "dst"), iters = 4,
-        maxAdjArray = 2L)
-      .collect()
-    val split = graft.RoundStats.drain().map(_.tag)
-      .filter(_.startsWith("pr_round"))
-    assert(split === Seq("pr_round1x1", "pr_round2x1", "pr_round3x1",
-      "pr_round4x1"),
+    val split = rankJoinsPerRound(pageRank(4, maxAdjArray = 2L))
+    assert(split === Seq(1, 1, 1, 1),
       s"head-split loop must stay unfused: $split")
   }
 
   test("plan shape past the guard: sort-merge, no broadcast of the rank " +
     "table, and the same answer") {
     var result: Map[Long, Long] = Map.empty
-    val joins = executedPlans(expectJoins = 2) {
+    val joins = executedPlans {
       result = GraphQueries.integerPageRank(edges.toDF("src", "dst"),
           iters = 2, broadcastMaxNodes = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

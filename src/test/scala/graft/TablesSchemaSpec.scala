@@ -133,24 +133,10 @@ class TablesSchemaSpec extends AnyFunSuite {
   }
 
   test("a single-file load starts no Spark job") {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // listener delivery is async; quiesce the bus around the loads
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      val j0 = jobs.get()
-      tables.foreach(t => Tables(spark, sf, t))
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      assert(jobs.get() === j0, "a table load scheduled a Spark job")
-      // control: Spark's own inference does run one
-      spark.read.parquet(s"$sf/orders.parquet")
-      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext)
-      assert(jobs.get() > j0, "control: schema inference ran no job")
-    } finally spark.sparkContext.removeSparkListener(l)
+    assert(Profile.of(spark)(tables.foreach(t => Tables(spark, sf, t))).jobs === 0,
+      "a table load scheduled a Spark job")
+    // control: Spark's own inference does run one
+    assert(Profile.of(spark)(spark.read.parquet(s"$sf/orders.parquet")).jobs > 0,
+      "control: schema inference ran no job")
   }
 }
