@@ -102,10 +102,9 @@ object Conf {
   val BenchOutVar = "SPARK_GRAFT_BENCH_OUT"
   val OnlyVar = "SPARK_GRAFT_ONLY"
   val SparkGraftConf = "SPARK_GRAFT_CONF"
-  val StreamSinkVar = "SPARK_GRAFT_STREAM_SINK"
 
   val envVars: Set[String] =
-    Set(SfDirVar, CpusVar, BenchOutVar, OnlyVar, SparkGraftConf, StreamSinkVar)
+    Set(SfDirVar, CpusVar, BenchOutVar, OnlyVar, SparkGraftConf)
 
   private def env(name: String): Option[String] = sys.env.get(name)
 
@@ -126,16 +125,6 @@ object Conf {
   /** Bench's query subset (comma-separated names); unset, every query. */
   def only: Option[Set[String]] =
     env(OnlyVar).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
-  /** Snapshot sink of the bounded stream queries: `memory` (default) or
-    * `file` (see `StreamingQueries.sinkMode`).
-    */
-  def streamSink: String = env(StreamSinkVar).fold("memory")(parseStreamSink)
-
-  def parseStreamSink(v: String): String = v.trim.toLowerCase match {
-    case m @ ("memory" | "file") => m
-    case _ => throw invalid(StreamSinkVar, v, "memory or file")
-  }
 
   /** Parse a `SPARK_GRAFT_CONF` value: `;`-separated `key=value`
     * entries. Blank entries (a trailing `;`) are skipped; an entry

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 /** The engine's one store of reusable intermediate tables: the stages a
   * production pipeline writes once and several queries read (q35's
   * verified pairs, q102's cluster labels, q136's standing index and
-  * pair table, q138/q139's corpus feature table, q51's IVF index).
+  * pair table, q138/q139's corpus feature table, q51's IVF index), and
+  * the footer row counts that pick a stream's state provider.
   *
   * A stage is declared where it is built — name, data dir, the input
   * tables it reads, the build, and the frames whose blocks it holds —

@@ -75,8 +75,8 @@ object PlanAudit {
   }
 
   /** `explain("formatted")` without the JVM's running counters — plan
-    * ids, expression ids, RDD ids, identity hashes, random UUIDs and
-    * nanoTime-named sinks — with codegen and query-stage ids numbered
+    * ids, expression ids, RDD ids, identity hashes and random UUIDs —
+    * with codegen and query-stage ids numbered
     * in plan order rather than in the order stages happened to run,
     * and with distinct-aggregate groups in name order, so a
     * regenerated audit diffs only where a plan changed.
@@ -89,7 +89,6 @@ object PlanAudit {
       .replaceAll("\\$\\$Lambda\\$?[\\d/x]*[0-9a-f]*@[0-9a-f]+", "\\$\\$Lambda")
       .replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "")
       .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "uuid")
-      .replaceAll("(?<=\\w)_\\d{10,}\\b", "")
     val ids = scala.collection.mutable.Map[(Char, String), Int]()
     sortDistinctGroups("(\\[codegen id : |QueryStage\n(?:Output[^\n]*\n)?Arguments: )(\\d+)".r
       .replaceAllIn(plan, m => Matcher.quoteReplacement(m.group(1) + ids.getOrElseUpdate(

@@ -67,7 +67,7 @@ object ScaleStress {
     * density, not the same users R× denser — leaving user_id
     * undiluted made the click×purchase join families' per-key state
     * and OUTPUT grow ~R² (r9, found at ×32: the full-outer join's
-    * R²-sized memory-sink snapshot OOM'd the local heap — a harness
+    * R²-sized driver-side snapshot OOM'd the local heap — a harness
     * densification artifact, not the linear corpus growth this
     * harness models; per-key quadratic fan-out under genuine key
     * densification is inherent to the query's semantics and is the
@@ -225,31 +225,22 @@ object ScaleStress {
   private def stateRows(p: Profile[_]): Long =
     p.streams.flatMap(_.stateOperators).map(_.numRowsTotal).sum
 
-  /** Run every stream-family query through the chosen snapshot sink
-    * ("memory" or "file" — see StreamingQueries.sinkMode). Returns
-    * name → (rows, secs); any query error propagates (zero-error is
-    * the stress claim).
+  /** Run every stream-family query on `dir`. Returns name -> (rows,
+    * secs, final-batch state rows); any query error propagates
+    * (zero-error is the stress claim).
     */
-  private def runStreamFamily(spark: SparkSession, dir: String,
-      sink: String): Seq[(String, Long, Double, Long)] = {
-    import graft.streaming.StreamingQueries
-    StreamingQueries.queries.sortBy(_.name).map { case Query(name, fn, _) =>
-      StreamingQueries.sinkModeOverride = Some(sink)
-      try {
+  private def runStreamFamily(spark: SparkSession,
+      dir: String): Seq[(String, Long, Double, Long)] =
+    graft.streaming.StreamingQueries.queries.sortBy(_.name).map {
+      case Query(name, fn, _) =>
         val t0 = System.nanoTime()
         val p = Profile.of(spark)(fn(spark, dir).count())
         val n = p.value
         val secs = (System.nanoTime() - t0) / 1e9
         val state = stateRows(p)
-        println(f"[stress] $name [$sink] $n%,d rows in $secs%.1f s; " +
-          f"state rows $state%,d")
-        // counted = consumed: reclaim this query's sink + checkpoint
-        // scratch before the next one (×R sink dirs are output-sized)
-        StreamingQueries.cleanupFileSinkDirs()
+        println(f"[stress] $name $n%,d rows in $secs%.1f s; state rows $state%,d")
         (name, n, secs, state)
-      } finally StreamingQueries.sinkModeOverride = None
     }
-  }
 
   /** The distinct-corpus gate (see [[buildDistinctDocs]]): runs the
     * dedup family over a ×R corpus with BASE near-dup rate and asserts
@@ -635,14 +626,8 @@ object ScaleStress {
     // linear pair volume, the realistic 100 TB shape (see
     // buildDistinctDocs/runDistinct; the two regimes bracket the real
     // workload). "streams": the stream family at ×R on a
-    // DISTINCT-regime dir through the DISTRIBUTED file-sink snapshot
-    // path (the memory-sink collect is the one driver-side O(output)
-    // surface — this is its scale regime), with per-query final-batch
-    // state rows asserted LINEAR in R against a base-dir run (r12).
-    // "streamparity": the stream family run BOTH ways on the
-    // source dir itself, outputs asserted multiset-equal — the proof
-    // that the file path changes where the snapshot lives, not what
-    // it holds.
+    // DISTINCT-regime dir, with per-query final-batch state rows
+    // asserted LINEAR in R against a base-dir run.
     val mode = if (args.length > 2) args(2) else "dedup"
     val spark = SparkSession.builder()
       .master("local[32]")
@@ -718,10 +703,10 @@ object ScaleStress {
       val tB = System.nanoTime()
       buildDir(spark, srcDir, outDir, rep, distinctDocs = true)
       println(f"[stress] built $outDir in ${(System.nanoTime() - tB) / 1e9}%.1f s")
-      val baseState = runStreamFamily(spark, srcDir, "file")
+      val baseState = runStreamFamily(spark, srcDir)
         .map(r => r._1 -> r._4).toMap
       val tS = System.nanoTime()
-      val res = runStreamFamily(spark, outDir, "file")
+      val res = runStreamFamily(spark, outDir)
       val wall = (System.nanoTime() - tS) / 1e9
       assert(res.forall(_._2 > 0), "a stream query returned no rows at x" + rep)
       res.foreach { case (name, _, _, st) =>
@@ -731,7 +716,7 @@ object ScaleStress {
             s"${baseState.getOrElse(name, 0L)} x $rep) - super-linear " +
             "state growth")
       }
-      println(f"[stress] stream family x$rep distinct via file sink: " +
+      println(f"[stress] stream family x$rep distinct: " +
         f"${res.size} queries, ${res.map(_._2).sum}%,d total rows, " +
         f"${res.map(_._4).sum}%,d final-batch state rows, " +
         f"$wall%.1f s, zero errors, state linear in R")
@@ -742,14 +727,13 @@ object ScaleStress {
     if (mode == "stream1") {
       // Instrumented SINGLE stream-query probe (r15, VERDICT r14 #1:
       // attribute q138's superlinear ×1024 wall). Runs ONE stream
-      // family query on the ×R distinct dir through the file sink
-      // inside a graft.Profile:
+      // family query on the ×R distinct dir inside a graft.Profile:
       //  - the stream's final StreamingQueryProgress JSON (durationMs
       //    breakdown + stateOperators incl. the RocksDB custom
       //    metrics: flush/compaction/commit latencies, bytes);
       //  - per-ACTION task totals (wall, task run/CPU, GC, shuffle
-      //    read/write, spill, input bytes) and the scope's totals,
-      //    which include the file-sink micro-batches;
+      //    read/write, spill, input bytes; each micro-batch is a
+      //    `localCheckpoint` action) and the scope's totals;
       //  - host steal/iowait + native-thread CPU by class around the
       //    run (the ×1024 probe log recorded no per-run steal — the
       //    gap the verdict named).
@@ -769,7 +753,6 @@ object ScaleStress {
         buildDir(spark, srcDir, outDir, rep, distinctDocs = true)
         println(f"[probe] built $outDir in ${(System.nanoTime() - tB) / 1e9}%.1f s")
       }
-      graft.streaming.StreamingQueries.sinkModeOverride = Some("file")
       val st0 = Bench.procStat()
       val th0 = Bench.threadCpuByClass()
       // 1 Hz peak-disk sampler (r16, same as distinct37's): the ×2048
@@ -791,10 +774,7 @@ object ScaleStress {
       diskSampler.start()
       val t0 = System.nanoTime()
       val p = try Profile.of(spark)(fn(spark, outDir).count())
-        finally {
-          graft.streaming.StreamingQueries.sinkModeOverride = None
-          sampling = false
-        }
+        finally sampling = false
       val wall = (System.nanoTime() - t0) / 1e9
       val th1 = Bench.threadCpuByClass()
       val st1 = Bench.procStat()
@@ -812,8 +792,6 @@ object ScaleStress {
           f"${t.shuffleWriteBytes / 1e6}%7.1f ${t.spillBytes / 1e6}%8.1f " +
           f"${t.inputBytes / 1e6}%8.1f  $what")
       rows.take(30).foreach(a => row(a.tasks, a.durationNs / 1e9, a.name))
-      // a file-sink micro-batch reports no action of its own; its
-      // stages are in the scope's totals
       row(p.tasks, wall, s"(scope: ${p.jobs} jobs)")
       val steal = (st0, st1) match {
         case (Some((_, _, w0, s0)), Some((_, _, w1, s1))) =>
@@ -830,34 +808,6 @@ object ScaleStress {
         f""""peak_disk_gb":${(free0 - minFree.get) / 1e9}%.2f,""" +
         f""""min_free_gb":${minFree.get / 1e9}%.2f,""" +
         s""""partitions":$nparts,$steal"thread_cpu_s":$thr}""")
-      graft.streaming.StreamingQueries.cleanupFileSinkDirs()
-      spark.stop()
-      return
-    }
-
-    if (mode == "streamparity") {
-      var bad = 0
-      graft.streaming.StreamingQueries.queries.sortBy(_.name)
-        .foreach { case Query(name, fn, _) =>
-          import graft.streaming.StreamingQueries.sinkModeOverride
-          val mem = try { sinkModeOverride = Some("memory"); fn(spark, srcDir) }
-            finally sinkModeOverride = None
-          val fil = try { sinkModeOverride = Some("file"); fn(spark, srcDir) }
-            finally sinkModeOverride = None
-          val (nm, nf) = (mem.count(), fil.count())
-          // multiset equality: equal counts + empty symmetric exceptAll
-          val extraMem = mem.exceptAll(fil).count()
-          val extraFil = fil.exceptAll(mem).count()
-          val ok = nm == nf && extraMem == 0 && extraFil == 0
-          if (!ok) bad += 1
-          println(f"[stress] parity $name: memory $nm%,d rows vs file " +
-            f"$nf%,d; mem\\file $extraMem, file\\mem $extraFil " +
-            (if (ok) "EQUAL" else "MISMATCH"))
-          // both directions compared: the file snapshot is consumed
-          graft.streaming.StreamingQueries.cleanupFileSinkDirs()
-        }
-      assert(bad == 0, s"$bad stream queries differ between memory and file sinks")
-      println("[stress] stream sink parity: all queries multiset-equal")
       spark.stop()
       return
     }

@@ -362,7 +362,7 @@ object DedupQueries {
     * `LogicalRDD` leaf: its partition count needs no physical plan
     * (`df.rdd` would plan one for the same number).
     */
-  private def checkpointRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+  private[graft] def checkpointRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       case other => throw new IllegalArgumentException(
@@ -1412,10 +1412,13 @@ object DedupQueries {
       .select(col("doc_id"), col("sim"),
         posexplode(Hashing.simHashChunks(col("sim")))
           .as(Seq("chunk_idx", "chunk"))))
-    val sizesAgg = flat.groupBy("chunk_idx", "chunk")
+    // one checkpoint of the census: the estimate collects it and the
+    // member routing broadcasts it
+    val sizes = flat.groupBy("chunk_idx", "chunk")
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") >= 2) // singleton buckets pair with nothing
-    val sizeRows = sizesAgg.collect()
+      .localCheckpoint()
+    val sizeRows = sizes.collect()
     val estPairs = sizeRows.iterator.map { r =>
       val sz = r.getLong(2)
       if (sz <= MaxBucket) sz * (sz - 1L) / 2L else 8L * MaxBucket * sz
@@ -1424,9 +1427,7 @@ object DedupQueries {
     // pair-volume-derived expansion/dedup width (cf. minHashPairs) —
     // here the estimate is the driver-side size census above
     val exWidth = expandWidth(estPairs, bucketParts)
-    val memb = flat.join(
-      broadcast(flat.sparkSession.createDataFrame(
-        java.util.Arrays.asList(sizeRows: _*), sizesAgg.schema)),
+    val memb = flat.join(broadcast(sizes),
       Seq("chunk_idx", "chunk")) // inner: drops singleton-bucket members
     val small = memb.filter(col("bsz") <= MaxBucket)
       .repartition(bucketParts, col("chunk_idx"), col("chunk"))

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{Conf, Tables}
 import graft.ScopedConf.withConf
 import graft.queries.Query
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   * Reference: `/root/reference/window_aggregation.py` — Kafka JSON
   * source with a 15 s watermark, per-message trailing 10 s RANGE-window
   * sum per province, JSON sink. The Kafka connector jar isn't in this
-  * image, so the demos run file-source → memory-sink; the transforms
-  * are connector-agnostic (any streaming DataFrame in, DataFrame out).
+  * image, so the demos run a file source drained into per-batch
+  * checkpoints ([[runToSnapshot]]); the transforms are
+  * connector-agnostic (any streaming DataFrame in, DataFrame out).
   */
 object StreamingQueries {
 
@@ -100,137 +101,58 @@ object StreamingQueries {
   def toJsonSink(df: DataFrame): DataFrame =
     df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
 
-  /** Snapshot-sink selector. "memory" (default) is exact and cheap at
-    * gate scale (sf0.01/sf0.1) but its snapshot is a DRIVER-SIDE
-    * O(output) collect — the one surface that bounded how far the
-    * stream gates could scale (the pre-r9 ×32 OOM went through it).
-    * "file" is the distributed path: Append streams write a parquet
-    * FILE sink (the sink's transaction log gives exactly-once file
-    * commits), Complete streams snapshot via a per-batch
-    * `foreachBatch` overwrite (complete output IS the full state each
-    * batch, so the cluster-side write is exactly what the sink
-    * semantics emit), and the snapshot is a LAZY distributed
-    * read-back — nothing output-sized ever touches the driver.
-    * Select with `Conf.StreamSinkVar` (Bench/Verify at ×32+), or
-    * programmatically via [[sinkModeOverride]] for same-JVM harnesses
-    * (ScaleStress's stream sections).
-    */
-  @volatile private[graft] var sinkModeOverride: Option[String] = None
-  private def sinkMode: String =
-    sinkModeOverride.fold(Conf.streamSink)(Conf.parseStreamSink)
-
-  /** File-sink scratch dirs created by [[runToSnapshot]] (output +
-    * checkpoint, output-sized): tracked so harness callers can reclaim
-    * them once the snapshot is consumed ([[cleanupFileSinkDirs]]) and
-    * a JVM shutdown hook sweeps whatever remains — un-reclaimed, every
-    * file-mode stream query leaked its output twice over (sink +
-    * checkpoint), the same scratch-exhaustion class the ×512 probe
-    * fixed for RDD blocks (ADVICE r10).
-    */
-  private val fileSinkDirs =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-  private lazy val exitSweepInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => deleteTrackedSinkDirs(), "graft-stream-sink-sweep"))
-
-  private def deleteTrackedSinkDirs(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val dirs = fileSinkDirs.synchronized {
-      val d = fileSinkDirs.asScala.toList; fileSinkDirs.clear(); d
-    }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete()
-    }
-    dirs.foreach(d => rm(new java.io.File(d)))
-  }
-
-  /** Reclaim every tracked file-sink scratch dir. Callers must have
-    * CONSUMED their snapshots first — a file-mode snapshot is a LAZY
-    * scan of the sink dir (count it, write it, or compare it before
-    * calling this). Memory-mode runs track nothing; calling is a no-op.
+  /** Rows micro-batch 1 will ingest from `dir`'s `table`: a replay
+    * harness feeds the whole scaled table as ONE file, so one
+    * micro-batch ingests all of it and the watermark never advances
+    * INSIDE it. A stream-stream join or watermark-held operator then
+    * buffers the entire input in its state store during that batch:
+    * corpus-sized peak state even though the state is watermark-bounded
+    * across batches. Measured: 51.2 M rows (x512) drained in-heap on the
+    * 8 g JVM; 102.4 M (x1024) GC-thrashed until the executor heartbeat
+    * expired (exit 56) with no OOM thrown.
     *
-    * CONTRACT — GLOBAL delete (ADVICE r11): this reclaims the sink
-    * dirs of EVERY file-mode run since the last call, not just the
-    * caller's. The tracked list is JVM-global and the harness callers
-    * (ScaleStress stream modes, parity) are strictly sequential —
-    * each consumes its one snapshot, then sweeps. A future caller
-    * that interleaves two live lazy snapshots must either consume
-    * both before sweeping or switch this to per-run tracking (have
-    * runToSnapshot return its fileBase); until one exists, the global
-    * sweep is the simpler correct contract.
+    * The count sums the row groups of the table's parquet footers on the
+    * driver (no Spark job), recursing into nested layouts, and is a
+    * [[graft.Memo]] stage guarded by the table's files, so an in-place
+    * rewrite is counted again. A failed probe, including a directory
+    * with no parquet file under it, is LOGGED and returns an uncached 0:
+    * 0 keeps the in-heap provider whatever the batch size, the
+    * GC-freeze regime this count exists to prevent, so it must never be
+    * silent.
     */
-  private[graft] def cleanupFileSinkDirs(): Unit = deleteTrackedSinkDirs()
-
-  /** Estimated rows micro-batch 1 will ingest from `dir`'s events
-    * table — the SIXTH envelope class's trigger (r14, found by the
-    * ×1024 streams probe): a replay harness feeds the whole scaled
-    * corpus as ONE file ⇒ one micro-batch ⇒ the watermark never
-    * advances INSIDE it, so a stream-stream join / watermark-held
-    * operator buffers the ENTIRE input in its state store during
-    * batch 1 — corpus-sized peak state even though the ACROSS-batch
-    * law says watermark-bounded. Measured: 51.2 M rows (×512) drained
-    * in-heap on the 8 g JVM; 102.4 M (×1024) GC-thrashed until the
-    * executor heartbeat expired (exit 56) with ZERO OOM thrown.
-    *
-    * Implementation (ADVICE r14): the count comes from the parquet
-    * FOOTERS directly (row-group counts per file via [[Tables.footer]],
-    * driver-side, no Spark job — the old `read.parquet(..).count()`
-    * scheduled a real scan job at every q57/q98/q125/q129 start) and
-    * is cached per dir (the harnesses re-query the same dir many
-    * times). A probe failure is LOGGED and uncached — the fallback
-    * (0 ⇒ in-heap provider even for a corpus-sized batch) is exactly
-    * the GC-freeze regime the clause exists to prevent, so it must
-    * never be silent.
-    */
-  private val tableRowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def tableRowCount(s: SparkSession, dir: String,
       table: String): Long = {
-    val key = s"$dir/$table.parquet"
-    Option(tableRowCountCache.get(key)).map(_.longValue).getOrElse {
-      try {
-        val root = new java.io.File(key)
-        // Recursive: a hive-partitioned or otherwise nested layout
-        // (Sources.writePartitioned) keeps its part files in
-        // subdirectories — a top-level-only listing would see zero
-        // files and silently CACHE n=0, which is exactly the silent
-        // in-heap fallback the logged error path below exists to
-        // prevent (ADVICE r15). An empty result under a real
-        // directory is therefore a probe FAILURE, not a count.
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty).toSeq
-              .filterNot(_.getName.startsWith("_")).flatMap(walk)
-          else if (f.isFile && f.getName.endsWith(".parquet")) Seq(f)
-          else Seq.empty
-        val files: Seq[java.io.File] =
-          if (root.isDirectory) {
-            val fs = walk(root)
-            if (fs.isEmpty) throw new java.io.FileNotFoundException(
-              s"no .parquet files under directory ${root.getPath}")
-            fs
-          }
-          else if (root.isFile) Seq(root)
-          else throw new java.io.FileNotFoundException(root.getPath)
-        import scala.jdk.CollectionConverters._
-        val conf = s.sparkContext.hadoopConfiguration
-        val n = files.map { f =>
-          Tables.footer(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-            .getBlocks.asScala.map(_.getRowCount).sum
-        }.sum
-        tableRowCountCache.put(key, n)
-        n
-      } catch {
-        case e: Exception =>
-          System.err.println("[graft] row-count footer probe failed " +
-            s"for $key (${e.getClass.getSimpleName}: ${e.getMessage}) - " +
-            "intra-batch ingest unknown; the IN-HEAP state provider " +
-            "will be kept regardless of batch size for this query")
-          0L
-      }
+    val path = s"$dir/$table.parquet"
+    try graft.Memo(s, s"${table}_rows", dir, table)(footerRows(s, path))(_ => Nil)
+    catch {
+      case e: Exception =>
+        System.err.println("[graft] row-count footer probe failed " +
+          s"for $path (${e.getClass.getSimpleName}: ${e.getMessage}) - " +
+          "intra-batch ingest unknown; the IN-HEAP state provider " +
+          "will be kept regardless of batch size for this query")
+        0L
     }
+  }
+
+  private def footerRows(s: SparkSession, path: String): Long = {
+    val root = new java.io.File(path)
+    // a hive-partitioned or otherwise nested layout
+    // (Sources.writePartitioned) keeps its part files in subdirectories
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).toSeq
+          .filterNot(_.getName.startsWith("_")).flatMap(walk)
+      else if (f.isFile && f.getName.endsWith(".parquet")) Seq(f)
+      else Seq.empty
+    val files = walk(root)
+    if (files.isEmpty) throw new java.io.FileNotFoundException(
+      s"no .parquet files under ${root.getPath}")
+    import scala.jdk.CollectionConverters._
+    val conf = s.sparkContext.hadoopConfiguration
+    files.map { f =>
+      Tables.footer(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+        .getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
   }
 
   private[graft] def eventsRowCount(s: SparkSession, dir: String): Long =
@@ -277,163 +199,104 @@ object StreamingQueries {
     else None
   }
 
-  /** Start `df` into the selected snapshot sink, drain the source,
-    * snapshot the sink (memory-table collect or distributed parquet
-    * read-back — see [[sinkMode]]), and tear everything down (shared
-    * session hygiene). Batches, state rows and partitions are in the
-    * stream's progress events, which a caller reads through
+  /** Drain `df` and return what its sink holds at the end, as a batch
+    * frame. Every micro-batch is kept as an eager `localCheckpoint` of
+    * the batch's own frame: one action per batch, whose executed plan is
+    * the stream's physical plan and whose tasks are the batch's work
+    * ([[graft.Profile]] reports both). An Append drain returns the union
+    * of its batches in batch-id order; a Complete drain emits the whole
+    * result every batch, so it returns the last batch and frees each one
+    * it replaces. Zero batches return an empty frame of `df`'s schema.
+    * The snapshot lives in executor block storage, so no output-sized
+    * data passes through the driver. Batches, state rows and partitions
+    * are in the stream's progress events, which a caller reads through
     * [[graft.Profile]].
     */
-  private def runToSnapshot(s: SparkSession, df: DataFrame, prefix: String,
+  private[graft] def runToSnapshot(s: SparkSession, df: DataFrame,
       mode: OutputMode, corpusLinearState: Boolean = false,
       ingestRows: Long = 0L): DataFrame = {
-    val useFile = sinkMode == "file"
-    val name = s"${prefix}_${System.nanoTime()}"
-    val fileBase = s"target/stream_sink/$name"
-    val filePath = s"$fileBase/out"
-    if (useFile) { exitSweepInstalled; fileSinkDirs.add(fileBase) }
-    // Stateful operators allocate one state store per shuffle
-    // partition per operator; for these bounded demo streams the
-    // per-store setup/commit overhead dominates at 32 partitions, so
-    // cap the stream's partitioning (the conf is fixed into the
-    // query's checkpoint at start; restored for batch queries after).
-    // The cap was re-measured at ×8 (800k events, r6): an adaptive
-    // 26-partition variant LOST to the fixed cap — 59.8-60.0 s vs
-    // 52.2-57.1 s over the 8 stream demos, two runs each: the drains
-    // were commit-bound, not stateful-CPU-bound, and every state store
-    // adds its own commit. With local checkpoints on the FileSystem
-    // manager (checkpointFileManager) a commit no longer forks, and
-    // state-store commits cost ~9x less (perfbench relational
-    // `streaming.state_commit_ms` 352 -> 40 ms, 4 cores); fewer stores
-    // still mean fewer commits, so 4 stands (see streamPartitionCap).
-    // State-store provider: disk-backed RocksDB iff the query's state
-    // is CORPUS-LINEAR and the run is in the file-sink (scale) regime
-    // (r13, found by the ×512 distinct streams probe): the default
-    // HDFS-backed provider keeps every partition's state map IN-HEAP —
-    // q75's ~49 M merged session rows (95.5k × 512, exactly the linear
-    // bound) killed the 8 g JVM mid-drain, the fourth non-spillable
-    // in-memory class after the ×128/×512 build-side OOMs. The split
-    // is by STATE GROWTH LAW, not blanket: dedup keys (q47), session
-    // windows (q75) and LSH buckets (q138) grow with the corpus and
-    // must spill; watermark-bounded join buffers and fixed-span window
-    // aggs stay ~R-independent or rate×delay-bounded, and the same
-    // probe measured blanket RocksDB regressing them 4× (q125
-    // 92→368 s, 335 k state rows) for zero safety gain. The conf is
-    // fixed into the query's fresh checkpoint at start, restored
-    // after; gate-scale memory-sink runs keep the in-heap provider's
-    // lower per-query setup cost.
-    // r14 second trigger (the ×1024 streams probe's sixth envelope
-    // class — see eventsRowCount): even a watermark-bounded query
-    // must spill when ONE micro-batch ingests more rows than the
-    // heap can buffer as intra-batch state.
-    val needRocks = corpusLinearState ||
-      (ingestRows > HeapIngestMaxRows)
-    // Changelog checkpointing rides along with the RocksDB pin (r16):
-    // the ×2048 multi-batch probe measured default full-snapshot
-    // checkpointing re-uploading every compaction-rewritten SST each
-    // commit (3.99 → 5.36 → 10.96 GB per commit for 12 GB of live
-    // state — 1.7× amplification after three batches) until the
-    // checkpoint dir ENOSPC'd the run. With changelogs a commit ships
-    // only the batch's own puts; snapshots move to the async
-    // maintenance thread. Exactly-once semantics are unchanged (the
-    // changelog replays over the last snapshot on recovery), so this
-    // applies wherever corpus-linear state already forced RocksDB.
-    val rocks = if (useFile && needRocks) Seq(
+    val complete = mode == OutputMode.Complete()
+    // Update emits per-batch deltas: neither their union nor the last
+    // batch is the result. No stream query uses it.
+    if (!complete && mode != OutputMode.Append())
+      throw new IllegalArgumentException(
+        s"a stream snapshot supports Append/Complete, not $mode " +
+          "(Update emits deltas; a full-state snapshot would be wrong)")
+    // Stateful operators allocate one state store per shuffle partition
+    // per operator, and every store adds its own setup and commit to
+    // each batch, so the stream's partitioning is capped (see
+    // streamPartitionCap). The conf is fixed into the query's checkpoint
+    // when it starts.
+    // State-store provider: the default keeps every partition's state
+    // map in the heap. Disk-backed RocksDB is chosen by state growth
+    // law, not blanket: dedup keys (q47), session windows (q75) and LSH
+    // buckets (q138/q139) grow with the corpus and must spill (q75's
+    // ~49 M merged session rows at x512 killed the 8 g JVM in-heap).
+    // Watermark-bounded join buffers and fixed-span window aggregates
+    // stay in the heap: blanket RocksDB made q125 4x slower at x512
+    // (92 -> 368 s, 335 k state rows). Any query spills when ONE
+    // micro-batch ingests more rows than the heap can buffer as
+    // intra-batch state (see tableRowCount).
+    // Changelog checkpointing rides along: with full snapshots every
+    // commit re-uploads each compaction-rewritten SST (3.99 -> 5.36 ->
+    // 10.96 GB per commit for 12 GB of live state at x2048, until the
+    // checkpoint disk filled); with changelogs a commit ships only the
+    // batch's own puts and snapshots move to the maintenance thread.
+    val rocks = if (corpusLinearState || ingestRows > HeapIngestMaxRows) Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled" -> "true") else Nil
-    // Checkpoint file manager: see checkpointFileManager. Memory-sink
-    // drains checkpoint where Spark puts an unnamed query's checkpoint
-    // (the session's checkpoint root, else a local temp dir, whose
-    // scheme-less path resolves like `.`). A manager the session
-    // already names is kept. Like the partition cap, the
-    // class is fixed into the query when it starts (the stream clones
-    // the session), so the session conf is restored right after.
+    // Checkpoint file manager (see checkpointFileManager) for where
+    // Spark puts an unnamed query's checkpoint: the session's checkpoint
+    // root, else a local temp dir, whose scheme-less path resolves like
+    // `.`. A manager the session already names is kept.
     val ckptKey = "spark.sql.streaming.checkpointFileManagerClass"
     val ckptManager =
       if (s.conf.getOption(ckptKey).isDefined) None
       else checkpointFileManager(
-        if (useFile) s"$fileBase/ckpt"
-        else s.conf.getOption("spark.sql.streaming.checkpointLocation")
-          .getOrElse("."),
+        s.conf.getOption("spark.sql.streaming.checkpointLocation").getOrElse("."),
         s.sessionState.newHadoopConf())
     // The drain starts on the CALLER's session inside one scoped
     // window, not on a clone carrying these confs: a stream started
     // from another session reports to that session's listeners (the
-    // caller's StreamingQueryListener saw 0 of 3 events), registers
-    // its memory-sink view in that session's catalog, and leaves one
-    // more listener on the SparkContext bus per drain.
+    // caller's StreamingQueryListener saw 0 of 3 events) and leaves one
+    // more listener on the SparkContext bus per drain. The stream
+    // clones the confs when it starts, so the window closes right after.
     val scoped = Seq("spark.sql.shuffle.partitions" -> streamPartitionCap(
       s.conf.get("spark.sql.shuffle.partitions").toInt).toString) ++
       ckptManager.map(ckptKey -> _) ++ rocks
+    // micro-batches run one at a time, in batch-id order, on the
+    // stream's thread
+    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val q = withConf(s, scoped: _*) {
-      if (!useFile)
-        df.writeStream.outputMode(mode).format("memory")
-          .queryName(name).start()
-      else if (mode == OutputMode.Append())
-        df.writeStream.outputMode(mode).format("parquet")
-          .option("path", filePath)
-          .option("checkpointLocation", s"$fileBase/ckpt").start()
-      else if (mode == OutputMode.Complete())
-        // the parquet file sink is append-only: Complete-mode demos
-        // snapshot through a per-batch full-state overwrite instead
-        // (complete output IS the full state each batch, so the last
-        // overwrite is the whole result)
-        df.writeStream.outputMode(mode)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(filePath)
+      GraftSqlBridge.startMicroBatches(df, mode) { batch =>
+        val kept = GraftSqlBridge.checkpointBatch(batch)
+        batches.synchronized {
+          if (complete) {
+            batches.foreach(graft.queries.DedupQueries.checkpointRdd(_).unpersist(false))
+            batches.clear()
           }
-          .option("checkpointLocation", s"$fileBase/ckpt").start()
-      else
-        // Update (or any future mode) emits per-batch DELTAS, not
-        // full state: the overwrite branch above would silently
-        // snapshot only the LAST batch's changed rows. No stream
-        // demo uses Update today — fail loudly rather than wrong.
-        throw new IllegalArgumentException(
-          s"file snapshot sink supports Append/Complete, not $mode " +
-            "(Update emits deltas; a full-state snapshot would be wrong)")
+          batches += kept
+        }
+      }
     }
     try q.processAllAvailable()
     finally {
       q.stop()
       q.awaitTermination()
     }
-    if (!useFile) materializeAndDrop(s, name)
-    else {
-      // same state-store hygiene as the memory path (see
-      // materializeAndDrop); the snapshot itself is a lazy
-      // distributed scan of what the sink committed
-      org.apache.spark.sql.GraftSqlBridge.unloadStateStores()
-      if (new java.io.File(filePath).exists())
-        s.read.schema(df.schema).parquet(filePath)
-      else // zero batches / all rows withheld: sink dir never created
-        s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
-    }
-  }
-
-  /** Snapshot a memory-sink table into a local DataFrame and drop the
-    * temp view, so finished streaming queries leave no session state
-    * behind (Verify/Bench run many queries in one session).
-    */
-  private def materializeAndDrop(s: SparkSession, name: String): DataFrame = {
-    val t = s.table(name)
-    val out = s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(t.collect(): _*)),
-      t.schema)
-    s.catalog.dropTempView(name)
-    // Evict cached state-store providers (q29's keeps the whole event
-    // buffer of the last batch in memory): a finished stream must not
-    // tax later batch queries sharing the session/heap.
-    org.apache.spark.sql.GraftSqlBridge.unloadStateStores()
-    out
+    // A stopped stream's state-store providers stay cached (q29's holds
+    // the whole event buffer of its last batch): evict them so a
+    // finished stream does not tax later queries sharing the heap.
+    GraftSqlBridge.unloadStateStores()
+    batches.synchronized(batches.reduceOption(_ union _)).getOrElse(
+      s.createDataFrame(s.sparkContext.emptyRDD[Row], df.schema))
   }
 
   // ---------------------------------------------------------------- q28
   /** Tumbling event-time window aggregation executed as a REAL
-    * streaming query (file source → complete-mode memory sink), then
+    * streaming query (file source → complete-mode snapshot), then
     * returned as a DataFrame. Deterministic: `processAllAvailable`
     * drains the source, complete mode emits full state. Oracle = the
     * batch q27 SQL — stream/batch parity is the semantic claim.
@@ -444,7 +307,7 @@ object StreamingQueries {
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total"))
-    runToSnapshot(s, agged, "q28_sink", OutputMode.Complete)
+    runToSnapshot(s, agged, OutputMode.Complete)
       .select(col("win.start").as("win_start"), col("event_type"),
         col("n"), col("total"))
       .orderBy("win_start", "event_type")
@@ -695,7 +558,7 @@ object StreamingQueries {
 
   def q29(s: SparkSession, dir: String): DataFrame = {
     val out = rangeStateTransform(s, eventsStream(s, dir))
-    runToSnapshot(s, out, "q29_sink", OutputMode.Append)
+    runToSnapshot(s, out, OutputMode.Append)
       .select(col("event_id"), col("province_id"),
         timestamp_micros(col("ts_us")).as("ts"), col("pay_amount"))
       .orderBy("event_id")
@@ -712,7 +575,7 @@ object StreamingQueries {
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
     // distinct-key state grows with the corpus → disk-backed at scale
-    runToSnapshot(s, deduped, "q47_sink", OutputMode.Append,
+    runToSnapshot(s, deduped, OutputMode.Append,
       corpusLinearState = true)
       .orderBy("user_id", "event_type")
   }
@@ -756,7 +619,7 @@ object StreamingQueries {
     val joined = clickPurchaseJoin(s, dir, "inner")
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         col("click_ts"), col("purchase_ts"))
-    runToSnapshot(s, joined, "q57_sink", OutputMode.Append,
+    runToSnapshot(s, joined, OutputMode.Append,
       ingestRows = eventsRowCount(s, dir))
       .orderBy("click_id", "purchase_id")
   }
@@ -778,7 +641,7 @@ object StreamingQueries {
     val joined = clickPurchaseJoin(s, dir, "left_outer")
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         col("click_ts"), col("purchase_ts"))
-    runToSnapshot(s, joined, "q98_sink", OutputMode.Append,
+    runToSnapshot(s, joined, OutputMode.Append,
       ingestRows = eventsRowCount(s, dir))
       .orderBy("click_id", "purchase_id")
   }
@@ -801,7 +664,7 @@ object StreamingQueries {
         col("p_user_id"), col("click_ts"), col("purchase_ts"))
     // click_id IS null here (unmatched purchases) — pin null ordering
     // explicitly; Spark defaults NULLS FIRST, DuckDB NULLS LAST.
-    runToSnapshot(s, joined, "q125_sink", OutputMode.Append,
+    runToSnapshot(s, joined, OutputMode.Append,
       ingestRows = eventsRowCount(s, dir))
       .orderBy(col("click_id").asc_nulls_last,
         col("purchase_id").asc_nulls_last)
@@ -826,7 +689,7 @@ object StreamingQueries {
       .join(cust, purchases("user_id") === cust("c_custkey"))
       .select(col("event_id"), col("user_id"), col("c_nationkey"),
         col("value"))
-    runToSnapshot(s, joined, "q108_sink", OutputMode.Append)
+    runToSnapshot(s, joined, OutputMode.Append)
       .orderBy("event_id")
   }
 
@@ -877,7 +740,7 @@ object StreamingQueries {
         outCol = "last_click_ts")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"),
         col("last_click_ts"))
-    runToSnapshot(s, enriched, "q132_sink", OutputMode.Append)
+    runToSnapshot(s, enriched, OutputMode.Append)
       .orderBy("event_id")
   }
 
@@ -902,7 +765,7 @@ object StreamingQueries {
     // merged-session state grows with the corpus (95.5k × R measured)
     // → disk-backed at scale: the in-heap provider was the ×512 heap
     // kill this flag exists for
-    runToSnapshot(s, sessions, "q75_sink", OutputMode.Complete,
+    runToSnapshot(s, sessions, OutputMode.Complete,
       corpusLinearState = true)
       .select(col("user_id"), col("win.start").as("session_start"),
         col("win.end").as("session_end"), col("n_events"), col("total"))
@@ -924,7 +787,7 @@ object StreamingQueries {
     */
   def q129(s: SparkSession, dir: String): DataFrame = {
     val out = rangeStateTransformHeld(s, eventsStream(s, dir))
-    runToSnapshot(s, out, "q129_sink", OutputMode.Append,
+    runToSnapshot(s, out, OutputMode.Append,
       ingestRows = eventsRowCount(s, dir))
       .select(col("event_id"), col("province_id"),
         timestamp_micros(col("ts_us")).as("ts"), col("pay_amount"))
@@ -1105,7 +968,7 @@ object StreamingQueries {
   def q138(s: SparkSession, dir: String): DataFrame =
     // ~17 buckets/doc of member-list state ⇒ corpus-linear,
     // disk-backed at scale
-    runToSnapshot(s, streamNearDupPairs(s, dir), "q138_sink",
+    runToSnapshot(s, streamNearDupPairs(s, dir),
       OutputMode.Append, corpusLinearState = true)
       .orderBy("a", "b")
 
@@ -1141,7 +1004,7 @@ object StreamingQueries {
     runToSnapshot(s,
       streamNearDupPairs(s, dir)
         .select(col("b").as("doc_id"), col("jaccard")),
-      "q139_sink", OutputMode.Append, corpusLinearState = true)
+      OutputMode.Append, corpusLinearState = true)
       .groupBy("doc_id")
       .agg(max(col("jaccard")).as("max_jaccard"),
         count(lit(1)).as("n_dup_sources"))

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     shape docs/PLANS.md's WARM q137 section shows;
   *  2. tableRowCount recurses into nested/partitioned parquet layouts
   *     and treats an empty file list under a real directory as a
-  *     LOGGED probe failure (uncached), never a silent cached 0;
+  *     LOGGED probe failure (uncached), never a silent cached 0; its
+  *     cached count follows an in-place rewrite of the table;
   *  3. a Memo stage's rebuild path (streamFeats') frees only the
   *     exact stale entry it observed — a fresh entry installed by a concurrent caller
   *     survives (its lineage-free localCheckpoint could not recover
@@ -67,6 +68,21 @@ class AdviceR15Spec extends AnyFunSuite {
     assert(StreamingQueries.eventsRowCount(spark, tmp2.toString) === 111L,
       "the empty-directory 0 was cached — the silent in-heap fallback " +
         "ADVICE r15 flagged")
+  }
+
+  test("tableRowCount counts an in-place rewrite of the table again") {
+    import graft.streaming.StreamingQueries
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rowcount_rewrite")
+    def write(n: Int): Unit = spark.read.parquet(s"$sf/events.parquet").limit(n)
+      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    write(300)
+    assert(StreamingQueries.eventsRowCount(spark, tmp.toString) === 300L)
+    // the count picks the state provider: a stale one would keep the
+    // in-heap provider for a table rewritten past the heap ceiling
+    write(120)
+    assert(StreamingQueries.eventsRowCount(spark, tmp.toString) === 120L,
+      "the probe returned the count of the table's previous files")
+    Memo.release(tmp.toString)
   }
 
   test("streamFeats CAS install: a concurrently installed fresh entry " +

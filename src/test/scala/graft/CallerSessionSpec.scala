@@ -1,6 +1,5 @@
 package graft
 
-import graft.streaming.StreamingQueries
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
@@ -42,12 +41,6 @@ class CallerSessionSpec extends AnyFunSuite {
   }
 
   test("a file-sink RocksDB drain leaves the caller's confs unchanged") {
-    val s = spark.newSession()
-    StreamingQueries.sinkModeOverride = Some("file")
-    try assertLeavesConfs(s, sf)("q47_stream_dedup")
-    finally {
-      StreamingQueries.sinkModeOverride = None
-      StreamingQueries.cleanupFileSinkDirs()
-    }
+    SparkTestSession.withCheckpointRoot((s, _) => assertLeavesConfs(s, sf)("q47_stream_dedup"))
   }
 }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * kept conf fails loudly on a bad value at its first read, the
   * `SPARK_GRAFT_CONF` parser rejects malformed entries by name, and a
   * source scan keeps the surface from growing back outside `Conf`. The
-  * same scan keeps log text ASCII and Spark listeners inside `Profile`.
+  * same scan keeps log text ASCII, Spark listeners inside `Profile`,
+  * and stream results off the driver.
   */
 class ConfSurfaceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -65,13 +66,6 @@ class ConfSurfaceSpec extends AnyFunSuite {
       DedupQueries.minHashPairs(docs(s)))
   }
 
-  test("the stream sink is memory or file; anything else throws") {
-    assert(Conf.parseStreamSink(" File ") === "file")
-    assert(Conf.parseStreamSink("memory") === "memory")
-    val e = intercept[IllegalArgumentException](Conf.parseStreamSink("kafka"))
-    assert(e.getMessage.contains(Conf.StreamSinkVar) && e.getMessage.contains("kafka"))
-  }
-
   test("SPARK_GRAFT_CONF parser: entries, a trailing ';', a rejected entry") {
     assert(Conf.parseConfEntries("a=1;b=2") === Seq("a" -> "1", "b" -> "2"))
     assert(Conf.parseConfEntries("a=1;b=2;") === Seq("a" -> "1", "b" -> "2"))
@@ -117,7 +111,7 @@ class ConfSurfaceSpec extends AnyFunSuite {
 
   test("the surface is 7 confs and 6 env vars, plus the child-session marker") {
     assert(Conf.keys.size === 7)
-    assert(Conf.envVars.size === 6)
+    assert(Conf.envVars.size === 5)
   }
 
   test("src/main names exactly the declared keys and env vars") {
@@ -169,6 +163,21 @@ class ConfSurfaceSpec extends AnyFunSuite {
       Seq("sys\\.props", "System\\.getPropert", "System\\.setProperty",
           "System\\.clearProperty").foreach { pattern =>
         assert(pattern.r.findFirstIn(body).isEmpty, s"$name reads a system property ($pattern)")
+      }
+    }
+  }
+
+  // One stream snapshot path: a drain keeps its micro-batches as
+  // checkpoints in executor storage, so no stream result is collected
+  // into a memory sink or rebuilt on the driver from a local list
+  // (shipped inside every task of the query that reads it).
+  test("src/main has no memory stream sink and no frame over a driver-local list") {
+    val patterns = Seq("format\\(\\s*\"memory\"\\s*\\)" -> "a memory sink",
+      "createDataFrame\\(\\s*(new\\s+)?java\\.util\\." -> "a createDataFrame over a java.util list")
+    sources.foreach { case (name, src) =>
+      val body = code(src)
+      patterns.foreach { case (pattern, what) =>
+        assert(pattern.r.findFirstIn(body).isEmpty, s"$name has $what ($pattern)")
       }
     }
   }

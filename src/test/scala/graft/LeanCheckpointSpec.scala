@@ -1,10 +1,9 @@
 package graft
 
-import graft.streaming.StreamingQueries
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Changelog checkpointing must ENGAGE wherever corpus-linear state
-  * already pins the RocksDB provider in the file-sink regime (r16).
+  * pins the RocksDB provider.
   *
   * Why this exists: the ×2048 multi-batch probe measured the default
   * full-snapshot checkpoint mode re-uploading every
@@ -16,19 +15,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch's own puts and snapshots move to the async maintenance
   * thread, so the per-commit upload is delta-sized.
   *
-  * Direct evidence, not conf-echo: this runs a real corpus-linear
-  * stream (q47, distinct-key dedup state) through the file-sink path
-  * and asserts the state checkpoint on disk contains `.changelog`
-  * commit files — the artifact only the changelog mode writes.
+  * Direct evidence, not conf-echo: this drains a real corpus-linear
+  * stream (q47, distinct-key dedup state) on a session with a
+  * checkpoint root, which Spark keeps after the stream stops, and
+  * asserts the state checkpoint on disk contains `.changelog` commit
+  * files — the artifact only the changelog mode writes.
   */
 class LeanCheckpointSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
-
-  private def sinkDirs(): Set[String] = {
-    val base = new java.io.File("target/stream_sink")
-    Option(base.listFiles()).toSeq.flatten.map(_.getPath).toSet
-  }
 
   private def walk(f: java.io.File): Seq[java.io.File] =
     if (!f.exists()) Seq.empty
@@ -40,26 +34,20 @@ class LeanCheckpointSpec extends AnyFunSuite {
       "and the session conf is restored after") {
     val clogKey = "spark.sql.streaming.stateStore.rocksdb." +
       "changelogCheckpointing.enabled"
-    val before = sinkDirs()
-    StreamingQueries.sinkModeOverride = Some("file")
-    val snap =
-      try SparkEntry.queries("q47_stream_dedup")(spark, sf)
-      finally StreamingQueries.sinkModeOverride = None
-    assert(snap.count() > 0, "q47 file-sink run produced no rows")
-    val fresh = (sinkDirs() -- before).filter(_.contains("q47_sink"))
-    assert(fresh.nonEmpty, "no q47 sink dir appeared under target/stream_sink")
-    val stateFiles = fresh.toSeq
-      .flatMap(d => walk(new java.io.File(s"$d/ckpt/state")))
-    assert(stateFiles.nonEmpty, "q47 checkpoint has no state files at all")
-    val changelogs = stateFiles.filter(_.getName.endsWith(".changelog"))
-    assert(changelogs.nonEmpty,
-      "no .changelog commit files in the RocksDB state checkpoint — " +
-        "changelog checkpointing did not engage on the corpus-linear " +
-        s"path (state files: ${stateFiles.map(_.getName).distinct.take(20)})")
-    // The pin is scoped to the query: runToSnapshot must restore the
-    // session conf (here: back to unset) exactly like providerClass.
-    assert(spark.conf.getOption(clogKey).isEmpty,
-      s"$clogKey leaked into the shared session after the run")
-    StreamingQueries.cleanupFileSinkDirs()
+    SparkTestSession.withCheckpointRoot { (s, root) =>
+      val snap = SparkEntry.queries("q47_stream_dedup")(s, sf)
+      assert(snap.count() > 0, "q47 produced no rows")
+      val stateFiles = walk(root).filter(_.getPath.contains("/state/"))
+      assert(stateFiles.nonEmpty, "q47 checkpoint has no state files at all")
+      val changelogs = stateFiles.filter(_.getName.endsWith(".changelog"))
+      assert(changelogs.nonEmpty,
+        "no .changelog commit files in the RocksDB state checkpoint — " +
+          "changelog checkpointing did not engage on the corpus-linear " +
+          s"path (state files: ${stateFiles.map(_.getName).distinct.take(20)})")
+      // The pin is scoped to the query: runToSnapshot must restore the
+      // session conf (here: back to unset) exactly like providerClass.
+      assert(s.conf.getOption(clogKey).isEmpty,
+        s"$clogKey leaked into the session after the run")
+    }
   }
 }

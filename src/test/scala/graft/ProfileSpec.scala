@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2Exec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.streaming.sources.MicroBatchWrite
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -79,10 +78,13 @@ class ProfileSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(last.batchId >= 0L, "no batch ran")
     assert(last.stateOperators.nonEmpty && last.stateOperators.map(_.numRowsTotal).sum > 0L,
       s"no state rows in the final progress: ${last.json}")
-    val writes = p.actions.filter(a => collect(a.qe.executedPlan) {
-      case w: WriteToDataSourceV2Exec if w.batchWrite.isInstanceOf[MicroBatchWrite] => w
-    }.nonEmpty)
-    assert(writes.size === last.batchId + 1, s"micro-batch writes: ${p.actions.map(_.name)}")
+    // every micro-batch (each carries the whole state in Complete mode)
+    // is a localCheckpoint action running the stream's stateful plan,
+    // with the batch's tasks
+    val batches = p.actions.filter(a => a.name == "localCheckpoint" &&
+      collect(a.qe.executedPlan) { case w: StateStoreSaveExec => w }.nonEmpty)
+    assert(batches.size === last.batchId + 1, s"micro-batch writes: ${p.actions.map(_.name)}")
+    assert(batches.forall(_.tasks.tasks > 0), batches.map(_.tasks))
     val ids = p.streams.map(_.id).toSet
     assert(!spark.streams.active.exists(q => ids.contains(q.id)),
       "a stream started in the scope is still active after it")

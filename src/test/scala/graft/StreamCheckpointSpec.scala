@@ -69,15 +69,10 @@ class StreamCheckpointSpec extends AnyFunSuite {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else Seq(f)
-    val base = new java.io.File("target/stream_sink")
-    def sinks() = Option(base.listFiles()).toSeq.flatten.map(_.getPath).toSet
-    val before = sinks()
-    StreamingQueries.sinkModeOverride = Some("file")
-    try {
-      val snap = SparkEntry.queries("q47_stream_dedup")(spark, sf)
+    SparkTestSession.withCheckpointRoot { (s, root) =>
+      val snap = SparkEntry.queries("q47_stream_dedup")(s, sf)
       assert(snap.count() > 0)
-      val ckpt = (sinks() -- before).filter(_.contains("q47_sink")).toSeq
-        .flatMap(d => walk(new java.io.File(s"$d/ckpt")))
+      val ckpt = walk(root)
       val names = ckpt.map(_.getName)
       val state = ckpt.filter(_.getPath.contains("/state/")).map(_.getName)
       // Hadoop's local filesystem: a hidden `.<file>.crc` per file
@@ -86,10 +81,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
       // Spark's checkpoint checksums: a visible `<file>.crc`
       assert(state.exists(n => !n.startsWith(".") && n.endsWith(".crc")),
         s"no state-store checksum files in ${state.distinct.take(20)}")
-      assert(spark.conf.getOption(key).isEmpty)
-    } finally {
-      StreamingQueries.sinkModeOverride = None
-      StreamingQueries.cleanupFileSinkDirs()
+      assert(s.conf.getOption(key).isEmpty)
     }
   }
 
@@ -98,7 +90,7 @@ class StreamCheckpointSpec extends AnyFunSuite {
     def pick(p: String) = StreamingQueries.checkpointFileManager(p, conf)
     assert(pick("/tmp/x") === Some(fsManager))
     assert(pick("file:///tmp/x") === Some(fsManager))
-    assert(pick("target/stream_sink/q/ckpt") === Some(fsManager))
+    assert(pick("target/ckpt/q") === Some(fsManager))
     assert(pick("hdfs://nn/x") === None)
     assert(pick("s3a://bucket/x") === None)
     // a scheme-less path resolves against the default filesystem

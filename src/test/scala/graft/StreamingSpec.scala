@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +28,46 @@ class StreamingSpec extends AnyFunSuite {
       .select("event_id", "province_id", "ts", "pay_amount")
       .collect().map(_.toSeq).toSeq
     assert(stream === batch)
+  }
+
+  // An Append drain's snapshot is the union of its batch checkpoints; a
+  // Complete drain's is the last batch, the replaced ones freed.
+  test("a drained stream's snapshot is its batch checkpoints, not a local collection") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.StreamingQueries.runToSnapshot
+    val dir = java.nio.file.Files.createTempDirectory("graft_snapshot").toString
+    // three files read one per micro-batch: three batches
+    (0 until 3).foreach(i => spark.range(i * 10L, i * 10L + 10).toDF("id")
+      .coalesce(1).write.mode("append").parquet(dir))
+    val source = spark.readStream.schema("id LONG")
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    def leaves(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case r: LogicalRDD => r.rdd.id
+      case l: LocalRelation => fail(s"a LocalRelation in the snapshot plan:\n${df.queryExecution.analyzed}")
+    }
+    val appended = Profile.of(spark)(runToSnapshot(spark, source, OutputMode.Append))
+    assert(appended.streams.map(_.batchId) === Seq(2L))
+    assert(appended.actions.count(_.name == "localCheckpoint") === 3)
+    assert(leaves(appended.value).size === 3)
+    assert(appended.value.collect().map(_.getLong(0)).toSeq === (0L until 30L))
+    // Complete: every batch is the whole state; only the last is kept
+    // and the two it replaced are freed
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val counts = runToSnapshot(spark,
+      source.groupBy((col("id") % 3).as("k")).count(), OutputMode.Complete)
+    val kept = leaves(counts)
+    assert(kept.size === 1)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before === kept.toSet)
+    assert(counts.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((0L, 10L), (1L, 10L), (2L, 10L)))
+    // no batch at all: an empty frame of the stream's schema
+    val empty = java.nio.file.Files.createTempDirectory("graft_snapshot_empty").toString
+    val none = runToSnapshot(spark, spark.readStream.schema("id LONG").parquet(empty),
+      OutputMode.Append)
+    assert(none.schema === source.schema && none.count() === 0L)
+    intercept[IllegalArgumentException](runToSnapshot(spark, source, OutputMode.Update))
   }
 
   /** Three time-split micro-batches; batch 2 carries a LATE event
