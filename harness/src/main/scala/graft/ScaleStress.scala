@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * regime where the pre-round-5 cap silently dropped every bucket
   * (clique recall would have been 0, not 1).
   *
-  * Run: `runMain graft.ScaleStress [sfDir] [replication]`
+  * Run: `sbt "harness/runMain graft.ScaleStress [sfDir] [replication] [mode]"`,
+  * on `local[N]` with N = `SPARK_GRAFT_CPUS` (default 4).
   */
 object ScaleStress {
 
@@ -629,22 +630,17 @@ object ScaleStress {
     // DISTINCT-regime dir, with per-query final-batch state rows
     // asserted LINEAR in R against a base-dir run.
     val mode = if (args.length > 2) args(2) else "dedup"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.localSession(Conf.cpus,
       // Compress persisted serialized blocks (static core conf, so set
       // here, not per-session). Shuffle spill is compressed by default
       // but DISK_ONLY / *_SER checkpoint blocks are NOT — at ×512 the
       // uncompressed pair-table write (654 M member/pair rows) filled
-      // this box's ~61 GB scratch while the heap stayed healthy. The
+      // a 61 GB scratch disk while the heap stayed healthy. The
       // blocks are highly redundant (sorted ids, repeated structs);
       // lz4 shrinks them several-fold for negligible CPU next to the
       // joins they feed. A production cluster runs persisted
       // serialized blocks compressed for the same reason.
-      .config("spark.rdd.compress", "true")
-      .getOrCreate()
+      "spark.rdd.compress" -> "true")
     spark.sparkContext.setLogLevel("ERROR")
 
     // Session confs (same contract as Bench's, see Conf.applyConfEnv),

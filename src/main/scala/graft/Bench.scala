@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
 
   /** Host CPU accounting from /proc/stat (jiffies, summed over all
@@ -122,23 +122,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = Conf.sfDir
-    val cpus = Conf.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
+    val spark = SparkEntry.localSession(Conf.cpus,
       // bound per-query metadata retention: 50+ queries in one session
       // otherwise accumulate listener/state backlog that taxes later,
       // shuffle-stage-heavy queries
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
+      "spark.sql.ui.retainedExecutions" -> "5",
+      "spark.ui.retainedJobs" -> "50",
+      "spark.ui.retainedStages" -> "100",
       // compress persisted serialized/DISK_ONLY blocks (cf. ScaleStress:
       // at xR the dedup pair/bucket checkpoints are the scratch-disk
       // volume; lz4 shrinks the highly-redundant blocks several-fold)
-      .config("spark.rdd.compress", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.rdd.compress" -> "true")
     // Session confs for A/B bench runs (see Conf.applyConfEnv); every
     // query, the dedup pipelines included, plans on this session.
     Conf.applyConfEnv(spark)

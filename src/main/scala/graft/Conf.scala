@@ -112,7 +112,7 @@ object Conf {
   def sfDir: String = env(SfDirVar).getOrElse("/root/testdata/sf0.1")
 
   /** Cores (`local[N]`, and the session's shuffle partitions) of the
-    * Bench and Verify sessions; unset, 4.
+    * Bench, Verify and ScaleStress sessions; unset, 4.
     */
   def cpus: Int =
     env(CpusVar).fold(4)(v =>

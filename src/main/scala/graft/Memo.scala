@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -8,8 +7,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 /** The engine's one store of reusable intermediate tables: the stages a
   * production pipeline writes once and several queries read (q35's
   * verified pairs, q102's cluster labels, q136's standing index and
-  * pair table, q138/q139's corpus feature table, q51's IVF index), and
-  * the footer row counts that pick a stream's state provider.
+  * pair table, q138/q139's corpus feature table, q51's IVF index). It
+  * holds frame stages only: a value the driver reads from footers in
+  * well under a millisecond is read again, not memoized.
   *
   * A stage is declared where it is built — name, data dir, the input
   * tables it reads, the build, and the frames whose blocks it holds —
@@ -109,17 +109,7 @@ object Memo {
   private[graft] def fingerprint(s: SparkSession, dir: String,
       inputs: Seq[String]): Fingerprint = {
     val conf = s.sparkContext.hadoopConfiguration
-    inputs.flatMap { t =>
-      val p = new Path(s"$dir/$t.parquet")
-      val fs = p.getFileSystem(conf)
-      // listStatus/getFileStatus, not listFiles: a LocatedFileStatus
-      // copies the permissions, which the local FS without native
-      // Hadoop reads by running `ls` per file
-      def walk(st: FileStatus): Seq[FileStatus] =
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
-        else Seq(st)
-      walk(fs.getFileStatus(p)).map(f =>
-        (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
-    }
+    inputs.flatMap(t => Tables.parquetFiles(s"$dir/$t.parquet", conf).map(f =>
+      (f.getPath.toString, f.getLen, f.getModificationTime)))
   }
 }

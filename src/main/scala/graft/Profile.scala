@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.util.QueryExecutionListener
+import java.util.regex.{Matcher, Pattern}
 
 /** What a piece of code ran on a session, read from Spark's own events
   * rather than from hand-placed tags or a changed pipeline:
@@ -72,6 +73,59 @@ object Profile {
       spark.streams.removeListener(rec.progress)
       spark.sparkContext.removeSparkListener(rec)
       spark.listenerManager.unregister(rec.sql)
+    }
+  }
+
+  /** `explain("formatted")` without the JVM's running counters — plan
+    * ids, expression ids, RDD ids, identity hashes and random UUIDs —
+    * with codegen and query-stage ids numbered
+    * in plan order rather than in the order stages happened to run,
+    * and with distinct-aggregate groups in name order, so a
+    * regenerated audit (`graft.PlanAudit`, docs/PLANS.md) diffs only
+    * where a plan changed.
+    */
+  private[graft] def explain(qe: QueryExecution): String = {
+    val plan = qe.explainString(FormattedMode)
+      .replaceAll(",? ?\\[plan_id=\\d+\\]", "")
+      .replaceAll("#\\d+L?\\b", "")
+      .replaceAll("RDD\\[\\d+\\]", "RDD")
+      .replaceAll("\\$\\$Lambda\\$?[\\d/x]*[0-9a-f]*@[0-9a-f]+", "\\$\\$Lambda")
+      .replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "")
+      .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "uuid")
+    val ids = scala.collection.mutable.Map[(Char, String), Int]()
+    sortDistinctGroups("(\\[codegen id : |QueryStage\n(?:Output[^\n]*\n)?Arguments: )(\\d+)".r
+      .replaceAllIn(plan, m => Matcher.quoteReplacement(m.group(1) + ids.getOrElseUpdate(
+        (m.group(1).head, m.group(2)), ids.keys.count(_._1 == m.group(1).head) + 1))))
+  }
+
+  /** Spark's distinct-aggregate rewrite (an `Expand` that tags each
+    * row with a `gid`) orders its distinct groups by hashes of
+    * expression ids, which differ per JVM. With one column per group,
+    * put the groups in column-name order: renumber `gid` and reorder
+    * the group columns in the `Expand` and in every list after it.
+    * Other shapes are left as they are.
+    */
+  private[graft] def sortDistinctGroups(plan: String): String = {
+    val expandArgs = "(?m)^Arguments: \\[\\[(.*)\\]\\], \\[(.*, gid\\b.*)\\]$".r
+    expandArgs.findFirstMatchIn(plan).fold(plan) { m =>
+      val projs = m.group(1).split("\\], \\[").toSeq.map(_.split(", ").toSeq)
+      val out = m.group(2).split(", ").toSeq
+      // the column gid j adds: the one slot projection j fills and gid 0's
+      // leaves null; Spark lays the groups' columns out in gid order
+      lazy val slots = projs.tail.map(p => out.indices.filter(i => p(i) != "null" && projs.head(i) == "null"))
+      if (projs.exists(_.size != out.size) || slots.exists(_.size != 1)) plan else {
+        val cols = slots.map(s => out(s.head))
+        val sorted = cols.sorted
+        val expand = (projs.head +: projs.tail.zip(slots).zip(sorted).map {
+          case ((p, s), c) => p.updated(s.head, c) }).map(_.mkString("[", ", ", "]"))
+        val run = cols.map(c => s"((?:[^,\\[\\]]*? AS )?${Pattern.quote(c)})")
+          .mkString("(?<=[\\[(]|, )", ", ", "(?=[,\\])])").r
+        val rest = run.replaceAllIn(s"[${m.group(2)}]${plan.substring(m.end)}", r =>
+          Matcher.quoteReplacement(sorted.map(c => r.group(cols.indexOf(c) + 1)).mkString(", ")))
+        plan.substring(0, m.start) + expand.mkString("Arguments: [", ", ", "], ") +
+          "\\(gid = ([1-9]\\d*)\\)".r.replaceAllIn(rest,
+            r => cols.lift(r.group(1).toInt - 1).fold(r.matched)(c => s"(gid = ${sorted.indexOf(c) + 1})"))
+      }
     }
   }
 

@@ -9,6 +9,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The session every graft main runs on: `local[cores]` with `cores`
+    * shuffle partitions, UTC, no UI, WARN logs. `confs` are what a main
+    * sets beyond that.
+    */
+  def localSession(cores: Int, confs: (String, String)*): SparkSession = {
+    val s = confs.foldLeft(SparkSession.builder()
+        .master(s"local[$cores]")
+        .config("spark.sql.shuffle.partitions", cores.toString)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.flagship(spark, "/root/testdata/sf0.001")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,14 +14,7 @@ object Verify {
     // probe inside its artifact.
     Bench.concurrentGraftJvms().foreach(p =>
       System.err.println(s"[verify] WARNING: concurrent graft process $p"))
-    val cpus = Conf.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(Conf.cpus)
     Conf.applyConfEnv(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

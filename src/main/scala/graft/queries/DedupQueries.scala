@@ -920,7 +920,7 @@ object DedupQueries {
   private[graft] def incrementalIndex(s0: SparkSession, dir: String): IncrIndex =
     graft.Memo(s0, "incr_index", dir, "documents") {
       val maxId = Tables.documents(s0, dir)
-        .agg(max(col("doc_id"))).head.getLong(0)
+        .agg(max(col("doc_id"))).head().getLong(0)
       indexFor(s0, dir, maxId * 4L / 5L)
     }(idx => Seq(idx.buckets, idx.reblock, idx.exactKeys))
 
@@ -1919,7 +1919,7 @@ object DedupQueries {
             case _ => -1
           }
           val live = sc.getPersistentRDDs
-          (made - keep).foreach(id =>
+          made.filter(_ != keep).foreach(id =>
             live.get(id).foreach(_.unpersist(blocking = true)))
           System.gc() // ContextCleaner drops the slice's shuffle files
           sliceOuts += out

@@ -55,7 +55,8 @@ object GraphQueries {
     * web-scale node count degrades to one rank-sized exchange per
     * round instead of OOMing the driver (both plan shapes asserted in
     * PageRankSpec). Measured vs the flat edge layout at sf0.1 (2.4M
-    * edges, MICRO.md): per-round cost is EQUAL once both are cached
+    * edges, 5 cached rounds on local[32]: 2.82 s adjacency, 2.63 s
+    * flat): per-round cost is about equal once both are cached
     * and balanced — the end-to-end win (9.2 → 5.6 s in-suite) is that
     * the flat layout needs a separate degree-join build + 2.4M-row
     * cache whose src-hash output partitioning inherits co-occurrence

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming re-expression of the reference's execution
   * model (SURVEY.md §2 q28–q29, q47, q57): schema'd stream source →
@@ -57,11 +58,11 @@ object StreamingQueries {
       .parquet(dir)
     declaredTs match {
       case LongType =>
-        // int64 layout: ns-vs-µs disambiguated by the same memoized
-        // magnitude probe the batch loader uses (Tables.events), so
-        // stream and batch read the identical instants.
+        // int64 layout: ns-vs-µs decided from the footer as the batch
+        // loader does (Tables.events), so stream and batch read the
+        // identical instants.
         raw.withColumn("ts", timestamp_micros(expr(s"ts DIV ${
-          Tables.int64TsDivisor(batchRaw, s"$dir/events.parquet")}")))
+          Tables.int64TsDivisor(s, s"$dir/events.parquet")}")))
       case _ => raw
     }
   }
@@ -99,7 +100,7 @@ object StreamingQueries {
 
   /** JSON sink encoding (the reference's sink table format). */
   def toJsonSink(df: DataFrame): DataFrame =
-    df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+    df.select(to_json(struct(df.columns.toSeq.map(col): _*)).as("value"))
 
   /** Rows micro-batch 1 will ingest from `dir`'s `table`: a replay
     * harness feeds the whole scaled table as ONE file, so one
@@ -112,19 +113,24 @@ object StreamingQueries {
     * expired (exit 56) with no OOM thrown.
     *
     * The count sums the row groups of the table's parquet footers on the
-    * driver (no Spark job), recursing into nested layouts, and is a
-    * [[graft.Memo]] stage guarded by the table's files, so an in-place
-    * rewrite is counted again. A failed probe, including a directory
-    * with no parquet file under it, is LOGGED and returns an uncached 0:
-    * 0 keeps the in-heap provider whatever the batch size, the
-    * GC-freeze regime this count exists to prevent, so it must never be
-    * silent.
+    * driver (no Spark job, ~0.2 ms a footer), nested layouts included,
+    * on every call, so an in-place rewrite is counted again. A failed
+    * probe, including a directory with no parquet file under it, is
+    * LOGGED and returns 0: 0 keeps the in-heap provider whatever the
+    * batch size, the GC-freeze regime this count exists to prevent, so
+    * it must never be silent.
     */
   private[graft] def tableRowCount(s: SparkSession, dir: String,
       table: String): Long = {
     val path = s"$dir/$table.parquet"
-    try graft.Memo(s, s"${table}_rows", dir, table)(footerRows(s, path))(_ => Nil)
-    catch {
+    try {
+      val conf = s.sparkContext.hadoopConfiguration
+      val files = Tables.parquetFiles(path, conf)
+      if (files.isEmpty)
+        throw new java.io.FileNotFoundException(s"no .parquet files under $path")
+      files.map(f => Tables.footer(f.getPath, conf).getBlocks.asScala
+        .map(_.getRowCount).sum).sum
+    } catch {
       case e: Exception =>
         System.err.println("[graft] row-count footer probe failed " +
           s"for $path (${e.getClass.getSimpleName}: ${e.getMessage}) - " +
@@ -132,27 +138,6 @@ object StreamingQueries {
           "will be kept regardless of batch size for this query")
         0L
     }
-  }
-
-  private def footerRows(s: SparkSession, path: String): Long = {
-    val root = new java.io.File(path)
-    // a hive-partitioned or otherwise nested layout
-    // (Sources.writePartitioned) keeps its part files in subdirectories
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .filterNot(_.getName.startsWith("_")).flatMap(walk)
-      else if (f.isFile && f.getName.endsWith(".parquet")) Seq(f)
-      else Seq.empty
-    val files = walk(root)
-    if (files.isEmpty) throw new java.io.FileNotFoundException(
-      s"no .parquet files under ${root.getPath}")
-    import scala.jdk.CollectionConverters._
-    val conf = s.sparkContext.hadoopConfiguration
-    files.map { f =>
-      Tables.footer(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-        .getBlocks.asScala.map(_.getRowCount).sum
-    }.sum
   }
 
   private[graft] def eventsRowCount(s: SparkSession, dir: String): Long =

@@ -108,7 +108,7 @@ class AdviceR14Spec extends AnyFunSuite {
     assert(probe.jobs === 0,
       "eventsRowCount scheduled a Spark job — the probe must be a " +
         "driver-side footer read (ADVICE r14)")
-    // cached on repeat
+    // the same count on repeat
     assert(StreamingQueries.eventsRowCount(spark, tmp.toString) === 777L)
     // missing dir: logged fallback, returns 0, does not throw
     assert(StreamingQueries.eventsRowCount(spark,

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graft's tuning surface is exactly what [[Conf]] declares: every
   * kept conf fails loudly on a bad value at its first read, the
   * `SPARK_GRAFT_CONF` parser rejects malformed entries by name, and a
-  * source scan keeps the surface from growing back outside `Conf`. The
+  * scan of the library and harness sources keeps the surface from
+  * growing back outside `Conf`. The
   * same scan keeps log text ASCII, Spark listeners inside `Profile`,
   * and stream results off the driver.
   */
@@ -93,15 +94,18 @@ class ConfSurfaceSpec extends AnyFunSuite {
 
   // ------------------------------------------------------ source scan
 
-  private lazy val sources: Seq[(String, String)] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(root).map(f => f.getName ->
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-  }
+  // the library's main sources and the harness programs built on it
+  // (`harness/`): code moved between them stays under every check
+  private lazy val sources: Seq[(String, String)] =
+    Seq("src/main/scala", "harness/src/main/scala").flatMap { dir =>
+      val root = new java.io.File(dir)
+      assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      walk(root).map(f => f.getName ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    }
 
   private def code(src: String): String =
     src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")

@@ -147,7 +147,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   test("incremental pairs memo: warm q136/q137 run zero pipeline stages") {
     Memo.release(sf)
     val cold = Profile.of(spark)(DedupQueries.incrementalPairs(spark, sf))
-    val pipeline = cold.actions.map(a => PlanAudit.explain(a.qe)).toSet
+    val pipeline = cold.actions.map(a => Profile.explain(a.qe)).toSet
     assert(cold.actions.count(_.name == "localCheckpoint") > 4,
       s"cold build must run the pipeline (saw ${cold.actions.map(_.name)})")
     val warm = Profile.of(spark)(DedupQueries.incrementalPairs(spark, sf))
@@ -156,7 +156,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // the q137 ENTRY (memoized-pairs path): only apply-side actions
     val apply = Profile.of(spark)(
       SparkEntry.queries("q137_dedup_incr_apply")(spark, sf).count())
-    val applyPlans = apply.actions.map(a => PlanAudit.explain(a.qe))
+    val applyPlans = apply.actions.map(a => Profile.explain(a.qe))
     assert(applyPlans.nonEmpty)
     assert(applyPlans.forall(p => !pipeline.contains(p)),
       "q137 re-ran a pair-pipeline action")

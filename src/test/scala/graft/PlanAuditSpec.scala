@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `PlanAudit` writes a plan the same way in every JVM. */
+/** The plan audit (`Profile.explain`) writes a plan the same way in
+  * every JVM.
+  */
 class PlanAuditSpec extends AnyFunSuite {
 
   /** q22's distinct-aggregate rewrite, with its two distinct groups in
@@ -28,11 +30,11 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("distinct-aggregate groups print in column-name order") {
     val sorted = q22("l_partkey", "l_suppkey")
-    assert(PlanAudit.sortDistinctGroups(q22("l_suppkey", "l_partkey")) === sorted)
-    assert(PlanAudit.sortDistinctGroups(sorted) === sorted)
+    assert(Profile.sortDistinctGroups(q22("l_suppkey", "l_partkey")) === sorted)
+    assert(Profile.sortDistinctGroups(sorted) === sorted)
     // without a grouping key the group columns open every list
     def ungrouped(plan: String) = plan.replace("l_returnflag, ", "")
-    assert(PlanAudit.sortDistinctGroups(ungrouped(q22("l_suppkey", "l_partkey"))) ===
+    assert(Profile.sortDistinctGroups(ungrouped(q22("l_suppkey", "l_partkey"))) ===
       ungrouped(sorted))
   }
 }

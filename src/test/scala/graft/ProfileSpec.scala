@@ -89,4 +89,24 @@ class ProfileSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!spark.streams.active.exists(q => ids.contains(q.id)),
       "a stream started in the scope is still active after it")
   }
+
+  test("q138 over a part-file documents directory: its actions hold every task of the scope") {
+    // the layout a replicated stress dir has: documents.parquet is a
+    // Spark-written directory of part files, every other table as in sf
+    val dir = java.nio.file.Files.createTempDirectory("graft_q138_dir")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet"))
+      .filterNot(_.getName == "documents.parquet")
+      .foreach(f => java.nio.file.Files.createSymbolicLink(dir.resolve(f.getName), f.toPath))
+    spark.read.parquet(s"$sf/documents.parquet").repartition(2)
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    try {
+      val p = Profile.of(spark)(
+        SparkEntry.queries("q138_stream_dedup_near")(spark, dir.toString).count())
+      assert(p.value > 0L)
+      val credited = p.actions.map(_.tasks.tasks).sum
+      assert(credited === p.tasks.tasks,
+        s"actions ${p.actions.map(a => a.name -> a.tasks.tasks)} hold $credited of " +
+          s"the scope's ${p.tasks.tasks} tasks (${p.jobs} jobs)")
+    } finally Memo.release(dir.toString)
+  }
 }

@@ -72,8 +72,8 @@ class SourcesSpec extends AnyFunSuite {
     * rounds): an int64 ts may be epoch-NANOS (the legacy layout) or
     * epoch-MICROS — `DIV 1000` on micros would be silently 1000× off
     * (1970-01 timestamps, the exact symptom the verify skill warns
-    * about). The loader disambiguates by magnitude on one sampled row;
-    * both flavors must load to the SAME instant.
+    * about). The loader disambiguates by the magnitude of the footer's
+    * `ts` statistics; both flavors must load to the SAME instant.
     */
   test("events loader disambiguates int64 ns vs µs by magnitude") {
     import spark.implicits._

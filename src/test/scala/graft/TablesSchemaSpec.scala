@@ -65,6 +65,20 @@ class TablesSchemaSpec extends AnyFunSuite {
     assert(Tables.read(spark, part).schema === inferred(part))
   }
 
+  test("a Spark-written directory, plain or hive-partitioned, loads with Spark's schema and starts no job") {
+    val root = Files.createTempDirectory("graft_tables_dir")
+    val plain = root.resolve("plain").toString
+    Tables.orders(spark, sf).repartition(2).write.parquet(plain)
+    val parted = root.resolve("parted").toString
+    Sources.writePartitioned(Tables.orders(spark, sf), parted, "o_orderstatus")
+    for (dir <- Seq(plain, parted)) {
+      val p = Profile.of(spark)(Tables.read(spark, dir))
+      assert(p.jobs === 0, s"loading $dir scheduled a Spark job")
+      assert(p.value.schema === inferred(dir), dir)
+    }
+    assert(Tables.read(spark, parted).schema.fieldNames.last === "o_orderstatus")
+  }
+
   /** One-row events file with `ts` stored as INT64 TIMESTAMP(`unit`),
     * without timezone — the two layouts the events loaders handle —
     * written without Spark's row metadata, as the generator does.
@@ -135,8 +149,27 @@ class TablesSchemaSpec extends AnyFunSuite {
   test("a single-file load starts no Spark job") {
     assert(Profile.of(spark)(tables.foreach(t => Tables(spark, sf, t))).jobs === 0,
       "a table load scheduled a Spark job")
+    // an int64 events.ts: its unit comes from the footer too
+    val nanos = eventsFile("NANOS", 1700000000000000000L)
+    assert(Profile.of(spark)(Tables.events(spark, nanos)).jobs === 0,
+      "a TIMESTAMP(NANOS) events load scheduled a Spark job")
     // control: Spark's own inference does run one
     assert(Profile.of(spark)(spark.read.parquet(s"$sf/orders.parquet")).jobs > 0,
       "control: schema inference ran no job")
+  }
+
+  test("an in-place rewrite of an int64 events.ts from ns to µs loads the new unit") {
+    import spark.implicits._
+    val instantUs = 1700000000000000L
+    val dir = Files.createTempDirectory("graft_ts_rewrite").toString
+    def loadAfterWriting(ts: Long): Long = {
+      Seq((1L, ts, 7L, "click", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      Tables.events(spark, dir).select(unix_micros(col("ts"))).head().getLong(0)
+    }
+    assert(loadAfterWriting(instantUs * 1000L) === instantUs, "ns layout mis-scaled")
+    assert(loadAfterWriting(instantUs) === instantUs,
+      "the rewritten µs table was read with the previous layout's unit")
   }
 }

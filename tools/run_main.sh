@@ -1,6 +1,7 @@
 #!/bin/bash
-# Run a graft main class directly against the sbt-compiled classes +
-# the image's Spark jars — no sbt session, so long stress probes don't
+# Run a graft main class directly against the sbt-compiled classes (the
+# library's and the harness's; `sbt Test/compile` builds both) + the
+# image's Spark jars — no sbt session, so long stress probes don't
 # hold the build lock while compilation/tests continue elsewhere.
 # Usage: tools/run_main.sh graft.ScaleStress [args...]
 # Heap: SPARK_DRIVER_MEM (default 8g) — same knob as build.sbt's fork.
@@ -20,11 +21,13 @@ done
 # mid-run. The snapshot pins the binary the probe started with.
 SNAP=$(mktemp -d /tmp/graft_classes.XXXXXX)
 trap 'rm -rf "$SNAP"' EXIT
-cp -r target/scala-2.13/classes/. "$SNAP"/
+mkdir "$SNAP/lib" "$SNAP/harness"
+cp -r target/scala-2.13/classes/. "$SNAP/lib"/
+cp -r harness/target/scala-2.13/classes/. "$SNAP/harness"/
 # no exec: the shell must outlive the JVM so the EXIT trap reaps SNAP
 java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "$SNAP:/opt/spark/jars/*" \
+  -cp "$SNAP/lib:$SNAP/harness:/opt/spark/jars/*" \
   "$MAIN" "$@"
