@@ -23,7 +23,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val audited = SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkEntry.localSession(8)
+    // Spark sizes its memory pages from the heap, and a broadcast hash
+    // relation's statistics count whole pages: a pinned page size keeps
+    // the audit the same under any driver heap
+    val spark = SparkEntry.localSession(8, "spark.buffer.pageSize" -> "16m")
     val sb = new StringBuilder
     sb.append("# Physical plan audit (generated by graft.PlanAudit)\n\n")
     sb.append(s"Scale dir: `$sfDir`. Criteria: pushdown reaches the scan, ")

@@ -74,9 +74,8 @@ object ScaleStress {
     * densification is inherent to the query's semantics and is the
     * one regime the stream demos do not claim).
     * `events` keeps its stored `ts` layout (int64-nanos or µs
-    * timestamp, whichever the generator shipped — the loaders probe)
-    * and lands as a single file (the streaming source's
-    * pathGlobFilter matches the file name `events.parquet`).
+    * timestamp, whichever the generator shipped — the loaders probe).
+    * Every replicated table lands as a directory of part files.
     *
     * ASYMMETRY (deliberate, scoped): only events.user_id is diluted.
     * The other fact-side FK columns — orders.o_custkey,
@@ -135,24 +134,11 @@ object ScaleStress {
       spark.read.parquet(s"$srcDir/$t.parquet")
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
-    def repl(name: String, idCols: Seq[String], singleFile: Boolean = false): Unit = {
-      val out = idCols.foldLeft(replicated(spark, s"$srcDir/$name.parquet", rep))(
+    def repl(name: String, idCols: Seq[String]): Unit =
+      idCols.foldLeft(replicated(spark, s"$srcDir/$name.parquet", rep))(
           (d, c) => d.withColumn(c, col(c) + col("__r") * Base))
         .drop("__r")
-      if (!singleFile) {
-        out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      } else {
-        val tmp = s"$outDir/__tmp_$name"
-        out.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        Files.move(part.toPath, Paths.get(s"$outDir/$name.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        new java.io.File(tmp).listFiles().foreach(_.delete())
-        Files.deleteIfExists(Paths.get(tmp))
-      }
-    }
+        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     if (!docsOnly) {
       repl("orders", Seq("o_orderkey"))
       repl("lineitem", Seq("l_orderkey"))
@@ -173,7 +159,7 @@ object ScaleStress {
       // enrichment keeps matching only base-replica users against the
       // as-is customer dim; it is stateless, so its scaling is not a
       // stress claim)
-      repl("events", Seq("event_id", "user_id"), singleFile = true)
+      repl("events", Seq("event_id", "user_id"))
     }
   }
 

@@ -78,7 +78,8 @@ object Profile {
 
   /** `explain("formatted")` without the JVM's running counters — plan
     * ids, expression ids, RDD ids, identity hashes and random UUIDs —
-    * with codegen and query-stage ids numbered
+    * and without the source lines of RDD call sites (`localCheckpoint
+    * at DedupQueries.scala`), with codegen and query-stage ids numbered
     * in plan order rather than in the order stages happened to run,
     * and with distinct-aggregate groups in name order, so a
     * regenerated audit (`graft.PlanAudit`, docs/PLANS.md) diffs only
@@ -89,6 +90,7 @@ object Profile {
       .replaceAll(",? ?\\[plan_id=\\d+\\]", "")
       .replaceAll("#\\d+L?\\b", "")
       .replaceAll("RDD\\[\\d+\\]", "RDD")
+      .replaceAll("( at [\\w$]+\\.(?:scala|java)):\\d+", "$1")
       .replaceAll("\\$\\$Lambda\\$?[\\d/x]*[0-9a-f]*@[0-9a-f]+", "\\$\\$Lambda")
       .replaceAll("(?<=[\\w$;])@[0-9a-f]{1,8}\\b", "")
       .replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "uuid")

@@ -22,10 +22,32 @@ import scala.jdk.CollectionConverters._
 object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    name match {
-      case "events" => events(spark, dir)
-      case _        => read(spark, s"$dir/$name.parquet")
-    }
+    normalized(spark, dir, name,
+      read(spark, s"$dir/$name.parquet", nanosAsLong = name == "events"))
+
+  /** Streaming read of the table `name` under `dir`: the source
+    * declares the batch loader's footer schema ([[read]]) and its rows
+    * get the batch loader's normalization, so a drained stream reads
+    * exactly what [[apply]] reads. A Spark-written directory of part
+    * files streams by its path. A single file streams through its
+    * parent directory and a `pathGlobFilter` on its name: Spark's file
+    * source rejects a file path ("Option 'basePath' must be a
+    * directory"), and the glob on a directory's name matches none of
+    * its part files. `maxFilesPerTrigger` caps the files a micro-batch
+    * ingests.
+    */
+  def stream(spark: SparkSession, dir: String, name: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val schema = read(spark, path.toString, nanosAsLong = name == "events").schema
+    val reader = maxFilesPerTrigger.foldLeft(spark.readStream.schema(schema))(
+      (r, n) => r.option("maxFilesPerTrigger", n.toString))
+    val raw =
+      if (path.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(path).isDirectory)
+        reader.parquet(path.toString)
+      else reader.option("pathGlobFilter", path.getName).parquet(path.getParent.toString)
+    normalized(spark, dir, name, raw)
+  }
 
   /** Parquet scan of `path`, a single file or a Spark-written
     * directory of part files. The schema is resolved from one data
@@ -98,35 +120,30 @@ object Tables {
     ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, conf),
       ParquetMetadataConverter.NO_FILTER)
 
-  /** `events.ts` normalization — the stored layout has CHANGED across
-    * driver rounds, so the loader probes and adapts instead of
-    * assuming:
-    *  - TIMESTAMP(NANOS) (pandas ns, rounds 1-6): Spark has no ns
-    *    timestamp — declare the footer's int64 as `LONG` (see
-    *    [[read]]'s `nanosAsLong`) and truncate to microseconds, exactly
-    *    what DuckDB does on the same file;
-    *  - timestamp[us] WITHOUT timezone (round 7+): Spark infers
-    *    TIMESTAMP_NTZ, which watermarks and `unix_micros` reject —
-    *    cast to TIMESTAMP. The session timezone is UTC everywhere in
-    *    this engine, so the NTZ wall time IS the UTC instant, matching
-    *    DuckDB's naive read of the same column.
+  /** `events.ts` normalization, one for the batch and the streaming
+    * loader (other tables pass through). The loader adapts to the
+    * stored layout rather than assuming one:
+    *  - an int64 `ts` (a TIMESTAMP(NANOS) column, which [[read]]'s
+    *    `nanosAsLong` declares as its raw `LONG`, or an unannotated
+    *    int64) becomes microseconds by [[int64TsDivisor]], exactly what
+    *    DuckDB reads from the same file;
+    *  - a timestamp WITHOUT timezone (Spark infers TIMESTAMP_NTZ, which
+    *    watermarks and `unix_micros` reject) is cast to TIMESTAMP. The
+    *    session timezone is UTC everywhere in this engine, so the NTZ
+    *    wall time IS the UTC instant, matching DuckDB's naive read of
+    *    the same column.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = read(spark, s"$dir/events.parquet", nanosAsLong = true)
-    raw.schema("ts").dataType match {
+  private def normalized(spark: SparkSession, dir: String, name: String,
+      raw: DataFrame): DataFrame =
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
       case LongType =>
-        // An int64 ts could be epoch-NANOS (TIMESTAMP(NANOS) read via
-        // `nanosAsLong` — rounds 1-6) or a plain epoch-MICROS int64
-        // (never shipped yet, but the layout has changed three times);
-        // `DIV 1000` on micros would be silently 1000x off (1970-01
-        // timestamps). See [[int64TsDivisor]].
         raw.withColumn("ts", timestamp_micros(
           expr(s"ts DIV ${int64TsDivisor(spark, s"$dir/events.parquet")}")))
       case TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
 
   /** The DIV-to-microseconds divisor of the int64 `ts` column of the
     * events table at `path`, decided from its footers (no Spark job, no
@@ -135,8 +152,7 @@ object Tables {
     * magnitude in its min/max statistics is past 1e17, else µs: modern
     * epochs are ~1.7e18 ns vs ~1.7e15 µs, and the cut is year ~5138 in
     * µs and ~1973 in ns. Without statistics it is ns, the legacy
-    * layout. Shared with the streaming loader so both read the
-    * identical instants.
+    * layout.
     */
   private[graft] def int64TsDivisor(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
@@ -157,6 +173,7 @@ object Tables {
     else 1L
   }
 
+  def events(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "events")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame  = apply(spark, dir, "customer")

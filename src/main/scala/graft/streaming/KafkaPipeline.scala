@@ -20,11 +20,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * connector jar on the classpath these entry points ARE the running
   * reference pipeline; no other code changes.
   *
-  * Scale: the transform is [[StreamingQueries.rangeStateTransform]] —
-  * state is per-province and bounded by (window + allowed delay) of
-  * event rate, partitions scale with `spark.sql.shuffle.partitions`,
+  * Scale: the transform is [[StreamingQueries.rangeStateTransform]],
+  * whose state is per province and bounded by (window + allowed delay)
+  * of event rate; partitions scale with `spark.sql.shuffle.partitions`,
   * and the source parallelism follows the topic's partition count
-  * (one Spark input partition per Kafka partition).
+  * (one Spark input partition per Kafka partition). [[source]] is the
+  * one stream graft opens outside [[graft.Tables.stream]].
   */
 object KafkaPipeline {
 
@@ -49,10 +50,10 @@ object KafkaPipeline {
     * province → the reference's sink schema
     * `(province_id int, pay_amount double)`.
     *
-    * `heldEmission = true` selects the watermark-held variant
-    * ([[StreamingQueries.rangeStateTransformHeld]]) — the reference
-    * engine's effective emission order (emit on watermark advance),
-    * batch-exact for any in-delay arrival order.
+    * `heldEmission = true` selects the operator's watermark-held mode
+    * (`held = true`): the reference engine's effective emission order
+    * (emit on watermark advance), batch-exact for any in-delay arrival
+    * order. The default emits each payment on arrival.
     */
   def paymentRangeSum(s: SparkSession, records: DataFrame,
       heldEmission: Boolean = false): DataFrame = {
@@ -66,11 +67,9 @@ object KafkaPipeline {
       col("createTime").as("ts"),
       col("provinceId").cast("long").as("user_id"),
       col("payAmount").as("value"))
-    val out =
-      if (heldEmission) StreamingQueries.rangeStateTransformHeld(s, shaped)
-      else StreamingQueries.rangeStateTransform(s, shaped)
-    out.select(col("province_id").cast("int").as("province_id"),
-      col("pay_amount"))
+    StreamingQueries.rangeStateTransform(s, shaped, held = heldEmission)
+      .select(col("province_id").cast("int").as("province_id"),
+        col("pay_amount"))
   }
 
   /** Sink table decl (reference lines 54-68): each result row as one

@@ -22,51 +22,6 @@ import scala.jdk.CollectionConverters._
   */
 object StreamingQueries {
 
-  /** Streaming read of the events parquet, normalized to a
-    * TimestampType `ts` the same way as the batch loader
-    * ([[graft.Tables.events]]): the stored type is probed from the
-    * parquet footer (a metadata-only batch read) because the driver's
-    * generator has shipped `ts` both as TIMESTAMP(NANOS) (pandas ns —
-    * declared as its raw int64 from the footer, then truncated
-    * µs-ward) and as plain TIMESTAMP(MICROS); a streaming source needs
-    * its schema declared up front, so the declared type must match the
-    * file, not an assumption.
-    */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val batchRaw = Tables.read(s, s"$dir/events.parquet", nanosAsLong = true)
-    val stored = batchRaw.schema("ts").dataType
-    // Watermarks demand TIMESTAMP (local-tz): declare it for either
-    // stored timestamp flavor — the file's µs payload is read as the
-    // same instant (session tz is UTC everywhere in this engine, so
-    // NTZ wall time ≡ UTC instant, matching how DuckDB reads the same
-    // file for the oracle). The int64-nanos legacy layout reads raw
-    // and truncates µs-ward.
-    val declaredTs = stored match {
-      case LongType => LongType
-      case _        => TimestampType
-    }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", declaredTs),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val raw = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet") // file source needs a dir
-      .parquet(dir)
-    declaredTs match {
-      case LongType =>
-        // int64 layout: ns-vs-µs decided from the footer as the batch
-        // loader does (Tables.events), so stream and batch read the
-        // identical instants.
-        raw.withColumn("ts", timestamp_micros(expr(s"ts DIV ${
-          Tables.int64TsDivisor(s, s"$dir/events.parquet")}")))
-      case _ => raw
-    }
-  }
-
   /** The reference's source-decl surface: a JSON-lines stream (the
     * wire format of its Kafka topic) decoded against an explicit
     * schema with an event-time watermark — `create_table(schema=...,
@@ -75,12 +30,8 @@ object StreamingQueries {
   def jsonPaymentSource(s: SparkSession, lines: DataFrame,
       allowedDelay: String = "15 seconds",
       declareWatermark: Boolean = true): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("createTime", TimestampType),
-      StructField("orderId", LongType),
-      StructField("payAmount", DoubleType),
-      StructField("payPlatform", IntegerType),
-      StructField("provinceId", IntegerType)))
+    val schema = StructType.fromDDL("createTime TIMESTAMP, orderId BIGINT, " +
+      "payAmount DOUBLE, payPlatform INT, provinceId INT")
     val decoded = lines
       .select(from_json(col("value").cast("string"), schema).as("m"))
       .select(col("m.*"))
@@ -102,10 +53,10 @@ object StreamingQueries {
   def toJsonSink(df: DataFrame): DataFrame =
     df.select(to_json(struct(df.columns.toSeq.map(col): _*)).as("value"))
 
-  /** Rows micro-batch 1 will ingest from `dir`'s `table`: a replay
-    * harness feeds the whole scaled table as ONE file, so one
-    * micro-batch ingests all of it and the watermark never advances
-    * INSIDE it. A stream-stream join or watermark-held operator then
+  /** Rows micro-batch 1 will ingest from `dir`'s `table`: the events
+    * stream has no file cap, so one micro-batch ingests the whole
+    * table and the watermark never advances INSIDE it. A stream-stream
+    * join or watermark-held operator then
     * buffers the entire input in its state store during that batch:
     * corpus-sized peak state even though the state is watermark-bounded
     * across batches. Measured: 51.2 M rows (x512) drained in-heap on the
@@ -152,11 +103,10 @@ object StreamingQueries {
   private val HeapIngestMaxRows = 60000000L
 
   /** The stream's shuffle-partition count (state store instances):
-    * the fixed gate cap, never wider than the session. A wider,
-    * ingest-proportional cap was measured FLAT then WORSE on one box
-    * (r15, ×1024 q138: 4p 1,737.7 s, 16p 1,678.2 s, 32p 2,080.7 s —
-    * the stateful stage is state-store-IO-bound on a single disk, not
-    * core-bound). Pure — spec'd directly.
+    * at most 4, never wider than the session. The stateful stage is
+    * bound by state-store IO on one disk, not by cores: a ×1024 q138
+    * drain on a 32-core host took 1,737.7 s at 4 partitions, 1,678.2 s
+    * at 16 and 2,080.7 s at 32. Pure — spec'd directly.
     */
   private[graft] def streamPartitionCap(prev: Int): Int = math.min(4, prev)
 
@@ -287,7 +237,7 @@ object StreamingQueries {
     * batch q27 SQL — stream/batch parity is the semantic claim.
     */
   def q28(s: SparkSession, dir: String): DataFrame = {
-    val agged = eventsStream(s, dir)
+    val agged = Tables.stream(s, dir, "events")
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -299,35 +249,11 @@ object StreamingQueries {
   }
 
   // ---------------------------------------------------------------- q29
-  /** The reference flagship as a STATEFUL stream: per event, the
-    * trailing 10 s per-key sum (window_aggregation.py:75-82), via
-    * `flatMapGroupsWithState` with a per-key event buffer.
-    *
-    * State design for scale (watermark-driven lifecycle, mirroring the
-    * reference's 15 s allowed delay, window_aggregation.py:48-50):
-    *  - the buffer holds only events within (window span + allowed
-    *    delay) behind the newest processed event of the key — so an
-    *    in-delay late event still finds every batch-mate its trailing
-    *    window needs. State is O(keys × window-rate), independent of
-    *    stream length.
-    *  - idle keys expire via `EventTimeTimeout`: once the watermark
-    *    passes the key's horizon (newest event + window + delay),
-    *    nothing the buffer holds can affect any admissible future
-    *    event, and the key's state is removed — no idle-key leak.
-    *  - emission is immediate (per incoming event, reference
-    *    semantics). A late event emits its own correct window and
-    *    retro-extends earlier events only within the same batch;
-    *    cross-batch parity with the batch RANGE window therefore holds
-    *    when batches arrive in event-time order (late events within
-    *    the delay included) — asserted across ≥3 real micro-batches in
-    *    StreamingSpec.
-    */
   val RangeWindowMicros = 10000000L  // 10 s, the reference interval
   val AllowedDelayMicros = 15000000L // 15 s, the reference watermark
 
-  /** Timestamp → epoch µs — the payload both range transforms and
-    * their oracles agree on (one definition; a drift between the two
-    * transforms would silently desynchronize them from the oracle).
+  /** Timestamp → epoch µs, the payload the range transform and its
+    * oracles agree on.
     */
   private def micros(t: java.sql.Timestamp): Long = {
     val i = t.toInstant
@@ -336,213 +262,115 @@ object StreamingQueries {
 
   /** Exact-decimal cent rounding matching
     * `CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE)` on both engines
-    * of the oracle pair — shared by both emission modes.
+    * of the oracle pair.
     */
   private def d2(v: Double): java.math.BigDecimal =
     java.math.BigDecimal.valueOf(v).setScale(2, java.math.RoundingMode.HALF_UP)
 
-  /** Source-agnostic core transform: any events-shaped stream
-    * (event_id, ts timestamp, user_id, value) → per-event trailing
-    * 10 s per-key sum.
+  /** The reference flagship as a STATEFUL stream: any events-shaped
+    * stream (event_id, ts timestamp, user_id, value) → per event, the
+    * trailing 10 s per-key sum (window_aggregation.py:75-82), via
+    * `flatMapGroupsWithState` over a 15 s watermark (the reference's
+    * allowed delay, window_aggregation.py:48-50).
+    *
+    * Emission:
+    *  - immediate (`held = false`, q29): each event emits when it
+    *    arrives, the reference's per-message semantics. A late event
+    *    emits its own correct window, but an earlier event's sum
+    *    already emitted misses it, so parity with the batch RANGE
+    *    window holds when batches arrive in event-time order (in-delay
+    *    late events inside a batch included; StreamingSpec drains ≥3
+    *    micro-batches).
+    *  - held (`held = true`, q129): an event emits once the watermark
+    *    passes its event time. No admissible arrival can then land in
+    *    its window, so every emitted sum is batch-exact for ANY
+    *    in-delay arrival order: Flink's OVER window emits on watermark
+    *    advance the same way. Events within the delay of the stream's
+    *    maximum event time stay withheld at drain: the correct
+    *    streaming answer, not a full dump.
+    *
+    * State is one sorted buffer per key of (id, ts_us, value, emitted)
+    * rows. Each step (a batch's rows for the key, or a timeout with
+    * none) merges, emits with exact-decimal prefix sums and two
+    * monotone pointers (linear in the buffer), then keeps only rows
+    * some later emission can window over. The operator drops input
+    * behind the watermark, and the next batch's watermark is at least
+    * the key's newest event time (truncated to Spark's milliseconds)
+    * minus the delay, so a later event starts after the larger of the
+    * two; a pending row still needs its own window. Rows older than the
+    * earliest of those points minus the window are dropped, and a key
+    * with nothing left is removed: no idle-key residue in either mode.
+    * The one timer per key arms just below the oldest pending row's
+    * millisecond (an event-time timeout fires only strictly below the
+    * watermark, and an event AT the final watermark must still flush,
+    * HeldBoundarySpec), else once the newest kept row falls out of every
+    * later window.
     */
-  def rangeStateTransform(s: SparkSession, events: DataFrame): DataFrame = {
+  def rangeStateTransform(s: SparkSession, events: DataFrame,
+      held: Boolean = false): DataFrame = {
     import s.implicits._
-
     // Keep `ts` a timestamp column through to the stateful operator:
     // the EventTimeTimeout check needs the watermarked event-time
     // attribute present in the child plan.
-    val typed = events
+    events
       .withWatermark("ts", "15 seconds")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .as[(Long, Long, java.sql.Timestamp, Double)]
-    typed
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[List[(Long, Long, Double)], (Long, Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, java.sql.Timestamp, Double)],
-         state: GroupState[List[(Long, Long, Double)]]) =>
-          if (state.hasTimedOut) {
-            // Watermark passed newest-event + window + delay: no
-            // admissible future event can reach into this buffer.
-            state.remove()
-            Iterator.empty
-          } else {
-            val buffered = state.getOption.getOrElse(Nil)
-            val incoming = rows.map(r => (r._1, micros(r._3), r._4)).toList
-            val all = (buffered ++ incoming).sortBy(e => (e._2, e._1))
-            // Emit one result per *incoming* event: sum over all events
-            // of this key with ts in [ts_e - 10 s, ts_e]. A per-event
-            // rescan of the buffer is O(m × occupancy) — quadratic when
-            // one micro-batch delivers a key's whole history (the
-            // drain-a-backlog shape at scale) — so instead: exact-
-            // decimal prefix sums over the sorted buffer + two monotone
-            // pointers. Prefix-difference of exact decimal sums equals
-            // the direct sum, so results are bit-identical to the
-            // rescan form.
-            val arr = all.toArray
-            val n = arr.length
-            val prefix = new Array[java.math.BigDecimal](n + 1)
-            prefix(0) = java.math.BigDecimal.ZERO
-            var i = 0
-            while (i < n) { prefix(i + 1) = prefix(i).add(d2(arr(i)._3)); i += 1 }
-            val newIds = incoming.map(_._1).toSet
-            var lo = 0 // first index with ts >= ts_e - 10 s
-            var hi = 0 // first index with ts > ts_e
-            val results = Iterator.range(0, n).flatMap { j =>
-              val (id, ts, _) = arr(j)
-              if (!newIds.contains(id)) None
-              else {
-                while (hi < n && arr(hi)._2 <= ts) hi += 1
-                while (arr(lo)._2 < ts - RangeWindowMicros) lo += 1
-                Some((id, key, ts, prefix(hi).subtract(prefix(lo)).doubleValue))
-              }
-            }.toList
-            // Evict events no in-delay late event could still window
-            // over; expire the whole key once the watermark passes the
-            // same horizon.
-            val newest = if (all.nonEmpty) all.map(_._2).max else 0L
-            val horizon = newest - RangeWindowMicros - AllowedDelayMicros
-            state.update(all.filter(_._2 >= horizon))
-            state.setTimeoutTimestamp(
-              (newest + RangeWindowMicros + AllowedDelayMicros) / 1000L + 1L)
-            results.iterator
-          }
-      }
-      .toDF("event_id", "province_id", "ts_us", "pay_amount")
-  }
-
-  /** Watermark-HELD emission variant of [[rangeStateTransform]]: an
-    * event's window sum is emitted only once the watermark passes its
-    * event time — at which point no admissible arrival can land at or
-    * before it, so the trailing window is provably complete. This is
-    * the reference's effective emission order (Flink's OVER window
-    * emits on watermark advance, window_aggregation.py:48-50,75-82):
-    * batch-exact for ANY in-delay arrival order, where the immediate
-    * mode deviates on out-of-order batches (it emits an event's sum
-    * before a later batch delivers an in-delay mate at-or-before it —
-    * documented deviation, spec'd in StreamingSpec).
-    *
-    * The price of exactness: events within (delay) of the stream's
-    * maximum event time stay withheld at drain (the watermark never
-    * passes them) — the correct streaming answer, but not a full dump,
-    * which is why the DEMO query (q29) keeps immediate emission and
-    * this mode ships as the semantics-exact alternative.
-    *
-    * State: one buffer per key holding (id, ts, value, emitted).
-    * Pending rows (ts > watermark) are always retained and schedule an
-    * EventTimeTimeout at their event time so they flush as soon as the
-    * watermark passes, data or not. Emitted rows are retained only
-    * while a future ADMISSIBLE arrival could still window over them:
-    * the operator filters input below the watermark, so any future
-    * event has ts ≥ wm and its trailing window reaches at most down to
-    * wm − window — rows behind that are dead. Because the bound
-    * advances with the GLOBAL watermark (not the key's newest event),
-    * an idle key drains: the last timer fires once the watermark
-    * passes newest + window, the filter empties the buffer, and
-    * `state.remove()` runs — no per-key residue and no perpetually
-    * re-arming timer (spec-asserted: state rows return to zero).
-    * Per-batch work is linear: exact-decimal prefix sums + two monotone
-    * pointers, as in the immediate mode.
-    */
-  def rangeStateTransformHeld(s: SparkSession, events: DataFrame): DataFrame = {
-    import s.implicits._
-    val typed = events
-      .withWatermark("ts", "15 seconds")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .as[(Long, Long, java.sql.Timestamp, Double)]
-    typed
       .groupByKey(_._2)
       .flatMapGroupsWithState[List[(Long, Long, Double, Boolean)],
         (Long, Long, Long, Double)](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: Long, rows: Iterator[(Long, Long, java.sql.Timestamp, Double)],
          state: GroupState[List[(Long, Long, Double, Boolean)]]) =>
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val buffered = state.getOption.getOrElse(Nil)
-          val incoming = rows.map(r => (r._1, micros(r._3), r._4, false)).toList
-          val all = (buffered ++ incoming).sortBy(e => (e._2, e._1))
-          val arr = all.toArray
+          val wmMs = state.getCurrentWatermarkMs()
+          val wm = wmMs * 1000L
+          val arr = (state.getOption.getOrElse(Nil) ++
+              rows.map(r => (r._1, micros(r._3), r._4, false)))
+            .sortBy(e => (e._2, e._1)).toArray
           val n = arr.length
-          if (n == 0) { state.remove(); Iterator.empty }
-          else {
-            val prefix = new Array[java.math.BigDecimal](n + 1)
-            prefix(0) = java.math.BigDecimal.ZERO
-            var i = 0
-            while (i < n) {
-              prefix(i + 1) = prefix(i).add(d2(arr(i)._3)); i += 1
-            }
-            var lo = 0
-            var hi = 0
-            val results = scala.collection.mutable.ListBuffer
-              .empty[(Long, Long, Long, Double)]
-            val next = new Array[(Long, Long, Double, Boolean)](n)
-            var j = 0
-            while (j < n) {
-              val (id, ts, v, emitted) = arr(j)
-              if (!emitted && ts <= wm) {
-                // watermark passed: the trailing window is complete
-                while (hi < n && arr(hi)._2 <= ts) hi += 1
-                while (arr(lo)._2 < ts - RangeWindowMicros) lo += 1
-                results += ((id, key, ts,
-                  prefix(hi).subtract(prefix(lo)).doubleValue))
-                next(j) = (id, ts, v, true)
-              } else next(j) = (id, ts, v, emitted)
-              j += 1
-            }
-            // retain: anything still pending, plus emitted rows a
-            // future ADMISSIBLE event's window could still reach. The
-            // operator drops input below the watermark, so a future
-            // event has ts ≥ wm and reaches at most down to
-            // wm − window: that bound advances with the GLOBAL
-            // watermark, so emitted rows age out even when the key
-            // never sees data again (a key-local newest-based horizon
-            // would pin the newest row, and the state, forever).
-            val horizon = wm - RangeWindowMicros
-            val keep = next.filter(e => !e._4 || e._2 >= horizon).toList
-            val pending = keep.filter(!_._4)
-            // Spark rejects a timeout at-or-before the CURRENT
-            // watermark — a key whose newest event sits far behind the
-            // global maximum (typical when one batch carries the whole
-            // corpus) would otherwise compute exactly that. Clamping
-            // to wm+1 keeps the flush immediate-next-batch for such
-            // stragglers, which is also the earliest legal fire time.
-            val wmMs = state.getCurrentWatermarkMs()
-            def after(ms: Long): Long = math.max(ms, wmMs + 1L)
-            if (pending.nonEmpty) {
-              state.update(keep)
-              // Flush timer: ONE MS BELOW the oldest pending event's
-              // millisecond. Event-time timeouts fire only when the
-              // timer sits strictly BELOW the watermark, and the
-              // emission predicate (ts <= wm, the oracle's own
-              // cutoff) is satisfiable at wm == ts — arming at
-              // ts_ms + 1 parked the timer exactly ON the final
-              // watermark for an event AT it (ts = max - delay), so
-              // the key was never invoked and the event silently
-              // withheld (HeldBoundarySpec). At ts_ms - 1 the timer
-              // fires as soon as the watermark reaches the event's
-              // millisecond; a fire that lands before a sub-ms event
-              // is admissible emits nothing and re-arms here (the
-              // after() clamp keeps re-arms legal and advancing).
-              state.setTimeoutTimestamp(
-                after(pending.map(_._2).min / 1000L - 1L))
-            } else if (keep.nonEmpty) {
-              state.update(keep)
-              // all emitted: the timer only garbage-collects — fire
-              // when the newest retained row falls behind wm − window,
-              // at which point the filter empties and the key is
-              // removed (the timer is NOT re-armed before then, so no
-              // per-watermark-advance re-processing of idle keys)
-              state.setTimeoutTimestamp(after(
-                (keep.map(_._2).max + RangeWindowMicros) / 1000L + 1L))
-            } else state.remove()
-            results.iterator
+          val prefix = new Array[java.math.BigDecimal](n + 1)
+          prefix(0) = java.math.BigDecimal.ZERO
+          var i = 0
+          while (i < n) { prefix(i + 1) = prefix(i).add(d2(arr(i)._3)); i += 1 }
+          var lo = 0 // first index with ts >= ts_e - 10 s
+          var hi = 0 // first index with ts > ts_e
+          var oldestPending = Long.MaxValue
+          val results = scala.collection.mutable.ListBuffer
+            .empty[(Long, Long, Long, Double)]
+          var j = 0
+          while (j < n) {
+            val (id, ts, v, emitted) = arr(j)
+            if (!emitted && (!held || ts <= wm)) {
+              while (hi < n && arr(hi)._2 <= ts) hi += 1
+              while (arr(lo)._2 < ts - RangeWindowMicros) lo += 1
+              results += ((id, key, ts, prefix(hi).subtract(prefix(lo)).doubleValue))
+              arr(j) = (id, ts, v, true)
+            } else if (!emitted) oldestPending = math.min(oldestPending, ts)
+            j += 1
           }
+          // a step always holds rows: a key with none left is removed
+          val nextWm = math.max(wm,
+            Math.floorDiv(arr(n - 1)._2, 1000L) * 1000L - AllowedDelayMicros)
+          val horizon = math.min(nextWm, oldestPending) - RangeWindowMicros
+          val keep = arr.iterator.filter(_._2 >= horizon).toList
+          if (keep.isEmpty) state.remove()
+          else {
+            state.update(keep)
+            // Spark rejects a timeout at or before the current
+            // watermark: a key far behind the global maximum (one batch
+            // carrying the whole corpus) fires at the next batch
+            state.setTimeoutTimestamp(math.max(wmMs + 1L,
+              if (oldestPending < Long.MaxValue) oldestPending / 1000L - 1L
+              else (keep.last._2 + RangeWindowMicros) / 1000L + 1L))
+          }
+          results.iterator
       }
       .toDF("event_id", "province_id", "ts_us", "pay_amount")
   }
 
+  /** q29: the immediate mode over the events stream, drained. */
   def q29(s: SparkSession, dir: String): DataFrame = {
-    val out = rangeStateTransform(s, eventsStream(s, dir))
+    val out = rangeStateTransform(s, Tables.stream(s, dir, "events"))
     runToSnapshot(s, out, OutputMode.Append)
       .select(col("event_id"), col("province_id"),
         timestamp_micros(col("ts_us")).as("ts"), col("pay_amount"))
@@ -556,7 +384,7 @@ object StreamingQueries {
     * which a drained stream must equal.
     */
   def q47(s: SparkSession, dir: String): DataFrame = {
-    val deduped = eventsStream(s, dir)
+    val deduped = Tables.stream(s, dir, "events")
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
     // distinct-key state grows with the corpus → disk-backed at scale
@@ -566,14 +394,6 @@ object StreamingQueries {
   }
 
   // ---------------------------------------------------------------- q57
-  /** Stream-stream inner join: clicks joined to the purchases that
-    * follow them within 24 h for the same user — two independently
-    * watermarked streams, equi-key plus event-time range condition.
-    * The range bound + watermarks let the engine expire join state
-    * (each side retains ~range + delay of events, not the stream);
-    * an unbounded-state stream-stream join would be a non-starter at
-    * scale. Oracle: the equivalent batch self-join.
-    */
   /** Shared scaffolding of the stream-stream join family (q57 inner,
     * q98 left, q125 full): the watermarked click and purchase streams
     * and the time-bounded join predicate are ONE definition — the
@@ -583,12 +403,12 @@ object StreamingQueries {
     */
   private def clickPurchaseJoin(s: SparkSession, dir: String,
       joinType: String): DataFrame = {
-    val clicks = eventsStream(s, dir)
+    val clicks = Tables.stream(s, dir, "events")
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "15 seconds")
-    val purchases = eventsStream(s, dir)
+    val purchases = Tables.stream(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"),
         col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
@@ -600,6 +420,14 @@ object StreamingQueries {
       joinType)
   }
 
+  /** Stream-stream inner join: clicks joined to the purchases that
+    * follow them within 24 h for the same user — two independently
+    * watermarked streams, equi-key plus event-time range condition.
+    * The range bound + watermarks let the engine expire join state
+    * (each side retains ~range + delay of events, not the stream);
+    * an unbounded-state stream-stream join would be a non-starter at
+    * scale. Oracle: the equivalent batch self-join.
+    */
   def q57(s: SparkSession, dir: String): DataFrame = {
     val joined = clickPurchaseJoin(s, dir, "inner")
       .select(col("click_id"), col("purchase_id"), col("user_id"),
@@ -665,7 +493,7 @@ object StreamingQueries {
     * enriching a 100 TB/day stream against reference data.
     */
   def q108(s: SparkSession, dir: String): DataFrame = {
-    val purchases = eventsStream(s, dir)
+    val purchases = Tables.stream(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("value"))
     val cust = broadcast(Tables.customer(s, dir)
@@ -679,22 +507,6 @@ object StreamingQueries {
   }
 
   // --------------------------------------------------------------- q132
-  /** Stream TEMPORAL join (Flink's temporal-table join re-expressed):
-    * each streamed purchase is enriched with the user's latest click
-    * at-or-before ITS event time — the as-of join's streaming leg.
-    * Spark-first design: instead of keeping the dimension's history in
-    * managed join state (Flink's formulation), the static side
-    * collapses once per micro-batch into one sorted time-array per
-    * key, broadcasts, and the at-or-before lookup is a pure
-    * `array_max(filter(...))` projection — a STATELESS plan (no
-    * watermark, no state store; append mode), so nothing accumulates
-    * across batches and the stream side never shuffles. Scale: state
-    * cost is zero; the broadcast is bounded by versions-per-key ×
-    * keys (the common dimension shape); a dimension too big to
-    * broadcast downgrades to the same HOF over a shuffled equi-join.
-    * Oracle: q124's batch SQL — DuckDB's native ASOF over the drained
-    * stream must agree row-for-row.
-    */
   /** The reusable transform behind q132: enrich `stream` with the
     * latest `history` time at-or-before each row's `streamTime`, per
     * `key`. Works on a streaming OR batch left side (the right side
@@ -713,11 +525,27 @@ object StreamingQueries {
       .drop("__hist")
   }
 
+  /** Stream TEMPORAL join (Flink's temporal-table join re-expressed):
+    * each streamed purchase is enriched with the user's latest click
+    * at-or-before ITS event time — the as-of join's streaming leg.
+    * Spark-first design: instead of keeping the dimension's history in
+    * managed join state (Flink's formulation), the static side
+    * collapses once per micro-batch into one sorted time-array per
+    * key, broadcasts, and the at-or-before lookup is a pure
+    * `array_max(filter(...))` projection — a STATELESS plan (no
+    * watermark, no state store; append mode), so nothing accumulates
+    * across batches and the stream side never shuffles. Scale: state
+    * cost is zero; the broadcast is bounded by versions-per-key ×
+    * keys (the common dimension shape); a dimension too big to
+    * broadcast downgrades to the same HOF over a shuffled equi-join.
+    * Oracle: q124's batch SQL — DuckDB's native ASOF over the drained
+    * stream must agree row-for-row.
+    */
   def q132(s: SparkSession, dir: String): DataFrame = {
     val clicks = Tables.events(s, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"))
-    val purchases = eventsStream(s, dir)
+    val purchases = Tables.stream(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
     val enriched = temporalEnrich(purchases, clicks,
@@ -742,7 +570,7 @@ object StreamingQueries {
     * must equal. Session end is last event + gap, both engines.
     */
   def q75(s: SparkSession, dir: String): DataFrame = {
-    val sessions = eventsStream(s, dir)
+    val sessions = Tables.stream(s, dir, "events")
       .withWatermark("ts", "15 seconds")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("win"))
       .agg(count(lit(1)).as("n_events"),
@@ -758,7 +586,7 @@ object StreamingQueries {
   }
 
   // --------------------------------------------------------------- q129
-  /** The watermark-HELD emission mode ([[rangeStateTransformHeld]]) as
+  /** The watermark-HELD emission mode of [[rangeStateTransform]] as
     * a GATE-CHECKED query: an event's trailing-window sum emits only
     * once the watermark proves no admissible arrival can still land
     * in it, so the DuckDB oracle is exact under ANY arrival order —
@@ -771,7 +599,7 @@ object StreamingQueries {
     * `GroupState.getCurrentWatermarkMs` reports).
     */
   def q129(s: SparkSession, dir: String): DataFrame = {
-    val out = rangeStateTransformHeld(s, eventsStream(s, dir))
+    val out = rangeStateTransform(s, Tables.stream(s, dir, "events"), held = true)
     runToSnapshot(s, out, OutputMode.Append,
       ingestRows = eventsRowCount(s, dir))
       .select(col("event_id"), col("province_id"),
@@ -805,38 +633,6 @@ object StreamingQueries {
     */
   private val StreamBucketCap = 256
 
-  /** Streaming NEAR-dup dedup (r13) — the streaming form of q35, the
-    * operator a Kafka-fed corpus pipeline runs to flag each incoming
-    * document against everything already seen: per-doc MinHash(128) +
-    * LSH(16×8) blocking keys (the EXACT batch construction —
-    * [[graft.queries.DedupQueries.streamKeyedMembers]]), a
-    * `flatMapGroupsWithState` keyed by (band, key) whose state is the
-    * bucket's member list (the q136 standing index, living in a state
-    * store instead of a parquet table), and a stream-static verify
-    * join against the corpus's hashed-feature table.
-    *
-    * Pair OWNERSHIP makes emission exactly-once with no stateful
-    * downstream dedup: every member carries all 16 band keys, so the
-    * bucket at band b emits a colliding pair iff b is the MINIMUM
-    * matching band (and the exact-signature bucket, band 16, iff NO
-    * band matches — possible only via a band-key hash collision). One
-    * stateful operator end-to-end; the verify join is stateless per
-    * micro-batch against the static feature table (planner picks
-    * broadcast at gate scale; a deployment bucketizes the corpus side).
-    *
-    * Scale: state is one row per occupied (band, key) bucket holding
-    * ≤ cap members (~17 buckets/doc — the standing LSH index shape,
-    * linear in corpus), so the state store must be disk-backed at
-    * corpus scale: the query pins the RocksDB provider for its
-    * lifetime. Oracle: q35's brute-force SQL — the drained stream
-    * must equal the batch pair set.
-    */
-  /** The verified streaming near-dup pair stream — q138's engine,
-    * shared with q139 (apply): candidates from the (band,key)-keyed
-    * `flatMapGroupsWithState` bucket index, verified by the stateless
-    * stream-static join. Returns the UN-drained streaming frame
-    * (a, b, jaccard) with a < b; callers pick the sink shape.
-    */
   /** Memoized corpus feature table for the stream-static verify side
     * of q138/q139 — one eager `localCheckpoint(MEMORY_AND_DISK_SER)`
     * per dir, a [[graft.Memo]] stage over `documents` shared by every
@@ -851,34 +647,19 @@ object StreamingQueries {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }(Seq(_))
 
+  /** The verified streaming near-dup pair stream — q138's engine,
+    * shared with q139 (apply): candidates from the (band,key)-keyed
+    * `flatMapGroupsWithState` bucket index, verified by the stateless
+    * stream-static join. Returns the UN-drained streaming frame
+    * (a, b, jaccard) with a < b; callers pick the sink shape.
+    */
   private[graft] def streamNearDupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    // Test/diagnostic knob: cap files per micro-batch so a multi-file
-    // corpus drains in MULTIPLE batches (the per-batch-recompute
-    // regression surface the 1-batch gates can't see).
-    val maxFiles = Conf.maxFilesPerTrigger(s)
-    // The documents table ships BOTH ways: the driver's testdata dirs
-    // hold a single FILE `documents.parquet` (a file source needs a
-    // directory + glob), while Spark-written dirs (ScaleStress's
-    // stress corpora) hold a DIRECTORY of part files the glob would
-    // silently exclude — the ×512 streams probe read 0 rows that way.
-    val docRoot = new java.io.File(s"$dir/documents.parquet")
-    val docReader = {
-      val r = s.readStream.schema(docSchema)
-      maxFiles.fold(r)(n => r.option("maxFilesPerTrigger", n.toString))
-    }
-    val docSource =
-      if (docRoot.isDirectory)
-        docReader.parquet(docRoot.getPath)
-      else
-        docReader.option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val docsStream = docSource.select(col("doc_id"), col("text"))
+    // A capped file count per micro-batch drains a multi-file corpus in
+    // several batches, the per-batch recompute surface a one-batch
+    // drain cannot show.
+    val docsStream = Tables.stream(s, dir, "documents", Conf.maxFilesPerTrigger(s))
+      .select(col("doc_id"), col("text"))
     val keyed = graft.queries.DedupQueries.streamKeyedMembers(docsStream)
       .as[KeyedMember]
     val candidates = keyed
@@ -926,18 +707,10 @@ object StreamingQueries {
           state.update(mem)
           out.result().iterator
       }
-    // Materialized ONCE per query start (r14, VERDICT r13 #3): the
-    // stream-static verify side used to re-run the full corpus
-    // shingle+hash pass EVERY micro-batch — invisible in the 1-batch
-    // gates, a corpus scan per batch in the real Kafka regime. The
-    // eager localCheckpoint cuts it to a leaf the per-batch planner
-    // just scans; SER level packs/evicts cleanly at corpus scale (the
-    // deserialized-unroll OOM class is documented on
-    // DedupQueries.bigCheckpoint — this is the written feature table
-    // a deployment would keep next to the standing index).
-    // Memoized PER DIR (ADVICE r14: q138 and q139 each built their
-    // own corpus-sized checkpoint and never unpersisted it, so repeated
-    // calls in one JVM accumulated corpus-sized block sets).
+    // The verify side is the corpus feature table, built once per dir
+    // and shared by q138 and q139 (streamFeats): each micro-batch
+    // plans a scan of its checkpoint leaf, never the corpus
+    // shingle+hash pass.
     val feats = streamFeats(s, dir)
     candidates.toDF()
       .join(feats.select(col("doc_id").as("a"), col("hsh").as("f_a")), "a")
@@ -950,6 +723,32 @@ object StreamingQueries {
       .filter(col("jaccard") >= 0.5)
   }
 
+  /** Streaming NEAR-dup dedup — the streaming form of q35, the
+    * operator a Kafka-fed corpus pipeline runs to flag each incoming
+    * document against everything already seen: per-doc MinHash(128) +
+    * LSH(16×8) blocking keys (the EXACT batch construction —
+    * [[graft.queries.DedupQueries.streamKeyedMembers]]), a
+    * `flatMapGroupsWithState` keyed by (band, key) whose state is the
+    * bucket's member list (the q136 standing index, living in a state
+    * store instead of a parquet table), and a stream-static verify
+    * join against the corpus's hashed-feature table.
+    *
+    * Pair OWNERSHIP makes emission exactly-once with no stateful
+    * downstream dedup: every member carries all 16 band keys, so the
+    * bucket at band b emits a colliding pair iff b is the MINIMUM
+    * matching band (and the exact-signature bucket, band 16, iff NO
+    * band matches — possible only via a band-key hash collision). One
+    * stateful operator end-to-end; the verify join is stateless per
+    * micro-batch against the static feature table (planner picks
+    * broadcast at gate scale; a deployment bucketizes the corpus side).
+    *
+    * Scale: state is one row per occupied (band, key) bucket holding
+    * ≤ cap members (~17 buckets/doc — the standing LSH index shape,
+    * linear in corpus), so the state store must be disk-backed at
+    * corpus scale: the query pins the RocksDB provider for its
+    * lifetime. Oracle: q35's brute-force SQL — the drained stream
+    * must equal the batch pair set.
+    */
   def q138(s: SparkSession, dir: String): DataFrame =
     // ~17 buckets/doc of member-list state ⇒ corpus-linear,
     // disk-backed at scale
@@ -957,7 +756,7 @@ object StreamingQueries {
       OutputMode.Append, corpusLinearState = true)
       .orderBy("a", "b")
 
-  /** Streaming incremental APPLY (r13) — the keep/drop decision stream
+  /** Streaming incremental APPLY — the keep/drop decision stream
     * that completes the streaming dedup story the way q111 completes
     * the batch one (q35→q111, q136→q137, q138→q139): as documents
     * ingest, emit a DROP verdict for every doc that near-matches

@@ -186,6 +186,17 @@ class ConfSurfaceSpec extends AnyFunSuite {
     }
   }
 
+  // One way to stream a table: every parquet stream is opened by
+  // Tables.stream, which declares the batch loader's schema and
+  // normalization; the Kafka source is the one other stream.
+  test("src/main opens parquet streams only in Tables") {
+    val opening = sources.filter { case (_, src) => code(src).contains("readStream") }
+    assert(opening.map(_._1).toSet === Set("Tables.scala", "KafkaPipeline.scala"))
+    val kafka = code(opening.find(_._1 == "KafkaPipeline.scala").get._2)
+    assert("readStream".r.findAllIn(kafka).size === 1)
+    assert("readStream\\s*\\.\\s*format\\(\\s*\"kafka\"\\s*\\)".r.findFirstIn(kafka).isDefined)
+  }
+
   // One recorder: Spark's listener events reach src/main only through
   // a Profile scope, so no number depends on a listener that outlived
   // its query.

@@ -47,7 +47,7 @@ class HeldBoundarySpec extends AnyFunSuite {
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)
     val out = graft.streaming.StreamingQueries
-      .rangeStateTransformHeld(spark, src)
+      .rangeStateTransform(spark, src, held = true)
     val name = s"hb_sink_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(name).start()

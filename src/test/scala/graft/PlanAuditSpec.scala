@@ -28,6 +28,16 @@ class PlanAuditSpec extends AnyFunSuite {
        |""".stripMargin
   }
 
+  // A checkpoint leaf names the call site that made it; its source
+  // line moves with every edit of that file, its plan does not.
+  test("a checkpoint leaf's call site prints without its source line") {
+    val spark = SparkTestSession.spark
+    val leaf = spark.range(10).toDF("id").localCheckpoint()
+    val plan = Profile.explain(leaf.filter("id > 3").queryExecution)
+    assert(plan.contains("localCheckpoint at PlanAuditSpec.scala"), plan)
+    assert("\\.scala:\\d".r.findFirstIn(plan).isEmpty, plan)
+  }
+
   test("distinct-aggregate groups print in column-name order") {
     val sorted = q22("l_partkey", "l_suppkey")
     assert(Profile.sortDistinctGroups(q22("l_suppkey", "l_partkey")) === sorted)

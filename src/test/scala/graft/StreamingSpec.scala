@@ -30,6 +30,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(stream === batch)
   }
 
+  // A Spark-written table is a directory of part files; the events
+  // stream reads it as it reads the generator's single file.
+  test("q29 over a Spark-written part-file events directory equals q29 over the single file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_parts").toFile
+    try {
+      Tables.read(spark, s"$sf/events.parquet", nanosAsLong = true).repartition(3)
+        .write.parquet(s"$dir/events.parquet")
+      assert(new java.io.File(s"$dir/events.parquet").listFiles()
+        .count(_.getName.endsWith(".parquet")) === 3)
+      def q29(d: String) = SparkEntry.queries("q29_stream_range_state")(spark, d)
+        .collect().map(_.toSeq).toSeq
+      val single = q29(sf)
+      assert(single.nonEmpty)
+      assert(q29(dir.getPath) === single)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   // An Append drain's snapshot is the union of its batch checkpoints; a
   // Complete drain's is the last batch, the replaced ones freed.
   test("a drained stream's snapshot is its batch checkpoints, not a local collection") {
@@ -182,8 +199,7 @@ class StreamingSpec extends AnyFunSuite {
       batches.zipWithIndex.foreach { case (rows, i) => writeBatchFile(dir, i, rows) }
       val src = eventsFileStream(dir)
       val out =
-        if (held) graft.streaming.StreamingQueries.rangeStateTransformHeld(spark, src)
-        else graft.streaming.StreamingQueries.rangeStateTransform(spark, src)
+        graft.streaming.StreamingQueries.rangeStateTransform(spark, src, held)
       val name = s"held_sink_${System.nanoTime()}_$held"
       val q = out.writeStream.outputMode("append").format("memory")
         .queryName(name).start()
@@ -230,7 +246,7 @@ class StreamingSpec extends AnyFunSuite {
     // timeout (clamped past the old watermark) actually fires
     writeBatchFile(dir, 1, Seq((4L, 200000L, 2L, 8.0)))
     val src = eventsFileStream(dir)
-    val out = graft.streaming.StreamingQueries.rangeStateTransformHeld(spark, src)
+    val out = graft.streaming.StreamingQueries.rangeStateTransform(spark, src, held = true)
     val name = s"straggler_sink_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(name).start()
@@ -264,7 +280,7 @@ class StreamingSpec extends AnyFunSuite {
     writeBatchFile(dir, 2, Seq((4L, 200000L, 2L, 8.0)))
     writeBatchFile(dir, 3, Seq((5L, 300000L, 2L, 16.0)))
     val src = eventsFileStream(dir)
-    val out = graft.streaming.StreamingQueries.rangeStateTransformHeld(spark, src)
+    val out = graft.streaming.StreamingQueries.rangeStateTransform(spark, src, held = true)
     val name = s"drain_sink_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(name).start()
@@ -313,7 +329,7 @@ class StreamingSpec extends AnyFunSuite {
     dir.deleteOnExit()
     batches.zipWithIndex.foreach { case (rows, i) => writeBatchFile(dir, i, rows) }
     val src = eventsFileStream(dir)
-    val out = graft.streaming.StreamingQueries.rangeStateTransformHeld(spark, src)
+    val out = graft.streaming.StreamingQueries.rangeStateTransform(spark, src, held = true)
     val name = s"held_prop_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(name).start()
